@@ -912,7 +912,7 @@ object Bench {
     // - q53 (round-14): measured post-density-pin at 315.7 s / exponent
     //   1.34 (committed bench_result.json) and root-caused — the ×100
     //   corpus's two ~50k tight clusters each land in ONE bucket at any
-    //   plane count (tools/DiagBuckets: same-bucket pair space 2.77e9,
+    //   plane count (the q168 bucketProfile: same-bucket pair space 2.77e9,
     //   unchanged from 11 to 15 planes), so the enumerated clique output
     //   is quadratic in cluster population BY SPECIFICATION, not by plan
     //   defect. q167 (per-bucket population cap, pivot-star edges —

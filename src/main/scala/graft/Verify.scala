@@ -7,9 +7,12 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query-name filter (dev loop only;
-    // the driver always runs the full set)
+    // full runs take every query). A name matching no query is a typo that
+    // would otherwise verify nothing and still report ALL OK.
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
+    val unknown = only.getOrElse(Set.empty) -- SparkEntry.queries.keySet
+    require(unknown.isEmpty, s"no such queries: ${unknown.toSeq.sorted.mkString(", ")}")
     def keep(name: String): Boolean = only.forall(_.contains(name))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
@@ -21,6 +24,9 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(q => keep(q._1)).foreach { case (name, fn) =>
+      // drop any earlier run's output first: a query that throws must
+      // leave NO parquet behind for the oracle check to pass on
+      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(s"$outDir/$name"))
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Envelopes, Tables, TopicDb}
 import graft.apps.{GmallApp, GmallPipelines}
-import graft.operators.{Dedup, EventOps, Multimodal, Relational, Similarity, Sketches, TextProfile}
+import graft.operators.{Cap, Dedup, EventOps, Multimodal, Relational, Similarity, Sketches, TextProfile}
 import graft.functions.TextFunctions
 import graft.streaming.{DimSink, SketchStream, StatefulOps, StreamHarness}
 
@@ -54,7 +54,7 @@ private[graft] object DedupGates {
     // hot-shingle-capped inverted index (df ≤ 100) + exact verification —
     // the q21 skew knob under its own gate.
     "q56_jaccard_capped" -> ((s, d) =>
-      Dedup.ngramJaccardPairsCapped(Tables.documents(s, d), maxDocFreq = 100)
+      Dedup.ngramJaccardPairs(Tables.documents(s, d), cap = Cap.Fixed(100))
         .orderBy(col("a"), col("b"))),
 
     // q56's hot-shingle df cap DERIVED from the measured shingle-df
@@ -66,8 +66,7 @@ private[graft] object DedupGates {
     // oracle; results stay EXACT Jaccard (hot-common correction) either
     // way, so only the stop list moves with the cap.
     "q177_jaccard_autocap" -> ((s, d) =>
-      Dedup.ngramJaccardPairsAutoCap(Tables.documents(s, d),
-          floorCap = 6L, mult = 2L)
+      Dedup.ngramJaccardPairs(Tables.documents(s, d), cap = Cap.Derived(6, 2))
         .orderBy(col("a"), col("b"))),
 
     // hot-BUCKET-capped LSH (VERDICT r6 #4) — q18's candidate generator
@@ -77,8 +76,8 @@ private[graft] object DedupGates {
     // the oracle mirrors it; the planted degenerate-band bound lives in
     // DedupGraphSpec.
     "q112_lsh_capped" -> ((s, d) =>
-      Dedup.lshCandidatesCapped(
-          Dedup.minhashSignatures(Tables.documents(s, d)), LshBucketCap)
+      Dedup.lshCandidates(Dedup.minhashSignatures(Tables.documents(s, d)),
+          cap = Cap.Fixed(LshBucketCap))
         .orderBy(col("a"), col("b"))),
 
     // q112's bucket cap DERIVED from the measured (band, bandkey)
@@ -92,9 +91,8 @@ private[graft] object DedupGates {
     // distinct-pop cumulative counts → lower median → greatest → anti
     // join) is replayed by the oracle.
     "q176_lsh_autocap" -> ((s, d) =>
-      Dedup.lshCandidatesAutoCap(
-          Dedup.minhashSignatures(Tables.documents(s, d)),
-          floorCap = 2L, mult = 2L)
+      Dedup.lshCandidates(Dedup.minhashSignatures(Tables.documents(s, d)),
+          cap = Cap.Derived(2, 2))
         .orderBy(col("a"), col("b"))),
 
     "q22_jaccard_verify" -> ((s, d) => {
@@ -116,17 +114,17 @@ private[graft] object DedupGates {
     }),
 
     // Dedup GROUP resolution: q20's simhash near-dup pairs collapsed into
-    // connected components (min-label propagation); comp = canonical
-    // (minimum) doc id per near-dup group.
+    // connected components; comp = canonical (minimum) doc id per near-dup
+    // group.
     "q76_dedup_groups" -> ((s, d) =>
-      Dedup.connectedComponents(
+      Dedup.connectedComponentsStar(
           Dedup.simhashNearDups(Dedup.simhash(Tables.documents(s, d))))
         .orderBy(col("id"))),
 
     // Same components via alternating large-star/small-star (Kiveris et
     // al. SoCC'14) — O(log n) rounds regardless of graph diameter, the
     // scale path when dup groups chain instead of forming quasi-cliques.
-    // Identical output contract, so the q76 oracle is shared verbatim.
+    // The q76 oracle is shared verbatim.
     "q84_dedup_groups_star" -> ((s, d) =>
       Dedup.connectedComponentsStar(
           Dedup.simhashNearDups(Dedup.simhash(Tables.documents(s, d))))
@@ -273,7 +271,7 @@ private[graft] object DedupGates {
 
     // q18's banding with the (bd, bandkey) df cap mirrored — buckets over
     // LshBucketCap docs leave the index before pair generation, exactly
-    // like Dedup.lshCandidatesCapped's broadcast anti-join.
+    // like Dedup.lshCandidates' broadcast anti-join under Cap.Fixed.
     "q112_lsh_capped" ->
       s"""WITH $shCte,
          |$sigCte,
@@ -464,8 +462,8 @@ private[graft] object DedupGates {
          |WHERE fp NOT IN (SELECT fp FROM store) ORDER BY doc_id""".stripMargin,
 
     // transitive closure over the symmetrized q20 pair graph; min
-    // reachable id per node = the component label BOTH Spark algorithms
-    // (q76 min-label propagation, q84 large-star/small-star) converge to
+    // reachable id per node = the component label the large-star/
+    // small-star rounds converge to (q76 and q84 share it)
     "q76_dedup_groups" -> dedupGroupsOracle,
     "q84_dedup_groups_star" -> dedupGroupsOracle,
 

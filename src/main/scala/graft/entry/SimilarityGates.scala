@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Envelopes, Tables, TopicDb}
 import graft.apps.{GmallApp, GmallPipelines}
-import graft.operators.{Dedup, EventOps, Multimodal, Relational, Similarity, Sketches, TextProfile}
+import graft.operators.{Cap, Dedup, EventOps, Multimodal, Relational, Similarity, Sketches, TextProfile}
 import graft.functions.TextFunctions
 import graft.streaming.{DimSink, SketchStream, StatefulOps, StreamHarness}
 
@@ -26,6 +26,23 @@ private[graft] object SimilarityGates {
     * flag left to forget (ADVICE r15). */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     queries(oracleRun = true)
+
+  /** The 4-plane band check of the gates whose oracle inlines the fixed
+    * 4-plane matrix (q53/q167/q168/q171/q178/q189/q197): exact only while
+    * autoPlanes(n) == 4 — i.e. n ≤ 2000 (2000 sits exactly on the
+    * log₂(16) boundary, held in-band by autoPlanes' 1e-9 guard). On an
+    * ORACLE run, a new verification SF above the band must fail with this
+    * instruction instead of a bare hash mismatch (round-13 advisor); bench
+    * scale legs run the same queries far outside the band with no oracle
+    * to diverge from, so they pass through. Returns the plane count. */
+  private def fourPlanes(oracleRun: Boolean, gate: String, n: Long): Int = {
+    require(!oracleRun || Similarity.autoPlanes(n) == 4,
+      s"$gate's DuckDB oracle inlines a 4-plane matrix (valid while autoPlanes(n)==4, " +
+        s"i.e. n<=2000 embeddings); got n=$n => ${Similarity.autoPlanes(n)} planes - " +
+        s"re-derive the inlined plane literals in SimilarityGates.oracleSql before " +
+        s"gating this SF")
+    Similarity.autoPlanes(n)
+  }
 
   /** @param oracleRun true when a DuckDB oracle will hash-compare the
     * result: gates whose oracle inlines SF-band-dependent literals
@@ -135,42 +152,25 @@ private[graft] object SimilarityGates {
     // would be quadratic at ×100, see Similarity.autoPlanes)
     "q53_embed_neardup_lsh" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      val n = emb.count()
-      // the oracle inlines the FIXED 4-plane matrix, exact only while
-      // autoPlanes(n) == 4 — i.e. n ≤ 2000 (2000 sits exactly on the
-      // log₂(16) boundary, held in-band by autoPlanes' 1e-9 guard). On an
-      // ORACLE run, a new verification SF above the band must fail with
-      // this instruction instead of a bare hash mismatch (round-13
-      // advisor); bench scale legs run the same query far outside the
-      // band with no oracle to diverge from, so they pass through.
-      require(!oracleRun || Similarity.autoPlanes(n) == 4,
-        s"q53's DuckDB oracle inlines a 4-plane matrix (valid while autoPlanes(n)==4, " +
-          s"i.e. n<=2000 embeddings); got n=$n => ${Similarity.autoPlanes(n)} planes - " +
-          s"re-derive the inlined plane literals in SimilarityGates.oracleSql before " +
-          s"gating this SF")
+      val planes = fourPlanes(oracleRun, "q53", emb.count())
       Similarity.nearDupPairs(emb, 0.35, 64,
-          nPlanes = Similarity.autoPlanes(n))
+          nPlanes = planes)
         .orderBy(col("a"), col("b"))
     }),
 
     // The PRODUCTION form of q53 at corpus scale (round-14): hyperplane
     // LSH with a per-bucket population cap — over-full buckets (the two
     // ~30 %-of-corpus tight label clusters no plane count splits, see
-    // Similarity.nearDupPairsCapped's doc + tools/DiagBuckets) contribute
+    // Similarity.nearDupPairs' doc + q168's bucketProfile) contribute
     // pivot-star edges instead of their quadratic clique, bounding the
     // pair space at cap·N + N. Cap 64 is ACTIVE at both gated SFs, so the
     // star path is exercised and hash-gated, not just spec'd. Same
     // 4-plane-band require as q53 (shared inlined oracle matrix).
     "q167_embed_neardup_capped" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      val n = emb.count()
-      require(!oracleRun || Similarity.autoPlanes(n) == 4,
-        s"q167's DuckDB oracle inlines a 4-plane matrix (valid while autoPlanes(n)==4, " +
-          s"i.e. n<=2000 embeddings); got n=$n => ${Similarity.autoPlanes(n)} planes - " +
-          s"re-derive the inlined plane literals in SimilarityGates.oracleSql before " +
-          s"gating this SF")
-      Similarity.nearDupPairsCapped(emb, 0.35, 64,
-          nPlanes = Similarity.autoPlanes(n), maxBucketPop = 64L)
+      val planes = fourPlanes(oracleRun, "q167", emb.count())
+      Similarity.nearDupPairs(emb, 0.35, 64, nPlanes = planes,
+          cap = Cap.Fixed(64))
         .orderBy(col("a"), col("b"))
     }),
 
@@ -181,13 +181,8 @@ private[graft] object SimilarityGates {
     // All-integer output → exact oracle. Same 4-plane band as q53/q167.
     "q168_lsh_bucket_profile" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      val n = emb.count()
-      require(!oracleRun || Similarity.autoPlanes(n) == 4,
-        s"q168's DuckDB oracle inlines a 4-plane matrix (valid while autoPlanes(n)==4, " +
-          s"i.e. n<=2000 embeddings); got n=$n => ${Similarity.autoPlanes(n)} planes - " +
-          s"re-derive the inlined plane literals in SimilarityGates.oracleSql before " +
-          s"gating this SF")
-      Similarity.bucketProfile(emb, 64, Similarity.autoPlanes(n),
+      val planes = fourPlanes(oracleRun, "q168", emb.count())
+      Similarity.bucketProfile(emb, 64, planes,
           maxBucketPop = 64L)
         .orderBy(col("bucket"))
     }),
@@ -202,14 +197,9 @@ private[graft] object SimilarityGates {
     // filter) is replayed by the oracle. Same 4-plane band as q53/q167.
     "q171_embed_neardup_autocap" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      val n = emb.count()
-      require(!oracleRun || Similarity.autoPlanes(n) == 4,
-        s"q171's DuckDB oracle inlines a 4-plane matrix (valid while autoPlanes(n)==4, " +
-          s"i.e. n<=2000 embeddings); got n=$n => ${Similarity.autoPlanes(n)} planes - " +
-          s"re-derive the inlined plane literals in SimilarityGates.oracleSql before " +
-          s"gating this SF")
-      Similarity.nearDupPairsAutoCap(emb, 0.35, 64,
-          nPlanes = Similarity.autoPlanes(n), floorCap = 64L, mult = 4L)
+      val planes = fourPlanes(oracleRun, "q171", emb.count())
+      Similarity.nearDupPairs(emb, 0.35, 64, nPlanes = planes,
+          cap = Cap.Derived(64, 4))
         .orderBy(col("a"), col("b"))
     }),
 
@@ -223,17 +213,12 @@ private[graft] object SimilarityGates {
     // Same 4-plane band as q53/q167 (shared inlined matrix).
     "q178_cap_recall_audit" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      val n = emb.count()
-      require(!oracleRun || Similarity.autoPlanes(n) == 4,
-        s"q178's DuckDB oracle inlines a 4-plane matrix (valid while autoPlanes(n)==4, " +
-          s"i.e. n<=2000 embeddings); got n=$n => ${Similarity.autoPlanes(n)} planes - " +
-          s"re-derive the inlined plane literals in SimilarityGates.oracleSql before " +
-          s"gating this SF")
+      val planes = fourPlanes(oracleRun, "q178", emb.count())
       Dedup.capRecallAudit(
         Similarity.nearDupPairs(emb, 0.35, 64,
-          nPlanes = Similarity.autoPlanes(n)),
-        Similarity.nearDupPairsCapped(emb, 0.35, 64,
-          nPlanes = Similarity.autoPlanes(n), maxBucketPop = 64L))
+          nPlanes = planes),
+        Similarity.nearDupPairs(emb, 0.35, 64, nPlanes = planes,
+          cap = Cap.Fixed(64)))
     }),
 
     // The same recall audit over the SemDeDup twins: q102's uncapped
@@ -246,7 +231,7 @@ private[graft] object SimilarityGates {
       val cents = Similarity.kmeansCentroids(emb, semDedupCells(emb.count()), 0)
       Dedup.capRecallAudit(
         Similarity.cellNearDupPairs(emb, cents, 0.35),
-        Similarity.cellNearDupPairsCapped(emb, cents, 0.35, maxCellPop = 24L))
+        Similarity.cellNearDupPairs(emb, cents, 0.35, cap = Cap.Fixed(24)))
     }),
 
     // q183's audit with the CELL cap's star generalized to the pivot
@@ -258,8 +243,8 @@ private[graft] object SimilarityGates {
       val cents = Similarity.kmeansCentroids(emb, semDedupCells(emb.count()), 0)
       Dedup.capRecallAudit(
         Similarity.cellNearDupPairs(emb, cents, 0.35),
-        Similarity.cellNearDupPairsCappedBlock(emb, cents, 0.35,
-          maxCellPop = 24L, blockSize = 256L))
+        Similarity.cellNearDupPairs(emb, cents, 0.35, cap = Cap.Fixed(24),
+          pivots = 256))
     }),
 
     // q178's audit with the 1-pivot star generalized to the PIVOT BLOCK
@@ -273,18 +258,12 @@ private[graft] object SimilarityGates {
     // twin. Same 4-plane band guard as q178 (shared inlined matrix).
     "q189_blockcap_audit" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      val n = emb.count()
-      require(!oracleRun || Similarity.autoPlanes(n) == 4,
-        s"q189's DuckDB oracle inlines a 4-plane matrix (valid while autoPlanes(n)==4, " +
-          s"i.e. n<=2000 embeddings); got n=$n => ${Similarity.autoPlanes(n)} planes - " +
-          s"re-derive the inlined plane literals in SimilarityGates.oracleSql before " +
-          s"gating this SF")
+      val planes = fourPlanes(oracleRun, "q189", emb.count())
       Dedup.capRecallAudit(
         Similarity.nearDupPairs(emb, 0.35, 64,
-          nPlanes = Similarity.autoPlanes(n)),
-        Similarity.nearDupPairsCappedBlock(emb, 0.35, 64,
-          nPlanes = Similarity.autoPlanes(n), maxBucketPop = 64L,
-          blockSize = 256L))
+          nPlanes = planes),
+        Similarity.nearDupPairs(emb, 0.35, 64, nPlanes = planes,
+          cap = Cap.Fixed(64), pivots = 256))
     }),
 
     // The two round-17 disciplines COMPOSED into the self-tuning
@@ -295,18 +274,12 @@ private[graft] object SimilarityGates {
     // number. Same 4-plane band guard as q171/q178.
     "q197_autocap_block_audit" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      val n = emb.count()
-      require(!oracleRun || Similarity.autoPlanes(n) == 4,
-        s"q197's DuckDB oracle inlines a 4-plane matrix (valid while autoPlanes(n)==4, " +
-          s"i.e. n<=2000 embeddings); got n=$n => ${Similarity.autoPlanes(n)} planes - " +
-          s"re-derive the inlined plane literals in SimilarityGates.oracleSql before " +
-          s"gating this SF")
+      val planes = fourPlanes(oracleRun, "q197", emb.count())
       Dedup.capRecallAudit(
         Similarity.nearDupPairs(emb, 0.35, 64,
-          nPlanes = Similarity.autoPlanes(n)),
-        Similarity.nearDupPairsAutoCapBlock(emb, 0.35, 64,
-          nPlanes = Similarity.autoPlanes(n), floorCap = 64L, mult = 4L,
-          blockSize = 256L))
+          nPlanes = planes),
+        Similarity.nearDupPairs(emb, 0.35, 64, nPlanes = planes,
+          cap = Cap.Derived(64, 4), pivots = 256))
     }),
 
     // kNN label purity — the standard embedding-quality probe over the
@@ -351,15 +324,15 @@ private[graft] object SimilarityGates {
     // q167 pivot-star discipline applied to the SemDeDup pair generator —
     // cells over 24 members contribute pivot-star edges instead of their
     // clique. The cap is ACTIVE at both gated SFs (sf0.01: cells of
-    // 22-32 members, ~half over; sf0.1: 44-60, most over — DiagCells),
+    // 22-32 members, ~half over; sf0.1: 44-60, most over — q170's profile),
     // and BOTH branches are exercised at the driver's sf0.01 gate, so
     // the star semantics are hash-gated. q102 stays the uncapped
     // verifier form; 24 is the gate-active knob, not a production
     // default (production sizes the cap from q170's profile).
     "q169_semdedup_capped" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      Similarity.semDedupCapped(emb, semDedupCells(emb.count()), 0, 0.35,
-          maxCellPop = 24L)
+      Similarity.semDedup(emb, semDedupCells(emb.count()), 0, 0.35,
+          cap = Cap.Fixed(24))
         .select(col("vec_id"), col("label"))
         .orderBy(col("vec_id"))
     }),
@@ -704,7 +677,7 @@ private[graft] object SimilarityGates {
     // vb = pivot can never survive va < vb), small buckets the full q53
     // pair set. Both paths are ACTIVE at the gated SFs (the two tight
     // label clusters exceed the cap at sf0.01 and sf0.1 — see
-    // tools/DiagBuckets), so the star logic itself is hash-gated.
+    // q168's bucketProfile), so the star logic itself is hash-gated.
     "q167_embed_neardup_capped" ->
       s"""WITH ${lshBucketCte(4, 64)},
          |v AS (SELECT m.vec_id, m.embedding AS e, $nrmSql AS nrm, b.bucket

@@ -126,10 +126,10 @@ object Dedup {
         numPerms)).as("sig"))
   }
 
-  /** (id, band, bandkey) rows — the banding shared by [[lshCandidates]],
-    * [[lshCandidatesCapped]] and the streaming ingest twin
-    * ([[graft.streaming.FuzzyIngest]]): `bands` bands of numPerms/bands
-    * signature rows each, keyed by the band's joined values. */
+  /** (id, band, bandkey) rows — the banding shared by [[lshCandidates]]
+    * and the streaming ingest twin ([[graft.streaming.FuzzyIngest]]):
+    * `bands` bands of numPerms/bands signature rows each, keyed by the
+    * band's joined values. */
   private[graft] def bandedSigs(sigs: DataFrame, idCol: String, bands: Int): DataFrame =
     sigs.select(
       col(idCol),
@@ -142,85 +142,32 @@ object Dedup {
     * Self-join is on (band, bandHash) — the classic O(n) candidate
     * generator. Emits distinct candidate pairs (a < b).
     *
-    * Skew note: a degenerate band (e.g. all-empty docs) creates a hot
-    * bucket whose pair space is O(df²) on a single reducer —
-    * [[lshCandidatesCapped]] is the production form with that bucket
-    * df-capped. */
-  def lshCandidates(sigs: DataFrame, idCol: String = "doc_id", bands: Int = 8): DataFrame = {
-    val banded = bandedSigs(sigs, idCol, bands)
-    val l = banded.select(col(idCol).as("a"), col("band"), col("bandkey"))
-    val r = banded.select(col(idCol).as("b"), col("band"), col("bandkey"))
-    l.join(r, Seq("band", "bandkey"))
-      .where(col("a") < col("b"))
-      .select("a", "b").distinct()
-  }
-
-  /** [[lshCandidates]] with the hot-bucket knob — the same df cap
-    * [[ngramJaccardPairsCapped]] applies to hot shingles, applied to
-    * (band, bandkey) buckets: buckets holding more than `maxBucket` docs
-    * are dropped from candidate generation. A degenerate band (every
-    * empty doc shares all 8 band keys; boilerplate-heavy corpora collide
-    * likewise) otherwise piles O(df²) pair rows onto one reducer — at
-    * 100 TB a single all-empty-docs bucket is a job-killer, and its pairs
-    * carry no similarity signal a downstream verifier would keep anyway.
-    * Only pairs whose EVERY shared band is hot can be missed, and such
-    * pairs still meet in any surviving band (the cap is per (band, key),
-    * not per doc).
-    *
-    * The hot list is tiny by construction (df > maxBucket can hold at
-    * most n/maxBucket buckets) — one aggregate + a broadcast anti-join
-    * screens the index, exactly the capped-inverted-index shape. */
-  def lshCandidatesCapped(
+    * `cap` is the hot-bucket knob (the production form): (band, bandkey)
+    * buckets holding more than the cap are dropped from candidate
+    * generation. A degenerate band (every empty doc shares all 8 band
+    * keys; boilerplate-heavy corpora collide likewise) otherwise piles
+    * O(df²) pair rows onto one reducer — at 100 TB a single all-empty-docs
+    * bucket is a job-killer, and its pairs carry no similarity signal a
+    * downstream verifier would keep anyway. Only pairs whose EVERY shared
+    * band is hot can be missed, and such pairs still meet in any
+    * surviving band (the cap is per (band, key), not per doc). The hot
+    * list is tiny by construction (df > cap can hold at most n/cap
+    * buckets) — one aggregate + a broadcast anti-join screens the index.
+    * A [[Cap.Derived]] cap self-tunes: a uniform bucket space caps at the
+    * floor, a space with degenerate hot buckets caps just above the
+    * typical bucket and drops exactly the outliers. */
+  def lshCandidates(
       sigs: DataFrame,
-      maxBucket: Int,
       idCol: String = "doc_id",
-      bands: Int = 8): DataFrame = {
-    require(maxBucket >= 2, "maxBucket < 2 would drop every candidate pair")
+      bands: Int = 8,
+      cap: Cap = Cap.Off): DataFrame = {
+    require(cap.lowest >= 2, "a bucket cap < 2 would drop every candidate pair")
     val banded = bandedSigs(sigs, idCol, bands)
-    val hot = banded.groupBy(col("band"), col("bandkey"))
-      .agg(count(lit(1)).as("df"))
-      .where(col("df") > maxBucket)
-      .select(col("band"), col("bandkey"))
-    val idx = banded.join(broadcast(hot), Seq("band", "bandkey"), "left_anti")
-    val l = idx.select(col(idCol).as("a"), col("band"), col("bandkey"))
-    val r = idx.select(col(idCol).as("b"), col("band"), col("bandkey"))
-    l.join(r, Seq("band", "bandkey"))
-      .where(col("a") < col("b"))
-      .select("a", "b").distinct()
-  }
-
-  /** [[lshCandidatesCapped]] with the bucket cap DERIVED from the
-    * measured (band, bandkey) population profile instead of passed as a
-    * constant — the same [[Similarity.derivedCap]] discipline as the
-    * embedding near-dup's q171 path: cap = max(floorCap, mult ·
-    * lower-median bucket population), a pure integer function of the
-    * profile, so the full chain (buckets → median → cap → anti-join) is
-    * oracle-replayable. A uniform bucket space caps at the floor; a
-    * space with degenerate hot buckets (all-empty docs, boilerplate
-    * collisions) caps just above the typical bucket and drops exactly
-    * the outliers.
-    *
-    * Scale: the profile is one O(N) groupBy; the median runs over
-    * O(distinct populations) rows (see derivedCap); the hot list stays
-    * tiny (df > cap bounds it at n/cap buckets) and broadcast. The
-    * profile is materialized once (eager localCheckpoint, O(buckets)
-    * rows) because both the cap derivation and the hot screen read it. */
-  def lshCandidatesAutoCap(
-      sigs: DataFrame,
-      floorCap: Long = 2L,
-      mult: Long = 2L,
-      idCol: String = "doc_id",
-      bands: Int = 8): DataFrame = {
-    require(floorCap >= 2, "floorCap < 2 would drop every candidate pair")
-    val banded = bandedSigs(sigs, idCol, bands)
-    val pops = banded.groupBy(col("band"), col("bandkey"))
-      .agg(count(lit(1)).as("pop"))
-      .localCheckpoint(true)
-    val cap = Similarity.derivedCap(pops.select(col("pop")), floorCap, mult)
-    val hot = pops.crossJoin(broadcast(cap))
-      .where(col("pop") > col("cap"))
-      .select(col("band"), col("bandkey"))
-    val idx = banded.join(broadcast(hot), Seq("band", "bandkey"), "left_anti")
+    val idx = cap match {
+      case Cap.Off => banded
+      case c: Cap.Capped => banded.join(
+        broadcast(Cap.hotKeys(banded, c, "band", "bandkey")), Seq("band", "bandkey"), "left_anti")
+    }
     val l = idx.select(col(idCol).as("a"), col("band"), col("bandkey"))
     val r = idx.select(col(idCol).as("b"), col("band"), col("bandkey"))
     l.join(r, Seq("band", "bandkey"))
@@ -230,15 +177,6 @@ object Dedup {
 
   // -------------------------------------------------------- n-gram Jaccard --
 
-  /** Exact n-gram Jaccard similarity for ALL pairs sharing ≥1 shingle,
-    * via inverted-index self-join: explode distinct shingles, join on the
-    * shingle, count common, |A∪B| = |A|+|B|−common.
-    *
-    * At 100 TB this exact form is the *verifier* behind minhash candidates
-    * ([[jaccardVerify]]); standalone it is still O(pairs-sharing-a-shingle),
-    * far below O(n²) on natural text. Very frequent shingles are
-    * stop-listed at scale by [[ngramJaccardPairsCapped]] (maxDocFreq cap).
-    */
   /** Shuffle width for the shingle-keyed pair-join stage, scaled with the
     * input: the session default (sized for the warehouse tables) starves
     * the pair fan-out at up-scale — the join inflates each source byte
@@ -275,26 +213,74 @@ object Dedup {
     }
   }
 
+  /** Exact n-gram Jaccard similarity for ALL pairs sharing ≥1 shingle,
+    * via inverted-index self-join: explode distinct shingles, join on the
+    * shingle, count common, |A∪B| = |A|+|B|−common.
+    *
+    * At 100 TB this exact form is the *verifier* behind minhash candidates
+    * ([[jaccardVerify]]); standalone it is still O(pairs-sharing-a-shingle),
+    * far below O(n²) on natural text.
+    *
+    * `cap` is the hot-shingle knob: shingles appearing in more than the
+    * cap docs are dropped from the INDEX (candidate generation) — they
+    * generate O(df²) pair rows while carrying almost no similarity signal
+    * — yet reported similarities stay EXACT Jaccard over the full shingle
+    * sets; only pairs whose every shared shingle is hot can be missed. A
+    * [[Cap.Derived]] cap self-tunes to the corpus: natural text whose
+    * typical shingle is near-unique caps at the floor and stop-lists only
+    * genuinely hot boilerplate; a template-heavy corpus raises the cap
+    * with the median so the stop list keeps naming OUTLIERS.
+    *
+    * The capped verification never ships shingle ARRAYS through a join
+    * (at 1M+ candidates that is a multi-GB shuffle of fat rows): |A∩B| is
+    * assembled from slim (a, b) count rows as cold-common (a group-by over
+    * the capped index self-join) plus a hot-common correction (candidates
+    * joined against the hot postings of each side — O(candidates ×
+    * hot-shingles-per-doc), and the hot LIST is small by construction even
+    * when each hot shingle's posting list is huge). The stop list is a
+    * tiny aggregate broadcast both ways. */
   def ngramJaccardPairs(
       docs: DataFrame,
       idCol: String = "doc_id",
       textCol: String = "text",
       shingleN: Int = 3,
-      threshold: Double = 0.5): DataFrame = {
+      threshold: Double = 0.5,
+      cap: Cap = Cap.Off): DataFrame = {
+    require(cap.lowest >= 1, "a shingle cap < 1 would stop-list every shingle")
     val sh = docs
       .repartition(docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, col(idCol))
       .select(col(idCol).as("id"),
         explode(array_distinct(shingles(col(textCol), shingleN))).as("sh"))
     val sizes = sh.groupBy(col("id")).agg(count(lit(1)).as("sz"))
-    // pre-partition by shingle at the SCALED width: HashPartitioning(sh, n)
-    // satisfies the join's ClusteredDistribution for any n, so the
-    // self-join runs at n partitions (one exchange, reused by both sides)
-    // instead of the session default sized for unexploded tables
-    val shWide = sh.repartition(pairShuffleParts(docs), col("sh"))
-    val joined = shWide.select(col("id").as("a"), col("sh"))
-      .join(shWide.select(col("id").as("b"), col("sh")), Seq("sh"))
-      .where(col("a") < col("b"))
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("common"))
+    // shared shingles per pair: (a, b, n) over the (possibly stop-listed)
+    // index, pre-partitioned by shingle at the SCALED width —
+    // HashPartitioning(sh, n) satisfies the join's ClusteredDistribution
+    // for any n, so the self-join runs at n partitions (one exchange,
+    // reused by both sides) instead of the session default sized for
+    // unexploded tables
+    def shared(index: DataFrame, n: String): DataFrame = {
+      val wide = index.repartition(pairShuffleParts(docs), col("sh"))
+      wide.select(col("id").as("a"), col("sh"))
+        .join(wide.select(col("id").as("b"), col("sh")), Seq("sh"))
+        .where(col("a") < col("b"))
+        .groupBy(col("a"), col("b")).agg(count(lit(1)).as(n))
+    }
+    val joined = cap match {
+      case Cap.Off => shared(sh, "common")
+      case c: Cap.Capped =>
+        val hot = Cap.hotKeys(sh, c, "sh")
+        // shared cold shingles per pair — doubles as the candidate set
+        val coldCommon = shared(sh.join(broadcast(hot), Seq("sh"), "left_anti"), "cold")
+        // shared HOT shingles per candidate pair (completes |A∩B| exactly)
+        val hotPost = sh.join(broadcast(hot), Seq("sh"), "left_semi")
+        val hotCommon = coldCommon.select(col("a"), col("b"))
+          .join(hotPost.select(col("id").as("a"), col("sh")), Seq("a"))
+          .join(hotPost.select(col("id").as("b"), col("sh")), Seq("b", "sh"))
+          .groupBy(col("a"), col("b")).agg(count(lit(1)).as("hotc"))
+        coldCommon
+          .join(hotCommon, Seq("a", "b"), "left")
+          .withColumn("common", col("cold") + coalesce(col("hotc"), lit(0L)))
+    }
     joined
       .join(sizes.select(col("id").as("a"), col("sz").as("sza")), Seq("a"))
       .join(sizes.select(col("id").as("b"), col("sz").as("szb")), Seq("b"))
@@ -330,73 +316,13 @@ object Dedup {
 
   /** Dedup GROUP resolution — the step after pair generation: collapse
     * near-dup pairs into connected components so each group keeps one
-    * canonical doc (the minimum id). Standard Pregel-style min-label
-    * propagation on DataFrames: every node repeatedly adopts the smallest
-    * label among itself and its neighbors until fixpoint — O(component
-    * diameter) rounds, each one self-join + aggregate, all
-    * shuffle-partitioned by node. The driver only checks the converged
-    * flag per round (a 1-row action), never collects the graph.
-    *
-    * Near-dup components have tiny diameters (dup clusters are
-    * quasi-cliques), so this converges in 2-3 rounds on real corpora; the
-    * `maxIters` guard turns a pathological chain into an error, not an
-    * infinite loop.
-    *
-    * Returns (doc_id, comp) for every node appearing in `pairs`, where
-    * comp = min doc_id reachable — deterministic, oracle-checkable.
-    */
-  def connectedComponents(
-      pairs: DataFrame,
-      aCol: String = "a",
-      bCol: String = "b",
-      maxIters: Int = 50): DataFrame = {
-    // no dedup of the symmetrized edge list: duplicate edges cannot change
-    // a min() propagation, and the distinct would be one more full shuffle
-    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .persist()
-    edges.count()
-    try {
-      // localCheckpoint (eager) each round: an iterative DataFrame loop
-      // otherwise chains every prior round into the next logical plan and
-      // Catalyst re-optimization cost explodes super-linearly (measured:
-      // 2 s → 150 s by iteration 5 with plain persist). Truncating lineage
-      // keeps every round's plan — and planning time — constant.
-      var labels = edges.select(col("src").as("id")).distinct()
-        .withColumn("comp", col("id")).localCheckpoint(true)
-      var converged = false
-      var iters = 0
-      val debug = sys.env.contains("GRAFT_CC_DEBUG")
-      while (!converged && iters < maxIters) {
-        val t0 = System.nanoTime()
-        // each node adopts min(own comp, neighbors' comps); old + proposed
-        // labels land in one materialized frame so the convergence probe
-        // costs no second join
-        val joined = edges.join(labels.withColumnRenamed("id", "dst")
-              .withColumnRenamed("comp", "dcomp"), Seq("dst"))
-          .groupBy(col("src").as("id")).agg(min(col("dcomp")).as("ncomp"))
-          .join(labels, Seq("id"))
-          .localCheckpoint(true)
-        val changed = joined.where(col("ncomp") < col("comp")).limit(1).count()
-        labels = joined.select(col("id"), least(col("comp"), col("ncomp")).as("comp"))
-        converged = changed == 0
-        iters += 1
-        if (debug) System.err.println(
-          f"[cc] iter $iters changed=$changed ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
-      if (!converged)
-        throw new IllegalStateException(s"connectedComponents: no fixpoint in $maxIters iters")
-      labels
-    } finally { edges.unpersist(); () }
-  }
-
-  /** Connected components by alternating large-star / small-star rounds —
-    * the high-diameter scale twin of [[connectedComponents]]. Min-label
-    * propagation needs O(diameter) rounds: fine for near-dup quasi-cliques
-    * (2-3 rounds), pathological on chain-shaped graphs (a 1M-hop chain is
-    * 1M rounds). The star algorithm (Kiveris, Lattanzi, Mirrokni, Rastogi,
-    * Vassilvitskii: "Connected Components in MapReduce and Beyond",
-    * ACM SoCC 2014, alg. 3/4) rewires the edge set itself:
+    * canonical doc (the minimum id), by alternating large-star /
+    * small-star rounds. Min-label propagation needs O(diameter) rounds:
+    * fine for near-dup quasi-cliques (2-3 rounds), pathological on
+    * chain-shaped graphs (a 1M-hop chain is 1M rounds). The star
+    * algorithm (Kiveris, Lattanzi, Mirrokni, Rastogi, Vassilvitskii:
+    * "Connected Components in MapReduce and Beyond", ACM SoCC 2014,
+    * alg. 3/4) rewires the edge set itself:
     *
     *  - large-star: every node's LARGER neighbors re-link to the minimum
     *    of its closed neighborhood;
@@ -404,9 +330,11 @@ object Dedup {
     *    minimum of the smaller neighborhood;
     *
     * each a pair of hash shuffles, converging to per-component stars in
-    * O(log n) rounds regardless of diameter. Output contract identical to
-    * [[connectedComponents]]: (id, comp = min reachable id) — so the two
-    * share an oracle.
+    * O(log n) rounds regardless of diameter. The `maxIters` guard turns a
+    * non-converging run into an error, not an infinite loop.
+    *
+    * Returns (id, comp) for every node appearing in `pairs`, where
+    * comp = min id reachable — deterministic, oracle-checkable.
     */
   def connectedComponentsStar(
       pairs: DataFrame,
@@ -421,7 +349,10 @@ object Dedup {
       e.select(col("lo").as("u"), col("hi").as("v"))
         .unionByName(e.select(col("hi").as("u"), col("lo").as("v")))
     var edges = canon(pairs.select(col(aCol).as("lo"), col(bCol).as("hi")))
-      .localCheckpoint(true) // truncate lineage per round, same as the Pregel loop
+      // eager localCheckpoint per round: an iterative DataFrame loop
+      // otherwise chains every prior round into the next logical plan and
+      // Catalyst re-optimization cost explodes super-linearly
+      .localCheckpoint(true)
     // BOUNDED edge sets solve on the driver (r18, guide §1.2 — algorithm
     // first): each star round is ~6 driver-coordinated jobs with two
     // checkpoints, pure fixed overhead when the canonical edge set fits in
@@ -485,9 +416,7 @@ object Dedup {
     }
     var converged = false
     var iters = 0
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
     while (!converged && iters < maxIters) {
-      val t0 = System.nanoTime()
       // large-star: for edge {u,v}, v > u: v re-links to min(N(u) ∪ {u})
       val s1 = sym(edges)
       val m1 = s1.groupBy(col("u"))
@@ -509,8 +438,6 @@ object Dedup {
         ss.join(edges, Seq("lo", "hi"), "left_anti").limit(1).count() == 0
       edges = ss
       iters += 1
-      if (debug) System.err.println(
-        f"[cc-star] iter $iters edges=${edges.count()} ${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
     if (!converged)
       throw new IllegalStateException(s"connectedComponentsStar: no fixpoint in $maxIters iters")
@@ -726,120 +653,9 @@ object Dedup {
       .select(col("a"), col("b"), col("hamming"))
   }
 
-  /** [[ngramJaccardPairs]] with the hot-shingle knob the round-1 review
-    * named: shingles appearing in more than `maxDocFreq` docs are dropped
-    * from the INDEX (candidate generation) — they generate O(df²) pair
-    * rows while carrying almost no similarity signal — yet reported
-    * similarities are EXACT Jaccard over the full shingle sets; only pairs
-    * whose every shared shingle is hot can be missed.
-    *
-    * The exact verification never ships shingle ARRAYS through a join
-    * (an earlier form did — at 1M+ candidates that is a multi-GB shuffle
-    * of fat rows): |A∩B| is assembled from slim (a, b) count rows as
-    * cold-common (a group-by over the capped index self-join) plus a
-    * hot-common correction (candidates joined against the hot postings of
-    * each side — O(candidates × hot-shingles-per-doc), and the hot LIST is
-    * small by construction even when each hot shingle's posting list is
-    * huge). The doc-freq side is a tiny aggregate broadcast both ways. */
-  def ngramJaccardPairsCapped(
-      docs: DataFrame,
-      maxDocFreq: Int,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      shingleN: Int = 3,
-      threshold: Double = 0.5): DataFrame = {
-    val sh = shingleIndex(docs, idCol, textCol, shingleN)
-    val hot = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-      .where(col("df") > maxDocFreq).select(col("sh"))
-    jaccardCappedCore(docs, sh, hot, threshold)
-  }
-
-  /** [[ngramJaccardPairsCapped]] with the hot-shingle df cap DERIVED
-    * from the measured shingle document-frequency profile instead of
-    * passed as a constant ([[Similarity.derivedCap]]: cap =
-    * max(floorCap, mult · lower-median shingle df)) — the operator
-    * self-tunes to the corpus: natural text whose typical shingle is
-    * near-unique caps at the floor and stop-lists only genuinely hot
-    * boilerplate; a corpus whose typical shingle is already frequent
-    * (template-heavy) raises the cap with the median so the stop list
-    * keeps naming OUTLIERS, not the bulk of the index. The derivation is
-    * a pure integer function of the df profile, so the full chain
-    * (dfs → median → cap → stop list → capped index → exact Jaccard
-    * with hot-correction) is oracle-replayable.
-    *
-    * Scale: identical to the constant-cap form plus one O(distinct
-    * shingles) profile aggregate, materialized once (eager
-    * localCheckpoint) because both the cap derivation and the stop-list
-    * screen read it; the median itself runs over O(distinct dfs) rows. */
-  def ngramJaccardPairsAutoCap(
-      docs: DataFrame,
-      floorCap: Long = 6L,
-      mult: Long = 2L,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      shingleN: Int = 3,
-      threshold: Double = 0.5): DataFrame = {
-    require(floorCap >= 1, "floorCap < 1 would stop-list every shingle")
-    val sh = shingleIndex(docs, idCol, textCol, shingleN)
-    val dfs = sh.groupBy(col("sh")).agg(count(lit(1)).as("pop"))
-      .localCheckpoint(true)
-    val cap = Similarity.derivedCap(dfs.select(col("pop")), floorCap, mult)
-    val hot = dfs.crossJoin(broadcast(cap))
-      .where(col("pop") > col("cap"))
-      .select(col("sh"))
-    jaccardCappedCore(docs, sh, hot, threshold)
-  }
-
-  /** The distinct (id, shingle) inverted index shared by the capped
-    * Jaccard forms. */
-  private def shingleIndex(docs: DataFrame, idCol: String, textCol: String,
-      shingleN: Int): DataFrame =
-    docs
-      .repartition(docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, col(idCol))
-      .select(col(idCol).as("id"),
-        explode(array_distinct(shingles(col(textCol), shingleN))).as("sh"))
-
-  /** The capped-inverted-index exact-Jaccard body shared by
-    * [[ngramJaccardPairsCapped]] (constant stop list) and
-    * [[ngramJaccardPairsAutoCap]] (profile-derived stop list): cold
-    * common counts from the capped index self-join, hot-common
-    * correction from the candidates × hot postings, |A∪B| from per-doc
-    * shingle counts. `hot` is the (sh) stop list — tiny by construction,
-    * broadcast both ways. */
-  private def jaccardCappedCore(docs: DataFrame, sh: DataFrame,
-      hot: DataFrame, threshold: Double): DataFrame = {
-    // same scaled-width pre-partition as the uncapped form (see
-    // pairShuffleParts): the capped index self-join is the production
-    // path on the up-scale legs and carries the same pair fan-out
-    val idx = sh.join(broadcast(hot), Seq("sh"), "left_anti")
-      .repartition(pairShuffleParts(docs), col("sh"))
-    // shared cold shingles per pair — doubles as the candidate set
-    val coldCommon = idx.select(col("id").as("a"), col("sh"))
-      .join(idx.select(col("id").as("b"), col("sh")), Seq("sh"))
-      .where(col("a") < col("b"))
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("cold"))
-    // shared HOT shingles per candidate pair (completes |A∩B| exactly)
-    val hotPost = sh.join(broadcast(hot), Seq("sh"), "left_semi")
-    val hotCommon = coldCommon.select(col("a"), col("b"))
-      .join(hotPost.select(col("id").as("a"), col("sh")), Seq("a"))
-      .join(hotPost.select(col("id").as("b"), col("sh")), Seq("b", "sh"))
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("hotc"))
-    val sizes = sh.groupBy(col("id")).agg(count(lit(1)).as("sz"))
-    coldCommon
-      .join(hotCommon, Seq("a", "b"), "left")
-      .withColumn("common", col("cold") + coalesce(col("hotc"), lit(0L)))
-      .join(sizes.select(col("id").as("a"), col("sz").as("sza")), Seq("a"))
-      .join(sizes.select(col("id").as("b"), col("sz").as("szb")), Seq("b"))
-      .withColumn("jaccard",
-        round(col("common").cast("double")
-          / (col("sza") + col("szb") - col("common")).cast("double"), 6))
-      .where(col("jaccard") >= threshold)
-      .select(col("a"), col("b"), col("jaccard"))
-  }
-
   /** The APPLY half of dedup-group resolution: given the corpus and the
     * (id, comp) labels of its near-dup pair graph
-    * ([[connectedComponents]] / [[connectedComponentsStar]]), emit the
+    * ([[connectedComponentsStar]]), emit the
     * surviving corpus — the canonical (minimum-id, = the component label)
     * doc of each near-dup group plus every doc the pair graph never
     * touched.
@@ -986,9 +802,8 @@ object Dedup {
     *     ([[encodePos]] — the exact-dedup min-agg, map-side combinable);
     *  2. MinHash signatures over the distinct texts
     *     ([[minhashSignatures]]), LSH band candidates
-    *     ([[lshCandidates]] / [[lshCandidatesCapped]] when `maxBucket`
-    *     is set), exact Jaccard verification of candidates only
-    *     ([[jaccardVerify]]);
+    *     ([[lshCandidates]]), exact Jaccard verification of candidates
+    *     only ([[jaccardVerify]]);
     *  3. verified pairs collapse into groups
     *     ([[connectedComponentsStar]], O(log n) rounds at any diameter);
     *     each distinct text's keeper key = its group's min pid (untouched
@@ -1014,19 +829,15 @@ object Dedup {
       textCol: String = "text",
       shingleN: Int = 3,
       numPerms: Int = 32,
-      bands: Int = 8,
-      maxBucket: Option[Int] = None): DataFrame = {
+      bands: Int = 8): DataFrame = {
     val ws = split(col(textCol), " ")
     val nParas = ceil(size(ws).cast("double") / wordsPerPara).cast("long")
     val paras = explodeParagraphs(docs, wordsPerPara, idCol, textCol)
     val firsts = paras.groupBy(col("para"))
       .agg(min(encodePos(col(idCol), col("pos"))).as("pid"))
     val sigs = minhashSignatures(firsts, "pid", "para", shingleN, numPerms)
-    val cands = maxBucket match {
-      case Some(cap) => lshCandidatesCapped(sigs, cap, "pid", bands)
-      case None      => lshCandidates(sigs, "pid", bands)
-    }
-    val pairs = jaccardVerify(firsts, cands, "pid", "para", shingleN, threshold)
+    val pairs = jaccardVerify(firsts, lshCandidates(sigs, "pid", bands),
+      "pid", "para", shingleN, threshold)
     val comps = connectedComponentsStar(pairs)
     val label = firsts
       .join(comps.withColumnRenamed("id", "pid"), Seq("pid"), "left")

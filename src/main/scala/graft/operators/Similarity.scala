@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
 
@@ -388,11 +388,6 @@ object Similarity {
         round(col("n_hit").cast("double") / col("n_exact").cast("double"), 6))
   }
 
-  /** Embedding-cosine near-duplicate pairs (a < b, cosine ≥ threshold),
-    * bucketed by hyperplane LSH so the pair space is per-bucket, not global.
-    * For the exact (oracle-checkable) variant pass nPlanes = 0 → single
-    * bucket = exact all-pairs (only viable at verification scale).
-    */
   /** Scale-aware hyperplane count for [[nearDupPairs]]'s bucketed path:
     * a FIXED plane count is quadratic at scale (buckets stay constant
     * while per-bucket population grows linearly, so the within-bucket
@@ -416,279 +411,138 @@ object Similarity {
   def autoPlanes(n: Long): Int =
     math.max(4, math.ceil(math.log(n / 125.0) / math.log(2.0) - 1e-9).toInt)
 
-  def nearDupPairs(
-      vecs: DataFrame,
-      threshold: Double,
-      dim: Int,
-      nPlanes: Int = 0,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    val base = vecs.select(col(idCol), col(vecCol), norm(col(vecCol)).as("nrm"))
-    val shufflePartitions =
-      vecs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val joined =
-      if (nPlanes <= 0) {
-        // exact all-pairs: a constant join key would degenerate to a
-        // single-task nested loop — instead broadcast one side and
-        // repartition the other so the O(n²) scoring spreads over all cores.
-        val l = base.select(col(idCol).as("a"), col(vecCol).as("va"),
-          col("nrm").as("na")).repartition(shufflePartitions)
-        val r = base.select(col(idCol).as("b"), col(vecCol).as("vb"),
-          col("nrm").as("nb"))
-        l.crossJoin(broadcast(r))
-      } else {
-        // scale path: only same-bucket pairs are candidates; the bucket
-        // equi-join shuffle-partitions the pair space by bucket.
-        val withBucket =
-          base.withColumn("bucket", hyperplaneBucket(col(vecCol), dim, nPlanes))
-        val l = withBucket.select(col(idCol).as("a"), col(vecCol).as("va"),
-          col("nrm").as("na"), col("bucket"))
-        val r = withBucket.select(col(idCol).as("b"), col(vecCol).as("vb"),
-          col("nrm").as("nb"), col("bucket"))
-        l.join(r, Seq("bucket"))
-      }
-    scoredPairs(joined, threshold)
-  }
-
-  /** [[nearDupPairs]]' bucketed path with a per-bucket population cap —
-    * the PRODUCTION form at corpus scale, the embedding analogue of
-    * [[graft.operators.Dedup.lshCandidatesCapped]]'s hot-band df cap and
-    * [[graft.operators.Dedup.ngramJaccardPairsCapped]]'s shingle stop-list.
+  /** Embedding-cosine near-duplicate pairs (a < b, cosine ≥ threshold),
+    * bucketed by hyperplane LSH so the pair space is per-bucket, not global.
+    * For the exact (oracle-checkable) variant pass nPlanes = 0 → single
+    * bucket = exact all-pairs (only viable at verification scale).
     *
+    * `cap` bounds the bucketed path per bucket — the PRODUCTION form at
+    * corpus scale, the embedding analogue of [[Dedup.lshCandidates]]'
+    * hot-band cap and [[Dedup.ngramJaccardPairs]]' shingle stop-list.
     * Why a cap is load-bearing and not an optimization: random-hyperplane
     * buckets split DIRECTIONS, so a tight cluster of near-identical
     * vectors lands in ONE bucket at any plane count — measured on the
     * ×100 corpus, two clusters of ~50k vectors each held at 15 planes
     * (48k+) exactly as at 11, making the same-bucket pair space 2.77
-    * BILLION (tools/DiagBuckets; the q53 ×100 exponent read 1.34-1.36
-    * across two rounds for this reason — the enumerated output itself is
-    * quadratic in cluster population BY SPECIFICATION, and growing planes
-    * cannot fix membership). At 100 TB a dedup consumer does not need the
-    * full clique: buckets over `maxBucketPop` contribute PIVOT-STAR edges
-    * (every member scored against the bucket's min-id member, O(pop)
-    * rows), which keep the cluster connected for the downstream
-    * connected-components collapse while bounding the pair space at
-    * Σ_small pop² + Σ_big pop ≤ maxBucketPop·N + N — linear in N. Dense
-    * sub-threshold members of a capped bucket lose their mutual edges
-    * (recall < 1 by construction, like every capped candidate path here);
-    * within a TIGHT cluster the star scores match the clique's.
-    *
-    * One bucket equi-join for the pair space: the cap-or-pivot predicate
-    * references only left-side columns and is applied UNDER the pair join
-    * by construction (PlanSpec pins the shape) — a big bucket's left side
-    * is one pivot row, so the pop² blowup never materializes as join
-    * output, let alone shuffle bytes. */
-  def nearDupPairsCapped(
+    * BILLION ([[bucketProfile]], gate q168; the q53 ×100 exponent read
+    * 1.34-1.36 across two rounds for this reason — the enumerated output
+    * is quadratic in cluster population BY SPECIFICATION, and growing
+    * planes cannot fix membership). A dedup consumer does not need the
+    * full clique: buckets over the cap contribute PIVOT edges — every
+    * member scored against the bucket's `pivots` smallest-id members
+    * (block-clique + block×rest; `pivots` = 1 is the pivot star) — which
+    * keep the cluster connected for the downstream connected-components
+    * collapse while bounding the pair space at Σ_over pivots·pop +
+    * Σ_small pop²/2 ≤ (pivots + cap)·N, linear in N. Dense members of a
+    * capped bucket lose their mutual edges outside the block (recall < 1
+    * by construction, like every capped candidate path here); within a
+    * TIGHT cluster every member connects to the entire block, so the
+    * component survives intact. A wider block buys recall linearly: the
+    * q178 audit measured the star keeping 196/1303 dedup-group labels at
+    * sf0.1 (the over-cap buckets there are big and LOOSE, so ~2 % of
+    * pivot edges clear the threshold), the 256 block 926/1303 (q189). See
+    * [[keyedPairs]] for the plan shape. */
+  def nearDupPairs(
       vecs: DataFrame,
       threshold: Double,
       dim: Int,
-      nPlanes: Int,
-      maxBucketPop: Long = 64L,
+      nPlanes: Int = 0,
+      cap: Cap = Cap.Off,
+      pivots: Long = 1L,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val base = vecs.select(col(idCol), col(vecCol), norm(col(vecCol)).as("nrm"),
-      hyperplaneBucket(col(vecCol), dim, nPlanes).as("bucket"))
-    // O(buckets) rows; the join below co-partitions on bucket either way
-    val stats = base.groupBy(col("bucket"))
-      .agg(count(lit(1)).as("pop"), min(col(idCol)).as("pivot"))
-    val l = base.join(stats, Seq("bucket"))
-      .where(col("pop") <= maxBucketPop || col(idCol) === col("pivot"))
-      .select(col("bucket"), col(idCol).as("a"), col(vecCol).as("va"),
-        col("nrm").as("na"))
-    val r = base.select(col("bucket"), col(idCol).as("b"),
-      col(vecCol).as("vb"), col("nrm").as("nb"))
-    // big buckets survive only as (pivot, member) rows after the a < b
-    // filter (pivot = min id), small buckets as the full q53 pair set
-    scoredPairs(l.join(r, Seq("bucket")), threshold)
+    val base = vecs.select(col(idCol), col(vecCol), norm(col(vecCol)).as("nrm"))
+    if (nPlanes <= 0) {
+      require(cap == Cap.Off, "a population cap needs the bucketed path (nPlanes > 0)")
+      // exact all-pairs: a constant join key would degenerate to a
+      // single-task nested loop — instead broadcast one side and
+      // repartition the other so the O(n²) scoring spreads over all cores.
+      val shufflePartitions =
+        vecs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+      val l = base.select(col(idCol).as("a"), col(vecCol).as("va"),
+        col("nrm").as("na")).repartition(shufflePartitions)
+      val r = base.select(col(idCol).as("b"), col(vecCol).as("vb"),
+        col("nrm").as("nb"))
+      scoredPairs(l.crossJoin(broadcast(r)), threshold)
+    } else {
+      // scale path: only same-bucket pairs are candidates; the bucket
+      // equi-join shuffle-partitions the pair space by bucket.
+      val keyed = base.withColumn("bucket", hyperplaneBucket(col(vecCol), dim, nPlanes))
+      keyedPairs(keyed, keyed, "bucket", threshold, cap, pivots, idCol, vecCol)
+    }
   }
 
-  /** [[nearDupPairsCapped]] with the single pivot generalized to a PIVOT
-    * BLOCK — the round-17 answer to the measured recall cost of the
-    * pivot star (the q178 audit: at sf0.1 the 1-pivot form kept only
-    * 39/1287 near-dup pairs and 196/1303 docs' dedup-group labels,
-    * because these over-cap buckets are big and LOOSE, so only ~2 % of
-    * (pivot, member) edges clear the cosine threshold — a star wagers
-    * the whole bucket's recall on one member's neighborhood).
+  /** The pair body shared by the bucketed [[nearDupPairs]] and
+    * [[cellNearDupPairs]]: `keyed` rows (id, vec, nrm, key) self-join on
+    * the key and score through [[scoredPairs]]. Uncapped ([[Cap.Off]]) it
+    * is the plain key equi-join — no stats pass, no window.
     *
-    * Over-cap buckets contribute (block, member) edges where the block
-    * is the bucket's `blockSize` smallest-id members: every member is
-    * scored against the whole block (block-clique + block×rest), so a
-    * member keeps ~blockSize/pop of its true edges instead of the star's
-    * 1/pop, and recall scales LINEARLY with the knob while the pair
-    * space stays Σ_over blockSize·pop + Σ_small pop²/2 ≤ blockSize·N +
-    * maxBucketPop·N — the same linear-in-N bound, a small constant
-    * factor wider. In a TIGHT over-cap cluster (the 100 TB job-killer
-    * the cap exists for) every member connects to the entire block, so
-    * the component survives intact exactly as under the star. Measured
-    * at sf0.1 (same corpus as q178): blockSize 64 → 351/1303 labels
-    * kept, 128 → 444, 256 → 926 (71 %, vs the cell cap's 53 % and the
-    * star's 15 %) — the q189 audit gates the 256 setting.
-    *
-    * The block is deterministic (min ids) and oracle-replayable as a
-    * per-bucket row_number ≤ blockSize; Spark computes it with a
-    * bucket-partitioned window — the same shuffle key the pair join
-    * needs, so the rank adds no extra exchange beyond the stats join. */
-  def nearDupPairsCappedBlock(
-      vecs: DataFrame,
+    * Capped, the population profile counts `keys` (id, key) rows and the
+    * cap-or-block predicate (pop ≤ cap OR id in the key's block)
+    * references only LEFT-side columns and is applied UNDER the pair join
+    * (PlanSpec pins the shape): an over-cap key's left side is its block
+    * of min-id members, so the pop² blowup never materializes as join
+    * output, let alone shuffle bytes. The star (`pivots` = 1) needs only
+    * each key's min id, one more aggregate in the profile; a wider block
+    * is oracle-replayable as a per-key row_number ≤ pivots, which Spark
+    * computes with a key-partitioned window — the same shuffle key the
+    * pair join needs, so the rank adds no exchange beyond the stats join. */
+  private def keyedPairs(
+      keyed: DataFrame,
+      keys: DataFrame,
+      key: String,
       threshold: Double,
-      dim: Int,
-      nPlanes: Int,
-      maxBucketPop: Long = 64L,
-      blockSize: Long = 256L,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    require(blockSize >= 1, "blockSize < 1 would drop every over-cap pair")
-    import org.apache.spark.sql.expressions.Window
-    val base = vecs.select(col(idCol), col(vecCol), norm(col(vecCol)).as("nrm"),
-      hyperplaneBucket(col(vecCol), dim, nPlanes).as("bucket"))
-    val stats = base.groupBy(col("bucket"))
-      .agg(count(lit(1)).as("pop"))
-    val rk = row_number().over(
-      Window.partitionBy(col("bucket")).orderBy(col(idCol)))
-    val l = base.withColumn("_rk", rk)
-      .join(stats, Seq("bucket"))
-      .where(col("pop") <= maxBucketPop || col("_rk") <= blockSize)
-      .select(col("bucket"), col(idCol).as("a"), col(vecCol).as("va"),
-        col("nrm").as("na"))
-    val r = base.select(col("bucket"), col(idCol).as("b"),
-      col(vecCol).as("vb"), col("nrm").as("nb"))
-    // an over-cap bucket's left side is its blockSize min-id members, so
-    // the join output is block-clique + block×rest after the a < b filter
-    scoredPairs(l.join(r, Seq("bucket")), threshold)
+      cap: Cap,
+      pivots: Long,
+      idCol: String,
+      vecCol: String): DataFrame = {
+    require(pivots >= 1, "pivots < 1 would drop every over-cap pair")
+    val left = cap match {
+      case Cap.Off => keyed
+      case c: Cap.Capped =>
+        val (ranked, profile, inBlock) =
+          if (pivots == 1) (keyed,
+            keys.groupBy(col(key)).agg(count(lit(1)).as("pop"), min(col(idCol)).as("pivot")),
+            col(idCol) === col("pivot"))
+          else (keyed.withColumn("_rk", row_number().over(
+              Window.partitionBy(col(key)).orderBy(col(idCol)))),
+            Cap.popProfile(keys, key), col("_rk") <= pivots)
+        ranked.join(Cap.withCap(profile, c), Seq(key))
+          .where(col("pop") <= col("cap") || inBlock)
+    }
+    val l = left.select(col(idCol).as("a"), col(vecCol).as("va"),
+      col("nrm").as("na"), col(key))
+    val r = keyed.select(col(idCol).as("b"), col(vecCol).as("vb"),
+      col("nrm").as("nb"), col(key))
+    scoredPairs(l.join(r, Seq(key)), threshold)
   }
 
-  /** Per-bucket population profile of the hyperplane-LSH space — the
-    * pre-flight a near-dup run does BEFORE paying for pairs at 100 TB:
-    * an over-cap bucket is a tight cluster no plane count splits (the
-    * q53 ×100 root cause — two ~50k clusters, 2.77e9 clique pairs), and
-    * spotting it here costs one O(N) groupBy while discovering it inside
-    * the pair join costs the quadratic clique itself. Emits, per bucket:
-    * population, the clique pair count an uncapped run would enumerate,
-    * whether [[nearDupPairsCapped]]'s cap trips, and the pair count the
-    * capped run actually pays (pop−1 star edges when over).
-    * `tools/DiagBuckets` is the interactive form of the same question. */
+  /** Population profile of a keyed pair space — the pre-flight a near-dup
+    * run does BEFORE paying for pairs at 100 TB: an over-cap key is a
+    * tight cluster no partitioning splits, and spotting it here costs one
+    * O(N) groupBy while discovering it inside the pair join costs the
+    * quadratic clique itself. Emits, per key: population, the clique pair
+    * count an uncapped run would enumerate, whether a `maxPop` cap trips,
+    * and the pair count the capped pivot-star run actually pays (pop−1
+    * star edges when over). */
+  private def capProfile(keys: DataFrame, key: String, maxPop: Long): DataFrame =
+    Cap.popProfile(keys, key)
+      .select(col(key), col("pop"),
+        expr("pop * (pop - 1) div 2").as("clique_pairs"),
+        (col("pop") > maxPop).cast("int").as("over_cap"),
+        when(col("pop") > maxPop, col("pop") - 1)
+          .otherwise(expr("pop * (pop - 1) div 2")).as("capped_pairs"))
+
+  /** [[capProfile]] of the hyperplane-LSH buckets [[nearDupPairs]]
+    * pairs within (gate q168). */
   def bucketProfile(
       vecs: DataFrame,
       dim: Int,
       nPlanes: Int,
       maxBucketPop: Long = 64L,
       vecCol: String = "embedding"): DataFrame =
-    vecs.select(hyperplaneBucket(col(vecCol), dim, nPlanes).as("bucket"))
-      .groupBy(col("bucket")).agg(count(lit(1)).as("pop"))
-      .select(col("bucket"), col("pop"),
-        expr("pop * (pop - 1) div 2").as("clique_pairs"),
-        (col("pop") > maxBucketPop).cast("int").as("over_cap"),
-        when(col("pop") > maxBucketPop, col("pop") - 1)
-          .otherwise(expr("pop * (pop - 1) div 2")).as("capped_pairs"))
-
-  /** Profile-derived population cap — judge ask r14 #5: the cap stops
-    * being a magic constant and becomes a function of the measured skew.
-    * Input is any (key, pop) profile ([[bucketProfile]]'s buckets,
-    * [[cellProfile]]'s cells); output is ONE row `(cap)` with
-    * cap = max(floorCap, mult · lower-median population). The median is
-    * ROBUST to exactly the outlier keys the cap exists to neutralize (a
-    * mean would be dragged up by the tight-cluster buckets and never
-    * trip), and the lower median (the element at 1-based rank
-    * ⌈n/2⌉ = (n+1) div 2 under (pop asc) order) is a deterministic
-    * integer both engines replay exactly — no interpolation, no
-    * approx_percentile.
-    *
-    * Scale: the median is computed by CUMULATIVE COUNTING over DISTINCT
-    * population values (groupBy pop → running count), never by globally
-    * ranking the key rows — the single-partition window runs over
-    * O(distinct pops) rows (bounded by the max population, in practice a
-    * few hundred), while the keys themselves can be millions of buckets
-    * at 100 TB. */
-  def derivedCap(profile: DataFrame, floorCap: Long, mult: Long = 4L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val byPop = profile.groupBy(col("pop"))
-      .agg(count(lit(1)).as("cnt"))
-    val w = Window.orderBy(col("pop"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val total = profile.agg(count(lit(1)).as("n_keys"))
-    byPop.withColumn("cum", sum(col("cnt")).over(w))
-      .crossJoin(broadcast(total))
-      .where(col("cum") >= expr("(n_keys + 1) div 2"))
-      .agg(min(col("pop")).as("med"))
-      .select(greatest(lit(floorCap), lit(mult) * col("med")).as("cap"))
-  }
-
-  /** [[nearDupPairsCapped]] with the cap DERIVED from the bucket
-    * profile instead of passed as a constant ([[derivedCap]]: floor ∨
-    * mult · lower-median bucket population) — the operator self-tunes to
-    * the measured skew: a uniform bucket space caps at the floor (cap
-    * never trips), a space with tight-cluster outliers caps just above
-    * the typical bucket and star-collapses exactly the outliers. The
-    * derivation is a pure integer function of the profile, so the full
-    * chain — buckets, median, cap, star filter — is oracle-replayable.
-    *
-    * Same pair-space bound as the constant-cap form (≤ cap·N + N), with
-    * cap now data-dependent but ≥ floorCap. The stats frame feeds both
-    * the cap derivation and the pair join, so it is materialized once
-    * (eager localCheckpoint, O(buckets) rows) instead of re-aggregating
-    * the corpus per consumer. */
-  def nearDupPairsAutoCap(
-      vecs: DataFrame,
-      threshold: Double,
-      dim: Int,
-      nPlanes: Int,
-      floorCap: Long = 64L,
-      mult: Long = 4L,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    val base = vecs.select(col(idCol), col(vecCol), norm(col(vecCol)).as("nrm"),
-      hyperplaneBucket(col(vecCol), dim, nPlanes).as("bucket"))
-    val stats = base.groupBy(col("bucket"))
-      .agg(count(lit(1)).as("pop"), min(col(idCol)).as("pivot"))
-      .localCheckpoint(true)
-    val cap = derivedCap(stats.select(col("pop")), floorCap, mult)
-    val l = base.join(stats, Seq("bucket")).crossJoin(broadcast(cap))
-      .where(col("pop") <= col("cap") || col(idCol) === col("pivot"))
-      .select(col("bucket"), col(idCol).as("a"), col(vecCol).as("va"),
-        col("nrm").as("na"))
-    val r = base.select(col("bucket"), col(idCol).as("b"),
-      col(vecCol).as("vb"), col("nrm").as("nb"))
-    scoredPairs(l.join(r, Seq("bucket")), threshold)
-  }
-
-  /** [[nearDupPairsAutoCap]] with the single pivot generalized to the
-    * PIVOT BLOCK — the two round-17 disciplines composed: the cap is
-    * DERIVED from the measured bucket profile ([[derivedCap]], q171) AND
-    * an over-cap bucket keeps (block × member) edges instead of a one-
-    * pivot star (q189's measured 15 % → 71 % label recovery). This is
-    * the self-tuning production default: nothing about the pair space is
-    * a constant someone must re-guess per corpus, and the recall cost of
-    * capping is the blockSize knob's, not the star's. Pair space ≤
-    * (blockSize + cap)·N with cap ≥ floorCap data-derived. */
-  def nearDupPairsAutoCapBlock(
-      vecs: DataFrame,
-      threshold: Double,
-      dim: Int,
-      nPlanes: Int,
-      floorCap: Long = 64L,
-      mult: Long = 4L,
-      blockSize: Long = 256L,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    require(blockSize >= 1, "blockSize < 1 would drop every over-cap pair")
-    import org.apache.spark.sql.expressions.Window
-    val base = vecs.select(col(idCol), col(vecCol), norm(col(vecCol)).as("nrm"),
-      hyperplaneBucket(col(vecCol), dim, nPlanes).as("bucket"))
-    val stats = base.groupBy(col("bucket"))
-      .agg(count(lit(1)).as("pop"))
-      .localCheckpoint(true)
-    val cap = derivedCap(stats.select(col("pop")), floorCap, mult)
-    val rk = row_number().over(
-      Window.partitionBy(col("bucket")).orderBy(col(idCol)))
-    val l = base.withColumn("_rk", rk)
-      .join(stats, Seq("bucket")).crossJoin(broadcast(cap))
-      .where(col("pop") <= col("cap") || col("_rk") <= blockSize)
-      .select(col("bucket"), col(idCol).as("a"), col(vecCol).as("va"),
-        col("nrm").as("na"))
-    val r = base.select(col("bucket"), col(idCol).as("b"),
-      col(vecCol).as("vb"), col("nrm").as("nb"))
-    scoredPairs(l.join(r, Seq("bucket")), threshold)
-  }
+    capProfile(vecs.select(hyperplaneBucket(col(vecCol), dim, nPlanes).as("bucket")),
+      "bucket", maxBucketPop)
 
   /** The single pair-scoring contract behind [[nearDupPairs]] (exact and
     * bucketed), [[cellNearDupPairs]] and the streaming ingest twin
@@ -706,122 +560,42 @@ object Similarity {
   /** Near-dup candidate pairs WITHIN k-means cells only (a < b, cosine ≥
     * threshold, same cell) — the pair generator of [[semDedup]]. A cell
     * equi-join, so the pair space is per-cell: never cross-cell, never a
-    * global all-pairs. Same output contract as [[nearDupPairs]]. */
+    * global all-pairs. Same output contract as [[nearDupPairs]].
+    *
+    * `cap` / `pivots` apply [[nearDupPairs]]' discipline per cell: k-means
+    * cells bound the pair space only if no cell is ITSELF a dense near-dup
+    * cluster, and the tight-cluster argument (clusters survive any
+    * partitioning that splits directions) applies verbatim when a cell IS
+    * such a cluster ([[cellProfile]], gate q170). Over-cap cells score
+    * every member against the cell's `pivots` min-id members. Capped, the
+    * (id, cell) assignment feeds three consumers (stats + both pair
+    * sides), so it is materialized once — O(N) two-column rows — and the
+    * argmin-over-centroids pass (N·nCells dots, the expensive step at √N
+    * cells) runs once instead of three times. */
   def cellNearDupPairs(
       vecs: DataFrame,
       cents: DataFrame,
       threshold: Double,
+      cap: Cap = Cap.Off,
+      pivots: Long = 1L,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val base = vecs.join(assignCells(vecs, cents, idCol, vecCol), idCol)
+    val assign = assignCells(vecs, cents, idCol, vecCol)
+    val keys = if (cap == Cap.Off) assign else assign.localCheckpoint(true)
+    val keyed = vecs.join(keys, idCol)
       .select(col(idCol), col(vecCol), norm(col(vecCol)).as("nrm"), col("cell"))
-    val l = base.select(col(idCol).as("a"), col(vecCol).as("va"),
-      col("nrm").as("na"), col("cell"))
-    val r = base.select(col(idCol).as("b"), col(vecCol).as("vb"),
-      col("nrm").as("nb"), col("cell"))
-    scoredPairs(l.join(r, Seq("cell")), threshold)
+    keyedPairs(keyed, keys, "cell", threshold, cap, pivots, idCol, vecCol)
   }
 
-  /** [[cellNearDupPairs]] with a per-cell population cap — the q167
-    * pivot-star discipline applied to [[semDedup]]'s pair generator
-    * (judge ask r14 #4): k-means cells bound the pair space only if no
-    * cell is ITSELF a dense near-dup cluster, and the q53 adjudication
-    * (tools/DiagBuckets — tight clusters survive any partitioning that
-    * splits directions) applies verbatim to cells when a cell IS such a
-    * cluster. Cells over `maxCellPop` contribute pivot-star edges (every
-    * member scored against the cell's min-id member, O(pop) rows) instead
-    * of their clique, bounding the pair space at cap·N + N while keeping
-    * each cluster connected for the CC collapse. Same recall trade as
-    * every capped candidate path here: sub-threshold-of-pivot members of
-    * a capped cell lose their mutual edges; within a TIGHT cluster the
-    * star's scores match the clique's. Same stats-join-filter shape as
-    * [[nearDupPairsCapped]] — the cap predicate references only left-side
-    * columns, so an over-cap cell's left side is one pivot row and the
-    * pop² never materializes as join output. */
-  def cellNearDupPairsCapped(
-      vecs: DataFrame,
-      cents: DataFrame,
-      threshold: Double,
-      maxCellPop: Long,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    // the (id, cell) assignment feeds THREE consumers (stats + both pair
-    // sides); materialize it once — O(N) two-column rows — so the
-    // argmin-over-centroids pass (N·nCells dots, the expensive step at
-    // √N cells) runs once instead of three times
-    val assign = assignCells(vecs, cents, idCol, vecCol).localCheckpoint(true)
-    val base = vecs.join(assign, idCol)
-      .select(col(idCol), col(vecCol), norm(col(vecCol)).as("nrm"), col("cell"))
-    val stats = assign.groupBy(col("cell"))
-      .agg(count(lit(1)).as("pop"), min(col(idCol)).as("pivot"))
-    val l = base.join(stats, Seq("cell"))
-      .where(col("pop") <= maxCellPop || col(idCol) === col("pivot"))
-      .select(col("cell"), col(idCol).as("a"), col(vecCol).as("va"),
-        col("nrm").as("na"))
-    val r = base.select(col("cell"), col(idCol).as("b"),
-      col(vecCol).as("vb"), col("nrm").as("nb"))
-    scoredPairs(l.join(r, Seq("cell")), threshold)
-  }
-
-  /** [[cellNearDupPairsCapped]] with the pivot BLOCK (round-17 — the
-    * q189 discipline applied uniformly, as the cap itself was in r14):
-    * over-cap cells score every member against the cell's `blockSize`
-    * min-id members instead of one pivot. The q183 audit measured the
-    * cell star keeping 414/782 labels at sf0.1; the block form measures
-    * 782/782 — LOSSLESS, because every over-cap cell at the gated SFs
-    * has pop ≤ 256, so its block covers the whole cell (the √N cell
-    * sizing keeps cells near 2·√N ≈ 90 here) — while the bound still
-    * bites exactly where it must at 100 TB: a cell that IS a tight
-    * 50k-vector cluster pays block·pop, never pop² (q196 gates the
-    * chain; see [[nearDupPairsCappedBlock]] for the loose-bucket
-    * geometry argument). Pair space Σ_over block·pop + Σ_small pop²/2
-    * ≤ (blockSize + maxCellPop)·N. */
-  def cellNearDupPairsCappedBlock(
-      vecs: DataFrame,
-      cents: DataFrame,
-      threshold: Double,
-      maxCellPop: Long,
-      blockSize: Long = 256L,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    require(blockSize >= 1, "blockSize < 1 would drop every over-cap pair")
-    import org.apache.spark.sql.expressions.Window
-    val assign = assignCells(vecs, cents, idCol, vecCol).localCheckpoint(true)
-    val base = vecs.join(assign, idCol)
-      .select(col(idCol), col(vecCol), norm(col(vecCol)).as("nrm"), col("cell"))
-    val stats = assign.groupBy(col("cell")).agg(count(lit(1)).as("pop"))
-    val rk = row_number().over(
-      Window.partitionBy(col("cell")).orderBy(col(idCol)))
-    val l = base.withColumn("_rk", rk)
-      .join(stats, Seq("cell"))
-      .where(col("pop") <= maxCellPop || col("_rk") <= blockSize)
-      .select(col("cell"), col(idCol).as("a"), col(vecCol).as("va"),
-        col("nrm").as("na"))
-    val r = base.select(col("cell"), col(idCol).as("b"),
-      col(vecCol).as("vb"), col("nrm").as("nb"))
-    scoredPairs(l.join(r, Seq("cell")), threshold)
-  }
-
-  /** Per-cell population profile of the k-means pair space — the cell
-    * twin of [[bucketProfile]]: the O(N) pre-flight that tells a SemDeDup
-    * run whether any cell is a tight cluster the cap must neutralize,
-    * BEFORE paying for the within-cell pairs. Emits, per cell: the
-    * population, the clique pair count the uncapped [[cellNearDupPairs]]
-    * would enumerate, whether [[cellNearDupPairsCapped]]'s cap trips, and
-    * the pair count the capped run actually pays. */
+  /** [[capProfile]] of the k-means cells [[cellNearDupPairs]] pairs
+    * within (gate q170). */
   def cellProfile(
       vecs: DataFrame,
       cents: DataFrame,
       maxCellPop: Long,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame =
-    assignCells(vecs, cents, idCol, vecCol)
-      .groupBy(col("cell")).agg(count(lit(1)).as("pop"))
-      .select(col("cell"), col("pop"),
-        expr("pop * (pop - 1) div 2").as("clique_pairs"),
-        (col("pop") > maxCellPop).cast("int").as("over_cap"),
-        when(col("pop") > maxCellPop, col("pop") - 1)
-          .otherwise(expr("pop * (pop - 1) div 2")).as("capped_pairs"))
+    capProfile(assignCells(vecs, cents, idCol, vecCol), "cell", maxCellPop)
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic dedup of an
     * embedded corpus — cluster into `nCells` k-means cells, collapse
@@ -840,39 +614,21 @@ object Similarity {
     * O((n/nCells)²·nCells), so hold n/nCells (docs per cell) roughly
     * constant — the paper runs ~10⁵ clusters on web-scale corpora where
     * this gate's 16 fit its 10³ vectors; centroids stay broadcastable to
-    * ~10⁶ cells (64-dim floats ≈ 256 MB).
+    * ~10⁶ cells (64-dim floats ≈ 256 MB). Pass `cap` (the
+    * [[cellNearDupPairs]] knob) when [[cellProfile]] reports over-cap
+    * cells: the per-cell pair space is then bounded even when a cell is
+    * itself a dense near-dup cluster.
     */
   def semDedup(
       vecs: DataFrame,
       nCells: Int,
       iterations: Int,
       threshold: Double,
+      cap: Cap = Cap.Off,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     val cents = kmeansCentroids(vecs, nCells, iterations, idCol, vecCol)
-    val pairs = cellNearDupPairs(vecs, cents, threshold, idCol, vecCol)
-    val comps = Dedup.connectedComponentsStar(pairs)
-    Dedup.applyDedup(vecs, comps, idCol)
-  }
-
-  /** [[semDedup]] with the per-cell population cap — the PRODUCTION form
-    * at corpus scale: [[cellNearDupPairsCapped]] replaces the uncapped
-    * pair generator, so the per-cell pair space is bounded at cap·N + N
-    * even when a cell is itself a dense near-dup cluster (the q53
-    * tight-cluster exposure, which k-means cells inherit). The uncapped
-    * [[semDedup]] stays as the verifier form (gate q102); this is the
-    * plan you run when [[cellProfile]] reports over-cap cells. */
-  def semDedupCapped(
-      vecs: DataFrame,
-      nCells: Int,
-      iterations: Int,
-      threshold: Double,
-      maxCellPop: Long,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    val cents = kmeansCentroids(vecs, nCells, iterations, idCol, vecCol)
-    val pairs = cellNearDupPairsCapped(vecs, cents, threshold, maxCellPop,
-      idCol, vecCol)
+    val pairs = cellNearDupPairs(vecs, cents, threshold, cap, idCol = idCol, vecCol = vecCol)
     val comps = Dedup.connectedComponentsStar(pairs)
     Dedup.applyDedup(vecs, comps, idCol)
   }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Dedup
+import graft.operators.{Cap, Dedup}
 
 /** Dedup group resolution (connected components) + contamination audit. */
 class DedupGraphSpec extends SparkTestBase {
@@ -10,7 +10,7 @@ class DedupGraphSpec extends SparkTestBase {
   test("connectedComponents: chain, separate component, min-id labels") {
     // 1-2-3-4 is a path (worst diameter), 10-11 separate, 20 isolated pair-less
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("a", "b")
-    val out = Dedup.connectedComponents(pairs).orderBy("id")
+    val out = Dedup.connectedComponentsStar(pairs).orderBy("id")
       .as[(Long, Long)].collect()
     assert(out.toSeq === Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 1L),
       (10L, 10L), (11L, 10L)))
@@ -18,7 +18,7 @@ class DedupGraphSpec extends SparkTestBase {
 
   test("connectedComponents merges components that touch through one node") {
     val pairs = Seq((5L, 9L), (1L, 9L), (2L, 7L), (7L, 5L)).toDF("a", "b")
-    val out = Dedup.connectedComponents(pairs)
+    val out = Dedup.connectedComponentsStar(pairs)
       .select($"comp").distinct().as[Long].collect()
     assert(out.toSeq === Seq(1L)) // all one group, labeled by the min id
   }
@@ -27,22 +27,28 @@ class DedupGraphSpec extends SparkTestBase {
     // mixed shapes: a chain, a triangle joined to it, a separate pair
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 9L), (9L, 5L), (5L, 4L),
       (20L, 21L)).toDF("a", "b")
-    val star = Dedup.connectedComponentsStar(pairs).orderBy("id")
-      .as[(Long, Long)].collect().toSeq
-    val pregel = Dedup.connectedComponents(pairs).orderBy("id")
-      .as[(Long, Long)].collect().toSeq
-    assert(star === pregel)
+    // min-label propagation's fixpoint: every node labeled by the min id
+    // of its component — on both the driver-local and distributed paths
+    val expected = Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 1L), (5L, 1L), (9L, 1L),
+      (20L, 20L), (21L, 20L))
+    for (localMax <- Seq(1L << 21, 0L)) {
+      val star = Dedup.connectedComponentsStar(pairs, localMaxEdges = localMax)
+        .orderBy("id").as[(Long, Long)].collect().toSeq
+      assert(star === expected, s"localMaxEdges=$localMax")
+    }
   }
 
   test("connectedComponentsStar needs O(log n) rounds on a high-diameter chain") {
-    // a 120-hop chain: min-label propagation would need ~120 rounds (its
-    // maxIters=50 default throws), the star algorithm converges well
-    // within 16 — the reason it is the 100 TB path for chain-shaped groups.
-    // localMaxEdges = 0 forces the DISTRIBUTED loop (the r18 bounded-set
-    // fast path would otherwise solve this on the driver and stop pinning
-    // the star rounds).
+    // a 120-hop chain: min-label propagation would need ~120 rounds, the
+    // star algorithm converges well within 16 — the reason it is the
+    // 100 TB path for chain-shaped groups. localMaxEdges = 0 forces the
+    // DISTRIBUTED loop (the r18 bounded-set fast path would otherwise
+    // solve this on the driver and stop pinning the star rounds); one
+    // round cannot reach the fixpoint, so the maxIters guard must throw.
     val chain = (0L until 120L).map(i => (i, i + 1)).toDF("a", "b")
-    intercept[IllegalStateException] { Dedup.connectedComponents(chain).count() }
+    intercept[IllegalStateException] {
+      Dedup.connectedComponentsStar(chain, maxIters = 1, localMaxEdges = 0)
+    }
     val out = Dedup.connectedComponentsStar(chain, maxIters = 16, localMaxEdges = 0)
       .as[(Long, Long)].collect()
     assert(out.length === 121 && out.forall(_._2 == 0L))
@@ -79,7 +85,7 @@ class DedupGraphSpec extends SparkTestBase {
       (5L, "unrelated content again nothing shared at all")).toDF("doc_id", "text")
     val sigs = Dedup.minhashSignatures(docs)
     val plain = Dedup.lshCandidates(sigs).as[(Long, Long)].collect().toSet
-    val capped = Dedup.lshCandidatesCapped(sigs, maxBucket = 5)
+    val capped = Dedup.lshCandidates(sigs, cap = Cap.Fixed(5))
       .as[(Long, Long)].collect().toSet
     assert(plain.nonEmpty && capped === plain)
   }
@@ -96,7 +102,7 @@ class DedupGraphSpec extends SparkTestBase {
       .toDF("doc_id", "text")
     val sigs = Dedup.minhashSignatures(docs)
     val uncapped = Dedup.lshCandidates(sigs).count()
-    val capped = Dedup.lshCandidatesCapped(sigs, maxBucket = 5)
+    val capped = Dedup.lshCandidates(sigs, cap = Cap.Fixed(5))
       .as[(Long, Long)].collect().toSet
     assert(uncapped >= 435L, s"degenerate band should explode uncapped: $uncapped")
     assert(capped.contains((1L, 2L)), "the real near-dup pair must survive the cap")
@@ -109,22 +115,20 @@ class DedupGraphSpec extends SparkTestBase {
     // every band key (pop-30 buckets), the fox pair meets in pop-2
     // buckets, everything else is pop 1 — lower-median pop = 1, so the
     // derived cap is max(2, 2·1) = 2: the degenerate buckets drop, the
-    // genuine pair survives, with NO constant tuned by hand
+    // genuine pair survives, with NO constant tuned by hand — and it is
+    // the ONLY pair left: every other bucket holds one doc
     val empty = (100L until 130L).map(i => (i, ""))
     val docs = (empty ++ Seq(
       (1L, "the quick brown fox jumps over the lazy dog tonight"),
       (2L, "the quick brown fox jumps over the lazy dog today")))
       .toDF("doc_id", "text")
     val sigs = Dedup.minhashSignatures(docs)
-    val auto = Dedup.lshCandidatesAutoCap(sigs, floorCap = 2L, mult = 2L)
+    val auto = Dedup.lshCandidates(sigs, cap = Cap.Derived(2, 2))
       .as[(Long, Long)].collect().toSet
     assert(auto.contains((1L, 2L)), "the real near-dup pair must survive the derived cap")
     assert(!auto.exists(p => p._1 >= 100L && p._2 >= 100L),
       s"empty-doc noise pairs must be auto-capped away: $auto")
-    // the auto form IS the constant form at the derived cap
-    val capped = Dedup.lshCandidatesCapped(sigs, maxBucket = 2)
-      .as[(Long, Long)].collect().toSet
-    assert(auto === capped)
+    assert(auto === Set((1L, 2L)))
   }
 
   test("ngramJaccardPairsAutoCap equals the constant-cap twin at the derived cap") {
@@ -135,19 +139,28 @@ class DedupGraphSpec extends SparkTestBase {
       (4L, "totally different content with no shared shingles at all"),
       (5L, "another unique document nothing in common whatsoever")
     ).toDF("doc_id", "text")
-    import graft.operators.Similarity
     import graft.functions.TextFunctions
-    // derive the cap the operator will compute, independently
-    val dfs = docs.select(explode(array_distinct(
-        TextFunctions.shingles($"text", 3))).as("sh"))
-      .groupBy($"sh").agg(count(lit(1)).as("pop"))
-    val cap = Similarity.derivedCap(dfs.select($"pop"), 2L, 2L)
-      .as[Long].head()
-    val auto = Dedup.ngramJaccardPairsAutoCap(docs, floorCap = 2L, mult = 2L)
+    // the expectation, derived independently on the driver: shingle df,
+    // cap = max(2, 2 · lower-median df), candidates = pairs sharing a
+    // shingle at or under the cap, scored by EXACT Jaccard over the full
+    // shingle sets (Spark's round-6 is HALF_UP on the double)
+    val sets = docs.select($"doc_id", array_distinct(TextFunctions.shingles($"text", 3)))
+      .as[(Long, Seq[String])].collect().toMap
+    val dfs = sets.values.toSeq.flatten.groupBy(identity).map { case (k, v) => k -> v.size.toLong }
+    val pops = dfs.values.toSeq.sorted
+    val cap = math.max(2L, 2L * pops((pops.size + 1) / 2 - 1))
+    assert(dfs.values.exists(_ > cap), s"the derived cap $cap must stop-list a shingle")
+    val expected = (for {
+      (a, sa) <- sets.toSeq; (b, sb) <- sets.toSeq
+      if a < b && sa.exists(x => sb.contains(x) && dfs(x) <= cap)
+      common = sa.intersect(sb).size
+      j = BigDecimal(common.toDouble / (sa.size + sb.size - common))
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      if j >= 0.5
+    } yield (a, b, j)).toSet
+    val auto = Dedup.ngramJaccardPairs(docs, cap = Cap.Derived(2, 2))
       .as[(Long, Long, Double)].collect().toSet
-    val const = Dedup.ngramJaccardPairsCapped(docs, maxDocFreq = cap.toInt)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(auto === const)
+    assert(auto === expected, s"derived cap $cap")
     assert(auto.exists(p => p._1 == 1L && p._2 == 2L),
       s"the near-identical pair must be found: $auto")
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.apps.GmallPipelines
 import graft.core.{Tables, TopicDb}
-import graft.operators.{Relational, Similarity}
+import graft.operators.{Cap, Relational, Similarity}
 
 /** Physical-plan shape assertions for the scale-critical properties the
   * round reviews grade on: pushdown reaching the scan, broadcast joins on
@@ -179,15 +179,16 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("capped jaccard verifies from slim count rows, never shingle arrays") {
-    val p = plan(graft.operators.Dedup.ngramJaccardPairsCapped(
-      Tables.documents(spark, sf), maxDocFreq = 100))
+    val p = plan(graft.operators.Dedup.ngramJaccardPairs(
+      Tables.documents(spark, sf), cap = Cap.Fixed(100)))
     assert(!p.contains("array_intersect"),
       "exact |A∩B| must come from cold+hot counts, not array joins")
   }
 
   test("auto-capped LSH screens hot buckets via a broadcast anti-join, pairs via equi-join") {
-    val p = plan(graft.operators.Dedup.lshCandidatesAutoCap(
-      graft.operators.Dedup.minhashSignatures(Tables.documents(spark, sf))))
+    val p = plan(graft.operators.Dedup.lshCandidates(
+      graft.operators.Dedup.minhashSignatures(Tables.documents(spark, sf)),
+      cap = Cap.Derived(2, 2)))
     // the hot-bucket screen: tiny by construction → broadcast LeftAnti
     assert(p.contains("LeftAnti"), "hot screen must be an anti-join:\n" + p)
     assert("BroadcastHashJoin.*LeftAnti".r.findFirstIn(p).isDefined
@@ -200,8 +201,8 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("auto-capped jaccard keeps the slim-count contract of the constant-cap form") {
-    val p = plan(graft.operators.Dedup.ngramJaccardPairsAutoCap(
-      Tables.documents(spark, sf)))
+    val p = plan(graft.operators.Dedup.ngramJaccardPairs(
+      Tables.documents(spark, sf), cap = Cap.Derived(6, 2)))
     assert(!p.contains("array_intersect"),
       "exact |A∩B| must come from cold+hot counts, not array joins")
     assert(p.contains("LeftAnti"), "derived stop list must anti-join the index:\n" + p)
@@ -349,8 +350,8 @@ class PlanSpec extends SparkTestBase {
 
   test("capped embed near-dup: pop filter under the pair join, all joins equi on bucket") {
     val emb = Tables.embeddings(spark, sf)
-    val df = Similarity.nearDupPairsCapped(emb, 0.35, 64, nPlanes = 4,
-      maxBucketPop = 64L)
+    val df = Similarity.nearDupPairs(emb, 0.35, 64, nPlanes = 4,
+      cap = Cap.Fixed(64))
     val p = plan(df)
     assert(!p.contains("CartesianProduct"), "no unbounded product:\n" + p)
     assert(!p.contains("BroadcastNestedLoopJoin"), "no nested-loop pair space:\n" + p)
@@ -374,7 +375,7 @@ class PlanSpec extends SparkTestBase {
   test("capped cell near-dup: pop filter under the pair join, pair space equi on cell") {
     val emb = Tables.embeddings(spark, sf)
     val cents = Similarity.kmeansCentroids(emb, 16, 0)
-    val df = Similarity.cellNearDupPairsCapped(emb, cents, 0.35, 24L)
+    val df = Similarity.cellNearDupPairs(emb, cents, 0.35, cap = Cap.Fixed(24))
     val p = plan(df)
     assert(!p.contains("CartesianProduct"), "no unbounded product:\n" + p)
     assert("(SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin) \\[cell".r
@@ -385,8 +386,8 @@ class PlanSpec extends SparkTestBase {
     assert(!p.contains("BroadcastNestedLoopJoin"),
       "the checkpointed assignment must not re-run the centroid broadcast:\n" + p)
     // the cap-or-pivot predicate must apply UNDER the pair join (same
-    // contract as nearDupPairsCapped): an over-cap cell's left side is
-    // one pivot row, so the pop² output never materializes
+    // contract as the capped nearDupPairs): an over-cap cell's left side
+    // is one pivot row, so the pop² output never materializes
     import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter, Join => LJoin}
     val outerJoin = df.queryExecution.optimizedPlan.collectFirst { case j: LJoin => j }
     assert(outerJoin.exists(_.left.collectFirst[Any] {
@@ -395,6 +396,27 @@ class PlanSpec extends SparkTestBase {
     }.isDefined),
       "the population cap must apply on the pair join's left INPUT:\n" +
         df.queryExecution.optimizedPlan.toString)
+  }
+
+  test("uncapped pair generators plan no stats join, anti-join or window") {
+    // Cap.Off is the plain keyed self-join: the population profile, the
+    // hot-key anti-join and the pivot-rank window exist only under a cap
+    import graft.operators.Dedup
+    val emb = Tables.embeddings(spark, sf)
+    val docs = Tables.documents(spark, sf)
+    for (df <- Seq(
+        Dedup.lshCandidates(Dedup.minhashSignatures(docs), cap = Cap.Off),
+        Dedup.ngramJaccardPairs(docs, cap = Cap.Off),
+        Similarity.cellNearDupPairs(emb, Similarity.kmeansCentroids(emb, 16, 0), 0.35,
+          cap = Cap.Off))) {
+      val p = plan(df)
+      assert(!p.contains("LeftAnti"), "no hot-key anti-join:\n" + p)
+      assert(!p.contains("Window"), "no pivot-rank window:\n" + p)
+      val cols = df.queryExecution.optimizedPlan.collect { case n => n.output.map(_.name) }
+        .flatten.toSet
+      assert(!cols.contains("pop") && !cols.contains("cap"),
+        "no population-stats join:\n" + df.queryExecution.optimizedPlan)
+    }
   }
 
   test("substring profile screens duplicated windows via a win equi-join, islands partition by doc") {

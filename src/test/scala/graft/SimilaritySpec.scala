@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions
-import graft.operators.{Multimodal, Similarity}
+import graft.operators.{Cap, Multimodal, Similarity}
 
 /** Vector expressions, ANN recall, and multimodal plumbing. */
 class SimilaritySpec extends SparkTestBase {
@@ -214,21 +214,55 @@ class SimilaritySpec extends SparkTestBase {
     assert(recall > 0.2, s"recall=$recall")
   }
 
+  /** vec_id → its hyperplane bucket at the gated 4 planes (the pair key). */
+  private def bucketsOf(emb: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    emb.select(col("vec_id"), VectorFunctions.hyperplaneBucket(col("embedding"), 64, 4))
+      .as[(Long, Long)].collect().toMap
+
+  /** vec_id → its k-means cell under `cents`. */
+  private def cellsOf(emb: org.apache.spark.sql.DataFrame,
+      cents: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    Similarity.assignCells(emb, cents).select(col("vec_id"), col("cell"))
+      .as[(Long, Long)].collect().toMap
+
+  /** The capped generators' expected output, derived independently from
+    * the UNCAPPED pair set: a same-key pair (a < b) survives iff its key
+    * holds ≤ `cap` members or `a` is among the key's `pivots` smallest
+    * ids (the block-clique + block×rest edges). */
+  private def capFiltered(uncapped: Set[(Long, Long, Double)], keyOf: Map[Long, Long],
+      cap: Long, pivots: Int): Set[(Long, Long, Double)] = {
+    val members = keyOf.groupBy(_._2).map { case (k, m) => k -> m.keys.toSeq.sorted }
+    uncapped.filter { case (a, _, _) =>
+      val ms = members(keyOf(a))
+      ms.size <= cap || ms.indexOf(a) < pivots
+    }
+  }
+
+  /** max(floor, mult · lower-median key population), computed on the
+    * driver — the hand derivation of a [[graft.operators.Cap.Derived]] cap. */
+  private def handDerivedCap(keyOf: Map[Long, Long], floor: Long, mult: Long): Long = {
+    val pops = keyOf.groupBy(_._2).values.map(_.size.toLong).toSeq.sorted
+    math.max(floor, mult * pops((pops.size + 1) / 2 - 1))
+  }
+
+  private def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
+    df.as[(Long, Long, Double)].collect().toSet
+
   test("nearDupPairsCapped: inert cap equals q53; active cap is an exact-score subset") {
     val emb = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val uncapped = Similarity.nearDupPairs(emb, 0.35, 64, nPlanes = 4)
       .as[(Long, Long, Double)].collect()
       .map { case (a, b, s) => (a, b) -> s }.toMap
     // cap above every bucket's population → bit-identical to the q53 form
-    val inert = Similarity.nearDupPairsCapped(emb, 0.35, 64, nPlanes = 4,
-        maxBucketPop = 1000000L)
+    val inert = Similarity.nearDupPairs(emb, 0.35, 64, nPlanes = 4,
+        cap = Cap.Fixed(1000000L))
       .as[(Long, Long, Double)].collect()
       .map { case (a, b, s) => (a, b) -> s }.toMap
     assert(inert === uncapped)
     // active cap (the q167 production setting — the two tight clusters at
     // sf0.001 exceed 64): strict subset, scores unchanged pair-for-pair
-    val capped = Similarity.nearDupPairsCapped(emb, 0.35, 64, nPlanes = 4,
-        maxBucketPop = 64L)
+    val capped = Similarity.nearDupPairs(emb, 0.35, 64, nPlanes = 4,
+        cap = Cap.Fixed(64L))
       .as[(Long, Long, Double)].collect()
     assert(capped.nonEmpty && capped.length < uncapped.size,
       s"cap 64 must be ACTIVE at sf0.001 (got ${capped.length} of ${uncapped.size})")
@@ -250,8 +284,8 @@ class SimilaritySpec extends SparkTestBase {
     val clique = Similarity.nearDupPairs(df, 0.999, dim, nPlanes = 4)
       .select("a", "b").as[(Long, Long)].collect()
     assert(clique.length === 4950, s"planted cluster must be a clique (got ${clique.length})")
-    val star = Similarity.nearDupPairsCapped(df, 0.999, dim, nPlanes = 4,
-        maxBucketPop = 10L)
+    val star = Similarity.nearDupPairs(df, 0.999, dim, nPlanes = 4,
+        cap = Cap.Fixed(10L))
       .select("a", "b").as[(Long, Long)].collect()
     assert(star.toSet === (1L until 100L).map(b => (0L, b)).toSet,
       s"over-cap bucket must contribute exactly the min-id star (got ${star.length} edges)")
@@ -265,38 +299,30 @@ class SimilaritySpec extends SparkTestBase {
 
   test("nearDupPairsCappedBlock: block=1 equals the pivot star; recall grows with the block") {
     val emb = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val uncapped = Similarity.nearDupPairs(emb, 0.35, 64, nPlanes = 4)
-      .as[(Long, Long, Double)].collect()
-      .map { case (a, b, s) => (a, b) -> s }.toMap
-    // block=1 is EXACTLY the 1-pivot star (the min-id member is rank 1)
-    val star = Similarity.nearDupPairsCapped(emb, 0.35, 64, nPlanes = 4,
-        maxBucketPop = 64L)
-      .as[(Long, Long, Double)].collect().toSet
-    val block1 = Similarity.nearDupPairsCappedBlock(emb, 0.35, 64, nPlanes = 4,
-        maxBucketPop = 64L, blockSize = 1L)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(block1 === star, "blockSize=1 must degenerate to the pivot star")
+    val uncapped = pairSet(Similarity.nearDupPairs(emb, 0.35, 64, nPlanes = 4))
+    val buckets = bucketsOf(emb)
+    // pivots = 1 is EXACTLY the uncapped pairs cut to over-cap buckets'
+    // min-id star edges (the min-id member is rank 1)
+    val block1 = pairSet(Similarity.nearDupPairs(emb, 0.35, 64, nPlanes = 4,
+        cap = Cap.Fixed(64L)))
+    assert(block1 === capFiltered(uncapped, buckets, 64L, 1),
+      "pivots=1 must keep exactly the pivot star of every over-cap bucket")
     // widening the block only ADDS exact-score uncapped pairs, never
     // invents or rescores — and it must actually recover recall here
-    val block256 = Similarity.nearDupPairsCappedBlock(emb, 0.35, 64, nPlanes = 4,
-        maxBucketPop = 64L, blockSize = 256L)
-      .as[(Long, Long, Double)].collect()
-    assert(block1.subsetOf(block256.toSet))
-    assert(block256.length > block1.size,
-      s"block 256 must widen recall (got ${block256.length} vs ${block1.size})")
-    assert(block256.length <= uncapped.size)
-    block256.foreach { case (a, b, s) =>
-      assert(uncapped.get((a, b)).contains(s),
-        s"pair ($a,$b) score drift or not in the uncapped set")
-    }
+    val block256 = pairSet(Similarity.nearDupPairs(emb, 0.35, 64, nPlanes = 4,
+        cap = Cap.Fixed(64L), pivots = 256L))
+    assert(block256 === capFiltered(uncapped, buckets, 64L, 256))
+    assert(block1.subsetOf(block256))
+    assert(block256.size > block1.size,
+      s"block 256 must widen recall (got ${block256.size} vs ${block1.size})")
     // an over-block bucket's pair space stays <= blockSize·pop: with the
     // planted tight cluster below the block, the clique is complete
     val base = Array.tabulate(dim)(i => 1.0f + 0.01f * i)
     val cluster = (0L until 100L).map(i =>
       (i, base.map(x => x * (1.0f + 1e-5f * i))))
     val df = cluster.toDF("vec_id", "embedding")
-    val blocked = Similarity.nearDupPairsCappedBlock(df, 0.999, dim, nPlanes = 4,
-        maxBucketPop = 10L, blockSize = 20L)
+    val blocked = Similarity.nearDupPairs(df, 0.999, dim, nPlanes = 4,
+        cap = Cap.Fixed(10L), pivots = 20L)
       .select("a", "b").as[(Long, Long)].collect()
     // block members 0..19: full block clique C(20,2) + block×rest 20·80
     assert(blocked.length === 190 + 1600, s"got ${blocked.length}")
@@ -306,42 +332,39 @@ class SimilaritySpec extends SparkTestBase {
   test("cellNearDupPairsCappedBlock: block=1 equals the cell star; wide block covers whole cells") {
     val emb = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val cents = Similarity.kmeansCentroids(emb, 8, 0)
-    val star = Similarity.cellNearDupPairsCapped(emb, cents, 0.35, maxCellPop = 24L)
-      .as[(Long, Long, Double)].collect().toSet
-    val block1 = Similarity.cellNearDupPairsCappedBlock(emb, cents, 0.35,
-        maxCellPop = 24L, blockSize = 1L)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(block1 === star, "blockSize=1 must degenerate to the cell pivot star")
-    val uncapped = Similarity.cellNearDupPairs(emb, cents, 0.35)
-      .as[(Long, Long, Double)].collect().toSet
+    val uncapped = pairSet(Similarity.cellNearDupPairs(emb, cents, 0.35))
+    val cells = cellsOf(emb, cents)
+    val star = pairSet(Similarity.cellNearDupPairs(emb, cents, 0.35,
+        cap = Cap.Fixed(24L)))
+    assert(star === capFiltered(uncapped, cells, 24L, 1),
+      "pivots=1 must keep exactly the pivot star of every over-cap cell")
+    assert(star.size < uncapped.size, "cap 24 must be ACTIVE at sf0.001")
     // every cell at sf0.001 sits under a 10k block → lossless
-    val wide = Similarity.cellNearDupPairsCappedBlock(emb, cents, 0.35,
-        maxCellPop = 24L, blockSize = 10000L)
-      .as[(Long, Long, Double)].collect().toSet
+    val wide = pairSet(Similarity.cellNearDupPairs(emb, cents, 0.35,
+        cap = Cap.Fixed(24L), pivots = 10000L))
     assert(wide === uncapped, "a block covering every cell must be lossless")
-    // and the 256 default sits between the two, never rescoring
-    val b256 = Similarity.cellNearDupPairsCappedBlock(emb, cents, 0.35,
-        maxCellPop = 24L, blockSize = 256L)
-      .as[(Long, Long, Double)].collect().toSet
+    // and the 256 block sits between the two, never rescoring
+    val b256 = pairSet(Similarity.cellNearDupPairs(emb, cents, 0.35,
+        cap = Cap.Fixed(24L), pivots = 256L))
+    assert(b256 === capFiltered(uncapped, cells, 24L, 256))
     assert(star.subsetOf(b256) && b256.subsetOf(uncapped))
   }
 
   test("nearDupPairsAutoCapBlock: block=1 equals the autocap star; wide block is lossless") {
     val emb = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val star = Similarity.nearDupPairsAutoCap(emb, 0.35, 64, nPlanes = 4)
-      .as[(Long, Long, Double)].collect().toSet
-    val block1 = Similarity.nearDupPairsAutoCapBlock(emb, 0.35, 64, nPlanes = 4,
-        blockSize = 1L)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(block1 === star, "blockSize=1 must degenerate to the derived-cap pivot star")
-    val uncapped = Similarity.nearDupPairs(emb, 0.35, 64, nPlanes = 4)
-      .as[(Long, Long, Double)].collect().toSet
-    val wide = Similarity.nearDupPairsAutoCapBlock(emb, 0.35, 64, nPlanes = 4,
-        blockSize = 10000L)
-      .as[(Long, Long, Double)].collect().toSet
+    val uncapped = pairSet(Similarity.nearDupPairs(emb, 0.35, 64, nPlanes = 4))
+    val buckets = bucketsOf(emb)
+    val cap = handDerivedCap(buckets, 64L, 4L)
+    val star = pairSet(Similarity.nearDupPairs(emb, 0.35, 64, nPlanes = 4,
+        cap = Cap.Derived(64L, 4L)))
+    assert(star === capFiltered(uncapped, buckets, cap, 1),
+      s"pivots=1 must keep exactly the pivot star of every bucket over the derived cap $cap")
+    val wide = pairSet(Similarity.nearDupPairs(emb, 0.35, 64, nPlanes = 4,
+        cap = Cap.Derived(64L, 4L), pivots = 10000L))
     assert(wide === uncapped, "a block covering every bucket must be lossless")
-    val b256 = Similarity.nearDupPairsAutoCapBlock(emb, 0.35, 64, nPlanes = 4)
-      .as[(Long, Long, Double)].collect().toSet
+    val b256 = pairSet(Similarity.nearDupPairs(emb, 0.35, 64, nPlanes = 4,
+        cap = Cap.Derived(64L, 4L), pivots = 256L))
+    assert(b256 === capFiltered(uncapped, buckets, cap, 256))
     assert(star.subsetOf(b256) && b256.subsetOf(uncapped))
   }
 
@@ -349,7 +372,7 @@ class SimilaritySpec extends SparkTestBase {
     // lower median = element at 1-based rank (n+1) div 2 under pop-asc
     // order, via cumulative counting over distinct pops
     def cap(pops: Seq[Long], floor: Long, mult: Long): Long =
-      Similarity.derivedCap(pops.toDF("pop"), floor, mult)
+      Cap.derivedCap(pops.toDF("pop"), floor, mult)
         .as[Long].head()
     // n=6, rank 3: sorted [1,1,2,8,9,50] → med 2 → 4·2=8 < floor → 64
     assert(cap(Seq(8L, 1L, 50L, 2L, 9L, 1L), 64L, 4L) === 64L)
@@ -361,20 +384,21 @@ class SimilaritySpec extends SparkTestBase {
 
   test("nearDupPairsAutoCap matches the constant-cap form at its derived cap") {
     val emb = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    // at sf0.001 the floor dominates (median bucket pop ≪ 16), so the
-    // auto form must be bit-identical to nearDupPairsCapped(64)
-    val auto = Similarity.nearDupPairsAutoCap(emb, 0.35, 64, nPlanes = 4,
-        floorCap = 64L, mult = 4L)
-      .as[(Long, Long, Double)].collect().toSet
-    val const = Similarity.nearDupPairsCapped(emb, 0.35, 64, nPlanes = 4,
-        maxBucketPop = 64L)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(auto === const)
+    // at sf0.001 the floor dominates (median bucket pop ≪ 16): the
+    // hand-derived cap is the floor, and the derived-cap run keeps exactly
+    // the uncapped pairs outside over-cap buckets plus their pivot stars
+    val buckets = bucketsOf(emb)
+    val cap = handDerivedCap(buckets, 64L, 4L)
+    assert(cap === 64L, s"floor arm expected at sf0.001 (got $cap)")
+    val uncapped = pairSet(Similarity.nearDupPairs(emb, 0.35, 64, nPlanes = 4))
+    val auto = pairSet(Similarity.nearDupPairs(emb, 0.35, 64, nPlanes = 4,
+        cap = Cap.Derived(64L, 4L)))
+    assert(auto === capFiltered(uncapped, buckets, 64L, 1))
     // the live arm: a profile whose 4·median exceeds the floor must relax
     // the cap above it — on a synthetic two-cluster + uniform space the
     // derived cap keeps the uniform buckets' cliques that a floor-only
     // cap would star-collapse
-    val capLive = Similarity.derivedCap(
+    val capLive = Cap.derivedCap(
       Seq(40L, 41L, 42L, 43L, 500L, 600L).toDF("pop"), 64L, 4L)
       .as[Long].head()
     assert(capLive === 4 * 42L, s"live arm must use 4·median (got $capLive)")
@@ -388,12 +412,12 @@ class SimilaritySpec extends SparkTestBase {
       .as[(Long, Long, Double)].collect()
       .map { case (a, b, s) => (a, b) -> s }.toMap
     // cap above every cell's population → bit-identical to the q102 form
-    val inert = Similarity.cellNearDupPairsCapped(emb, cents, 0.35, 1000000L)
+    val inert = Similarity.cellNearDupPairs(emb, cents, 0.35, cap = Cap.Fixed(1000000L))
       .as[(Long, Long, Double)].collect()
       .map { case (a, b, s) => (a, b) -> s }.toMap
     assert(inert === uncapped)
     // active cap (the q169 gate setting): subset, scores unchanged
-    val capped = Similarity.cellNearDupPairsCapped(emb, cents, 0.35, 24L)
+    val capped = Similarity.cellNearDupPairs(emb, cents, 0.35, cap = Cap.Fixed(24L))
       .as[(Long, Long, Double)].collect()
     assert(capped.length < uncapped.size,
       s"cap 24 must be ACTIVE at sf0.001 (got ${capped.length} of ${uncapped.size})")
@@ -409,7 +433,7 @@ class SimilaritySpec extends SparkTestBase {
     val cluster = (0L until 50L).map(i => (i, base))
     val cdf = cluster.toDF("vec_id", "embedding")
     val oneCell = Similarity.kmeansCentroids(cdf, 4, 0)
-    val star = Similarity.cellNearDupPairsCapped(cdf, oneCell, 0.999, 10L)
+    val star = Similarity.cellNearDupPairs(cdf, oneCell, 0.999, cap = Cap.Fixed(10L))
       .select("a", "b").as[(Long, Long)].collect()
     assert(star.toSet === (1L until 50L).map(b => (0L, b)).toSet,
       s"over-cap cell must contribute exactly the min-id star (got ${star.length})")
@@ -429,7 +453,7 @@ class SimilaritySpec extends SparkTestBase {
     val df = (corpus ++ planted).toDF("vec_id", "embedding")
     val uncapped = Similarity.semDedup(df, 4, 0, 0.999)
       .select("vec_id").as[Long].collect().toSet
-    val inert = Similarity.semDedupCapped(df, 4, 0, 0.999, 1000000L)
+    val inert = Similarity.semDedup(df, 4, 0, 0.999, cap = Cap.Fixed(1000000L))
       .select("vec_id").as[Long].collect().toSet
     assert(inert === uncapped)
     // active cap: every cell over 10 members goes pivot-star; each
@@ -437,7 +461,7 @@ class SimilaritySpec extends SparkTestBase {
     // DIRECTLY links pivot→member — originals without a near-dup edge to
     // the pivot keep themselves, and every survivor set is a superset of
     // the uncapped one (the cap can only DROP suppressions, never add)
-    val capped = Similarity.semDedupCapped(df, 4, 0, 0.999, 10L)
+    val capped = Similarity.semDedup(df, 4, 0, 0.999, cap = Cap.Fixed(10L))
       .select("vec_id").as[Long].collect().toSet
     assert(uncapped.subsetOf(capped))
   }
