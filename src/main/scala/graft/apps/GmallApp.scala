@@ -2,7 +2,7 @@ package graft.apps
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.core.{Envelopes, TopicDb}
 import graft.streaming.{DimCache, DimSink, Sinks, Sources, Windows}
 
@@ -22,6 +22,16 @@ import graft.streaming.{DimCache, DimSink, Sinks, Sources, Windows}
   * lookups, windowed DWS aggregations with the reference's watermarks.
   */
 object GmallApp {
+
+  /** The trigger of every query [[wire]], [[configQuery]] and
+    * [[curationWire]] start. On the default 0 ms trigger an idle
+    * file-source query re-lists its directory every
+    * `spark.sql.streaming.pollingDelay` (10 ms), building a fresh file
+    * index each time; in a DAG of a dozen mostly idle queries that
+    * polling took over a quarter of the driver's CPU. A 500 ms interval
+    * adds at most half a second before a drop is picked up, against
+    * micro-batches that take seconds. */
+  val DagTrigger: Trigger = Trigger.ProcessingTime(500L)
 
   def main(args: Array[String]): Unit = {
     val bootstrap = args.headOption.getOrElse("localhost:9092")
@@ -102,6 +112,7 @@ object GmallApp {
     val fuzzy = spark.readStream.schema(paraSchema)
       .parquet(ensure(s"$inRoot/doc_paras"))
       .writeStream.option("checkpointLocation", s"$warehouse/ckpt/curation_fuzzy")
+      .trigger(DagTrigger)
       .foreachBatch { (b: DataFrame, epochId: Long) =>
         graft.streaming.FuzzyIngest.processBatch(
           b, s"$warehouse/curation/fuzzy", epochId)
@@ -109,6 +120,7 @@ object GmallApp {
     val sem = spark.readStream.schema(embSchema)
       .parquet(ensure(s"$inRoot/embeddings"))
       .writeStream.option("checkpointLocation", s"$warehouse/ckpt/curation_sem")
+      .trigger(DagTrigger)
       .foreachBatch { (b: DataFrame, epochId: Long) =>
         graft.streaming.SemIngest.processBatch(
           b, s"$warehouse/curation/sem", epochId, semCells)
@@ -130,7 +142,10 @@ object GmallApp {
     * micro-batches and still join, with state bounded by `joinTtlSec`
     * (reference: 905 s / ±15 min). The stateless row-filter pipelines run
     * per-batch with EPOCH-IDEMPOTENT writes (each epoch overwrites its own
-    * `epoch=N` dir, so a replayed micro-batch cannot duplicate rows). */
+    * `epoch=N` dir, so a replayed micro-batch cannot duplicate rows).
+    *
+    * Every query runs on the shared [[DagTrigger]], so an idle query
+    * checks its source twice a second instead of busy-polling it. */
   def wire(spark: SparkSession, dbSource: () => DataFrame, logSource: () => DataFrame,
       warehouse: String, joinTtlSec: Long = 900L): Seq[StreamingQuery] = {
     // X2: dic + routing config refresh at most hourly, exactly the
@@ -143,7 +158,7 @@ object GmallApp {
     def out(name: String) = s"$warehouse/dwd/$name"
 
     // ---- DIM: route + prune + dynamic keyed stores; the routing table
-    // ---- itself refreshes from the config store every micro-batch ------
+    // ---- is re-read whenever the config store has been rewritten -------
     val dim = dimQuery(spark, dbSource(), warehouse, dimConfigs, ckpt("dim"))
 
     // ---- DWD log family: 5-way split, persist-once fan-out ------------
@@ -154,6 +169,7 @@ object GmallApp {
     // ---- DWD db, stateless family: per-row filters where the batch
     // ---- boundary is irrelevant; every epoch overwrites its own dir ----
     val dwdStateless = dbSource().writeStream.option("checkpointLocation", ckpt("dwd_db"))
+      .trigger(DagTrigger)
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
         batch.persist()
         try {
@@ -176,7 +192,7 @@ object GmallApp {
     val dicStatic = TopicDb.baseDic(spark)
     val pre = GmallPipelines.tradeOrderPreProcessStream(dbSource(), dicStatic, joinTtlSec)
     val orderPreQ = pre.writeStream
-      .option("checkpointLocation", ckpt("order_pre"))
+      .option("checkpointLocation", ckpt("order_pre")).trigger(DagTrigger)
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
         batch.persist()
         try {
@@ -187,7 +203,7 @@ object GmallApp {
       }.start()
     def tradeQ(name: String, df: DataFrame): StreamingQuery =
       df.writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt(name))
+        .option("checkpointLocation", ckpt(name)).trigger(DagTrigger)
         .format("parquet").option("path", out(name)).start()
     val payQ = tradeQ("pay_success",
       GmallPipelines.tradePaySuccessStream(dbSource(), dicStatic, joinTtlSec))
@@ -199,7 +215,7 @@ object GmallApp {
     // ---- DWS: windowed aggregations (reference watermarks) ------------
     val keyword = Windows.keywordCount(GmallPipelines.keywordHits(logSource()))
       .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt("dws_keyword"))
+      .option("checkpointLocation", ckpt("dws_keyword")).trigger(DagTrigger)
       .format("parquet").option("path", s"$warehouse/dws/keyword").start()
     val traffic = Windows.tumblingAgg(
         GmallPipelines.trafficCounters(GmallPipelines.baseLogSplit(logSource())("page")),
@@ -208,7 +224,7 @@ object GmallApp {
         Seq(sum(col("pv")).as("pv_ct"), sum(col("sv")).as("sv_ct"),
           sum(col("dur")).as("dur_sum")))
       .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt("dws_traffic"))
+      .option("checkpointLocation", ckpt("dws_traffic")).trigger(DagTrigger)
       .format("parquet").option("path", s"$warehouse/dws/traffic").start()
 
     Seq(dim, dwdLog, dwdStateless, orderPreQ, payQ, refundQ, refundPayQ,
@@ -237,7 +253,7 @@ object GmallApp {
     * [[graft.streaming.Sources.configStream]]. */
   def configQuery(spark: SparkSession, cfg: DataFrame, warehouse: String,
       checkpoint: String): StreamingQuery =
-    cfg.writeStream.option("checkpointLocation", checkpoint)
+    cfg.writeStream.option("checkpointLocation", checkpoint).trigger(DagTrigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val valid = batch.where(col("source_table").isNotNull &&
             (col("op") === "d" ||
@@ -266,19 +282,22 @@ object GmallApp {
   /** The DIM routing query: per micro-batch, merge the DYNAMIC routing
     * table (written by [[configQuery]], absent until the first config row)
     * with the static bootstrap configs, route + prune the CDC batch, and
-    * fold each table's rows into its [[graft.streaming.DeltaStore]]-backed
-    * keyed store (created on first sight — checkAndCreateTable), then
-    * compact: one O(batch) epoch append per touched table plus a
-    * touched-bucket-only base merge ([[Sinks.upsertByKeyPartitioned]]) —
-    * a high-churn dim batch never rewrites a whole table. A config row
-    * added mid-stream takes effect from the NEXT micro-batch, exactly
-    * like the reference's broadcast state. Replayed epochs overwrite
-    * their own delta dir and re-merge idempotently (exactly-once per
-    * (table, epoch)); read the resolved view with [[DimSink.readDelta]]. */
+    * merge each touched table's rows straight into its bucketed keyed
+    * store ([[DimSink.mergeBatch]]; created on first sight, like
+    * checkAndCreateTable): only the buckets the batch's keys hash into are
+    * rewritten, so a high-churn dim batch never rewrites a whole table. A
+    * config row added mid-stream takes effect from the NEXT micro-batch,
+    * exactly like the reference's broadcast state. The parsed routing
+    * table is kept in the driver and re-read only when the config store's
+    * part files change (every [[configQuery]] rewrite writes new ones). A
+    * replayed epoch re-merges the same rows, which is idempotent; read
+    * the resolved view with [[DimSink.readDelta]]. */
   def dimQuery(spark: SparkSession, db: DataFrame, warehouse: String,
-      static: Seq[DimSink.TableConfig], checkpoint: String): StreamingQuery =
-    db.writeStream.option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
+      static: Seq[DimSink.TableConfig], checkpoint: String): StreamingQuery = {
+    // (config store part-file names, routes parsed from them)
+    var routes: Option[(Seq[String], Seq[(String, DimSink.TableConfig)])] = None
+    db.writeStream.option("checkpointLocation", checkpoint).trigger(DagTrigger)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
         val s = batch.sparkSession
         val dynamic: Seq[(String, DimSink.TableConfig)] = configLock.synchronized {
           // probe existence through the Hadoop FS (as Sinks.upsertByKey
@@ -295,11 +314,17 @@ object GmallApp {
           if (!fs.exists(dir) && fs.exists(old) && !fs.rename(old, dir))
             throw new java.io.IOException(s"dimQuery: cannot restore $old")
           if (!fs.exists(dir)) Seq.empty
-          else s.read.parquet(dir.toString).collect().toSeq.map { r =>
-            r.getAs[String]("source_table") -> DimSink.TableConfig(
-              r.getAs[String]("sink_table"),
-              r.getAs[String]("sink_columns").split(",").toSeq,
-              r.getAs[String]("sink_pk"))
+          else {
+            val key = fs.listStatus(dir).map(_.getPath.getName)
+              .filter(_.startsWith("part-")).sorted.toSeq
+            if (!routes.exists(_._1 == key))
+              routes = Some(key -> s.read.parquet(dir.toString).collect().toSeq.map { r =>
+                r.getAs[String]("source_table") -> DimSink.TableConfig(
+                  r.getAs[String]("sink_table"),
+                  r.getAs[String]("sink_columns").split(",").toSeq,
+                  r.getAs[String]("sink_pk"))
+              })
+            routes.get._2
           }
         }
         val all = (static.map(c => c.sinkTable.replace("dim_", "") -> c) ++ dynamic)
@@ -307,16 +332,8 @@ object GmallApp {
         val cfgDf = s.createDataFrame(
           all.toSeq.map { case (src, c) => (src, c.sinkTable, c.sinkColumns.mkString(",")) })
           .toDF("source_table", "sink_table", "sink_columns")
-        DimSink.processBatchDelta(
-          GmallPipelines.dimRouter(batch, cfgDf), s"$warehouse/dim",
-          all.values.toSeq, epochId)
-        // per-batch compaction keeps read amplification at zero for the
-        // gates; production can run it on any schedule — either way a
-        // compaction pass touches only the buckets the pending deltas'
-        // keys hash into (DimSinkSpec pins this)
-        all.values.foreach { cfg =>
-          graft.streaming.DeltaStore.compact(s, s"$warehouse/dim/${cfg.sinkTable}",
-            Seq(cfg.sinkPk), "ts")
-        }
+        DimSink.mergeBatch(GmallPipelines.dimRouter(batch, cfgDf), s"$warehouse/dim",
+          all.values.toSeq)
       }.start()
+  }
 }

@@ -327,11 +327,14 @@ object Sinks {
     * window). Sinks needing the full compacted history instead of a
     * retention window are keyed stores — route them through
     * [[upsertByKeyPartitioned]], which rewrites only touched buckets.
-    * The default `None` (keep everything) is for bounded test/gate runs. */
+    * The default `None` (keep everything) is for bounded test/gate runs.
+    * The query runs on the DAG's shared trigger,
+    * [[graft.apps.GmallApp.DagTrigger]]. */
   def fanOut(df: DataFrame, checkpoint: String, retainEpochs: Option[Int] = None)(
       sinks: (String, DataFrame => DataFrame, String)*): StreamingQuery =
     df.writeStream
       .option("checkpointLocation", checkpoint)
+      .trigger(graft.apps.GmallApp.DagTrigger)
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
         batch.persist()
         try sinks.foreach { case (_, transform, path) =>

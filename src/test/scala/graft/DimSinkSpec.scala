@@ -9,6 +9,20 @@ import graft.streaming.{DimCache, DimSink}
 class DimSinkSpec extends SparkTestBase {
   import spark.implicits._
 
+  /** Every parquet file under `dir`, relative path → (length, mtime). */
+  private def fileState(dir: String): Map[String, (Long, Long)] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    val base = new java.io.File(dir)
+    walk(base).filter(_.getName.endsWith(".parquet"))
+      .map(f => (f.getAbsolutePath.stripPrefix(base.getAbsolutePath),
+        (f.length(), f.lastModified()))).toMap
+  }
+
+  /** The `_bucket=N` dir of a [[fileState]] path. */
+  private def bucketOf(rel: String): String =
+    rel.split('/').takeWhile(!_.startsWith("part-")).mkString("/")
+
   test("DimCache re-reads the dim only after the TTL lapses (X2)") {
     val dir = Files.createTempDirectory("graft_dim_").toString + "/dim"
     Seq(("1101", "alipay")).toDF("code", "name").write.parquet(dir)
@@ -143,16 +157,6 @@ class DimSinkSpec extends SparkTestBase {
     val cfg = DimSink.TableConfig("dim_user_info", Seq("id", "name"), "id")
     def batch(rows: Seq[(String, Map[String, String], Long)]) =
       rows.toDF("sink_table", "data", "ts")
-    def fileState(dir: String): Map[String, (Long, Long)] = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      val base = new java.io.File(dir)
-      walk(base).filter(_.getName.endsWith(".parquet"))
-        .map(f => (f.getAbsolutePath.stripPrefix(base.getAbsolutePath),
-          (f.length(), f.lastModified()))).toMap
-    }
-    def bucketOf(rel: String): String =
-      rel.split('/').takeWhile(!_.startsWith("part-")).mkString("/")
 
     // seed a base spread over most of 16 buckets, fully compacted
     DimSink.processBatchDelta(
@@ -179,6 +183,79 @@ class DimSinkSpec extends SparkTestBase {
     val untouched = before.keySet.filter(k => !changed.contains(bucketOf(k)))
     assert(untouched.nonEmpty && untouched.forall(k => before(k) == after(k)),
       "clean buckets must be byte-identical after compaction (no table rewrite)")
+    assert(DimSink.readDelta(spark, root, cfg)
+      .where(col("id") === "u7").select("name").as[String].collect().toSeq
+      === Seq("N7"))
+  }
+
+  test("mergeBatch folds a pending delta epoch first; the newer batch wins on a shared key") {
+    val root = Files.createTempDirectory("graft_dimmerge_").toString
+    val userCfg = DimSink.TableConfig("dim_user_info", Seq("id", "name"), "id")
+    def batch(rows: Seq[(String, Map[String, String], Long)]) =
+      rows.toDF("sink_table", "data", "ts")
+    def users: Map[String, String] =
+      DimSink.readDelta(spark, root, userCfg)
+        .select("id", "name").as[(String, String)].collect().toMap
+    def epochDirs: Seq[String] =
+      Option(new java.io.File(s"$root/dim_user_info/delta").listFiles()).toSeq
+        .flatten.map(_.getName).filter(_.startsWith("epoch="))
+
+    // the LSM layout a crash leaves between append and compaction: one
+    // pending delta epoch and no base
+    DimSink.processBatchDelta(batch(Seq(
+        ("dim_user_info", Map("id" -> "u1", "name" -> "ann"), 1L),
+        ("dim_user_info", Map("id" -> "u2", "name" -> "bob"), 1L))),
+      root, Seq(userCfg), epochId = 0L)
+    assert(epochDirs === Seq("epoch=0"))
+
+    // a batch with an OLDER ts on u1: it is newer in changelog order, so
+    // it must win even though it lands straight in the base — the
+    // pending epoch must be folded first, or it would shadow the merge
+    val b1 = batch(Seq(
+      ("dim_user_info", Map("id" -> "u1", "name" -> "ANN"), 0L),
+      ("dim_user_info", Map("id" -> "u3", "name" -> "cat"), 0L)))
+    DimSink.mergeBatch(b1, root, Seq(userCfg))
+    assert(users === Map("u1" -> "ANN", "u2" -> "bob", "u3" -> "cat"))
+    assert(epochDirs.isEmpty, "the pending epoch was not folded")
+
+    // crash replay of the same batch: the resolved view does not change
+    DimSink.mergeBatch(b1, root, Seq(userCfg))
+    assert(users === Map("u1" -> "ANN", "u2" -> "bob", "u3" -> "cat"))
+  }
+
+  test("mergeBatch leaves no delta epoch and rewrites only the touched buckets") {
+    val root = Files.createTempDirectory("graft_dimmerge_buckets_").toString
+    val cfg = DimSink.TableConfig("dim_user_info", Seq("id", "name"), "id")
+    val skuCfg = DimSink.TableConfig("dim_sku_info", Seq("id", "price"), "id")
+    def batch(rows: Seq[(String, Map[String, String], Long)]) =
+      rows.toDF("sink_table", "data", "ts")
+    def hasEpochs(table: String): Boolean =
+      Option(new java.io.File(s"$root/$table/delta").listFiles()).toSeq
+        .flatten.exists(_.getName.startsWith("epoch="))
+
+    DimSink.mergeBatch(
+      batch((0 until 120).map(i =>
+        ("dim_user_info", Map("id" -> s"u$i", "name" -> s"n$i"), 1L))),
+      root, Seq(cfg, skuCfg))
+    val before = fileState(s"$root/dim_user_info/base")
+    assert(before.keys.map(bucketOf).toSet.size >= 32,
+      "seed keys must spread over most buckets for the assertion to bite")
+    assert(!new java.io.File(s"$root/dim_sku_info").exists(),
+      "store created for a table the batch did not touch")
+
+    // one updated key → one dirty bucket; everything else byte-identical
+    DimSink.mergeBatch(
+      batch(Seq(("dim_user_info", Map("id" -> "u7", "name" -> "N7"), 2L))),
+      root, Seq(cfg, skuCfg))
+    assert(!hasEpochs("dim_user_info"), "a merge must leave no delta epoch")
+    val after = fileState(s"$root/dim_user_info/base")
+    val changed = (after.keySet ++ before.keySet)
+      .filter(k => before.get(k) != after.get(k)).map(bucketOf)
+    assert(changed.size === 1, s"a one-key batch must dirty one bucket, touched: $changed")
+    assert(before.keySet.filter(k => !changed.contains(bucketOf(k)))
+      .forall(k => before(k) == after(k)),
+      "clean buckets must be byte-identical after the merge (no table rewrite)")
+    assert(DimSink.readDelta(spark, root, cfg).count() === 120L)
     assert(DimSink.readDelta(spark, root, cfg)
       .where(col("id") === "u7").select("name").as[String].collect().toSeq
       === Seq("N7"))
