@@ -192,17 +192,7 @@ private[graft] object DagGates {
         val inertJson =
           """{"database":"gmall","table":"zz_inert","type":"insert","ts":4000000001,"data":{},"old":null}"""
         val inert = Seq((tableOf(inertJson), inertJson)).toDS()
-        // changelog checkpointing for THIS gate: its join state is 50-160k
-        // rows per store, where per-batch FULL RocksDB snapshots dominate
-        // the commit (measured 121 → 96 s warm); the small-state window
-        // gates measured the opposite and keep snapshot mode. Passed as
-        // harness extraConf so only THIS gate's cloned session flips —
-        // runtime conf is session-global, and the old set-on-caller/
-        // restore-in-finally leaked the mode to any streaming gate started
-        // concurrently in that window (round-13 advisor).
         val out = StreamHarness.runFiles(s, chunks ++ Seq(sentinels, inert),
-          extraConf = Map(
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true"),
           // stage one file per table (r18, guide §2.4/§6): the five legs
           // each filter on ptable, so single-table staged files let every
           // leg's parquet scan row-group-prune the other four tables'

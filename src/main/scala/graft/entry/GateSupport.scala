@@ -284,6 +284,41 @@ private[graft] object GateSupport {
       r
     }
 
+    /** The feed's chunk plan for an input dir of `corpusBytes`:
+      * (nChunks, cEarly).
+      *
+      * Corpus-scaled chunking: ONE micro-batch must never carry more than
+      * ~two sf0.1-corpora of envelope rows through the ~17 concurrent
+      * queries — at the ×10 up-scale leg a fixed 2-chunk feed put 5
+      * sf0.1-corpora of in-flight JSON strings per batch on the heap and
+      * died on GC overhead (at 48g). So nChunks grows with the input
+      * dir's bytes, clamped to [2, 16], and per-batch heap stays BOUNDED
+      * at any scale (the production micro-batch discipline). The divisor,
+      * 48 MB ≈ two sf0.1-corpora per chunk, trades that heap bound against
+      * the per-round FIXED cost (state-store commit cycles across ~17
+      * queries, ~110 s a round at the ×10 corpus): cold-JVM quiet-host
+      * settles measured 1001.8 s at 8 chunks, 672.3 s at 5 and 518.1 s at
+      * 4 (this divisor), identical outputs, with 2.5× heap margin below
+      * the 5-corpora death load.
+      *
+      * Staggered tail flushing: the refund-family tables
+      * (order_refund_info, refund_payment) and the order_info side they
+      * join COMPLETE at chunk cEarly−1, where their flush sentinels ride —
+      * so the two refund queries' watermark tails (and the keyword
+      * window's) emit ~⅓ of the feed EARLY, while the remaining drop
+      * rounds still run, instead of every query flushing in one final
+      * settle round. Safe for the still-running trade joins: a sentinel
+      * advances only ITS view's watermark, and each query evicts on the
+      * MIN across its views, so order_info state stays live for
+      * order_detail/payment rows arriving through the last chunk.
+      *
+      * Every gated SF (≤ sf0.1) derives exactly (2, 2) — layout and
+      * sentinel rounds bit-identical to the gated behavior. */
+    private[graft] def chunkPlan(corpusBytes: Long): (Int, Int) = {
+      val n = math.max(2L, math.min(16L, corpusBytes / 48000000L + 1)).toInt
+      (n, (2 * n + 2) / 3) // n = 2 gives cEarly = 2: one flush round
+    }
+
     private def run(s: SparkSession, d: String): String = {
       // same clone discipline as StreamHarness: capped shuffle partitions
       // + RocksDB, caller's session untouched
@@ -292,11 +327,9 @@ private[graft] object GateSupport {
       // cross-query parallelism already fills the host and per-query
       // partitions only multiply state-store commits: interleaved A/B on
       // a clean host measured 4 parts at 75.7/76.2 s vs 8 parts at
-      // 103.3/88.5 s for the whole charge at sf0.1 (RocksDB; HDFS-store
-      // variants measured 98–195 s — rejected). Harness gates that run
-      // ONE query at a time keep the separately-measured default of 8.
-      session.conf.set("spark.sql.shuffle.partitions",
-        sys.env.get("GRAFT_DAG_PARTS").flatMap(_.toIntOption).getOrElse(4).toString)
+      // 103.3/88.5 s for the whole charge at sf0.1. Harness gates that
+      // run ONE query at a time keep the separately-measured default of 8.
+      session.conf.set("spark.sql.shuffle.partitions", "4")
       import session.implicits._
       // TempDirs, not a bare createTempDirectory: `wh` is read by every
       // later DAG gate in this JVM, so the root can only die at exit —
@@ -319,14 +352,6 @@ private[graft] object GateSupport {
       // (chunk filters over a persisted plan) WHILE the queries ran: at
       // the ×10 bench leg those second passes were ~390 s of the charge.
       val stageRoot = s"$root/stage"
-      // ---- corpus-scaled feed chunking: ONE micro-batch must never carry
-      // more than ~one sf0.1-corpus of envelope rows through the ~17
-      // concurrent queries — at the ×10 up-scale leg the old fixed 2-chunk
-      // feed put 5 sf0.1-corpora of in-flight JSON strings per batch on
-      // the heap and died on GC overhead (at 48g). Chunk count grows with
-      // the input dir's bytes so per-batch heap is BOUNDED at any scale
-      // (the production micro-batch discipline); ≤ sf0.1 stays at exactly
-      // 2 chunks, keeping every gated SF's behavior bit-identical.
       val corpusBytes = {
         val p = java.nio.file.Paths.get(d)
         if (java.nio.file.Files.isDirectory(p)) {
@@ -336,37 +361,7 @@ private[graft] object GateSupport {
           finally st.close()
         } else 0L
       }
-      // GRAFT_DAG_CHUNKS: dev override to exercise the >2-chunk staggered
-      // path at a gated SF (results must be chunk-count independent);
-      // clamped to the same [2,16] band as the derived value — 0/negative
-      // would make pmod-style bucketing degenerate and silently drop data.
-      // Divisor 48 MB ≈ TWO sf0.1-corpora per chunk (round 15): the
-      // per-settle-round FIXED cost (state-store commit cycles across ~17
-      // queries) measured ~110 s at the ×10 corpus, so fewer, bigger
-      // chunks win as long as per-batch heap holds — cold-JVM quiet-host
-      // settle 1001.8 s at 8 chunks → 672.3 s at 5 → 518.1 s at 4 (this
-      // divisor), identical outputs. The heap bound that set the old
-      // 24 MB divisor was a 5-corpora batch dying at 48 GiB; the bench
-      // heap is 96 GiB and 2 corpora/batch keeps 2.5× margin below even
-      // the 48 GiB death load. Gated SFs (≤ sf0.1) still derive exactly
-      // 2 chunks — layout and sentinel rounds bit-identical.
-      val nChunks = sys.env.get("GRAFT_DAG_CHUNKS").flatMap(_.toIntOption)
-        .map(n => math.max(2, math.min(16, n)))
-        .getOrElse(math.max(2, math.min(16, (corpusBytes / 48000000L).toInt + 1)))
-      // ---- staggered tail flushing (round-10 ask #3): the refund-family
-      // tables (order_refund_info, refund_payment) and the order_info
-      // side they join COMPLETE at chunk cEarly−1, where their flush
-      // sentinels ride — so the two refund queries' watermark tails (and
-      // the keyword window's, below) emit ~⅓ of the feed EARLY, while
-      // the remaining drop rounds still run, instead of every query
-      // flushing in one final settle round (395 s of the ×10 leg's last
-      // chunk, SCALING.md). Safe for the still-running trade joins: a
-      // sentinel advances only ITS view's watermark, and each query
-      // evicts on the MIN across its views, so order_info state stays
-      // live for order_detail/payment rows arriving through the last
-      // chunk. ≤ sf0.1 keeps nChunks == 2 == cEarly — layout and
-      // sentinel rounds bit-identical to the gated behavior.
-      val cEarly = if (nChunks <= 2) nChunks else math.max(2, (2 * nChunks + 2) / 3)
+      val (nChunks, cEarly) = chunkPlan(corpusBytes)
       if (timing) System.err.println(
         s"[dag] feed chunks: $nChunks, early-complete at ${cEarly - 1} ($corpusBytes bytes)")
       // ascending equal-width buckets over [lo, hi] → 0..n-1 (the N-chunk

@@ -407,19 +407,15 @@ private[graft] object PipelineGates {
           pmod(col("event_id"), lit(3)).as("slice"))
       val batches = (0 to 2).map(i => obs.where(col("slice") === i)
         .select(col("g"), col("bucket"), col("rho")).as[SketchStream.HllRow])
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        val snaps = StreamHarness.runFiles(s, batches)(ds =>
-          SketchStream.hllSketchStream(ds).toDF())
-        val latest = snaps.groupBy(col("_1").as("g"))
-          .agg(max_by(col("_3"), col("_2")).as("regs"))
-        Sketches.hllStats(latest, col("regs"))
-          .select(substring_index(col("g"), "|", 1).as("stt"),
-            substring_index(col("g"), "|", -1).as("event_type"),
-            col("n_buckets_hit"), col("reg_sum"), col("est_distinct"))
-          .orderBy(col("stt"), col("event_type"))
-      } finally s.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      val snaps = StreamHarness.runFiles(s, batches)(ds =>
+        SketchStream.hllSketchStream(ds).toDF())
+      val latest = snaps.groupBy(col("_1").as("g"))
+        .agg(max_by(col("_3"), col("_2")).as("regs"))
+      Sketches.hllStats(latest, col("regs"))
+        .select(substring_index(col("g"), "|", 1).as("stt"),
+          substring_index(col("g"), "|", -1).as("event_type"),
+          col("n_buckets_hit"), col("reg_sum"), col("est_distinct"))
+        .orderBy(col("stt"), col("event_type"))
     }),
 
     // q43's refund pipeline on the SHUFFLE lookup-join strategy

@@ -47,20 +47,16 @@ private[graft] object SketchGates {
         // ADDING across batches (see q83)
         val batches = (0 to 2).map(i => obs.where(col("slice") === i)
           .select(col("g"), col("bin")).as[SketchStream.BinRow])
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          val snaps = StreamHarness.runFiles(s, batches)(ds =>
-            SketchStream.histSketchStream(ds, 128).toDF())
-          val counted = snaps.groupBy(col("_1").as("event_type"))
-            .agg(max_by(col("_3"), col("_2")).as("counts"))
-            .select(col("event_type"), posexplode(col("counts")).as(Seq("bin", "c")))
-            .where(col("c") > 0)
-            .select(col("event_type"), col("bin").cast("long").as("bin"), col("c"))
-          Sketches.quantilesFromBinCounts(counted, "event_type", lo, hi, 128,
-              Seq(0.5, 0.9, 0.99))
-            .orderBy(col("event_type"))
-        } finally s.conf.unset("spark.sql.streaming.stateStore.providerClass")
+        val snaps = StreamHarness.runFiles(s, batches)(ds =>
+          SketchStream.histSketchStream(ds, 128).toDF())
+        val counted = snaps.groupBy(col("_1").as("event_type"))
+          .agg(max_by(col("_3"), col("_2")).as("counts"))
+          .select(col("event_type"), posexplode(col("counts")).as(Seq("bin", "c")))
+          .where(col("c") > 0)
+          .select(col("event_type"), col("bin").cast("long").as("bin"), col("c"))
+        Sketches.quantilesFromBinCounts(counted, "event_type", lo, hi, 128,
+            Seq(0.5, 0.9, 0.99))
+          .orderBy(col("event_type"))
       }
     }),
 
@@ -101,18 +97,14 @@ private[graft] object SketchGates {
       // (g, bucket) register must keep point-maxing across batches
       val batches = (0 to 2).map(i => obs.where(col("slice") === i)
         .select(col("g"), col("bucket"), col("rho")).as[SketchStream.HllRow])
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        val snaps = StreamHarness.runFiles(s, batches)(ds =>
-          SketchStream.hllSketchStream(ds).toDF())
-        val latest = snaps.groupBy(col("_1").as("l_returnflag"))
-          .agg(max_by(col("_3"), col("_2")).as("regs"))
-        Sketches.hllStats(latest, col("regs"))
-          .select(col("l_returnflag"), col("n_buckets_hit"), col("reg_sum"),
-            col("est_distinct"))
-          .orderBy(col("l_returnflag"))
-      } finally s.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      val snaps = StreamHarness.runFiles(s, batches)(ds =>
+        SketchStream.hllSketchStream(ds).toDF())
+      val latest = snaps.groupBy(col("_1").as("l_returnflag"))
+        .agg(max_by(col("_3"), col("_2")).as("regs"))
+      Sketches.hllStats(latest, col("regs"))
+        .select(col("l_returnflag"), col("n_buckets_hit"), col("reg_sum"),
+          col("est_distinct"))
+        .orderBy(col("l_returnflag"))
     }),
 
     // Count-min sketch heavy hitters: 4×256 counter table over the token
@@ -151,24 +143,20 @@ private[graft] object SketchGates {
         .select(concat(lit("cms"), col("j")).as("g"), col("bin"), col("slice"))
       val batches = (0 to 2).map(i => obs.where(col("slice") === i)
         .select(col("g"), col("bin")).as[SketchStream.BinRow])
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        val snaps = StreamHarness.runFiles(s, batches)(ds =>
-          SketchStream.histSketchStream(ds, 256).toDF())
-        val sketch = snaps.groupBy(col("_1").as("g"))
-          .agg(max_by(col("_3"), col("_2")).as("cells"))
-          .select(substring(col("g"), 4, 10).cast("int").as("j"),
-            posexplode(col("cells")).as(Seq("b", "c")))
-          .where(col("c") > 0)
-          .select(col("j"), col("b").cast("long").as("b"), col("c"))
-        val exact = toks.groupBy(col("tok")).agg(count(lit(1)).as("exact"))
-        graft.operators.Sketches.cmsEstimate(sketch, exact.select(col("tok")), col("tok"))
-          .join(exact.select(col("tok").as("key"), col("exact")), Seq("key"))
-          .select(col("key"), col("est"), col("exact"),
-            (col("est") - col("exact")).as("overcount"))
-          .orderBy(col("key"))
-      } finally s.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      val snaps = StreamHarness.runFiles(s, batches)(ds =>
+        SketchStream.histSketchStream(ds, 256).toDF())
+      val sketch = snaps.groupBy(col("_1").as("g"))
+        .agg(max_by(col("_3"), col("_2")).as("cells"))
+        .select(substring(col("g"), 4, 10).cast("int").as("j"),
+          posexplode(col("cells")).as(Seq("b", "c")))
+        .where(col("c") > 0)
+        .select(col("j"), col("b").cast("long").as("b"), col("c"))
+      val exact = toks.groupBy(col("tok")).agg(count(lit(1)).as("exact"))
+      graft.operators.Sketches.cmsEstimate(sketch, exact.select(col("tok")), col("tok"))
+        .join(exact.select(col("tok").as("key"), col("exact")), Seq("key"))
+        .select(col("key"), col("est"), col("exact"),
+          (col("est") - col("exact")).as("overcount"))
+        .orderBy(col("key"))
     }),
 
     // Distribution-drift monitor: PSI of the value distribution per

@@ -20,6 +20,22 @@ import OracleSupport._
   * sides — the compare sorts columns by name before hashing). */
 private[graft] object StreamCoreGates {
 
+  /** A4 through real micro-batches (`StatefulOps.dedupDaily`). The feed
+    * is DELIBERATELY disordered: batched by day parity so a user's
+    * EARLIER day arrives in a LATER micro-batch — proving the seen-days
+    * state doesn't swallow out-of-order days (each (user, day) stays
+    * within one batch, so the per-batch µs sort still surfaces the day's
+    * true first event). */
+  private def streamDedup(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    val ev = Tables.events(s, d).as[StatefulOps.Event]
+    StreamHarness.runFiles(s, disorderedDayBatchesDs(ev))(ds =>
+      StatefulOps.dedupDaily(ds).toDF())
+      .select(col("user_id"), to_date(col("ts")).cast("string").as("visit_date"),
+        date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("first_ts"))
+      .orderBy(col("user_id"), col("visit_date"))
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     "q10_dedup_daily" -> ((s, d) =>
@@ -48,38 +64,13 @@ private[graft] object StreamCoreGates {
 
     // ------------- streaming twins driven through real micro-batches -------
 
-    // A4 dedup as an incremental flatMapGroupsWithState run: state must
+    // A4 dedup as an incremental transformWithState run: state must
     // carry across the micro-batch boundary; same oracle as q10.
-    // The feed is DELIBERATELY disordered: batched by day parity so a
-    // user's EARLIER day arrives in a LATER micro-batch — proving the
-    // seen-days state doesn't swallow out-of-order days (each (user, day)
-    // stays within one batch, so the per-batch µs sort still surfaces the
-    // day's true first event).
-    "q28_stream_dedup" -> ((s, d) => {
-      import s.implicits._
-      val ev = Tables.events(s, d).as[StatefulOps.Event]
-      StreamHarness.runFiles(s, disorderedDayBatchesDs(ev))(ds =>
-        StatefulOps.dedupDaily(ds).toDF())
-        .select(col("user_id"), to_date(col("ts")).cast("string").as("visit_date"),
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("first_ts"))
-        .orderBy(col("user_id"), col("visit_date"))
-    }),
+    "q28_stream_dedup" -> streamDedup _,
 
-    // A4 on the Spark 4 transformWithState API (RocksDB state store,
-    // ValueState with optional 1-day TTL = reference X4); same oracle.
-    "q38_stream_dedup_tws" -> ((s, d) => {
-      import s.implicits._
-      val ev = Tables.events(s, d).as[StatefulOps.Event]
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try
-        StreamHarness.runFiles(s, disorderedDayBatchesDs(ev))(ds =>
-          StatefulOps.dedupDailyTws(ds).toDF())
-          .select(col("user_id"), to_date(col("ts")).cast("string").as("visit_date"),
-            date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("first_ts"))
-          .orderBy(col("user_id"), col("visit_date"))
-      finally s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }),
+    // the same gate and oracle as q28, kept under its own key like every
+    // oracle-gated query
+    "q38_stream_dedup_tws" -> streamDedup _,
 
     // W8 CEP jump detection as a streaming query with event-time timeouts:
     // a sentinel batch advances the watermark to flush pending state; same
@@ -159,22 +150,18 @@ private[graft] object StreamCoreGates {
         .orderBy(col("event_id"))
     }),
 
-    // A5 streaming twin (two seen-day states per user, the reference's
-    // two-ValueState pattern) driven through real micro-batches on RocksDB
-    // state, disordered feed like q28/q38; summed flags = q11's
-    // count-distinct oracle.
+    // A5 streaming twin (the daily dedup keyed by (user, event type), the
+    // reference's two-ValueState pattern) driven through real micro-batches,
+    // disordered feed like q28/q38; summed flags = q11's count-distinct
+    // oracle.
     "q52_stream_dual_flag" -> ((s, d) => {
       import s.implicits._
       val ev = Tables.events(s, d).as[StatefulOps.Event]
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try
-        StreamHarness.runFiles(s, disorderedDayBatchesDs(ev))(ds =>
-          StatefulOps.dualFlagUv(ds, "view", "purchase").toDF())
-          .groupBy(col("_1").as("visit_date"))
-          .agg(sum(col("_2")).as("a_uv_ct"), sum(col("_3")).as("b_uv_ct"))
-          .orderBy(col("visit_date"))
-      finally s.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      StreamHarness.runFiles(s, disorderedDayBatchesDs(ev))(ds =>
+        StatefulOps.dualFlagUv(ds, "view", "purchase").toDF())
+        .groupBy(col("_1").as("visit_date"))
+        .agg(sum(col("_2")).as("a_uv_ct"), sum(col("_3")).as("b_uv_ct"))
+        .orderBy(col("visit_date"))
     }),
 
     // Streaming twin of q70: the same session_window plan run as real
@@ -226,16 +213,11 @@ private[graft] object StreamCoreGates {
       val ev = Tables.events(s, d)
         .where(col("event_type").isin("view", "click", "purchase"))
         .as[StatefulOps.Event]
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val latest =
-        try {
-          val snaps = StreamHarness.runFiles(s, disorderedDayBatchesDs(ev))(ds =>
-            StatefulOps.funnelStream(ds, Seq("view", "click", "purchase"),
-              horizonSec = Some(7L * 86400L)).toDF())
-          snaps.groupBy(col("_1").as("user_id"))
-            .agg(max_by(col("_3"), col("_2")).as("max_step"))
-        } finally s.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      val latest = StreamHarness.runFiles(s, disorderedDayBatchesDs(ev))(ds =>
+          StatefulOps.funnelStream(ds, Seq("view", "click", "purchase"),
+            horizonSec = Some(7L * 86400L)).toDF())
+        .groupBy(col("_1").as("user_id"))
+        .agg(max_by(col("_3"), col("_2")).as("max_step"))
       Seq("view", "click", "purchase").zipWithIndex.map { case (step, i) =>
         latest.agg(count(when(col("max_step") >= i + 1, 1)).as("n_users"))
           .select(lit(i + 1).cast("long").as("step_idx"),

@@ -1,9 +1,7 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** X2 — TTL'd lookup-dimension cache. The reference bounds dim staleness
   * with a JDBC lookup cache TTL of at most one hour
@@ -56,15 +54,14 @@ class DimCache(
   * reference's Phoenix-side half of the DIM pipeline
   * (app/func/TableProcessFunction.java:215-274 `checkAndCreateTable` +
   * app/func/DimSinkFunction.java upsert): each configured sink table is a
-  * keyed parquet store under `root`, CREATED on first sight with exactly
-  * the configured sink columns (+ the Maxwell ts as the upsert order
-  * column), then upserted per micro-batch on the configured primary key
-  * via [[Sinks.upsertByKey]] (the Phoenix UPSERT contract).
+  * keyed, bucketed parquet store under `root`, CREATED on first sight with
+  * exactly the configured sink columns (+ the Maxwell ts as the upsert
+  * order column), then upserted per micro-batch on the configured primary
+  * key by [[mergeBatch]] (the Phoenix UPSERT contract).
   *
   * Scale: each table's store is independent; the per-batch work is one
-  * key-compaction shuffle per touched table over batch-sized data. The
-  * store rewrite inherits upsertByKey's documented Delta-MERGE upgrade
-  * path at real scale.
+  * key-compaction shuffle per touched table over batch-sized data, and it
+  * rewrites only the buckets the batch's keys hash into.
   */
 object DimSink {
 
@@ -72,44 +69,15 @@ object DimSink {
     * (sink_table/sink_columns/sink_pk, TableProcessFunction.java:187-193). */
   case class TableConfig(sinkTable: String, sinkColumns: Seq[String], sinkPk: String)
 
-  private def storeSchema(cfg: TableConfig): StructType =
-    StructType(cfg.sinkColumns.map(c => StructField(c, StringType)) :+
-      StructField("ts", LongType))
-
-  /** checkAndCreateTable: create the sink store with the configured schema
-    * iff absent — idempotent, exactly like the reference's
-    * `create table if not exists` (TableProcessFunction.java:240-268). */
-  def ensureTable(spark: SparkSession, root: String, cfg: TableConfig): Unit = {
-    val dir = new Path(s"$root/${cfg.sinkTable}")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir))
-      spark.createDataFrame(
-          java.util.Collections.emptyList[Row](), storeSchema(cfg))
-        .write.mode("overwrite").parquet(dir.toString)
-  }
-
   /** Sink one micro-batch of [[graft.apps.GmallPipelines.dimRouter]] output
-    * (sink_table, data, type, ts): for each configured table, project the
-    * pruned `data` map to the declared columns and upsert on the declared
+    * (sink_table, data, type, ts) into the bucketed layout [[readDelta]]
+    * reads: for each configured table the batch touches, the pruned `data`
+    * map is projected to the declared columns and upserted on the declared
     * pk. Tables appear dynamically — a config row added mid-stream gets
-    * its store created at its first non-empty batch. */
-  def processBatch(batch: DataFrame, root: String, configs: Seq[TableConfig]): Unit = {
-    val spark = batch.sparkSession
-    batch.persist()
-    try configs.foreach { cfg =>
-      val rows = pruned(batch, cfg)
-      if (!rows.isEmpty) {
-        ensureTable(spark, root, cfg)
-        Sinks.upsertByKey(rows, Seq(cfg.sinkPk), "ts", s"$root/${cfg.sinkTable}")
-      }
-    } finally { batch.unpersist(); () }
-  }
-
-  /** [[processBatch]] into the bucketed layout [[readDelta]] reads: each
-    * touched table's rows merge straight into `<table>/base` through
-    * [[Sinks.upsertByKeyPartitioned]], so a batch rewrites only the
-    * buckets its keys hash into and leaves no delta epoch behind — the
-    * production DIM path ([[graft.apps.GmallApp.dimQuery]]). One action
+    * its store created at its first non-empty batch. The rows merge
+    * straight into `<table>/base` through [[Sinks.upsertByKeyPartitioned]]
+    * and leave no delta epoch behind — the production DIM path
+    * ([[graft.apps.GmallApp.dimQuery]]). One action
     * over the persisted batch finds the touched tables. A touched table's
     * pending delta epochs (a [[processBatchDelta]] store, or one a crash
     * left between its append and its compaction) fold into the base
@@ -137,7 +105,7 @@ object DimSink {
       .select(cfg.sinkColumns.map(c => element_at(col("data"), c).as(c)) :+
         col("ts"): _*)
 
-  /** [[processBatch]] with each dim table routed through the
+  /** [[mergeBatch]]'s routing with each dim table written through the
     * [[DeltaStore]] LSM path: a batch costs one O(batch) epoch append per
     * touched table instead of a bucket rewrite; run [[DeltaStore.compact]]
     * on whatever schedule read amplification warrants. Replayed epochs
@@ -268,7 +236,7 @@ object DimSink {
     * oracle-gated against embedded Derby (q175), including the replay
     * hazard below.
     *
-    * REPLAY HAZARD (unlike [[processBatch]]/[[processBatchDelta]], which
+    * REPLAY HAZARD (unlike [[mergeBatch]]/[[processBatchDelta]], which
     * are replay-idempotent): this writes `mode("append")` rows, NOT keyed
     * upserts — on checkpointed `foreachBatch` replay after a crash, the
     * re-delivered batch lands twice on any target that does not collapse

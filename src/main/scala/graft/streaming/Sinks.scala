@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Sink layer (SURVEY.md §2.2): the reference's Kafka/upsert-Kafka/JDBC/
   * Phoenix sinks re-expressed as `foreachBatch` writers. File-backed (the
@@ -314,7 +314,9 @@ object Sinks {
     * re-execute the source N times). Each epoch overwrites its own
     * `epoch=N` subdir per sink, so a replayed micro-batch (or a crash
     * mid-fan-out) re-writes the same dirs instead of appending duplicates
-    * — exactly-once per (sink, epoch).
+    * — exactly-once per (sink, epoch). This is the K1-K3 append path (the
+    * Kafka producer analogue): a restart on the same checkpoint resumes
+    * after the last committed epoch.
     *
     * READER CONTRACT: each sink path is an epoch-partitioned store
     * (`path/epoch=N`, partition column `epoch`) — the analogue of a Kafka
@@ -352,15 +354,5 @@ object Sinks {
         } finally batch.unpersist()
         ()
       }
-      .start()
-
-  /** K1/K3 — append stream to a path (the at-least-once Kafka producer
-    * analogue; exactly-once comes from checkpoint + idempotent re-write of
-    * the same epoch files). */
-  def appendSink(df: DataFrame, checkpoint: String, path: String): StreamingQuery =
-    df.writeStream.format("parquet")
-      .option("checkpointLocation", checkpoint)
-      .option("path", path)
-      .trigger(Trigger.AvailableNow())
       .start()
 }

@@ -2,23 +2,25 @@ package graft.streaming
 
 import java.sql.Timestamp
 import java.time.Duration
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState,
   OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** Streaming twins of the reference's keyed-state programs (SURVEY.md §2.5
-  * A4/A5/A6, §2.6 W8), implemented with `flatMapGroupsWithState` — the
-  * Spark-native replacement for Flink's RichMapFunction + ValueState.
-  * The batch forms in [[graft.operators.EventOps]] define the oracle
-  * semantics; these produce the same answers incrementally on unbounded
-  * input.
+  * A4/A5/A6, §2.6 W8) — the Spark-native replacement for Flink's
+  * RichMapFunction + ValueState. The daily dedup family (A4/A5) and the
+  * funnel run on Spark 4's `transformWithState`, whose state carries a
+  * declared TTL like the reference's; the operators with no TTL'd twin
+  * (`visitorRepair`, `firstPerKey`, `firstPerKeyRetention`, `jumpDetect`)
+  * stay on `flatMapGroupsWithState`. The batch forms in
+  * [[graft.operators.EventOps]] define the oracle semantics; these
+  * produce the same answers incrementally on unbounded input.
   *
   * Scale: state is keyed by the entity id (mid/user) — Spark hash-partitions
-  * the state store by key across executors; each key holds O(1) state
-  * (a date string or one pending event), so state size is bounded by
-  * #distinct-keys, not by event volume. The reference's 1-day state TTL
-  * (app/dwd/DwdTrafficUniqueVisitorDetail.java:62-65) is preserved: the
-  * state *content* is the last-seen date, so it never grows.
+  * the state store by key across executors, so state size is bounded by
+  * #distinct-keys × the retention window, not by event volume. The
+  * reference's 1-day state TTL (app/dwd/DwdTrafficUniqueVisitorDetail
+  * .java:62-65) is the `ttl` argument of the transformWithState forms.
   */
 object StatefulOps {
 
@@ -45,161 +47,101 @@ object StatefulOps {
   private[streaming] def dayOf(ts: Timestamp): String =
     ts.toInstant.atZone(java.time.ZoneOffset.UTC).toLocalDate.toString
 
-  /** A4 — streaming daily UV dedup: first event per (user, day) passes.
-    * Reference: app/dwd/DwdTrafficUniqueVisitorDetail.java:55-84
-    * (ValueState lastVisitDate + 1-day TTL).
+  /** A4 — the first event per (key, day), through Spark 4's
+    * `transformWithState`. Reference: app/dwd/DwdTrafficUniqueVisitorDetail
+    * .java:55-84 (ValueState lastVisitDate with a DECLARED 1-day TTL,
+    * :62-65, X4). Emits `(event, isNew)`: isNew = 1 when the key had no
+    * day in state yet — the first-ever flag of [[dedupDailyFlags]],
+    * in arrival order.
     *
-    * State = the SET of days seen, not the max day: with max-day state an
-    * out-of-order event from a new-but-earlier day would be swallowed,
+    * State = the SET of days seen, not the last day: with last-day state
+    * an out-of-order event from a new-but-earlier day would be swallowed,
     * while the reference emits on any `day != lastVisitDate` and the batch
-    * oracle keeps one row per (user, day). The set is bounded in
-    * production by the same 1-day TTL the reference uses (old days age
-    * out); size ≤ #days in the retention window per key.
-    */
-  def dedupDaily(events: Dataset[Event]): Dataset[Event] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (_: Long, it: Iterator[Event], state: GroupState[Seq[String]]) => {
-          // process in event-time order (µs) within the batch
-          val sorted = it.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          var seen = state.getOption.getOrElse(Seq.empty).toSet
-          val out = sorted.flatMap { e =>
-            val day = dayOf(e.ts)
-            if (seen.contains(day)) None
-            else { seen += day; Some(e) }
-          }
-          if (seen.nonEmpty) state.update(seen.toSeq.sorted)
-          out.iterator
-        })
-  }
-
-  /** A4 via the Spark 4 `transformWithState` API (the modern successor to
-    * flatMapGroupsWithState): one `ValueState[String]` holding the last
-    * seen date with a DECLARED 1-day TTL — the exact shape of the
-    * reference's StateTtlConfig (app/dwd/DwdTrafficUniqueVisitorDetail
-    * .java:62-65, X4). Requires the RocksDB state store provider
-    * (spark.sql.streaming.stateStore.providerClass).
-    */
-  class DedupDailyProcessor(ttl: TTLConfig) extends StatefulProcessor[Long, Event, Event] {
+    * oracle keeps one row per (key, day). The list carries the same TTL,
+    * so in production old days age out; size ≤ #days in the retention
+    * window per key. Requires the RocksDB state store provider, which
+    * [[StreamHarness]] and [[graft.apps.GmallApp]] both pin. */
+  class DedupDailyProcessor[K](ttl: TTLConfig)
+      extends StatefulProcessor[K, Event, (Event, Int)] {
     @transient private var seenDays: ListState[String] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       seenDays = getHandle.getListState[String]("seenDays", Encoders.STRING, ttl)
 
     override def handleInputRows(
-        key: Long, rows: Iterator[Event], timerValues: TimerValues): Iterator[Event] = {
+        key: K, rows: Iterator[Event], timerValues: TimerValues): Iterator[(Event, Int)] = {
+      // process in event-time order (µs) within the batch
       val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
       var seen = seenDays.get().toSet
       val out = sorted.flatMap { e =>
         val day = dayOf(e.ts)
         if (seen.contains(day)) None
-        else { seen += day; seenDays.appendValue(day); Some(e) }
+        else {
+          val isNew = if (seen.isEmpty) 1 else 0
+          seen += day
+          seenDays.appendValue(day)
+          Some((e, isNew))
+        }
       }
       out.iterator
     }
   }
 
-  /** [[dedupDaily]] on the transformWithState code path. Pass
-    * `ttl = Some(Duration.ofDays(1))` in production for the reference's
-    * exact X4 retention (TTL clocks require TimeMode.ProcessingTime, whose
-    * periodic timer batches never let `processAllAvailable` settle — so
-    * bounded tests/gates run with no TTL and TimeMode.None). */
-  def dedupDailyTws(
-      events: Dataset[Event],
-      ttl: Option[Duration] = None): Dataset[Event] = {
-    import events.sparkSession.implicits._
-    val (ttlConf, timeMode) = ttl match {
-      case Some(d) => (TTLConfig(d), TimeMode.ProcessingTime())
-      case None    => (TTLConfig.NONE, TimeMode.None())
-    }
-    events.groupByKey(_.user_id)
-      .transformWithState(new DedupDailyProcessor(ttlConf), timeMode, OutputMode.Append())
+  /** A TTL clock needs TimeMode.ProcessingTime, whose periodic timer
+    * batches never let `processAllAvailable` settle — so production
+    * passes `ttl = Some(Duration.ofDays(1))` for the reference's exact X4
+    * retention, and bounded gates and tests run with no TTL and
+    * TimeMode.None. */
+  private def ttlMode(ttl: Option[Duration]): (TTLConfig, TimeMode) = ttl match {
+    case Some(d) => (TTLConfig(d), TimeMode.ProcessingTime())
+    case None    => (TTLConfig.NONE, TimeMode.None())
   }
 
-  /** A5 — streaming dual-flag UV twin of
-    * [[graft.operators.EventOps.dualFlagUv]]: per user, TWO independent
-    * seen-day states (one per tracked event type) — the reference's
-    * two-ValueState-per-key pattern
-    * (app/dws/DwsTrafficPageViewWindow.java:67-115). Emits one
-    * (visit_date, a_flag, b_flag) 0/1 row at each user's first
-    * type-A/type-B event of a day; summing flags per day downstream equals
-    * the batch count-distinct (the q11 oracle). Seen-days SETS (not max
-    * day) so an out-of-order earlier day still counts — same fix as
-    * [[DedupDailyProcessor]]; in production both states carry the
-    * reference's 1-day TTL.
-    */
-  class DualFlagUvProcessor(typeA: String, typeB: String, ttl: TTLConfig)
-      extends StatefulProcessor[Long, Event, (String, Long, Long)] {
-    @transient private var seenA: ListState[String] = _
-    @transient private var seenB: ListState[String] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      seenA = getHandle.getListState[String]("seenA", Encoders.STRING, ttl)
-      seenB = getHandle.getListState[String]("seenB", Encoders.STRING, ttl)
-    }
-
-    override def handleInputRows(
-        key: Long, rows: Iterator[Event],
-        timerValues: TimerValues): Iterator[(String, Long, Long)] = {
-      val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-      var sa = seenA.get().toSet
-      var sb = seenB.get().toSet
-      val out = Seq.newBuilder[(String, Long, Long)]
-      sorted.foreach { e =>
-        val day = dayOf(e.ts)
-        if (e.event_type == typeA && !sa.contains(day)) {
-          sa += day; seenA.appendValue(day); out += ((day, 1L, 0L))
-        } else if (e.event_type == typeB && !sb.contains(day)) {
-          sb += day; seenB.appendValue(day); out += ((day, 0L, 1L))
-        }
-      }
-      out.result().iterator
-    }
+  private def dailyFirsts[K: Encoder](events: Dataset[Event], key: Event => K,
+      ttl: Option[Duration]): Dataset[(Event, Int)] = {
+    import events.sparkSession.implicits._
+    val (ttlConf, timeMode) = ttlMode(ttl)
+    events.groupByKey(key)
+      .transformWithState(new DedupDailyProcessor[K](ttlConf), timeMode, OutputMode.Append())
   }
 
-  /** [[DualFlagUvProcessor]] wired through transformWithState; see
-    * [[dedupDailyTws]] for the TTL/TimeMode coupling. */
-  def dualFlagUv(
-      events: Dataset[Event], typeA: String, typeB: String,
-      ttl: Option[Duration] = None): Dataset[(String, Long, Long)] = {
+  /** A4 — streaming daily UV dedup: the first event per (user, day)
+    * passes ([[DedupDailyProcessor]]). */
+  def dedupDaily(events: Dataset[Event], ttl: Option[Duration] = None): Dataset[Event] = {
     import events.sparkSession.implicits._
-    val (ttlConf, timeMode) = ttl match {
-      case Some(dur) => (TTLConfig(dur), TimeMode.ProcessingTime())
-      case None      => (TTLConfig.NONE, TimeMode.None())
-    }
-    events.groupByKey(_.user_id)
-      .transformWithState(new DualFlagUvProcessor(typeA, typeB, ttlConf),
-        timeMode, OutputMode.Append())
+    dailyFirsts(events, _.user_id, ttl).map(_._1)
   }
 
   /** A4+A5 combined — first-of-day dedup that ALSO flags the user's
     * first-EVER event (the "order window" per-user state pair of the gmall
     * curriculum this reference belongs to — its own app/dws/ stops at the
     * traffic windows: orderUniqueUser from day change, orderNewUser from
-    * an empty lastOrderDt). Emits (event, isNew 0/1) at
-    * each (user, day) first; isNew=1 on the first emitted day (arrival
-    * order — feed day-ordered input, the reference's operating
-    * assumption). */
+    * an empty lastOrderDt). Emits (event, isNew 0/1) at each (user, day)
+    * first; isNew=1 on the first emitted day (arrival order — feed
+    * day-ordered input, the reference's operating assumption). */
   def dedupDailyFlags(events: Dataset[Event]): Dataset[(Event, Int)] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (_: Long, it: Iterator[Event], state: GroupState[Seq[String]]) => {
-          val sorted = it.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          var seen = state.getOption.getOrElse(Seq.empty).toSet
-          val out = sorted.flatMap { e =>
-            val day = dayOf(e.ts)
-            if (seen.contains(day)) None
-            else {
-              val isNew = if (seen.isEmpty) 1 else 0
-              seen += day
-              Some((e, isNew))
-            }
-          }
-          if (seen.nonEmpty) state.update(seen.toSeq.sorted)
-          out.iterator
-        })
+    dailyFirsts(events, _.user_id, None)
+  }
+
+  /** A5 — streaming dual-flag UV twin of
+    * [[graft.operators.EventOps.dualFlagUv]]: the reference's
+    * two-ValueState-per-key pattern (app/dws/DwsTrafficPageViewWindow.java
+    * :67-115) is the daily dedup keyed by (user, event type) over the
+    * type-A and type-B rows — an event is only ever one type. Emits one
+    * (visit_date, a_flag, b_flag) 0/1 row at each user's first
+    * type-A/type-B event of a day; summing flags per day downstream equals
+    * the batch count-distinct (the q11 oracle). */
+  def dualFlagUv(
+      events: Dataset[Event], typeA: String, typeB: String,
+      ttl: Option[Duration] = None): Dataset[(String, Long, Long)] = {
+    import events.sparkSession.implicits._
+    dailyFirsts(events.filter(e => e.event_type == typeA || e.event_type == typeB),
+        e => (e.user_id, e.event_type), ttl)
+      .map { case (e, _) =>
+        val a = if (e.event_type == typeA) 1L else 0L
+        (dayOf(e.ts), a, 1L - a)
+      }
   }
 
   /** A6 — streaming visitor-flag repair: is_new=1 only on the user's
@@ -413,10 +355,8 @@ object StatefulOps {
     *
     * Production MUST pass `ttl` (the stream's retention window): a user
     * whose step i−1 never converts keeps step-i candidates forever
-    * otherwise. TTL clocks require TimeMode.ProcessingTime, whose periodic
-    * timer batches never let `processAllAvailable` settle — so bounded
-    * gates/tests run with `ttl = None` (same coupling as
-    * [[dedupDailyTws]]). */
+    * otherwise; bounded gates/tests run with `ttl = None` (see
+    * [[ttlMode]]). */
   def funnelStream(
       events: Dataset[Event],
       steps: Seq[String],
@@ -426,10 +366,7 @@ object StatefulOps {
     require(steps.nonEmpty, "funnel needs at least one step")
     val idx = steps.zipWithIndex.toMap
     val horizonUs = horizonSec.map(_ * 1000000L).getOrElse(Long.MaxValue)
-    val (ttlConf, timeMode) = ttl match {
-      case Some(d) => (TTLConfig(d), TimeMode.ProcessingTime())
-      case None    => (TTLConfig.NONE, TimeMode.None())
-    }
+    val (ttlConf, timeMode) = ttlMode(ttl)
     events.flatMap(e => idx.get(e.event_type).map(i => (e.user_id, i, micros(e.ts))))
       .groupByKey(_._1)
       .transformWithState(new FunnelProcessor(steps.size, horizonUs, ttlConf),

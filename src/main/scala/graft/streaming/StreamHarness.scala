@@ -31,61 +31,47 @@ object StreamHarness {
   private val counter = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Clone the session for one harness run: caller's runtime conf carried
-    * over, shuffle partitions capped, RocksDB state store by default.
+    * over, shuffle partitions capped, RocksDB state store. The clone
+    * (`newSession`: same SparkContext + cache, isolated SQLConf) is the
+    * only session these settings touch, so concurrent harness runs never
+    * race on shared session state and the caller's conf is never mutated.
     *
     * Shuffle partitions are capped at 8 for the query's lifetime: each
     * stateful operator commits one state-store instance PER shuffle
     * partition PER micro-batch, so a 32-partition session pays 4× the
     * store-commit overhead for gate-sized feeds (≤300k rows) with zero
-    * parallelism gain — measured 2-3× wall-clock on the DWS window gates.
-    * Results are partition-count independent; production sizing is the
-    * deployment's own concern. The default cap of 8 is measured optimal
-    * at sf0.1/local[32] (4 and 16 are both slower — commit overhead vs
-    * lost parallelism); override with GRAFT_HARNESS_PARTS to re-measure.
-    * The cap is set on a CLONED session
-    * (`newSession`: same SparkContext + cache, isolated SQLConf), so
-    * concurrent harness runs never race on shared session state and the
-    * caller's conf is never mutated. */
-  private[graft] def prepared(spark: SparkSession,
-      capParts: Boolean = true): SparkSession = {
+    * parallelism gain — measured 2-3× wall-clock on the DWS window gates,
+    * with 4 and 16 both slower than 8 at sf0.1/local[32]. Results are
+    * partition-count independent; production sizing is the deployment's
+    * own concern.
+    *
+    * The state store is ALWAYS RocksDB, whatever the caller set: it is the
+    * only provider `transformWithState` runs on, and the store that holds
+    * state > heap at production scale ([[graft.apps.GmallApp]] pins it
+    * too). Gate results are provider-independent. */
+  private[graft] def prepared(spark: SparkSession): SparkSession = {
     val session = spark.newSession()
     // newSession starts from the BUILDER's options; carry over any conf the
-    // caller set at runtime (e.g. the RocksDB state-store provider) so the
-    // clone behaves exactly like the caller's session. Static confs are
-    // already shared and unsettable — skip them.
+    // caller set at runtime so the clone behaves exactly like the caller's
+    // session. Static confs are already shared and unsettable — skip them.
     spark.conf.getAll.foreach { case (k, v) =>
       if (!session.conf.getOption(k).contains(v)) {
         try session.conf.set(k, v)
         catch { case _: org.apache.spark.sql.AnalysisException => () }
       }
     }
-    // capParts = false skips the cap for queries with no stateful
-    // operators. Currently unused: uncapping the foreachBatch sink gates
-    // was measured 1.5× SLOWER on tiny-batch ingests (see runFilesSink) —
-    // the parameter stays for callers whose batches are provably large.
-    if (capParts) {
-      val cap = sys.env.get("GRAFT_HARNESS_PARTS").flatMap(_.toIntOption).getOrElse(8)
-      val parts = session.conf.get("spark.sql.shuffle.partitions").toIntOption
-      session.conf.set("spark.sql.shuffle.partitions",
-        math.min(parts.getOrElse(cap), cap).toString)
-    }
-    // RocksDB unless the caller chose otherwise: measured ~15 % faster on
-    // the DWS window gates than the HDFS-backed default, and it is the
-    // store that holds state > heap at production scale anyway.
-    // GRAFT_STATE_PROVIDER=hdfs|rocksdb re-measures the choice without a
-    // rebuild (dev knob — results are provider-independent either way).
-    val provider = sys.env.get("GRAFT_STATE_PROVIDER") match {
-      case Some("hdfs") => Some(
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-      case Some("rocksdb") | None => Some(
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      case Some(other) =>
-        System.err.println(s"[harness] unknown GRAFT_STATE_PROVIDER '$other' — keeping default")
-        None
-    }
-    if (session.conf.getOption("spark.sql.streaming.stateStore.providerClass").isEmpty)
-      provider.foreach(p =>
-        session.conf.set("spark.sql.streaming.stateStore.providerClass", p))
+    val cap = 8
+    val parts = session.conf.get("spark.sql.shuffle.partitions").toIntOption
+    session.conf.set("spark.sql.shuffle.partitions",
+      math.min(parts.getOrElse(cap), cap).toString)
+    session.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // Caller-set values win over the defaults below (getAll holds only
+    // explicitly-set entries; getOption would see the SQLConf default and
+    // always look "set").
+    val callerSet = spark.conf.getAll
+    def default(k: String, v: String): Unit =
+      if (!callerSet.contains(k)) session.conf.set(k, v)
     // Maintenance OFF the gate's critical path (r18, guide §5): the default
     // 60 s interval fires mid-gate, and a 4-join query at 8 partitions holds
     // 128 RocksDB instances whose concurrent snapshot uploads storm the
@@ -93,26 +79,23 @@ object StreamHarness {
     // 2.3 s/op on early batches → 10-20 s/op once maintenance kicks in).
     // Harness gates run minutes and their checkpoints are deleted on
     // return, so snapshot cadence buys nothing here; production tunes this
-    // to its recovery RPO. Caller-set values win (same guard as above).
-    if (spark.conf.getAll.get("spark.sql.streaming.stateStore.maintenanceInterval").isEmpty)
-      session.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "3600s")
+    // to its recovery RPO.
+    default("spark.sql.streaming.stateStore.maintenanceInterval", "3600s")
     // concurrent streaming queries on a saturated local[N] host can queue
     // a broadcast-exchange job past the 300 s default (observed: the
     // 17-query DAG gate at the ×10 bench leg); the timeout exists to
     // catch hung exchanges, not healthy queueing — give it an hour.
-    // Mirrors the providerClass guard above: a caller-set runtime value
-    // wins over our default (getAll holds only explicitly-set entries;
-    // getOption would see the SQLConf default and always look "set"),
-    // and GRAFT_BROADCAST_TIMEOUT wins over both.
-    val callerTimeout = spark.conf.getAll.get("spark.sql.broadcastTimeout")
-    sys.env.get("GRAFT_BROADCAST_TIMEOUT").orElse(callerTimeout) match {
-      case Some(t) => session.conf.set("spark.sql.broadcastTimeout", t)
-      case None    => session.conf.set("spark.sql.broadcastTimeout", "3600")
-    }
-    // measured and rejected: RocksDB changelog checkpointing costs ~15 %
-    // on the DWS gates (q63: 5.6 → 6.4 s) — gate state is far too small
-    // for snapshot upload to dominate; it is the right switch only when
-    // per-batch full snapshots outweigh the changelog replay at recovery
+    default("spark.sql.broadcastTimeout", "3600")
+    // RocksDB commit cost: in snapshot mode every commit checkpoints each
+    // store's SST files, and row tracking reads every key before its
+    // write. Changelog checkpointing writes only the batch's changes, and
+    // the tracked row count feeds nothing but the numRowsTotal progress
+    // metric (which then reads 0). The warehouse-DAG settle at
+    // sf0.1/local[4], cold JVM, measured 384 s with neither (median of 3),
+    // 293 s with changelog alone (1 run) and 175 s with both (median of 3);
+    // the HDFS-backed store took 307 s (median of 3).
+    default("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
+    default("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "false")
     session
   }
 
@@ -181,11 +164,10 @@ object StreamHarness {
     * COMPOSITION, the thing that exercises cross-batch state.
     */
   def runFiles[T](spark: SparkSession, batches: Seq[Dataset[T]],
-      extraConf: Map[String, String] = Map.empty,
       stageKeyCols: Seq[String] = Nil)(
       build: Dataset[T] => DataFrame)(implicit enc: Encoder[T]): DataFrame = {
     val name = s"graft_mem_sink_${counter.incrementAndGet()}"
-    val session = feedFiles(spark, batches, extraConf, stageKeyCols) { (stream, ckpt) =>
+    val session = feedFiles(spark, batches, stageKeyCols) { (stream, ckpt) =>
       build(stream)
         .writeStream.format("memory").queryName(name).outputMode("append")
         .option("checkpointLocation", ckpt)
@@ -202,30 +184,19 @@ object StreamHarness {
   def runFilesSink[T](spark: SparkSession, batches: Seq[Dataset[T]])(
       start: (Dataset[T], String) => StreamingQuery)(
       implicit enc: Encoder[T]): Unit = {
-    // measured and REVERTED (r18): uncapping these foreachBatch sink
-    // clones (capParts = false — they hold no state stores) read 1.5×
-    // SLOWER on the tiny-batch ingest gates (q116 8.5 → 12.8 s, q160
-    // 12.6 → 20.5 s, q201 5.6 → 7.4 s best-of-2): a 1-2k-row micro-batch
-    // runs dozens of jobs whose 32-task shuffles are pure task-launch
-    // overhead. The capped 8 stays; the single-task INPUT problem those
-    // gates actually had is fixed by Tables.widen at the operator level.
-    feedFiles(spark, batches, capParts = true)(start)
+    // These foreachBatch sinks hold no state stores, yet they keep the
+    // partition cap: a 1-2k-row ingest micro-batch runs dozens of jobs
+    // whose 32-task shuffles would be pure task-launch overhead.
+    feedFiles(spark, batches)(start)
     ()
   }
 
   private def feedFiles[T](spark: SparkSession, batches: Seq[Dataset[T]],
-      extraConf: Map[String, String] = Map.empty,
-      stageKeyCols: Seq[String] = Nil,
-      capParts: Boolean = true)(
+      stageKeyCols: Seq[String] = Nil)(
       start: (Dataset[T], String) => StreamingQuery)(
       implicit enc: Encoder[T]): SparkSession = {
     require(batches.nonEmpty, "file feed needs at least one batch")
-    val session = prepared(spark, capParts)
-    // per-gate conf (e.g. q164's changelog checkpointing) lands on the
-    // CLONE only: runtime conf is session-global, and setting it on the
-    // caller bled the mode into any gate started concurrently in the
-    // set/restore window (round-13 advisor)
-    extraConf.foreach { case (k, v) => session.conf.set(k, v) }
+    val session = prepared(spark)
     val root = java.nio.file.Paths.get(graft.core.TempDirs.scratch("graft_feed_"))
     try {
       val watched = root.resolve("in")

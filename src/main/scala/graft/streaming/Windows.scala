@@ -39,14 +39,6 @@ object Windows {
     tumblingAgg(hits, "rt", "10 seconds", "2 seconds",
       Seq(col("word")), Seq(count(lit(1)).as("keyword_count")))
 
-  /** A2 — the traffic counter window: sum the 0/1 counters per
-    * (vc,ch,ar,is_new) per 10 s tumble (watermark 14 s per W4). */
-  def trafficPageView(counters: DataFrame): DataFrame =
-    tumblingAgg(counters, "rt", "10 seconds", "14 seconds",
-      Seq(col("vc"), col("ch"), col("ar"), col("is_new")),
-      Seq(sum(col("pv")).as("pv_ct"), sum(col("sv")).as("sv_ct"),
-        sum(col("dur")).as("dur_sum")))
-
   /** HOPPING (sliding) event-time aggregation — completes the window
     * family (the reference uses only tumbling windows; sliding = tumbles
     * overlapping every `slideDur`). Each event lands in

@@ -189,11 +189,6 @@ object GenScale {
     try os.write((manifest + "\n").getBytes("UTF-8")) finally os.close()
   }
 
-  /** The factor recorded in a generated dir's manifest, if present and
-    * complete. */
-  def manifestFactor(spark: SparkSession, dir: String): Option[Int] =
-    manifestInfo(spark, dir).map(_._2)
-
   /** (source, factor) from a generated dir's manifest — `None` when the
     * manifest is absent (incomplete or never generated), so callers can
     * regenerate; a manifest whose SOURCE differs from the intended one

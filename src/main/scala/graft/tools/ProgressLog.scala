@@ -11,7 +11,9 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * re-reads the static conf; a listener registered on the parent's
   * per-session manager never sees the clone's queries). Not wired into
   * any gate: purely a measurement tool, zero cost when the conf is
-  * absent. */
+  * absent. The harness turns RocksDB row tracking off, so `rows=` reads 0
+  * there unless `spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows=true`
+  * is set too. */
 class ProgressLog extends StreamingQueryListener {
   override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
   override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()

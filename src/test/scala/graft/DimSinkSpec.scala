@@ -89,11 +89,11 @@ class DimSinkSpec extends SparkTestBase {
       rows.toDF("sink_table", "data", "ts")
 
     // batch 1: only user rows — only the user table may exist afterwards
-    DimSink.processBatch(batch(Seq(
+    DimSink.mergeBatch(batch(Seq(
       ("dim_user_info", Map("id" -> "u1", "name" -> "ann", "junk" -> "x"), 1L),
       ("dim_user_info", Map("id" -> "u2", "name" -> "bob"), 1L))),
       root, Seq(userCfg, skuCfg))
-    val users1 = spark.read.parquet(s"$root/dim_user_info")
+    val users1 = DimSink.readDelta(spark, root, userCfg)
     assert(users1.schema.fieldNames.toSeq === Seq("id", "name", "ts"))
     assert(users1.count() === 2L)
     assert(!new java.io.File(s"$root/dim_sku_info").exists(),
@@ -101,14 +101,14 @@ class DimSinkSpec extends SparkTestBase {
 
     // batch 2: user UPDATE (same pk, later ts) + first sku row → dynamic
     // table creation mid-stream, upsert replaces u1
-    DimSink.processBatch(batch(Seq(
+    DimSink.mergeBatch(batch(Seq(
       ("dim_user_info", Map("id" -> "u1", "name" -> "ANN"), 2L),
       ("dim_sku_info", Map("id" -> "s1", "price" -> "9.99"), 2L))),
       root, Seq(userCfg, skuCfg))
-    val users2 = spark.read.parquet(s"$root/dim_user_info")
+    val users2 = DimSink.readDelta(spark, root, userCfg)
       .select("id", "name").as[(String, String)].collect().toMap
     assert(users2 === Map("u1" -> "ANN", "u2" -> "bob"))
-    val skus = spark.read.parquet(s"$root/dim_sku_info")
+    val skus = DimSink.readDelta(spark, root, skuCfg)
     assert(skus.schema.fieldNames.toSeq === Seq("id", "price", "ts"))
     assert(skus.select("id", "price").as[(String, String)].collect().toSeq ===
       Seq(("s1", "9.99")))

@@ -78,27 +78,43 @@ class SinksSpec extends SparkTestBase {
   }
 
   test("appendSink is exactly-once across restarts (K2: checkpoint + idempotent epoch files)") {
+    // on fanOut, the production append path
     val base = Files.createTempDirectory("graft_k2_").toString
     val (src, out, ckpt) = (s"$base/src", s"$base/out", s"$base/ckpt")
     import org.apache.spark.sql.types._
     val schema = new StructType().add("id", LongType).add("v", StringType)
     Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.json(src)
-    def runOnce(): Unit =
-      Sinks.appendSink(spark.readStream.schema(schema).json(src), ckpt, out)
-        .awaitTermination() // AvailableNow drains and stops
+    // drain the input, then stop: a restart resumes on the same checkpoint
+    def runOnce(): Unit = {
+      val q = Sinks.fanOut(spark.readStream.schema(schema).json(src), ckpt)(
+        ("only", identity[org.apache.spark.sql.DataFrame] _, out))
+      try q.processAllAvailable() finally q.stop()
+    }
     def ids(): Seq[Long] =
       spark.read.parquet(out).select("id").as[Long].collect().toSeq.sorted
+    // every epoch dir's parquet files, with length and mtime
+    def epochFiles(): Map[String, Set[(String, Long, Long)]] =
+      new java.io.File(out).listFiles().filter(_.getName.startsWith("epoch=")).map { d =>
+        d.getName -> d.listFiles().filter(_.getName.endsWith(".parquet"))
+          .map(f => (f.getName, f.length(), f.lastModified())).toSet
+      }.toMap
 
     runOnce()
     assert(ids() === Seq(1L, 2L))
+    val first = epochFiles()
+    assert(first.size === 1)
     // restart with the same checkpoint and unchanged input: the processed
-    // epochs must NOT replay
+    // epochs must NOT replay — no epoch dir rewritten or added
     runOnce()
+    assert(epochFiles() === first, "restart rewrote or duplicated committed epochs")
     assert(ids() === Seq(1L, 2L), "restart duplicated committed epochs")
-    // new input after restart: only the delta lands
+    // new input after restart: only the delta lands, in a new epoch
     Seq((3L, "c")).toDF("id", "v").write.mode("append").json(src)
     runOnce()
     assert(ids() === Seq(1L, 2L, 3L))
+    val third = epochFiles()
+    assert(third.size === 2)
+    assert(first.forall { case (k, v) => third(k) == v })
   }
 
   test("orderedBatchSink writes declared field order minus transient columns (K5)") {

@@ -87,25 +87,21 @@ class SketchesSpec extends SparkTestBase {
   }
 
   test("streaming HLL registers across micro-batches equal the batch sketch") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val df = mkDocs(3000).select(
-        when($"id" % 2 === 0, "even").otherwise("odd").as("g"), $"v")
-      val (bucket, rho) = Sketches.hllObs($"v")
-      val obs = df.select($"g", bucket.as("bucket"), rho.as("rho"))
-        .as[graft.streaming.SketchStream.HllRow].collect().toSeq
-      // both groups appear in every batch -> real cross-batch state merge
-      val batches = obs.grouped(obs.size / 3 + 1).toSeq
-      val snaps = graft.streaming.StreamHarness.run(spark, batches)(ds =>
-        graft.streaming.SketchStream.hllSketchStream(ds).toDF())
-      val latest = snaps.groupBy($"_1".as("g"))
-        .agg(max_by($"_3", $"_2").as("regs"))
-        .select($"g", $"regs".cast("array<int>").as("regs"))
-      val batch = Sketches.hllSketch(df, Seq($"g"), $"v")
-      assert(latest.orderBy($"g").as[(String, Seq[Int])].collect().toSeq ===
-        batch.orderBy($"g").as[(String, Seq[Int])].collect().toSeq)
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    val df = mkDocs(3000).select(
+      when($"id" % 2 === 0, "even").otherwise("odd").as("g"), $"v")
+    val (bucket, rho) = Sketches.hllObs($"v")
+    val obs = df.select($"g", bucket.as("bucket"), rho.as("rho"))
+      .as[graft.streaming.SketchStream.HllRow].collect().toSeq
+    // both groups appear in every batch -> real cross-batch state merge
+    val batches = obs.grouped(obs.size / 3 + 1).toSeq
+    val snaps = graft.streaming.StreamHarness.run(spark, batches)(ds =>
+      graft.streaming.SketchStream.hllSketchStream(ds).toDF())
+    val latest = snaps.groupBy($"_1".as("g"))
+      .agg(max_by($"_3", $"_2").as("regs"))
+      .select($"g", $"regs".cast("array<int>").as("regs"))
+    val batch = Sketches.hllSketch(df, Seq($"g"), $"v")
+    assert(latest.orderBy($"g").as[(String, Seq[Int])].collect().toSeq ===
+      batch.orderBy($"g").as[(String, Seq[Int])].collect().toSeq)
   }
 
   test("hllDistinct plan: registers partial-aggregate before the exchange") {

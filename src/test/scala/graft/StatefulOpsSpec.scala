@@ -6,11 +6,11 @@ import graft.operators.EventOps
 import graft.streaming.{StatefulOps, StreamHarness}
 import graft.streaming.StatefulOps.Event
 
-/** Streaming twins vs batch semantics: the flatMapGroupsWithState operators
-  * must produce exactly the batch (oracle) answers when driven through real
+/** Streaming twins vs batch semantics: the stateful operators must produce
+  * exactly the batch (oracle) answers when driven through real
   * micro-batches, including state carried across batch boundaries and
   * event-time timeouts fired by the advancing watermark (SURVEY.md §2.5
-  * A4/A6, §2.6 W8). */
+  * A4/A5/A6, §2.6 W8). */
 class StatefulOpsSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -65,14 +65,59 @@ class StatefulOpsSpec extends SparkTestBase {
   }
 
   test("transformWithState dedup (RocksDB + 1-day state TTL) equals flatMapGroupsWithState twin") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val batches = Seq(events.take(4), events.drop(4))
+    val tws = StreamHarness.run(spark, batches)(ds => StatefulOps.dedupDaily(ds).toDF())
+      .select("user_id", "event_id").as[(Long, Long)].collect().toSet
+    assert(tws === Set((1L, 1L), (1L, 3L), (2L, 4L), (3L, 7L)))
+  }
+
+  test("streaming dualFlagUv equals the batch per-day counts when an earlier day arrives later (A5)") {
+    // u1 views on day 0 and day 1 and buys on day 1; u2 views twice on day
+    // 0; u3 buys on day 0 and views on day 1. Batch 1 carries only day 1,
+    // batch 2 brings the EARLIER day 0 — state must not swallow it.
+    val day0 = Seq(ev(1, 1, 10), ev(2, 2, 20), ev(3, 2, 30),
+      ev(4, 3, 40, "purchase"), ev(5, 1, 50, "click"))
+    val day1 = Seq(ev(6, 1, 86410), ev(7, 1, 86420, "purchase"),
+      ev(8, 1, 86430, "purchase"), ev(9, 3, 86440))
+    val streamed = StreamHarness.run(spark, Seq(day1, day0))(ds =>
+        StatefulOps.dualFlagUv(ds, "view", "purchase").toDF("visit_date", "a", "b"))
+      .groupBy("visit_date").agg(sum("a"), sum("b"))
+      .as[(String, Long, Long)].collect().sortBy(_._1).toSeq
+    val batch = EventOps.dualFlagUv((day0 ++ day1).toDF(), "view", "purchase")
+      .select(col("visit_date").cast("string"), col("a_uv_ct"), col("b_uv_ct"))
+      .as[(String, Long, Long)].collect().sortBy(_._1).toSeq
+    assert(streamed === Seq(("1970-01-01", 2L, 1L), ("1970-01-02", 2L, 1L)))
+    assert(streamed === batch)
+  }
+
+  test("dedupDailyFlags sets isNew only on each user's first emitted day") {
+    // day-ordered feed (the operator's contract): u1 on days 0, 1 and 2
+    // across both batches, u2 first seen on day 1 in batch 2
+    val b1 = Seq(ev(1, 1, 10), ev(2, 1, 20), ev(3, 1, 86410))
+    val b2 = Seq(ev(4, 1, 86420), ev(5, 2, 86430), ev(6, 1, 172810), ev(7, 2, 172820))
+    val out = StreamHarness.run(spark, Seq(b1, b2))(ds =>
+        StatefulOps.dedupDailyFlags(ds).toDF("event", "is_new"))
+      .select(col("event.event_id"), col("is_new")).as[(Long, Int)]
+      .collect().toMap
+    assert(out === Map(1L -> 1, 3L -> 0, 5L -> 1, 6L -> 0, 7L -> 0))
+  }
+
+  test("a harness gate leaves the caller's state-store provider alone") {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val hdfs = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+    // getAll holds only explicitly-set entries: an `unset` would fall back
+    // to the SQLConf default, which is this same HDFS-backed provider
+    val before = spark.conf.getAll.get(key)
+    spark.conf.set(key, hdfs)
     try {
-      val batches = Seq(events.take(4), events.drop(4))
-      val tws = StreamHarness.run(spark, batches)(ds => StatefulOps.dedupDailyTws(ds).toDF())
-        .select("user_id", "event_id").as[(Long, Long)].collect().toSet
-      assert(tws === Set((1L, 1L), (1L, 3L), (2L, 4L), (3L, 7L)))
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      val rows = SparkEntry.queries("q38_stream_dedup_tws")(
+        spark, "/root/testdata/sf0.001").count()
+      assert(rows > 0L)
+      assert(spark.conf.getAll.get(key) === Some(hdfs))
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
   }
 
   test("streaming funnel survives a late earlier step-1 event that rewrites the chain") {
@@ -85,16 +130,11 @@ class StatefulOpsSpec extends SparkTestBase {
     val b1 = Seq(ev(1, 1, 100), ev(2, 1, 105, "click"), ev(3, 1, 106, "purchase"),
       ev(10, 2, 50, "click"))
     val b2 = Seq(ev(4, 1, 10), ev(5, 1, 25, "click"))
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val latest =
-      try {
-        val snaps = StreamHarness.run(spark, Seq(b1, b2))(ds =>
-          StatefulOps.funnelStream(ds, Seq("view", "click", "purchase"),
-            horizonSec = Some(20L)).toDF())
-        snaps.groupBy(col("_1")).agg(max_by(col("_3"), col("_2")).as("m"))
-          .as[(Long, Int)].collect().toMap
-      } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    val latest = StreamHarness.run(spark, Seq(b1, b2))(ds =>
+        StatefulOps.funnelStream(ds, Seq("view", "click", "purchase"),
+          horizonSec = Some(20L)).toDF())
+      .groupBy(col("_1")).agg(max_by(col("_3"), col("_2")).as("m"))
+      .as[(Long, Int)].collect().toMap
     assert(latest === Map(1L -> 2, 2L -> 0))
     // batch form on the union agrees: u1 converts view+click only
     val counts = EventOps.funnel((b1 ++ b2).toDF(), Seq("view", "click", "purchase"),
