@@ -136,7 +136,8 @@ object GmallApp {
     * queries (production awaits, tests stop them).
     *
     * The trade family runs as watermarked stream-stream interval joins
-    * (`GmallPipelines.*Stream`, one query per app exactly like the
+    * (the `GmallPipelines.trade*` functions, which bound their joins on a
+    * streaming input; one query per app exactly like the
     * reference's one-Flink-job-per-app layout — each re-consumes the
     * topic): an order's detail/info/payment rows may arrive in DIFFERENT
     * micro-batches and still join, with state bounded by `joinTtlSec`
@@ -190,7 +191,7 @@ object GmallApp {
 
     // ---- DWD db, trade family: cross-batch stream-stream joins --------
     val dicStatic = TopicDb.baseDic(spark)
-    val pre = GmallPipelines.tradeOrderPreProcessStream(dbSource(), dicStatic, joinTtlSec)
+    val pre = GmallPipelines.tradeOrderPreProcess(dbSource(), dicStatic, joinTtlSec)
     val orderPreQ = pre.writeStream
       .option("checkpointLocation", ckpt("order_pre")).trigger(DagTrigger)
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
@@ -206,11 +207,11 @@ object GmallApp {
         .option("checkpointLocation", ckpt(name)).trigger(DagTrigger)
         .format("parquet").option("path", out(name)).start()
     val payQ = tradeQ("pay_success",
-      GmallPipelines.tradePaySuccessStream(dbSource(), dicStatic, joinTtlSec))
+      GmallPipelines.tradePaySuccess(dbSource(), dicStatic, joinTtlSec))
     val refundQ = tradeQ("order_refund",
-      GmallPipelines.tradeOrderRefundStream(dbSource(), dicStatic, joinTtlSec))
+      GmallPipelines.tradeOrderRefund(dbSource(), dicStatic, ttlSec = joinTtlSec))
     val refundPayQ = tradeQ("refund_pay_suc",
-      GmallPipelines.tradeRefundPaySuccessStream(dbSource(), dicStatic, joinTtlSec))
+      GmallPipelines.tradeRefundPaySuccess(dbSource(), dicStatic, joinTtlSec))
 
     // ---- DWS: windowed aggregations (reference watermarks) ------------
     val keyword = Windows.keywordCount(GmallPipelines.keywordHits(logSource()))

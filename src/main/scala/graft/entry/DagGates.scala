@@ -204,7 +204,7 @@ private[graft] object DagGates {
           val parsed = Envelopes.parseMaxwell(
             ds.toDF("ptable", "value"), keep = Seq("ptable"))
           val (clean, _) = Envelopes.cleanDirty(parsed)
-          GmallPipelines.tradePaySuccessStream(
+          GmallPipelines.tradePaySuccess(
             clean.drop("table").withColumnRenamed("ptable", "table")
               .withColumn("ts", col("ts") * tsScale),
             TopicDb.baseDic(s), 905L)

@@ -79,7 +79,7 @@ private[graft] object PipelineGates {
     // reference's apps all consuming one Kafka topic. The wide result is
     // itself materialized once per session (tradeOrderPreProcessCached):
     // the reference writes it to the dwd_trade_order_pre_process topic
-    // ONCE (DwdTradeOrderPreProcess.java:275) and q41/q42 consume it.
+    // ONCE (DwdTradeOrderPreProcess.java:275) and q42/q92 consume it.
     "q39_dwd_order_pre" -> ((s, d) =>
       orderPreAgg(GmallPipelines.tradeOrderPreProcessCached(s, d))),
 
@@ -140,13 +140,13 @@ private[graft] object PipelineGates {
     // ------- persisted topic_db parse (graft.core.TopicDb)            ----
 
     // DwdTradePayDetailSuc (DwdTradePayDetailSuc.java:23-34,94-98):
-    // successful payments ⋈ the pre-process wide table ⋈ dic. The wide
-    // table comes from the session cache — the reference's apps consume
-    // the materialized dwd_trade_order_pre_process topic, they don't
-    // re-run the 5-way join.
+    // successful payments ⋈ order_detail ⋈ order_info, LEFT⋈ activity/
+    // coupon, ⋈ dic. It runs its own joins rather than reading the
+    // session-cached pre-process table: the same function feeds the
+    // production stream (q119), where chaining through the pre-process
+    // output would lose its watermark-flushed left-join tails.
     "q41_dwd_pay_success" -> ((s, d) =>
-      paySuccessAgg(GmallPipelines.tradePaySuccess(TopicDb(s, d),
-        GmallPipelines.tradeOrderPreProcessCached(s, d), TopicDb.baseDic(s)))),
+      paySuccessAgg(GmallPipelines.tradePaySuccess(TopicDb(s, d), TopicDb.baseDic(s)))),
 
     // DwdTradeOrderDetail (DwdTradeOrderDetail.java:91-92): order detail
     // facts = inserts from the session-cached pre-process wide table.

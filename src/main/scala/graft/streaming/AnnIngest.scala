@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions.norm
 import graft.operators.Similarity
+import IngestStore.existsDir
 
 /** IVF index maintenance ON INGEST — the streaming twin of
   * [[graft.operators.Similarity.ivfTopK]]: micro-batches of embeddings
@@ -36,11 +36,6 @@ import graft.operators.Similarity
   * does at the row level.
   */
 object AnnIngest {
-
-  private def existsDir(spark: SparkSession, dir: String): Boolean = {
-    val p = new Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
 
   /** Fold one micro-batch of (vec_id, embedding) rows into the store. */
   def processBatch(

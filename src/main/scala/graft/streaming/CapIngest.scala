@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Corpus
+import IngestStore.readStore
 
 /** Per-group document cap ON INGEST — the streaming twin of
   * [[graft.operators.Corpus.capPerGroup]]: the store holds, per group,
@@ -23,11 +23,6 @@ import graft.operators.Corpus
   */
 object CapIngest {
 
-  private def existsDir(spark: SparkSession, dir: String): Boolean = {
-    val p = new Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** Fold one micro-batch of (groupCol, idCol) rows into the store. */
   def processBatch(
       batch: DataFrame,
@@ -39,10 +34,7 @@ object CapIngest {
       nBuckets: Int = 64): Unit = {
     val spark = batch.sparkSession
     val dir = s"$root/keep"
-    val state =
-      if (existsDir(spark, dir))
-        Some(spark.read.parquet(dir).drop("_bucket", "_ver"))
-      else None
+    val state = readStore(spark, dir)
     require(epochId == 0L || state.isDefined,
       s"CapIngest: store missing at $dir for epoch $epochId — broken chain " +
         "(lost store or non-contiguous feed); refusing to restart cap state")

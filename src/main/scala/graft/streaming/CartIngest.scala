@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Classifier
+import IngestStore.existsDir
 
 /** CART quality scoring ON INGEST — the streaming twin of
   * [[graft.operators.Classifier.scoreTree]], in the production shape:
@@ -31,11 +31,6 @@ object CartIngest {
     val tree = Classifier.trainTree(Classifier.labeledFeatures(docs))
     Classifier.treeTable(docs.sparkSession, tree)
       .write.mode("overwrite").parquet(s"$root/model/tree")
-  }
-
-  private def existsDir(spark: SparkSession, dir: String): Boolean = {
-    val p = new Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
   /** Score one micro-batch of (doc_id, text) rows under the frozen tree

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
+import IngestStore.{canonEdges, readStore}
 
 /** Paragraph-grain FUZZY dedup ON INGEST — the streaming twin of
   * [[graft.operators.Dedup.paragraphDedupFuzzy]], the same step up from
@@ -60,15 +60,6 @@ import graft.operators.Dedup
   * survivors are not.
   */
 object FuzzyIngest {
-
-  private def existsDir(spark: SparkSession, dir: String): Boolean = {
-    val p = new Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  private def readStore(spark: SparkSession, dir: String): Option[DataFrame] =
-    if (existsDir(spark, dir)) Some(spark.read.parquet(dir).drop("_bucket", "_ver"))
-    else None
 
   /** Fold one micro-batch of (enc, para) paragraph instances into the
     * store under `root`. `epochId` is the engine's batch id: replays of
@@ -127,18 +118,7 @@ object FuzzyIngest {
       shingleN, threshold)
     // merge resolution: map state-side endpoints to their group CANON so
     // components union whole groups, then min-label via star rounds
-    val canonOf = stateTexts.select(col("pid").as("sp"), col("canon").as("sc"))
-    val edges = pairs
-      .join(canonOf.withColumnRenamed("sp", "a").withColumnRenamed("sc", "ca"),
-        Seq("a"), "left")
-      .join(canonOf.withColumnRenamed("sp", "b").withColumnRenamed("sc", "cb"),
-        Seq("b"), "left")
-      .select(coalesce(col("ca"), col("a")).as("a"),
-        coalesce(col("cb"), col("b")).as("b"))
-      .where(col("a") =!= col("b"))
-      // materialized ONCE (r18): isEmpty + the components pass below each
-      // re-ran the whole band-join + jaccardVerify pipeline without this
-      .localCheckpoint(true)
+    val edges = canonEdges(pairs, stateTexts, "pid")
     val comps =
       if (edges.isEmpty)
         spark.range(0).select(col("id"), col("id").as("comp"))

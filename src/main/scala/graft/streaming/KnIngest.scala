@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.NgramLm
+import IngestStore.existsDir
 
 /** KN quality scoring ON INGEST — the streaming twin of
   * [[graft.operators.NgramLm.knScore]], in the production shape: the
@@ -46,11 +46,6 @@ object KnIngest {
     NgramLm.bigramStreamWith(docs, vocab)
       .groupBy(col("u"), col("w")).agg(count(lit(1)).as("c"))
       .write.mode("overwrite").parquet(s"$root/model/bg")
-  }
-
-  private def existsDir(spark: SparkSession, dir: String): Boolean = {
-    val p = new Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
   /** Score one micro-batch of (doc_id, text) rows against the frozen

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions.norm
 import graft.operators.{Dedup, Similarity}
+import IngestStore.{canonEdges, existsDir, readStore}
 
 /** SemDeDup ON INGEST — the streaming twin of
   * [[graft.operators.Similarity.semDedup]] (Abbas et al. 2023,
@@ -44,15 +45,6 @@ import graft.operators.{Dedup, Similarity}
   * silently restarting dedup state from empty.
   */
 object SemIngest {
-
-  private def existsDir(spark: SparkSession, dir: String): Boolean = {
-    val p = new Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  private def readStore(spark: SparkSession, dir: String): Option[DataFrame] =
-    if (existsDir(spark, dir)) Some(spark.read.parquet(dir).drop("_bucket", "_ver"))
-    else None
 
   /** Fold one micro-batch of (vec_id, embedding, label) rows into the
     * store under `root`. */
@@ -110,19 +102,7 @@ object SemIngest {
       .unionByName(side(newRows, "a").join(side(all, "b"), Seq("cell")))
     val pairs = Similarity.scoredPairs(joined, threshold)
       .select(col("a"), col("b")).distinct()
-    val canonOf = stateTexts.select(col("vec_id").as("sp"), col("canon").as("sc"))
-    val edges = pairs
-      .join(canonOf.withColumnRenamed("sp", "a").withColumnRenamed("sc", "ca"),
-        Seq("a"), "left")
-      .join(canonOf.withColumnRenamed("sp", "b").withColumnRenamed("sc", "cb"),
-        Seq("b"), "left")
-      .select(coalesce(col("ca"), col("a")).as("a"),
-        coalesce(col("cb"), col("b")).as("b"))
-      .where(col("a") =!= col("b"))
-      // materialized ONCE (r18): isEmpty + the components pass below each
-      // re-ran the whole pair-scoring join pipeline — the batch's single
-      // most expensive plan — without this checkpoint
-      .localCheckpoint(true)
+    val edges = canonEdges(pairs, stateTexts, "vec_id")
     val comps =
       if (edges.isEmpty)
         spark.range(0).select(col("id"), col("id").as("comp"))
@@ -245,16 +225,7 @@ object SemIngest {
       .unionByName(side(moved, "a").join(side(rows, "b"), Seq("cell")))
     val pairs = Similarity.scoredPairs(joined, threshold)
       .select(col("a"), col("b")).distinct()
-    val canonOf = rows.select(col("vec_id").as("sp"), col("canon").as("sc"))
-    val edges = pairs
-      .join(canonOf.withColumnRenamed("sp", "a").withColumnRenamed("sc", "ca"),
-        Seq("a"), "left")
-      .join(canonOf.withColumnRenamed("sp", "b").withColumnRenamed("sc", "cb"),
-        Seq("b"), "left")
-      .select(coalesce(col("ca"), col("a")).as("a"),
-        coalesce(col("cb"), col("b")).as("b"))
-      .where(col("a") =!= col("b"))
-      .localCheckpoint(true) // same single-materialization as processBatch
+    val edges = canonEdges(pairs, rows, "vec_id")
     val relabeled =
       if (edges.isEmpty) rows
       else {

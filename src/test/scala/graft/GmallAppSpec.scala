@@ -113,7 +113,7 @@ class GmallAppSpec extends SparkTestBase {
       assert(streamed("order_pre") === preBatch.count())
       assert(streamed("cancel") === GmallPipelines.tradeCancel(preBatch).count())
       assert(streamed("pay_success") ===
-        GmallPipelines.tradePaySuccess(dbBatch, preBatch, dicB).count())
+        GmallPipelines.tradePaySuccess(dbBatch, dicB).count())
       assert(streamed("order_refund") ===
         GmallPipelines.tradeOrderRefund(dbBatch, dicB).count())
       assert(streamed("refund_pay_suc") ===

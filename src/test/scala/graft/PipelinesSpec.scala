@@ -91,6 +91,35 @@ class PipelinesSpec extends SparkTestBase {
     assert(r.getString(4) === "user buy")  // dic lookup
   }
 
+  test("refund pipelines keep a row with a malformed date on a batch frame, date_id null") {
+    val db = maxwell(
+      ("order_refund_info", "insert", Map("id" -> "r1", "user_id" -> "u1", "order_id" -> "o1",
+        "sku_id" -> "s1", "refund_type" -> "1501", "refund_num" -> "1",
+        "refund_amount" -> "5", "refund_reason_type" -> "1301",
+        "create_time" -> "not-a-date"), null),
+      ("order_refund_info", "insert", Map("id" -> "r2", "user_id" -> "u1", "order_id" -> "o1",
+        "sku_id" -> "s2", "refund_type" -> "1501", "refund_num" -> "2",
+        "refund_amount" -> "7", "refund_reason_type" -> "1301",
+        "create_time" -> "2022-06-01 10:00:00"), null),
+      ("order_info", "update", Map("id" -> "o1", "order_status" -> "1005",
+        "province_id" -> "p1"), Map("order_status" -> "1004")),
+      ("refund_payment", "update", Map("id" -> "rp1", "order_id" -> "o2", "sku_id" -> "s3",
+        "payment_type" -> "1101", "refund_status" -> "0702", "callback_time" -> "2022-13-45 99",
+        "total_amount" -> "3"), Map("refund_status" -> "0701")),
+      ("order_info", "update", Map("id" -> "o2", "order_status" -> "1006", "user_id" -> "u2",
+        "province_id" -> "p2"), Map("order_status" -> "1005")),
+      ("order_refund_info", "insert", Map("id" -> "r3", "order_id" -> "o2", "sku_id" -> "s3",
+        "refund_num" -> "1"), null))
+    val dic = Seq(("1501", "refund_full"), ("1301", "reason_quality"), ("1101", "alipay"))
+      .toDF("dic_code", "dic_name")
+    val refunds = GmallPipelines.tradeOrderRefund(db, dic)
+      .select("id", "date_id").as[(String, String)].collect().toMap
+    assert(refunds === Map("r1" -> null, "r2" -> "2022-06-01"))
+    val refundPays = GmallPipelines.tradeRefundPaySuccess(db, dic)
+      .select("id", "date_id").as[(String, String)].collect().toSeq
+    assert(refundPays === Seq(("rp1", null)))
+  }
+
   test("couponPay: updates with used_time set (reference has no old-map predicate)") {
     val db = maxwell(
       ("coupon_use", "update", Map("id" -> "1", "coupon_id" -> "c", "user_id" -> "u",

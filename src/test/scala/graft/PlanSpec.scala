@@ -1,9 +1,13 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Expression, GreaterThanOrEqual, LessThanOrEqual, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.{EventTimeWatermark, Join, LogicalPlan}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DayTimeIntervalType
 import graft.apps.GmallPipelines
-import graft.core.{Tables, TopicDb}
+import graft.core.{Envelopes, Tables, TopicDb}
 import graft.operators.{Cap, Relational, Similarity}
 
 /** Physical-plan shape assertions for the scale-critical properties the
@@ -84,6 +88,47 @@ class PlanSpec extends SparkTestBase {
     val p = plan(GmallPipelines.tradeOrderPreProcess(
       TopicDb(spark, sf), TopicDb.baseDic(spark)))
     assert(p.contains("BroadcastHashJoin"), "dic lookup must be broadcast")
+  }
+
+  test("trade pipelines bound every stream-stream join by event time; a batch frame gets no bound") {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val ttl = 777L
+    val dic = TopicDb.baseDic(spark)
+    def pipelines(db: DataFrame): Seq[(String, DataFrame)] = Seq(
+      "pre" -> GmallPipelines.tradeOrderPreProcess(db, dic, ttl),
+      "pay" -> GmallPipelines.tradePaySuccess(db, dic, ttl),
+      "refund" -> GmallPipelines.tradeOrderRefund(db, dic, ttlSec = ttl),
+      "refund_pay" -> GmallPipelines.tradeRefundPaySuccess(db, dic, ttl))
+    // the ±ttl bound: both a `>=` and a `<=` comparison, and the ttl as an
+    // interval literal (DayTimeIntervalType counts microseconds)
+    def bounded(c: Expression): Boolean =
+      c.find(_.isInstanceOf[GreaterThanOrEqual]).isDefined &&
+        c.find(_.isInstanceOf[LessThanOrEqual]).isDefined &&
+        c.collect { case Literal(v: Long, _: DayTimeIntervalType) => v }
+          .count(_ == ttl * 1000000L) >= 2
+    def watermarks(p: LogicalPlan): Int = p.collect { case w: EventTimeWatermark => w }.size
+    val stream = Envelopes.cleanDirty(Envelopes.parseMaxwell(
+      MemoryStream[String].toDS().toDF()))._1
+    for ((name, df) <- pipelines(stream)) {
+      val p = df.queryExecution.analyzed
+      val joins = p.collect { case j: Join if j.left.isStreaming && j.right.isStreaming => j }
+      assert(joins.nonEmpty, s"$name: no stream-stream join")
+      joins.foreach { j =>
+        assert(j.condition.exists(bounded), s"$name: join without the ±ttl bound:\n$j")
+        assert(watermarks(j.right) === 1, s"$name: joined side without its watermark:\n$j")
+      }
+      // n chained joins have n + 1 sides, each watermarked once
+      assert(watermarks(p) === joins.size + 1, s"$name: unwatermarked side:\n$p")
+    }
+    // the optimizer drops a batch frame's watermarks anyway, so the
+    // analyzed plan is where an added one would show
+    for ((name, df) <- pipelines(TopicDb(spark, sf))) {
+      val p = df.queryExecution.analyzed
+      assert(watermarks(p) === 0, s"$name: watermark on a batch frame:\n$p")
+      assert(p.collect { case j: Join => j }.forall(!_.condition.exists(bounded)),
+        s"$name: event-time bound on a batch join:\n$p")
+    }
   }
 
   test("filter and projection push down to the parquet scan") {
