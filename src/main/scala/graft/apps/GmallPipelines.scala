@@ -313,7 +313,7 @@ object GmallPipelines {
     db.where(tbl("coupon_use", "insert"))
       .select(d("id").as("id"), d("coupon_id").as("coupon_id"),
         d("user_id").as("user_id"),
-        date_format(d("get_time").cast("timestamp"), "yyyy-MM-dd").as("date_id"),
+        date_format(try_to_timestamp(d("get_time")), "yyyy-MM-dd").as("date_id"),
         d("get_time").as("get_time"), col("ts"))
 
   /** DwdToolCouponOrder (DwdToolCouponOrder.java:52-64): coupon applied to
@@ -323,7 +323,7 @@ object GmallPipelines {
         o("coupon_status") === "1401")
       .select(d("id").as("id"), d("coupon_id").as("coupon_id"),
         d("user_id").as("user_id"), d("order_id").as("order_id"),
-        date_format(d("using_time").cast("timestamp"), "yyyy-MM-dd").as("date_id"),
+        date_format(try_to_timestamp(d("using_time")), "yyyy-MM-dd").as("date_id"),
         d("using_time").as("using_time"), col("ts"))
 
   /** DwdToolCouponPay (DwdToolCouponPay.java:45-56): coupon consumed at
@@ -334,7 +334,7 @@ object GmallPipelines {
     db.where(tbl("coupon_use", "update") && d("used_time").isNotNull)
       .select(d("id").as("id"), d("coupon_id").as("coupon_id"),
         d("user_id").as("user_id"), d("order_id").as("order_id"),
-        date_format(d("used_time").cast("timestamp"), "yyyy-MM-dd").as("date_id"),
+        date_format(try_to_timestamp(d("used_time")), "yyyy-MM-dd").as("date_id"),
         d("used_time").as("used_time"), col("ts"))
 
   /** DwdInteractionFavorAdd (DwdInteractionFavorAdd.java:54-56): favor adds
@@ -354,7 +354,7 @@ object GmallPipelines {
     withDic(db.where(tbl("comment_info", "insert"))
       .select(d("id").as("id"), d("user_id").as("user_id"),
         d("sku_id").as("sku_id"), d("order_id").as("order_id"),
-        date_format(d("create_time").cast("timestamp"), "yyyy-MM-dd").as("date_id"),
+        date_format(try_to_timestamp(d("create_time")), "yyyy-MM-dd").as("date_id"),
         d("create_time").as("create_time"), d("appraise").as("appraise"),
         d("comment_txt").as("comment_txt"), col("ts")),
       baseDic, "appraise", "appraise_name", "inner")
@@ -363,7 +363,7 @@ object GmallPipelines {
   def userRegister(db: DataFrame): DataFrame =
     db.where(tbl("user_info", "insert"))
       .select(d("id").as("user_id"),
-        date_format(d("create_time").cast("timestamp"), "yyyy-MM-dd").as("date_id"),
+        date_format(try_to_timestamp(d("create_time")), "yyyy-MM-dd").as("date_id"),
         d("create_time").as("create_time"), col("ts"))
 
   // ================================================================= DIM ==
@@ -388,9 +388,8 @@ object GmallPipelines {
 
   /** DwsTrafficSourceKeywordPageViewWindow source filter + tokenize (J5/U1,
     * DwsTrafficSourceKeywordPageViewWindow.java:123-141): search-page hits,
-    * keyword split into one row per token. Window agg is applied by the
-    * caller ([[graft.operators.EventOps.tumblingAgg]] batch /
-    * [[Windows.tumblingCount]] streaming). */
+    * keyword split into one row per token. The caller applies the window
+    * agg ([[graft.streaming.Windows.keywordCount]], batch or stream). */
   def keywordHits(log: DataFrame): DataFrame =
     log.where(col("page.last_page_id") === "search" &&
         col("page.item_type") === "keyword" && col("page.item").isNotNull)

@@ -1,16 +1,17 @@
 package graft.core
 
 import java.nio.file.{Files, Path, Paths}
+import org.apache.spark.sql.DataFrame
 
 /** Process-lifetime temp directories with guaranteed exit-time cleanup.
   *
-  * Most harness gates delete their scratch dirs eagerly in a `finally`;
-  * the exception is state that must OUTLIVE its creating call — e.g. the
-  * warehouse a [[graft.entry]] DAG charge writes is read by every later
-  * DAG gate in the same JVM, so its root can only die at exit. Before
-  * this hook existed, every Verify/Bench run leaked its DAG root
-  * (1–14 GB each at sf0.1/×10) into the system temp dir on a perfectly
-  * normal exit, eventually filling the disk.
+  * Most harness gates delete their scratch dirs eagerly in a `finally`
+  * ([[withScratch]]); the exception is state that must OUTLIVE its
+  * creating call — e.g. the warehouse a [[graft.entry]] DAG charge writes
+  * is read by every later DAG gate in the same JVM, so its root can only
+  * die at exit. Before this hook existed, every Verify/Bench run leaked
+  * its DAG root (1–14 GB each at sf0.1/×10) into the system temp dir on a
+  * perfectly normal exit, eventually filling the disk.
   *
   * Deletion is best-effort (exceptions per-file swallowed): at JVM exit
   * Spark's own shutdown hooks may concurrently tear down streaming state
@@ -71,6 +72,16 @@ object TempDirs {
     val p = Files.createTempDirectory(scratchRoot(), prefix)
     registered.add(p)
     p.toString
+  }
+
+  /** Run `body` over a fresh [[scratch]] root and hand back its result
+    * materialized (`localCheckpoint`), so it stays readable after the root
+    * is gone. The root is deleted on every exit, a throwing body included
+    * — the store-backed gates' lifecycle (ingest stores, audit dirs). */
+  def withScratch(prefix: String)(body: String => DataFrame): DataFrame = {
+    val root = scratch(prefix)
+    try body(root).localCheckpoint(true)
+    finally deleteNow(root)
   }
 
   /** Eagerly delete a path (registered or not); idempotent. */

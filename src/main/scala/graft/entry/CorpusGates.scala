@@ -3,7 +3,7 @@ package graft.entry
 import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Envelopes, Tables, TopicDb}
+import graft.core.{Envelopes, Tables, TempDirs, TopicDb}
 import graft.apps.{GmallApp, GmallPipelines}
 import graft.operators.{Dedup, EventOps, Multimodal, Relational, Similarity, Sketches, TextProfile}
 import graft.functions.TextFunctions
@@ -196,28 +196,17 @@ private[graft] object CorpusGates {
         .select(col("doc_id"), col("source"))
         .orderBy(col("doc_id"))),
 
-    "q137_stream_cap_per_group" -> ((s, d) => {
+    "q137_stream_cap_per_group" -> ((s, d) => TempDirs.withScratch("graft_cap_ingest_") { root =>
       val docs = Tables.documents(s, d).select(col("doc_id"), col("source"))
       val mid = midOf(docs.agg(min(col("doc_id")), max(col("doc_id"))).head(),
         "documents (q137)")
-      val root = graft.core.TempDirs.scratch("graft_cap_ingest_")
-      import s.implicits._
-      StreamHarness.runFilesSink(s,
-          Seq(docs.where(col("doc_id") > mid).as[(Long, String)],
-            docs.where(col("doc_id") <= mid).as[(Long, String)])) {
-        (ds, ckpt) =>
-          ds.toDF("doc_id", "source").writeStream
-            .option("checkpointLocation", ckpt)
-            .foreachBatch { (b: DataFrame, epochId: Long) =>
-              graft.streaming.CapIngest.processBatch(
-                b.toDF("doc_id", "source"), root, epochId, 10, "source", "doc_id")
-            }.start()
+      StreamHarness.runBatches(s,
+          Seq(docs.where(col("doc_id") > mid), docs.where(col("doc_id") <= mid))) {
+        (b, epochId) =>
+          graft.streaming.CapIngest.processBatch(b, root, epochId, 10, "source", "doc_id")
       }
-      val out = graft.streaming.CapIngest.survivors(s, root, "source", "doc_id")
+      graft.streaming.CapIngest.survivors(s, root, "source", "doc_id")
         .orderBy(col("doc_id"))
-        .localCheckpoint(true) // materialize before the store dir vanishes
-      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
-      out
     }),
 
     // Token-window chunking: 32-token windows, stride 24, clamped tail —

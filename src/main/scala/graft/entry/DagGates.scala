@@ -108,7 +108,7 @@ private[graft] object DagGates {
 
     // DAG gates — the CURATION leg (VERDICT r7 #6): FuzzyIngest and
     // SemIngest run as startFromFiles DAG members over the documents/
-    // embeddings feeds (checkpointed foreachBatch queries into their
+    // embeddings feeds (checkpointed per-batch sink queries into their
     // incremental bucketed stores), beside the reference warehouse graph.
     // Each store's survivor set shares its harness twin's oracle verbatim
     // (q116's keeper CTEs, q102/q118's SemDeDup oracle).

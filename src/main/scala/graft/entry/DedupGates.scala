@@ -3,7 +3,7 @@ package graft.entry
 import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Envelopes, Tables, TopicDb}
+import graft.core.{Envelopes, Tables, TempDirs, TopicDb}
 import graft.apps.{GmallApp, GmallPipelines}
 import graft.operators.{Cap, Dedup, EventOps, Multimodal, Relational, Similarity, Sketches, TextProfile}
 import graft.functions.TextFunctions
@@ -200,29 +200,16 @@ private[graft] object DedupGates {
     // index in STATE, and a batch-2 text bridging two batch-1 groups
     // relabels both (incremental union). Output = the keeper keys,
     // sharing q109's oracle CTEs verbatim.
-    "q116_stream_paragraph_fuzzy" -> ((s, d) => {
-      import s.implicits._
+    "q116_stream_paragraph_fuzzy" -> ((s, d) => TempDirs.withScratch("graft_fuzzy_ingest_") { root =>
       val paras = Dedup.explodeParagraphs(Tables.documents(s, d), 10)
         .select(Dedup.encodePos(col("doc_id"), col("pos")).as("enc"), col("para"))
-        .as[(Long, String)]
       val mid = midOf(paras.agg(min(col("enc")), max(col("enc"))).head(),
         "exploded paragraphs (q116)")
-      val root = graft.core.TempDirs.scratch("graft_fuzzy_ingest_")
-      StreamHarness.runFilesSink(s,
+      StreamHarness.runBatches(s,
           Seq(paras.where(col("enc") <= mid), paras.where(col("enc") > mid))) {
-        (ds, ckpt) =>
-          ds.toDF().toDF("enc", "para").writeStream
-            .option("checkpointLocation", ckpt)
-            .foreachBatch { (b: DataFrame, epochId: Long) =>
-              graft.streaming.FuzzyIngest.processBatch(
-                b.toDF("enc", "para"), root, epochId, 0.4)
-            }.start()
+        (b, epochId) => graft.streaming.FuzzyIngest.processBatch(b, root, epochId, 0.4)
       }
-      val out = graft.streaming.FuzzyIngest.survivors(s, root)
-        .orderBy(col("doc_id"), col("pos"))
-        .localCheckpoint(true) // materialize before the store dir vanishes
-      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
-      out
+      graft.streaming.FuzzyIngest.survivors(s, root).orderBy(col("doc_id"), col("pos"))
     }),
 
     // Exact-substring duplication profile (Lee et al. 2022) — the

@@ -3,7 +3,7 @@ package graft.entry
 import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Envelopes, Tables, TopicDb}
+import graft.core.{Envelopes, Tables, TempDirs, TopicDb}
 import graft.apps.{GmallApp, GmallPipelines}
 import graft.operators.{Dedup, EventOps, Multimodal, Relational, Similarity, Sketches, TextProfile}
 import graft.functions.TextFunctions
@@ -27,10 +27,27 @@ private[graft] object GateSupport {
       ()
     }
 
+  /** An embedded Derby database on a [[TempDirs.withScratch]] root: `body`
+    * gets its JDBC url and driver properties. The result is materialized
+    * before the database shuts down (withScratch's own checkpoint then
+    * only re-reads those cached rows), and the root is deleted on every
+    * exit. */
+  def withDerby(prefix: String)(
+      body: (String, java.util.Properties) => DataFrame): DataFrame =
+    TempDirs.withScratch(prefix) { dir =>
+      derbyHome() // derby.log to a stable tmp dir, not the repo
+      val props = new java.util.Properties
+      props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
+      try body(s"jdbc:derby:$dir/db;create=true", props).localCheckpoint(true)
+      finally
+        try { java.sql.DriverManager.getConnection(s"jdbc:derby:$dir/db;shutdown=true"); () }
+        catch { case _: java.sql.SQLException => () } // 08006 = clean db shutdown
+    }
+
   // Streaming-gate feeds are DATASETS end to end (StreamHarness.runFiles):
   // batch composition is declared as filters and the rows never pass
   // through the driver — the r5 review measured the old collect()-fed
-  // MemoryStream closures at 9.3 MiB per task at sf0.1, growing linearly
+  // driver closures at 9.3 MiB per task at sf0.1, growing linearly
   // with SF. Every StatefulOps processor re-sorts its group by (µs, id)
   // per batch, so only batch COMPOSITION matters, not row order.
 

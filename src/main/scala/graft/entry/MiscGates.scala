@@ -3,7 +3,7 @@ package graft.entry
 import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Envelopes, Tables, TopicDb}
+import graft.core.{Envelopes, Tables, TempDirs, TopicDb}
 import graft.apps.{GmallApp, GmallPipelines}
 import graft.operators.{Dedup, EventOps, Multimodal, Relational, Similarity, Sketches, TextProfile}
 import graft.functions.TextFunctions
@@ -123,11 +123,10 @@ private[graft] object MiscGates {
     // readAsOf(3) must show the retired keys HIDDEN (their newest ≤3 row
     // is the tombstone) and the epoch-4 resurrection INVISIBLE (epoch
     // cap) — both travel behaviors in one view.
-    "q151_delta_time_travel" -> ((s, d) => {
+    "q151_delta_time_travel" -> ((s, d) => TempDirs.withScratch("graft_tt_") { root =>
       val ev = Tables.events(s, d)
         .select(col("user_id"), col("value"), unix_micros(col("ts")).as("ts_us"),
           pmod(col("event_id"), lit(3)).as("_ep"))
-      val root = graft.core.TempDirs.scratch("graft_tt_")
       (0L to 2L).foreach { e =>
         graft.streaming.DeltaStore.append(
           ev.where(col("_ep") === e).drop("_ep"), Seq("user_id"), "ts_us", root, e)
@@ -138,23 +137,19 @@ private[graft] object MiscGates {
         deleteKeys = Some(sevens.select(col("user_id")).distinct()))
       graft.streaming.DeltaStore.append(
         sevens.where(col("_ep") === 0).drop("_ep"), Seq("user_id"), "ts_us", root, 4L)
-      val out = graft.streaming.DeltaStore
+      graft.streaming.DeltaStore
         .readAsOf(s, root, Seq("user_id"), "ts_us", epoch = 3L)
         .orderBy(col("user_id"))
-        .localCheckpoint(true) // materialize before the store dir vanishes
-      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
-      out
     }),
 
     // DeltaStore CHANGE DATA FEED over the same changelog: the net
     // effect of epochs (1, 3] — every key's newest epoch-2 upsert,
     // except the %7 keys whose epoch-3 tombstone wins and surfaces as an
     // op='d' row (nulled data) for downstream incremental consumers.
-    "q152_delta_cdf" -> ((s, d) => {
+    "q152_delta_cdf" -> ((s, d) => TempDirs.withScratch("graft_cdf_") { root =>
       val ev = Tables.events(s, d)
         .select(col("user_id"), col("value"), unix_micros(col("ts")).as("ts_us"),
           pmod(col("event_id"), lit(3)).as("_ep"))
-      val root = graft.core.TempDirs.scratch("graft_cdf_")
       (0L to 2L).foreach { e =>
         graft.streaming.DeltaStore.append(
           ev.where(col("_ep") === e).drop("_ep"), Seq("user_id"), "ts_us", root, e)
@@ -163,13 +158,10 @@ private[graft] object MiscGates {
         ev.where(lit(false)).drop("_ep"), Seq("user_id"), "ts_us", root, 3L,
         deleteKeys = Some(ev.where(col("user_id") % 7 === 0)
           .select(col("user_id")).distinct()))
-      val out = graft.streaming.DeltaStore
+      graft.streaming.DeltaStore
         .readChanges(s, root, Seq("user_id"), "ts_us", fromEpoch = 1L, toEpoch = 3L)
         .withColumnRenamed("_op", "op")
         .orderBy(col("user_id"))
-        .localCheckpoint(true) // materialize before the store dir vanishes
-      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
-      out
     }),
 
     // Declared data-quality EXPECTATIONS over lineitem: not-null / unique
@@ -191,7 +183,7 @@ private[graft] object MiscGates {
     }),
 
     // Expectations ON INGEST: the same contract checks run per
-    // micro-batch inside foreachBatch, audit rows landing per epoch —
+    // micro-batch inside the harness's batch sink, audit rows landing per epoch —
     // the fail-fast data-quality monitor a streaming pipeline runs on
     // every drop. Three event slices; per-epoch counts must equal the
     // batch operator on each slice.
@@ -233,31 +225,23 @@ private[graft] object MiscGates {
     // violation-set) row counts AND id sums, so the exact membership of
     // each route is hash-gated; q155's audit counts are recoverable from
     // the same frame.
-    "q162_stream_quarantine" -> ((s, d) => {
-      import s.implicits._
+    "q162_stream_quarantine" -> ((s, d) => TempDirs.withScratch("graft_quar_") { root =>
       import graft.operators.Expectations._
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-      val root = graft.core.TempDirs.scratch("graft_quar_")
-      StreamHarness.runFilesSink(s, (0 to 2).map(i =>
-          ev.where(pmod(col("event_id"), lit(3)) === i)
-            .as[(Long, Long, String, Double)])) {
-        (ds, ckpt) =>
-          ds.toDF("event_id", "user_id", "event_type", "value").writeStream
-            .option("checkpointLocation", ckpt)
-            .foreachBatch { (b: DataFrame, epochId: Long) =>
-              val routed = route(b, Seq(
-                  NotNull("user_id"),
-                  InRange("value", 0, 100),
-                  InSet("event_type", Seq("view", "click", "purchase"))))
-                .withColumn("violated_csv", concat_ws(",", col("violated")))
-                .drop("violated")
-              routed.where(col("violated_csv") =!= "")
-                .write.mode("overwrite").parquet(s"$root/quarantine/epoch_id=$epochId")
-              routed.where(col("violated_csv") === "").drop("violated_csv")
-                .write.mode("overwrite").parquet(s"$root/clean/epoch_id=$epochId")
-              ()
-            }.start()
+      StreamHarness.runBatches(s,
+          (0 to 2).map(i => ev.where(pmod(col("event_id"), lit(3)) === i))) {
+        (b, epochId) =>
+          val routed = route(b, Seq(
+              NotNull("user_id"),
+              InRange("value", 0, 100),
+              InSet("event_type", Seq("view", "click", "purchase"))))
+            .withColumn("violated_csv", concat_ws(",", col("violated")))
+            .drop("violated")
+          routed.where(col("violated_csv") =!= "")
+            .write.mode("overwrite").parquet(s"$root/quarantine/epoch_id=$epochId")
+          routed.where(col("violated_csv") === "").drop("violated_csv")
+            .write.mode("overwrite").parquet(s"$root/clean/epoch_id=$epochId")
       }
       val q = s.read.parquet(s"$root/quarantine")
         .select(col("epoch_id"), lit("quarantine").as("status"),
@@ -265,45 +249,31 @@ private[graft] object MiscGates {
       val c = s.read.parquet(s"$root/clean")
         .select(col("epoch_id"), lit("clean").as("status"),
           lit("").as("violated_csv"), col("event_id"))
-      val out = q.unionByName(c)
+      q.unionByName(c)
         .groupBy(col("epoch_id").cast("long").as("epoch"), col("status"),
           col("violated_csv"))
         .agg(count(lit(1)).as("n_rows"), sum(col("event_id")).as("sum_ids"))
         .orderBy(col("epoch"), col("status"), col("violated_csv"))
-        .localCheckpoint(true) // materialize before the store dir vanishes
-      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
-      out
     }),
 
-    "q155_stream_expectations" -> ((s, d) => {
-      import s.implicits._
+    "q155_stream_expectations" -> ((s, d) => TempDirs.withScratch("graft_exp_") { root =>
       import graft.operators.Expectations._
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-      val root = graft.core.TempDirs.scratch("graft_exp_")
-      StreamHarness.runFilesSink(s, (0 to 2).map(i =>
-          ev.where(pmod(col("event_id"), lit(3)) === i)
-            .as[(Long, Long, String, Double)])) {
-        (ds, ckpt) =>
-          ds.toDF("event_id", "user_id", "event_type", "value").writeStream
-            .option("checkpointLocation", ckpt)
-            .foreachBatch { (b: DataFrame, epochId: Long) =>
-              check(b, Seq(
-                  NotNull("user_id"),
-                  InRange("value", 0, 100),
-                  InSet("event_type", Seq("view", "click", "purchase"))))
-                .withColumn("epoch", lit(epochId))
-                .write.mode("overwrite").parquet(s"$root/audit/epoch_id=$epochId")
-              ()
-            }.start()
+      StreamHarness.runBatches(s,
+          (0 to 2).map(i => ev.where(pmod(col("event_id"), lit(3)) === i))) {
+        (b, epochId) =>
+          check(b, Seq(
+              NotNull("user_id"),
+              InRange("value", 0, 100),
+              InSet("event_type", Seq("view", "click", "purchase"))))
+            .withColumn("epoch", lit(epochId))
+            .write.mode("overwrite").parquet(s"$root/audit/epoch_id=$epochId")
       }
-      val out = s.read.parquet(s"$root/audit")
+      s.read.parquet(s"$root/audit")
         .select(col("epoch"), col("expectation"), col("n_checked"),
           col("n_violations"), col("pass"))
         .orderBy(col("epoch"), col("expectation"))
-        .localCheckpoint(true) // materialize before the audit dir vanishes
-      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
-      out
     }),
   )
 

@@ -3,7 +3,7 @@ package graft.entry
 import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Envelopes, Tables, TopicDb}
+import graft.core.{Envelopes, Tables, TempDirs, TopicDb}
 import graft.apps.{GmallApp, GmallPipelines}
 import graft.operators.{Dedup, EventOps, Multimodal, Relational, Similarity, Sketches, TextProfile}
 import graft.functions.TextFunctions
@@ -432,17 +432,16 @@ private[graft] object PipelineGates {
     // maintenance: a full insert/update/delete changelog of a real
     // dimension (customer), synthesized as Debezium row envelopes, parsed
     // by the REAL envelope parser (Envelopes.parseDebeziumRows) and
-    // maintained through the checkpointed streaming binding
-    // DimSink.cdcSink → DeltaStore across three file-fed micro-batches:
-    // inserts split across epochs 0/1, updates (later ts_ms) riding with
-    // epoch 1, deletes last. A crash is then simulated by re-delivering
-    // epoch 1 verbatim (the foreachBatch replay contract: same epochId →
+    // maintained by DimSink.processBatchCdc → DeltaStore in the harness's
+    // checkpointed per-batch sink (StreamHarness.runBatches) across three
+    // file-fed micro-batches: inserts split across epochs 0/1, updates
+    // (later ts_ms) riding with epoch 1, deletes last. A crash is then
+    // simulated by re-delivering epoch 1 verbatim under the epochId
+    // runBatches returned for it (the replay contract: same epochId →
     // overwrite its own delta dir): the replay must neither double rows
     // nor resurrect the epoch-2 delete tombstones. The oracle replays the
     // same changelog relationally.
-    "q100_cdc_dim_maintain" -> ((s, d) => {
-      import s.implicits._
-      val root = graft.core.TempDirs.scratch("graft_cdc_dim_")
+    "q100_cdc_dim_maintain" -> ((s, d) => TempDirs.withScratch("graft_cdc_dim_") { root =>
       val cust = Tables.customer(s, d).select(col("c_custkey").as("k"),
         col("c_name").as("nm"), col("c_mktsegment").as("seg"))
       val maxK = cust.agg(max(col("k"))).head().getLong(0)
@@ -454,39 +453,29 @@ private[graft] object PipelineGates {
       val fullRow = map(lit("id"), col("k").cast("string"),
         lit("uname"), col("nm"), lit("city"), col("seg"))
       def inserts(p: Int) = cust.where(pmod(col("k"), lit(2)) === p)
-        .select(env("c", noMap, fullRow, col("k"))).as[String]
+        .select(env("c", noMap, fullRow, col("k")))
       val updates = cust.where(col("k") % 3 === 0)
         .select(env("u", noMap,
           map(lit("id"), col("k").cast("string"),
             lit("uname"), concat(col("nm"), lit("_v2")), lit("city"), col("seg")),
-          col("k") + maxK)).as[String]
+          col("k") + maxK))
       val deletes = cust.where(col("k") % 5 === 0)
         .select(env("d", map(lit("id"), col("k").cast("string")), noMap,
-          col("k") + 2L * maxK)).as[String]
+          col("k") + 2L * maxK))
       val epoch1 = inserts(1).unionByName(updates)
       val cfg = DimSink.TableConfig("dim_user", Seq("id", "uname", "city"), "id")
       val routes = Map("user_dim" -> cfg)
-      // the engine's REAL epochIds, observed in commit order — the crash
-      // replay below re-delivers the second feed chunk under the id it was
-      // actually processed as (never assumes chunk i ⇒ batchId i)
-      val epochs = scala.collection.mutable.ArrayBuffer.empty[Long]
-      StreamHarness.runFilesSink(s, Seq(inserts(0), epoch1, deletes)) {
-        (ds, ckpt) =>
-          DimSink.cdcSink(Envelopes.parseDebeziumRows(ds.toDF()), root, routes,
-            ckpt, onEpoch = epochs.append(_))
-      }
+      def maintain(b: DataFrame, epochId: Long): Unit =
+        DimSink.processBatchCdc(Envelopes.parseDebeziumRows(b), root, routes, epochId)
+      val epochs = StreamHarness.runBatches(s, Seq(inserts(0), epoch1, deletes))(maintain)
       require(epochs.size == 3,
         s"q100: expected 3 micro-batches (one per feed chunk), saw $epochs — " +
           "the harness's chunk-per-trigger contract changed")
-      // simulated crash replay of the second chunk (idempotent overwrite
-      // of its own epoch dir)
-      DimSink.processBatchCdc(
-        Envelopes.parseDebeziumRows(epoch1.toDF()), root, routes, epochs(1))
-      val out = DimSink.readDelta(s, root, cfg)
-        .orderBy(col("id").cast("long"))
-        .localCheckpoint(true) // materialize before the store dir vanishes
-      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
-      out
+      // simulated crash replay of the second chunk under the epochId the
+      // engine actually assigned it (idempotent overwrite of its own
+      // epoch dir)
+      maintain(epoch1, epochs(1))
+      DimSink.readDelta(s, root, cfg).orderBy(col("id").cast("long"))
     }),
 
     // K5 EXECUTED — the ordered-field JDBC batch sink against a real SQL
@@ -496,12 +485,7 @@ private[graft] object PipelineGates {
     // order, and batched-INSERT path are identical). The transient column
     // must never reach the table, and the declared field order must
     // survive the round trip — both required before the read-back.
-    "q174_jdbc_batch_sink" -> ((s, d) => {
-      val dir = graft.core.TempDirs.scratch("graft_derby_")
-      GateSupport.derbyHome() // derby.log to a stable tmp dir, not the repo
-      val url = s"jdbc:derby:$dir/db;create=true"
-      val props = new java.util.Properties
-      props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
+    "q174_jdbc_batch_sink" -> ((s, d) => withDerby("graft_derby_") { (url, props) =>
       val src = Tables.customer(s, d).select(col("c_custkey"), col("c_name"),
         Relational.money(col("c_acctbal")).cast("double").as("c_acctbal"),
         col("c_mktsegment"))
@@ -510,11 +494,7 @@ private[graft] object PipelineGates {
       val back = s.read.jdbc(url, "customer_sink", props)
       require(back.columns.toSeq == Seq("c_custkey", "c_name", "c_acctbal"),
         s"q174: field order / transient contract broken: ${back.columns.toSeq}")
-      val out = back.orderBy(col("c_custkey")).localCheckpoint(true)
-      try { java.sql.DriverManager.getConnection(s"jdbc:derby:$dir/db;shutdown=true"); () }
-      catch { case _: java.sql.SQLException => () } // 08006 = clean db shutdown
-      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(dir))
-      out
+      back.orderBy(col("c_custkey"))
     }),
 
     // K6 EXECUTED — the dim-upsert JDBC binding driven through real
@@ -525,13 +505,7 @@ private[graft] object PipelineGates {
     // exact-duplicate collapse + newest-epoch-wins — to restore the
     // upsert semantics a Phoenix/ReplacingMergeTree target enforces
     // server-side.
-    "q175_jdbc_dim_upsert" -> ((s, d) => {
-      import s.implicits._
-      val dir = graft.core.TempDirs.scratch("graft_derby_dim_")
-      GateSupport.derbyHome()
-      val url = s"jdbc:derby:$dir/db;create=true"
-      val props = new java.util.Properties
-      props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
+    "q175_jdbc_dim_upsert" -> ((s, d) => withDerby("graft_derby_dim_") { (url, props) =>
       val cust = Tables.customer(s, d)
       val maxK = cust.agg(max(col("c_custkey"))).head().getLong(0)
       // the feed carries `data` as JSON (the harness's deterministic
@@ -545,48 +519,31 @@ private[graft] object PipelineGates {
           to_json(map(lit("id"), col("c_custkey").cast("string"),
             lit("uname"), col("c_name"),
             lit("city"), col("c_mktsegment"))).as("data"),
-          col("c_custkey").cast("long").as("ts")).as[DimRoute]
+          col("c_custkey").cast("long").as("ts"))
       val updates = cust.where(col("c_custkey") % 3 === 0)
         .select(lit("dim_user_jdbc").as("sink_table"),
           to_json(map(lit("id"), col("c_custkey").cast("string"),
             lit("uname"), concat(col("c_name"), lit("_v2")),
             lit("city"), col("c_mktsegment"))).as("data"),
-          (col("c_custkey") + maxK).as("ts")).as[DimRoute]
+          (col("c_custkey") + maxK).as("ts"))
       val cfg = DimSink.TableConfig("dim_user_jdbc", Seq("id", "uname", "city"), "id")
-      val epochs = scala.collection.mutable.ArrayBuffer.empty[Long]
-      StreamHarness.runFilesSink(s, Seq(chunk(0), chunk(1), updates)) { (ds, ckpt) =>
-        ds.toDF().writeStream.option("checkpointLocation", ckpt)
-          .foreachBatch { (b: DataFrame, e: Long) =>
-            epochs.append(e)
-            DimSink.processBatchJdbc(routed(b), url, Seq(cfg), e, props)
-          }.start()
-      }
+      def upsert(b: DataFrame, epochId: Long): Unit =
+        DimSink.processBatchJdbc(routed(b), url, Seq(cfg), epochId, props)
+      val epochs = StreamHarness.runBatches(s, Seq(chunk(0), chunk(1), updates))(upsert)
       require(epochs.size == 3, s"q175: expected 3 micro-batches, saw $epochs")
       // crash replay of the update chunk under its REAL epoch id
-      DimSink.processBatchJdbc(routed(updates.toDF()), url, Seq(cfg), epochs(2), props)
+      upsert(updates, epochs(2))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("id")).orderBy(col("_epoch").desc)
-      val out = s.read.jdbc(url, "dim_user_jdbc", props)
+      s.read.jdbc(url, "dim_user_jdbc", props)
         .select(col("id"), col("uname"), col("city"), col("_epoch"))
         .distinct() // replayed rows are bit-identical → collapse
         .withColumn("_rn", row_number().over(w))
         .where(col("_rn") === 1) // newest epoch wins per pk
         .select(col("id"), col("uname"), col("city"))
         .orderBy(col("id").cast("long"))
-        .localCheckpoint(true)
-      try { java.sql.DriverManager.getConnection(s"jdbc:derby:$dir/db;shutdown=true"); () }
-      catch { case _: java.sql.SQLException => () }
-      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(dir))
-      out
     }),
   )
-
-  /** Router-batch row shape for the JDBC dim gate's file feed. `data` is
-    * the router map AS JSON — the harness's deterministic chunk scramble
-    * hashes every feed column and MAP columns are unhashable; the sink
-    * side re-parses it into the (sink_table, data, ts) contract
-    * [[DimSink.processBatchJdbc]] prunes. */
-  final case class DimRoute(sink_table: String, data: String, ts: Long)
 
   def oracleSql: Map[String, String] = Map(
 

@@ -3,7 +3,7 @@ package graft.entry
 import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Envelopes, Tables, TopicDb}
+import graft.core.{Envelopes, Tables, TempDirs, TopicDb}
 import graft.apps.{GmallApp, GmallPipelines}
 import graft.operators.{Dedup, EventOps, Multimodal, Relational, Similarity, Sketches, TextProfile}
 import graft.functions.TextFunctions
@@ -47,8 +47,8 @@ private[graft] object RelationalGates {
       Relational.jsonPropsAgg(Tables.events(s, d))),
 
     "q09_hourly_window" -> ((s, d) =>
-      EventOps.tumblingAgg(
-        Tables.events(s, d), "1 hour", Seq(col("event_type")),
+      graft.streaming.Windows.tumblingAgg( // batch frame: no watermark applied
+        Tables.events(s, d), "ts", "1 hour", "0 seconds", Seq(col("event_type")),
         Seq(count(lit(1)).as("n_events"),
           sum(Relational.money(col("value"))).cast("double").as("sum_value")))
         .select(col("stt"), col("edt"), col("event_type"), col("n_events"),
@@ -202,21 +202,16 @@ private[graft] object RelationalGates {
     // day filter prunes whole directories at plan time (PlanSpec pins
     // PartitionFilters on the scan). Row-identical to the plain filter
     // the oracle runs.
-    "q106_partition_pruned" -> ((s, d) => {
-      val dir = graft.core.TempDirs.scratch("graft_part_") + "/ev"
+    "q106_partition_pruned" -> ((s, d) => TempDirs.withScratch("graft_part_") { root =>
       val parted = Relational.partitionByKey(
         Tables.events(s, d).withColumn("dt", to_date(col("ts")).cast("string")),
-        Seq("dt"), dir)
+        Seq("dt"), s"$root/ev")
       val minDt = parted.agg(min(col("dt")).cast("string")).head().getString(0)
-      val out = parted.where(col("dt") === minDt)
+      parted.where(col("dt") === minDt)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_rows"),
           countDistinct(col("user_id")).as("n_users"))
         .orderBy(col("event_type"))
-        .localCheckpoint(true) // materialize before the layout dir vanishes
-      org.apache.hadoop.fs.FileUtil.fullyDelete(
-        new java.io.File(dir).getParentFile)
-      out
     }),
 
     // The GlobalWindowTopK optimizer rule under the oracle: the naive

@@ -3,7 +3,7 @@ package graft.entry
 import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Envelopes, Tables, TopicDb}
+import graft.core.{Envelopes, Tables, TempDirs, TopicDb}
 import graft.apps.{GmallApp, GmallPipelines}
 import graft.operators.{Cap, Dedup, EventOps, Multimodal, Relational, Similarity, Sketches, TextProfile}
 import graft.functions.TextFunctions
@@ -357,7 +357,7 @@ private[graft] object SimilarityGates {
     // under the ascending feed), a batch-2 near-dup of a batch-1 vector
     // collapses via the cell-indexed state, and bridging vectors relabel
     // merged groups. Shares q102's oracle verbatim.
-    "q118_stream_semdedup" -> ((s, d) => {
+    "q118_stream_semdedup" -> ((s, d) => TempDirs.withScratch("graft_sem_ingest_") { root =>
       val emb = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"), col("label"))
       // cell count from the expected corpus scale (the production knob a
@@ -366,26 +366,12 @@ private[graft] object SimilarityGates {
       val nCells = semDedupCells(emb.count())
       val mid = midOf(emb.agg(min(col("vec_id")), max(col("vec_id"))).head(),
         "embeddings (q118)")
-      val root = graft.core.TempDirs.scratch("graft_sem_ingest_")
-      implicit val enc: org.apache.spark.sql.Encoder[(Long, Array[Float], Int)] =
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-      import s.implicits._
-      StreamHarness.runFilesSink(s,
-          Seq(emb.where(col("vec_id") <= mid).as[(Long, Array[Float], Int)],
-            emb.where(col("vec_id") > mid).as[(Long, Array[Float], Int)])) {
-        (ds, ckpt) =>
-          ds.toDF().toDF("vec_id", "embedding", "label").writeStream
-            .option("checkpointLocation", ckpt)
-            .foreachBatch { (b: DataFrame, epochId: Long) =>
-              graft.streaming.SemIngest.processBatch(
-                b.toDF("vec_id", "embedding", "label"), root, epochId, nCells, 0.35)
-            }.start()
+      StreamHarness.runBatches(s,
+          Seq(emb.where(col("vec_id") <= mid), emb.where(col("vec_id") > mid))) {
+        (b, epochId) =>
+          graft.streaming.SemIngest.processBatch(b, root, epochId, nCells, 0.35)
       }
-      val out = graft.streaming.SemIngest.survivors(s, root)
-        .orderBy(col("vec_id"))
-        .localCheckpoint(true) // materialize before the store dir vanishes
-      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
-      out
+      graft.streaming.SemIngest.survivors(s, root).orderBy(col("vec_id"))
     }),
 
     // SemDeDup centroid RECENTERING under the oracle gate — q118's
@@ -406,34 +392,20 @@ private[graft] object SimilarityGates {
     // suppression) and the exact union-components contract; the
     // merge-DISCOVERY direction is pinned by SemIngestSpec's planted
     // stale-split pair.
-    "q127_semdedup_recenter" -> ((s, d) => {
+    "q127_semdedup_recenter" -> ((s, d) => TempDirs.withScratch("graft_sem_rec_") { root =>
       val emb = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"), col("label"))
       val nCells = semDedupCells(emb.count())
       val mid = midOf(emb.agg(min(col("vec_id")), max(col("vec_id"))).head(),
         "embeddings (q127)")
-      val root = graft.core.TempDirs.scratch("graft_sem_rec_")
-      implicit val enc: org.apache.spark.sql.Encoder[(Long, Array[Float], Int)] =
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-      import s.implicits._
-      StreamHarness.runFilesSink(s,
-          Seq(emb.where(col("vec_id") > mid).as[(Long, Array[Float], Int)],
-            emb.where(col("vec_id") <= mid).as[(Long, Array[Float], Int)])) {
-        (ds, ckpt) =>
-          ds.toDF().toDF("vec_id", "embedding", "label").writeStream
-            .option("checkpointLocation", ckpt)
-            .foreachBatch { (b: DataFrame, epochId: Long) =>
-              graft.streaming.SemIngest.processBatch(
-                b.toDF("vec_id", "embedding", "label"), root, epochId, nCells, 0.35)
-            }.start()
+      StreamHarness.runBatches(s,
+          Seq(emb.where(col("vec_id") > mid), emb.where(col("vec_id") <= mid))) {
+        (b, epochId) =>
+          graft.streaming.SemIngest.processBatch(b, root, epochId, nCells, 0.35)
       }
       graft.streaming.SemIngest.recenter(s, root, nCells, epochId = 2L,
         threshold = 0.35, lloydRounds = 0)
-      val out = graft.streaming.SemIngest.survivors(s, root)
-        .orderBy(col("vec_id"))
-        .localCheckpoint(true) // materialize before the store dir vanishes
-      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
-      out
+      graft.streaming.SemIngest.survivors(s, root).orderBy(col("vec_id"))
     }),
 
     // The recenter CADENCE under the oracle gate (round-9 ask #3): q118's
@@ -447,7 +419,7 @@ private[graft] object SimilarityGates {
     // shares q102's oracle verbatim. The drift-DISCOVERY direction of a
     // mid-stream firing (stale-split pair found) is pinned by
     // SemIngestSpec's planted scenario.
-    "q160_semdedup_cadence" -> ((s, d) => {
+    "q160_semdedup_cadence" -> ((s, d) => TempDirs.withScratch("graft_sem_cad_") { root =>
       val emb = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"), col("label"))
       val nCells = semDedupCells(emb.count())
@@ -455,29 +427,15 @@ private[graft] object SimilarityGates {
       require(!mm.isNullAt(0), "empty embeddings feed (q160)")
       val (lo, hi) = (mm.getLong(0), mm.getLong(1))
       val bs = (1 to 3).map(k => lo + (hi - lo) / 4 * k)
-      val root = graft.core.TempDirs.scratch("graft_sem_cad_")
-      implicit val enc: org.apache.spark.sql.Encoder[(Long, Array[Float], Int)] =
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-      import s.implicits._
-      StreamHarness.runFilesSink(s,
+      StreamHarness.runBatches(s,
           Seq(emb.where(col("vec_id") <= bs(0)),
             emb.where(col("vec_id") > bs(0) && col("vec_id") <= bs(1)),
             emb.where(col("vec_id") > bs(1) && col("vec_id") <= bs(2)),
-            emb.where(col("vec_id") > bs(2)))
-            .map(_.as[(Long, Array[Float], Int)])) {
-        (ds, ckpt) =>
-          ds.toDF().toDF("vec_id", "embedding", "label").writeStream
-            .option("checkpointLocation", ckpt)
-            .foreachBatch { (b: DataFrame, epochId: Long) =>
-              graft.streaming.SemIngest.processBatchWithCadence(
-                b.toDF("vec_id", "embedding", "label"), root, epochId, nCells, 0.35)
-            }.start()
+            emb.where(col("vec_id") > bs(2)))) {
+        (b, epochId) =>
+          graft.streaming.SemIngest.processBatchWithCadence(b, root, epochId, nCells, 0.35)
       }
-      val out = graft.streaming.SemIngest.survivors(s, root)
-        .orderBy(col("vec_id"))
-        .localCheckpoint(true) // materialize before the store dir vanishes
-      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
-      out
+      graft.streaming.SemIngest.survivors(s, root).orderBy(col("vec_id"))
     }),
 
     // Two-stage PQ retrieval: q90's ADC codes shortlist 50 candidates per
@@ -496,32 +454,18 @@ private[graft] object SimilarityGates {
     // overwrites make replays idempotent), then the store-backed
     // ivfSearch must equal the batch ivfTopK plan — shares q54's oracle
     // verbatim.
-    "q134_stream_ann_ingest" -> ((s, d) => {
+    "q134_stream_ann_ingest" -> ((s, d) => TempDirs.withScratch("graft_ann_ingest_") { root =>
       val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
       val mid = midOf(emb.agg(min(col("vec_id")), max(col("vec_id"))).head(),
         "embeddings (q134)")
-      val root = graft.core.TempDirs.scratch("graft_ann_ingest_")
-      implicit val enc: org.apache.spark.sql.Encoder[(Long, Array[Float])] =
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-      import s.implicits._
-      StreamHarness.runFilesSink(s,
-          Seq(emb.where(col("vec_id") <= mid).as[(Long, Array[Float])],
-            emb.where(col("vec_id") > mid).as[(Long, Array[Float])])) {
-        (ds, ckpt) =>
-          ds.toDF("vec_id", "embedding").writeStream
-            .option("checkpointLocation", ckpt)
-            .foreachBatch { (b: DataFrame, epochId: Long) =>
-              graft.streaming.AnnIngest.processBatch(
-                b.toDF("vec_id", "embedding"), root, epochId, nCells = 16)
-            }.start()
+      StreamHarness.runBatches(s,
+          Seq(emb.where(col("vec_id") <= mid), emb.where(col("vec_id") > mid))) {
+        (b, epochId) => graft.streaming.AnnIngest.processBatch(b, root, epochId, nCells = 16)
       }
-      val out = graft.streaming.AnnIngest.searchStore(s, root,
+      graft.streaming.AnnIngest.searchStore(s, root,
           Tables.embeddings(s, d).where(col("vec_id") % 50 === 0), 10, nProbe = 4)
         .withColumn("rank", col("rank").cast("long"))
         .orderBy(col("query_id"), col("rank"))
-        .localCheckpoint(true) // materialize before the store dir vanishes
-      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
-      out
     }),
 
     // Per-group cap ON INGEST (CapIngest): two DESCENDING micro-batches —

@@ -3,7 +3,7 @@ package graft.entry
 import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Envelopes, Tables, TopicDb}
+import graft.core.{Envelopes, Tables, TempDirs, TopicDb}
 import graft.apps.{GmallApp, GmallPipelines}
 import graft.operators.{Dedup, EventOps, Multimodal, Relational, Similarity, Sketches, TextProfile}
 import graft.functions.TextFunctions
@@ -178,8 +178,7 @@ private[graft] object SketchGates {
     // FIXED global bin bounds (data-derived bounds would move the grid
     // under the comparison) — the production data-drift alarm, one audit
     // row per (epoch, group).
-    "q157_stream_drift" -> ((s, d) => {
-      import s.implicits._
+    "q157_stream_drift" -> ((s, d) => TempDirs.withScratch("graft_drift_") { root =>
       val ev = Tables.events(s, d).select(col("event_type"), col("value"),
         unix_micros(col("ts")).as("ts_us"))
       val mm = ev.agg(min(col("ts_us")), max(col("ts_us")),
@@ -189,36 +188,25 @@ private[graft] object SketchGates {
       // integer `div`, not `/`: Column `/` is DOUBLE division and a
       // boundary row could floor differently from the oracle's exact `//`
       val terc = expr(s"((ts_us - ${tlo}L) * 3L) div ${thi - tlo + 1}L")
-      val root = graft.core.TempDirs.scratch("graft_drift_")
-      StreamHarness.runFilesSink(s, (0 to 2).map(e =>
-          ev.where(terc === e.toLong)
-            .select(col("event_type"), col("value"))
-            .as[(String, Double)])) {
-        (ds, ckpt) =>
-          ds.toDF("event_type", "value").writeStream
-            .option("checkpointLocation", ckpt)
-            .foreachBatch { (b: DataFrame, epochId: Long) =>
-              if (epochId == 0L)
-                b.write.mode("overwrite").parquet(s"$root/ref")
-              else {
-                val ref = b.sparkSession.read.parquet(s"$root/ref")
-                graft.operators.Sketches.driftPsiBounded(
-                    ref.withColumn("_ra", lit(true))
-                      .unionByName(b.withColumn("_ra", lit(false))),
-                    col("event_type"), "event_type", col("value"), col("_ra"),
-                    vlo, vhi, 32)
-                  .withColumn("epoch", lit(epochId))
-                  .write.mode("overwrite").parquet(s"$root/audit/epoch_id=$epochId")
-              }
-              ()
-            }.start()
+      StreamHarness.runBatches(s, (0 to 2).map(e =>
+          ev.where(terc === e.toLong).select(col("event_type"), col("value")))) {
+        (b, epochId) =>
+          if (epochId == 0L)
+            b.write.mode("overwrite").parquet(s"$root/ref")
+          else {
+            val ref = b.sparkSession.read.parquet(s"$root/ref")
+            graft.operators.Sketches.driftPsiBounded(
+                ref.withColumn("_ra", lit(true))
+                  .unionByName(b.withColumn("_ra", lit(false))),
+                col("event_type"), "event_type", col("value"), col("_ra"),
+                vlo, vhi, 32)
+              .withColumn("epoch", lit(epochId))
+              .write.mode("overwrite").parquet(s"$root/audit/epoch_id=$epochId")
+          }
       }
-      val out = s.read.parquet(s"$root/audit")
+      s.read.parquet(s"$root/audit")
         .select(col("epoch"), col("event_type"), col("n_a"), col("n_b"), col("psi"))
         .orderBy(col("epoch"), col("event_type"))
-        .localCheckpoint(true) // materialize before the audit dir vanishes
-      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
-      out
     }),
   )
 

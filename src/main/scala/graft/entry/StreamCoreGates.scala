@@ -91,7 +91,7 @@ private[graft] object StreamCoreGates {
     // J1 — watermarked stream-stream inner join with an event-time range
     // condition (the reference's TTL'd order_detail ⋈ order_info, re-keyed
     // to events): views matched to purchases by the same user ≤ 24 h later.
-    // Both sides are filters of ONE MemoryStream (a stream self-join), state
+    // Both sides are filters of ONE file-fed stream (a stream self-join), state
     // evicted by the watermark + time bound exactly like X1.
     "q33_stream_join" -> ((s, d) => {
       import s.implicits._

@@ -3,7 +3,7 @@ package graft.entry
 import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Envelopes, Tables, TopicDb}
+import graft.core.{Envelopes, Tables, TempDirs, TopicDb}
 import graft.apps.{GmallApp, GmallPipelines}
 import graft.operators.{Dedup, EventOps, Multimodal, Relational, Similarity, Sketches, TextProfile}
 import graft.functions.TextFunctions
@@ -173,30 +173,16 @@ private[graft] object TextGates {
     // accreted scores must equal the batch q185 bit-for-bit (the feed
     // covers the training corpus, so no unseen pairs — those are
     // spec-planted); shares q185's oracle verbatim.
-    "q188_stream_kn_score" -> ((s, d) => {
+    "q188_stream_kn_score" -> ((s, d) => TempDirs.withScratch("graft_kn_ingest_") { root =>
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       val mid = midOf(docs.agg(min(col("doc_id")), max(col("doc_id"))).head(),
         "documents (q188)")
-      val root =
-        graft.core.TempDirs.scratch("graft_kn_ingest_")
       graft.streaming.KnIngest.freezeModel(Tables.documents(s, d), root)
-      import s.implicits._
-      StreamHarness.runFilesSink(s,
-          Seq(docs.where(col("doc_id") <= mid).as[(Long, String)],
-            docs.where(col("doc_id") > mid).as[(Long, String)])) {
-        (ds, ckpt) =>
-          ds.toDF("doc_id", "text").writeStream
-            .option("checkpointLocation", ckpt)
-            .foreachBatch { (b: DataFrame, epochId: Long) =>
-              graft.streaming.KnIngest.processBatch(
-                b.toDF("doc_id", "text"), root, epochId)
-            }.start()
+      StreamHarness.runBatches(s,
+          Seq(docs.where(col("doc_id") <= mid), docs.where(col("doc_id") > mid))) {
+        (b, epochId) => graft.streaming.KnIngest.processBatch(b, root, epochId)
       }
-      val out = graft.streaming.KnIngest.readScores(s, root)
-        .orderBy(col("doc_id"))
-        .localCheckpoint(true) // materialize before the store dir vanishes
-      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
-      out
+      graft.streaming.KnIngest.readScores(s, root).orderBy(col("doc_id"))
     }),
 
     // Distributed CART distillation (round-17): the PLANET-style
@@ -237,30 +223,16 @@ private[graft] object TextGates {
     // FineWeb deployment shape (q188's contract with the distilled tree
     // as the frozen model). The accreted scores must equal the batch
     // q199 bit-for-bit; shares q199's oracle verbatim.
-    "q201_stream_cart_score" -> ((s, d) => {
+    "q201_stream_cart_score" -> ((s, d) => TempDirs.withScratch("graft_cart_ingest_") { root =>
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       val mid = midOf(docs.agg(min(col("doc_id")), max(col("doc_id"))).head(),
         "documents (q201)")
-      val root =
-        graft.core.TempDirs.scratch("graft_cart_ingest_")
       graft.streaming.CartIngest.freezeModel(Tables.documents(s, d), root)
-      import s.implicits._
-      StreamHarness.runFilesSink(s,
-          Seq(docs.where(col("doc_id") <= mid).as[(Long, String)],
-            docs.where(col("doc_id") > mid).as[(Long, String)])) {
-        (ds, ckpt) =>
-          ds.toDF("doc_id", "text").writeStream
-            .option("checkpointLocation", ckpt)
-            .foreachBatch { (b: DataFrame, epochId: Long) =>
-              graft.streaming.CartIngest.processBatch(
-                b.toDF("doc_id", "text"), root, epochId)
-            }.start()
+      StreamHarness.runBatches(s,
+          Seq(docs.where(col("doc_id") <= mid), docs.where(col("doc_id") > mid))) {
+        (b, epochId) => graft.streaming.CartIngest.processBatch(b, root, epochId)
       }
-      val out = graft.streaming.CartIngest.readScores(s, root)
-        .orderBy(col("doc_id"))
-        .localCheckpoint(true) // materialize before the store dir vanishes
-      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
-      out
+      graft.streaming.CartIngest.readScores(s, root).orderBy(col("doc_id"))
     }),
 
     // The PLANET candidate-binning arm (maxBins = 8, LIVE at the gated

@@ -302,21 +302,4 @@ object EventOps {
         datediff(col("_day"), col("_cohort_day")).cast("long").as("day_offset"))
       .agg(countDistinct(col(keyCol)).as("n_users"))
   }
-
-  /** A1/A2/A3 + W1/W6 — tumbling event-time window aggregation with the
-    * window bounds emitted as formatted strings (stt/edt), exactly the DWS
-    * output shape. Keys optional (A3 = global window). Spark's window agg is
-    * already incremental with partial aggregation (X6). */
-  def tumblingAgg(
-      events: DataFrame,
-      windowDur: String,
-      keys: Seq[Column],
-      aggs: Seq[Column],
-      tsCol: String = "ts"): DataFrame = {
-    val grouped = events.groupBy((window(col(tsCol), windowDur) +: keys): _*)
-    grouped.agg(aggs.head, aggs.tail: _*)
-      .withColumn("stt", date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss"))
-      .withColumn("edt", date_format(col("window.end"), "yyyy-MM-dd HH:mm:ss"))
-      .drop("window")
-  }
 }

@@ -113,8 +113,7 @@ object DimSink {
     * exactly-once per (table, epoch). Read the compacted view with
     * [[readDelta]]. The production DIM query merges with [[mergeBatch]]
     * instead; the remaining callers are DimSinkSpec and the perfbench
-    * layer replay. The same LSM path still backs [[processBatchCdc]] and
-    * [[cdcSink]]. */
+    * layer replay. The same LSM path still backs [[processBatchCdc]]. */
   def processBatchDelta(batch: DataFrame, root: String,
       configs: Seq[TableConfig], epochId: Long): Unit = {
     batch.persist()
@@ -144,7 +143,9 @@ object DimSink {
     * delete carries its row image in `before`), so an upstream-deleted dim
     * row disappears from [[readDelta]]. Exactly-once per (table, epoch):
     * a replayed batch overwrites its own epoch dir — including its
-    * tombstones — so crash-redelivery cannot resurrect a deleted key. */
+    * tombstones — so crash-redelivery cannot resurrect a deleted key. Call
+    * it from a checkpointed `foreachBatch` with the engine's epochId (q100
+    * drives it through [[StreamHarness.runBatches]]). */
   def processBatchCdc(parsed: DataFrame, root: String,
       routes: Map[String, TableConfig], epochId: Long): CdcBatchStats = {
     parsed.persist()
@@ -209,24 +210,6 @@ object DimSink {
   final case class CdcBatchStats(total: Long, corrupt: Long, unrouted: Long)
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.streaming.DimSink")
-
-  /** [[processBatchCdc]] as a checkpointed streaming sink: the engine's
-    * epochId keys each delta dir, so a restart's replayed batch rewrites
-    * its own epoch — the same exactly-once contract as
-    * [[DeltaStore.sink]]. `onEpoch` observes each batch's REAL engine
-    * epochId (driver-side, in commit order) — a crash-replay simulation
-    * must re-deliver under the id the engine actually assigned, never a
-    * hardcoded guess about feed/batch alignment. */
-  def cdcSink(parsed: DataFrame, root: String, routes: Map[String, TableConfig],
-      checkpoint: String,
-      onEpoch: Long => Unit = _ => ()): org.apache.spark.sql.streaming.StreamingQuery =
-    parsed.writeStream.option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        onEpoch(epochId)
-        processBatchCdc(batch, root, routes, epochId)
-        ()
-      }
-      .start()
 
   /** K6 on a JDBC target: the same pruned, column-ordered projection
     * written through `df.write.jdbc` — the binding a Phoenix/ClickHouse

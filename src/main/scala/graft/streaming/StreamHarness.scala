@@ -3,7 +3,6 @@ package graft.streaming
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{concat_ws, hash}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
@@ -16,15 +15,18 @@ import org.apache.spark.sql.types.StructType
   * timeouts must fire off the advancing watermark — exactly the semantics
   * the reference's Flink jobs rely on.
   *
-  * Two feed paths:
-  *  - [[runFiles]] (the gates' path): batches stay DATASETS end to end —
-  *    each is written to parquet by an executor-side job and streamed back
-  *    through Spark's real file source, one chunk per micro-batch. No rows
-  *    ever pass through the driver and task closures stay constant-size at
-  *    every SF (the round-5 review measured the collect-fed closures at
-  *    9.3 MiB at sf0.1, growing linearly with SF).
-  *  - [[run]] (tests / tiny literal feeds): driver-held `Seq` batches via
-  *    MemoryStream; fine for spec-sized inputs, not for SF-scaled feeds.
+  * One feed path, and the harness starts every query: batches stay
+  * DATASETS end to end — each is written to parquet by an executor-side job
+  * and streamed back through Spark's real file source, one chunk per
+  * micro-batch (`feedFiles`). No rows pass through the driver and task
+  * closures stay constant-size at every SF (the round-5 review measured
+  * the old collect-fed closures at 9.3 MiB at sf0.1, growing linearly
+  * with SF). The feed is a directory of files, so it can be replayed into
+  * a fresh query. Two sink kinds:
+  *  - [[runFiles]]: a memory sink the caller reads back ([[run]] wraps it
+  *    for driver-held spec feeds);
+  *  - [[runBatches]]: a checkpointed `foreachBatch` sink, returning the
+  *    engine's epochIds.
   */
 object StreamHarness {
 
@@ -99,38 +101,11 @@ object StreamHarness {
     session
   }
 
-  /** Feed `batches` one micro-batch at a time through `build`, wait for
-    * every batch (and any watermark-triggered no-data batch) to complete,
-    * return the memory sink's contents. Driver-held feed — see object doc
-    * for when to prefer [[runFiles]]. */
+  /** [[runFiles]] over driver-held batches (specs, tiny literal feeds):
+    * each `Seq` becomes one Dataset, then rides the same file feed. */
   def run[T](spark: SparkSession, batches: Seq[Seq[T]])(
-      build: Dataset[T] => DataFrame)(implicit enc: Encoder[T]): DataFrame = {
-    val session = prepared(spark)
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = session.sqlContext
-    val stream = MemoryStream[T]
-    val name = s"graft_mem_sink_${counter.incrementAndGet()}"
-    val ckpt = graft.core.TempDirs.scratch("graft_ckpt_")
-    val query = build(stream.toDS())
-      .writeStream.format("memory").queryName(name).outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .start()
-    try batches.foreach { b =>
-      stream.addData(b)
-      query.processAllAvailable()
-    } finally {
-      // stop() can itself throw on an errored query — the checkpoint dir
-      // (no post-stop reader; the memory sink holds the results) must be
-      // deleted on that path too, or error runs leak temp dirs for the
-      // JVM's lifetime
-      try query.stop()
-      finally {
-        unloadStateStores()
-        org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(ckpt))
-        graft.core.SessionCache.evictOwnedExactly(session)
-      }
-    }
-    session.table(name)
-  }
+      build: Dataset[T] => DataFrame)(implicit enc: Encoder[T]): DataFrame =
+    runFiles(spark, batches.map(spark.createDataset(_)))(build)
 
   /** Unload every state-store provider the stopped query leaves loaded
     * (r18): with the long maintenance interval below, nothing else unloads
@@ -146,9 +121,9 @@ object StreamHarness {
     catch { case e: Throwable =>
       System.err.println(s"[harness] StateStore.unloadAll failed (non-fatal): $e") }
 
-  /** [[run]] with EXECUTOR-fed batches: each batch Dataset is written once
-    * to a parquet chunk (a distributed write job — no driver collect, no
-    * rows in the task closure), then picked up by a REAL
+  /** Stream EXECUTOR-fed batches into a memory sink: each batch Dataset is
+    * written once to a parquet chunk (a distributed write job — no driver
+    * collect, no rows in the task closure), then picked up by a REAL
     * `readStream.parquet` file source. Batch boundaries are exact: chunk i
     * is moved into the watched dir only after batch i−1's
     * `processAllAvailable` returns, so each chunk is one micro-batch in
@@ -167,57 +142,64 @@ object StreamHarness {
       stageKeyCols: Seq[String] = Nil)(
       build: Dataset[T] => DataFrame)(implicit enc: Encoder[T]): DataFrame = {
     val name = s"graft_mem_sink_${counter.incrementAndGet()}"
-    val session = feedFiles(spark, batches, stageKeyCols) { (stream, ckpt) =>
-      build(stream)
-        .writeStream.format("memory").queryName(name).outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .start()
+    val session = feedFiles(spark, batches.map(_.toDF()), enc.schema, stageKeyCols) {
+      (stream, ckpt) =>
+        build(stream.as[T](enc))
+          .writeStream.format("memory").queryName(name).outputMode("append")
+          .option("checkpointLocation", ckpt)
+          .start()
     }
     session.table(name)
   }
 
-  /** The [[runFiles]] feed loop around a CALLER-started sink (e.g. a
-    * checkpointed `foreachBatch` dim sink): `start` receives the
-    * file-source Dataset and a fresh checkpoint dir and returns the
-    * running query; each batch Dataset then lands as exactly one
-    * micro-batch, in order, with the engine's own epochIds. */
-  def runFilesSink[T](spark: SparkSession, batches: Seq[Dataset[T]])(
-      start: (Dataset[T], String) => StreamingQuery)(
-      implicit enc: Encoder[T]): Unit = {
-    // These foreachBatch sinks hold no state stores, yet they keep the
-    // partition cap: a 1-2k-row ingest micro-batch runs dozens of jobs
-    // whose 32-task shuffles would be pure task-launch overhead.
-    feedFiles(spark, batches)(start)
-    ()
+  /** [[runFiles]]' feed into a checkpointed `foreachBatch` sink: each batch
+    * DataFrame lands as exactly one micro-batch, in order, and `sink` sees
+    * it under the engine's own epochId. The feed schema is the batches'
+    * (positional, like [[runFiles]]' encoder schema). Returns the epochIds
+    * in commit order — a crash-replay simulation re-delivers under the id
+    * the engine actually assigned, never a guess about feed/batch
+    * alignment. These sinks hold no state stores, yet they keep the
+    * partition cap: a 1-2k-row ingest micro-batch runs dozens of jobs
+    * whose 32-task shuffles would be pure task-launch overhead. */
+  def runBatches(spark: SparkSession, batches: Seq[DataFrame])(
+      sink: (DataFrame, Long) => Unit): Seq[Long] = {
+    val epochs = scala.collection.mutable.ArrayBuffer.empty[Long]
+    feedFiles(spark, batches, batches.head.schema) { (stream, ckpt) =>
+      stream.writeStream.option("checkpointLocation", ckpt)
+        .foreachBatch { (b: DataFrame, epochId: Long) =>
+          epochs.synchronized { epochs += epochId }
+          sink(b, epochId)
+        }
+        .start()
+    }
+    epochs.synchronized(epochs.toList)
   }
 
-  private def feedFiles[T](spark: SparkSession, batches: Seq[Dataset[T]],
-      stageKeyCols: Seq[String] = Nil)(
-      start: (Dataset[T], String) => StreamingQuery)(
-      implicit enc: Encoder[T]): SparkSession = {
+  private def feedFiles(spark: SparkSession, batches: Seq[DataFrame],
+      schemaOf: => StructType, stageKeyCols: Seq[String] = Nil)(
+      start: (DataFrame, String) => StreamingQuery): SparkSession = {
     require(batches.nonEmpty, "file feed needs at least one batch")
+    // file sources need an explicit schema; the feed's schema with relaxed
+    // nullability (parquet stores everything nullable — runFiles' .as[T]
+    // re-asserts non-null primitives exactly like any table read)
+    val schema = StructType(schemaOf.fields.map(_.copy(nullable = true)))
     val session = prepared(spark)
     val root = java.nio.file.Paths.get(graft.core.TempDirs.scratch("graft_feed_"))
     try {
       val watched = root.resolve("in")
       Files.createDirectories(watched)
-      // file sources need an explicit schema; the encoder's schema with
-      // relaxed nullability (parquet stores everything nullable — the .as[T]
-      // below re-asserts non-null primitives exactly like any table read)
-      val schema = StructType(enc.schema.fields.map(_.copy(nullable = true)))
       val query = start(
-        session.readStream.schema(schema).parquet(watched.toString).as[T](enc),
+        session.readStream.schema(schema).parquet(watched.toString),
         root.resolve("ckpt").toString)
       try batches.zipWithIndex.foreach { case (b, i) =>
         val stage = root.resolve(s"stage_$i")
-        // write under the ENCODER's field names (parquet resolves by name):
-        // a tuple Dataset built from a select keeps the select's column
-        // names, not _1/_2 — the positional rename bridges the two exactly
-        // like MemoryStream's implicit tuple encoding did. Rows land in a
-        // deterministic HASH-SCRAMBLED order (the old driver feeds'
-        // explicit scramble): a chunk written in source order would let a
-        // processor that dropped its per-batch (µs, id) re-sort still pass
-        // every gate.
+        // write under the FEED's field names (parquet resolves by name): a
+        // tuple Dataset built from a select keeps the select's column
+        // names, not _1/_2 — the positional rename bridges the two. Rows
+        // land in a deterministic HASH-SCRAMBLED order (the old driver
+        // feeds' explicit scramble): a chunk written in source order would
+        // let a processor that dropped its per-batch (µs, id) re-sort
+        // still pass every gate.
         val named = b.toDF(schema.fieldNames.toIndexedSeq: _*)
         val scramble = hash(schema.fieldNames.map(named(_)): _*)
         if (stageKeyCols.isEmpty)

@@ -109,15 +109,32 @@ class PipelinesSpec extends SparkTestBase {
       ("order_info", "update", Map("id" -> "o2", "order_status" -> "1006", "user_id" -> "u2",
         "province_id" -> "p2"), Map("order_status" -> "1005")),
       ("order_refund_info", "insert", Map("id" -> "r3", "order_id" -> "o2", "sku_id" -> "s3",
-        "refund_num" -> "1"), null))
-    val dic = Seq(("1501", "refund_full"), ("1301", "reason_quality"), ("1101", "alipay"))
-      .toDF("dic_code", "dic_name")
+        "refund_num" -> "1"), null),
+      // one bad date per tool / interaction / user pipeline
+      ("coupon_use", "insert", Map("id" -> "cg1", "coupon_id" -> "c1", "user_id" -> "u1",
+        "get_time" -> "bad-date"), null),
+      ("coupon_use", "update", Map("id" -> "co1", "coupon_status" -> "1402",
+        "using_time" -> "bad-date"), Map("coupon_status" -> "1401")),
+      ("coupon_use", "update", Map("id" -> "cp1", "used_time" -> "bad-date"),
+        Map("used_time" -> null)),
+      ("comment_info", "insert", Map("id" -> "cm1", "appraise" -> "1201",
+        "create_time" -> "bad-date"), null),
+      ("user_info", "insert", Map("id" -> "u9", "create_time" -> "bad-date"), null))
+    val dic = Seq(("1501", "refund_full"), ("1301", "reason_quality"), ("1101", "alipay"),
+      ("1201", "good")).toDF("dic_code", "dic_name")
     val refunds = GmallPipelines.tradeOrderRefund(db, dic)
       .select("id", "date_id").as[(String, String)].collect().toMap
     assert(refunds === Map("r1" -> null, "r2" -> "2022-06-01"))
     val refundPays = GmallPipelines.tradeRefundPaySuccess(db, dic)
       .select("id", "date_id").as[(String, String)].collect().toSeq
     assert(refundPays === Seq(("rp1", null)))
+    def dates(df: DataFrame, id: String = "id") =
+      df.select(col(id), col("date_id")).as[(String, String)].collect().toSeq
+    assert(dates(GmallPipelines.couponGet(db)) === Seq(("cg1", null)))
+    assert(dates(GmallPipelines.couponOrder(db)) === Seq(("co1", null)))
+    assert(dates(GmallPipelines.couponPay(db)) === Seq(("cp1", null)))
+    assert(dates(GmallPipelines.comment(db, dic)) === Seq(("cm1", null)))
+    assert(dates(GmallPipelines.userRegister(db), "user_id") === Seq(("u9", null)))
   }
 
   test("couponPay: updates with used_time set (reference has no old-map predicate)") {
