@@ -11,11 +11,17 @@
 # change is the last commit), created in a temporary directory and removed
 # at exit; `-d DIR` uses an existing checkout instead. Nothing under
 # perfbench/ is changed. Each run's output is kept in OUT (default
-# .bench_build/ab/<workload>-<time>). The summary prints, per metric of
+# .bench_build/ab/<workload>-<time>) as <side>-<seed>.log (the JSON
+# result) and .err, plus the program's own log as <side>-<seed>.jvm.log
+# (run.py keeps it in the checkout's .bench_build/logs/, which for the
+# parent is removed with its worktree). The summary prints, per metric of
 # the runs' JSON results: each side's median and quartiles, the change of
 # the medians in percent, and the per-pair sign (+ change better, - change
 # worse, = equal) by the `better` direction BENCHMARK.json declares
-# (lower when undeclared).
+# (lower when undeclared). When the JVM logs carry perfbench's
+# `round r: … last batch ms g:v …` lines (dag_trickle), it then prints
+# per query group and side the median, over all rounds, of the group's
+# slowest last-batch time in the round, to show which group moved.
 #
 # Run from the repository root, e.g.
 #   scripts/perf_ab.sh -w dag_trickle 101 102 103 104 105 106
@@ -35,11 +41,11 @@ while getopts "w:s:t:p:d:o:" opt; do
     p) rev=$OPTARG ;;
     d) parent_dir=$OPTARG ;;
     o) out=$OPTARG ;;
-    *) sed -n '2,21p' "$0"; exit 2 ;;
+    *) sed -n '2,27p' "$0"; exit 2 ;;
   esac
 done
 shift $((OPTIND - 1))
-if [ $# -eq 0 ]; then sed -n '2,21p' "$0"; exit 2; fi
+if [ $# -eq 0 ]; then sed -n '2,27p' "$0"; exit 2; fi
 
 change_dir=$(pwd)
 [ -f "$change_dir/perfbench/run.py" ] || { echo "perf_ab: run from the repository root" >&2; exit 2; }
@@ -63,6 +69,8 @@ run_side() { # side seed
   (cd "$dir" && python3 perfbench/run.py --workload "$workload" --seed "$2" \
     --seconds "$seconds" --trace "$trace") >"$log" 2>"$out/$1-$2.err" ||
     echo "perf_ab: $1 seed $2 exited $?" >&2
+  cp "$dir/.bench_build/logs/$workload-$2-$trace.log" "$out/$1-$2.jvm.log" 2>/dev/null ||
+    echo "perf_ab: no JVM log for $1 seed $2" >&2
 }
 
 i=0
@@ -120,4 +128,34 @@ for m in names:
         a, b = p["metrics"][m]["value"], c["metrics"][m]["value"]
         signs += "=" if a == b else ("+" if (b > a) == up else "-")
     print(f"{m:44} {side(mp, pv):>30} {side(mc, cv):>30} {delta:>8}  {signs}")
+
+# perfbench's per-round line: "[perfbench] round r: N ms; last batch ms g:v g:v …"
+def last_batch(side):
+    groups = {}
+    for s in seeds:
+        try:
+            with open(os.path.join(out, f"{side}-{s}.jvm.log")) as f:
+                lines = [l for l in f if "last batch ms " in l]
+        except OSError:
+            continue
+        for l in lines:
+            slowest = {}  # a group's slowest query bounds its share of the round
+            for tok in l.split("last batch ms ", 1)[1].split():
+                g, _, v = tok.rpartition(":")
+                if g and v.isdigit():
+                    slowest[g] = max(slowest.get(g, 0), int(v))
+            for g, v in slowest.items():
+                groups.setdefault(g, []).append(v)
+    return groups
+
+lb = {side: last_batch(side) for side in ("parent", "change")}
+if lb["parent"] or lb["change"]:
+    print(f"\n{'last batch ms (median [q1, q3])':44} {'parent':>30} {'change':>30} {'delta':>8}")
+    for g in sorted(set(lb["parent"]) | set(lb["change"])):
+        pv, cv = lb["parent"].get(g, []), lb["change"].get(g, [])
+        cell = lambda v: "%10.0f [%.0f, %.0f]" % ((statistics.median(v),) + quartiles(v)) \
+            if v else "n/a"
+        delta = f"{statistics.median(cv) / statistics.median(pv) - 1:+.1%}" \
+            if pv and cv and statistics.median(pv) else "n/a"
+        print(f"{g:44} {cell(pv):>30} {cell(cv):>30} {delta:>8}")
 EOF

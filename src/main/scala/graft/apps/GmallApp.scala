@@ -8,9 +8,11 @@ import graft.streaming.{DimCache, DimSink, Sinks, Sources, Windows}
 
 /** The reference warehouse's full production DAG, assembled from the SAME
   * transform functions every correctness gate exercises — the deployment
-  * `main` for a cluster that HAS Kafka (this build/test environment does
-  * not, so nothing here runs in CI; the gates drive identical plans
-  * through MemoryStream instead — see SURVEY §8).
+  * `main` for a cluster that HAS Kafka. With no broker in the build/test
+  * environment, [[startFromFiles]] runs the identical wiring over
+  * file-drop directories: GmallAppSpec, the warehouse-DAG gates
+  * (`GateSupport.DagRun`, q110 and q113–q124) and perfbench's
+  * `dag_trickle` workload all execute it.
   *
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions \
   *     --class graft.apps.GmallApp graft.jar kafka:9092 /warehouse
@@ -129,11 +131,11 @@ object GmallApp {
   }
 
   /** The full DAG over ANY parsed clean (db, log) streaming frames — the
-    * production path binds Kafka ([[start]]); GmallAppSpec drives the
-    * IDENTICAL wiring through MemoryStream (with CDC rows deliberately
-    * split across micro-batches) and asserts the warehouse contents, so
-    * the deployment graph itself is executed in CI. Returns the running
-    * queries (production awaits, tests stop them).
+    * production path binds Kafka ([[start]]), [[startFromFiles]] binds
+    * file drops; GmallAppSpec also drives it through MemoryStream (with
+    * CDC rows deliberately split across micro-batches) and asserts the
+    * warehouse contents. Returns the running queries (production awaits,
+    * tests stop them).
     *
     * The trade family runs as watermarked stream-stream interval joins
     * (the `GmallPipelines.trade*` functions, which bound their joins on a
@@ -142,8 +144,8 @@ object GmallApp {
     * topic): an order's detail/info/payment rows may arrive in DIFFERENT
     * micro-batches and still join, with state bounded by `joinTtlSec`
     * (reference: 905 s / ±15 min). The stateless row-filter pipelines run
-    * per-batch with EPOCH-IDEMPOTENT writes (each epoch overwrites its own
-    * `epoch=N` dir, so a replayed micro-batch cannot duplicate rows).
+    * per-batch through [[Sinks.fanOut]], whose writes are epoch-idempotent
+    * (a replayed micro-batch cannot duplicate rows).
     *
     * Every query runs on the shared [[DagTrigger]], so an idle query
     * checks its source twice a second instead of busy-polling it. */
@@ -163,70 +165,50 @@ object GmallApp {
     val dim = dimQuery(spark, dbSource(), warehouse, dimConfigs, ckpt("dim"))
 
     // ---- DWD log family: 5-way split, persist-once fan-out ------------
+    def to(name: String, f: DataFrame => DataFrame) = (name, f, out(name))
     val dwdLog = Sinks.fanOut(logSource(), ckpt("base_log"))(
       Seq("page", "start", "display", "action", "err").map(b =>
-        (b, (d: DataFrame) => GmallPipelines.baseLogSplit(d)(b), out(s"traffic_$b"))): _*)
+        to(s"traffic_$b", GmallPipelines.baseLogSplit(_)(b))): _*)
 
     // ---- DWD db, stateless family: per-row filters where the batch
-    // ---- boundary is irrelevant; every epoch overwrites its own dir ----
-    val dwdStateless = dbSource().writeStream.option("checkpointLocation", ckpt("dwd_db"))
-      .trigger(DagTrigger)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        batch.persist()
-        try {
-          val d = dic.get()
-          Seq(
-            "cart_add" -> GmallPipelines.tradeCartAdd(batch, d),
-            "coupon_get" -> GmallPipelines.couponGet(batch),
-            "coupon_order" -> GmallPipelines.couponOrder(batch),
-            "coupon_pay" -> GmallPipelines.couponPay(batch),
-            "favor_add" -> GmallPipelines.favorAdd(batch),
-            "comment" -> GmallPipelines.comment(batch, d),
-            "user_register" -> GmallPipelines.userRegister(batch),
-          ).foreach { case (name, df) =>
-            df.write.mode("overwrite").parquet(s"${out(name)}/epoch=$epochId")
-          }
-        } finally { batch.unpersist(); () }
-      }.start()
+    // ---- boundary is irrelevant; each branch reads the TTL'd dic -------
+    val dwdStateless = Sinks.fanOut(dbSource(), ckpt("dwd_db"))(
+      to("cart_add", GmallPipelines.tradeCartAdd(_, dic.get())),
+      to("coupon_get", GmallPipelines.couponGet),
+      to("coupon_order", GmallPipelines.couponOrder),
+      to("coupon_pay", GmallPipelines.couponPay),
+      to("favor_add", GmallPipelines.favorAdd),
+      to("comment", GmallPipelines.comment(_, dic.get())),
+      to("user_register", GmallPipelines.userRegister))
 
     // ---- DWD db, trade family: cross-batch stream-stream joins --------
     val dicStatic = TopicDb.baseDic(spark)
-    val pre = GmallPipelines.tradeOrderPreProcess(dbSource(), dicStatic, joinTtlSec)
-    val orderPreQ = pre.writeStream
-      .option("checkpointLocation", ckpt("order_pre")).trigger(DagTrigger)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        batch.persist()
-        try {
-          batch.write.mode("overwrite").parquet(s"${out("order_pre")}/epoch=$epochId")
-          GmallPipelines.tradeCancel(batch)
-            .write.mode("overwrite").parquet(s"${out("cancel")}/epoch=$epochId")
-        } finally { batch.unpersist(); () }
-      }.start()
-    def tradeQ(name: String, df: DataFrame): StreamingQuery =
+    val orderPreQ = Sinks.fanOut(
+        GmallPipelines.tradeOrderPreProcess(dbSource(), dicStatic, joinTtlSec),
+        ckpt("order_pre"))(
+      to("order_pre", identity), to("cancel", GmallPipelines.tradeCancel))
+    // the watermarked joins and windows append their closed rows
+    def appendQ(name: String, path: String, df: DataFrame): StreamingQuery =
       df.writeStream.outputMode("append")
         .option("checkpointLocation", ckpt(name)).trigger(DagTrigger)
-        .format("parquet").option("path", out(name)).start()
-    val payQ = tradeQ("pay_success",
+        .format("parquet").option("path", path).start()
+    val payQ = appendQ("pay_success", out("pay_success"),
       GmallPipelines.tradePaySuccess(dbSource(), dicStatic, joinTtlSec))
-    val refundQ = tradeQ("order_refund",
+    val refundQ = appendQ("order_refund", out("order_refund"),
       GmallPipelines.tradeOrderRefund(dbSource(), dicStatic, ttlSec = joinTtlSec))
-    val refundPayQ = tradeQ("refund_pay_suc",
+    val refundPayQ = appendQ("refund_pay_suc", out("refund_pay_suc"),
       GmallPipelines.tradeRefundPaySuccess(dbSource(), dicStatic, joinTtlSec))
 
     // ---- DWS: windowed aggregations (reference watermarks) ------------
-    val keyword = Windows.keywordCount(GmallPipelines.keywordHits(logSource()))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt("dws_keyword")).trigger(DagTrigger)
-      .format("parquet").option("path", s"$warehouse/dws/keyword").start()
-    val traffic = Windows.tumblingAgg(
+    val keyword = appendQ("dws_keyword", s"$warehouse/dws/keyword",
+      Windows.keywordCount(GmallPipelines.keywordHits(logSource())))
+    val traffic = appendQ("dws_traffic", s"$warehouse/dws/traffic",
+      Windows.tumblingAgg(
         GmallPipelines.trafficCounters(GmallPipelines.baseLogSplit(logSource())("page")),
         "rt", "1 hour", "14 seconds",
         Seq(col("vc"), col("ch"), col("ar"), col("is_new")),
         Seq(sum(col("pv")).as("pv_ct"), sum(col("sv")).as("sv_ct"),
-          sum(col("dur")).as("dur_sum")))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt("dws_traffic")).trigger(DagTrigger)
-      .format("parquet").option("path", s"$warehouse/dws/traffic").start()
+          sum(col("dur")).as("dur_sum"))))
 
     Seq(dim, dwdLog, dwdStateless, orderPreQ, payQ, refundQ, refundPayQ,
       keyword, traffic)
@@ -235,9 +217,10 @@ object GmallApp {
   /** Path of the dynamic routing table under a warehouse root. */
   def configStore(warehouse: String): String = s"$warehouse/config/table_process"
 
-  /** Serializes config-store WRITES ([[configQuery]]'s rename-aside swap,
-    * which briefly leaves the path absent) against per-batch READS
-    * ([[dimQuery]]) within the driver JVM — the two queries run
+  /** Serializes config-store WRITES ([[configQuery]]'s bucket swaps,
+    * which briefly leave a bucket absent) against per-batch READS
+    * ([[dimQuery]], which also replays an interrupted swap) within the
+    * driver JVM — the two queries run
     * concurrently in production. A cross-JVM split deployment would need
     * the store on a rename-atomic FS and tolerates one batch of
     * staleness. */
@@ -250,7 +233,8 @@ object GmallApp {
     * state, TableProcessFunction.java:169-213). Null sink_pk defaults to
     * "id" (the reference's defaultSinkPk); rows missing their routing
     * fields are dropped at this boundary so a malformed config row can
-    * never poison the DIM query. Input shape:
+    * never poison the DIM query. The table is a keyed store
+    * ([[Sinks.upsertByKeyPartitioned]], key `source_table`). Input shape:
     * [[graft.streaming.Sources.configStream]]. */
   def configQuery(spark: SparkSession, cfg: DataFrame, warehouse: String,
       checkpoint: String): StreamingQuery =
@@ -272,7 +256,7 @@ object GmallApp {
               org.apache.spark.sql.functions.row_number().over(w))
             .where(col("_rn") === 1).drop("_rn")
           configLock.synchronized {
-            Sinks.upsertByKey(last.where(col("op") =!= "d").drop("op"),
+            Sinks.upsertByKeyPartitioned(last.where(col("op") =!= "d").drop("op"),
               Seq("source_table"), "ts_ms", configStore(warehouse),
               deleteKeys = Some(last.where(col("op") === "d")
                 .select(col("source_table"))))
@@ -290,9 +274,11 @@ object GmallApp {
     * config row added mid-stream takes effect from the NEXT micro-batch,
     * exactly like the reference's broadcast state. The parsed routing
     * table is kept in the driver and re-read only when the config store's
-    * part files change (every [[configQuery]] rewrite writes new ones). A
-    * replayed epoch re-merges the same rows, which is idempotent; read
-    * the resolved view with [[DimSink.readDelta]]. */
+    * part files change (every [[configQuery]] rewrite writes new ones in
+    * the buckets it touches); a store with no part file — never written,
+    * or emptied by `d` ops — holds no dynamic route. A replayed epoch
+    * re-merges the same rows, which is idempotent; read the resolved view
+    * with [[DimSink.readDelta]]. */
   def dimQuery(spark: SparkSession, db: DataFrame, warehouse: String,
       static: Seq[DimSink.TableConfig], checkpoint: String): StreamingQuery = {
     // (config store part-file names, routes parsed from them)
@@ -301,25 +287,24 @@ object GmallApp {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val s = batch.sparkSession
         val dynamic: Seq[(String, DimSink.TableConfig)] = configLock.synchronized {
-          // probe existence through the Hadoop FS (as Sinks.upsertByKey
-          // does) instead of catching AnalysisException: "store never
-          // created" is the only legitimate fallback to static routing —
-          // a corrupt or partially-written store must FAIL the batch, not
-          // silently disable dynamic DIM routing. Mirror upsertByKey's
-          // crash recovery first: a writer that died mid-swap leaves the
-          // only full copy at `_old` — restore it rather than mistaking
-          // the store for never-created.
-          val dir = new org.apache.hadoop.fs.Path(configStore(warehouse))
-          val old = new org.apache.hadoop.fs.Path(configStore(warehouse) + "_old")
+          // a config writer that died mid-swap left a bucket set aside:
+          // restore it rather than routing without its rows. Existence is
+          // probed through the Hadoop FS instead of catching
+          // AnalysisException, so a corrupt store FAILS the batch instead
+          // of silently disabling dynamic DIM routing.
+          val store = configStore(warehouse)
+          Sinks.recoverStore(s, store)
+          val dir = new org.apache.hadoop.fs.Path(store)
           val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-          if (!fs.exists(dir) && fs.exists(old) && !fs.rename(old, dir))
-            throw new java.io.IOException(s"dimQuery: cannot restore $old")
-          if (!fs.exists(dir)) Seq.empty
+          val key = if (!fs.exists(dir)) Seq.empty[String] else {
+            val files = fs.listFiles(dir, true)
+            Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath)
+              .filter(_.getName.startsWith("part-")).map(_.toString).toSeq.sorted
+          }
+          if (key.isEmpty) Seq.empty
           else {
-            val key = fs.listStatus(dir).map(_.getPath.getName)
-              .filter(_.startsWith("part-")).sorted.toSeq
             if (!routes.exists(_._1 == key))
-              routes = Some(key -> s.read.parquet(dir.toString).collect().toSeq.map { r =>
+              routes = Some(key -> s.read.parquet(store).collect().toSeq.map { r =>
                 r.getAs[String]("source_table") -> DimSink.TableConfig(
                   r.getAs[String]("sink_table"),
                   r.getAs[String]("sink_columns").split(",").toSeq,

@@ -541,7 +541,7 @@ object Corpus {
   /** Cross-split contamination screen — after [[holdoutSplit]], measure
     * how much of each heldout document's content also appears in the
     * train side as a word `n`-gram (the train/eval leakage audit; the
-    * benchmark-vocab variant is [[Dedup.contaminationScreen]]). Emits,
+    * benchmark-vocab variant is [[Dedup.contaminationProfile]]). Emits,
     * per heldout doc, its distinct-gram count, how many of those grams
     * occur anywhere in train, and the contaminated flag.
     *
@@ -549,7 +549,7 @@ object Corpus {
     * doc-locally, the train set is gram-distinct (one map-side-combined
     * aggregate), and the hit test is a semi-join at gram grain; nothing
     * is ever doc×doc. At 100 TB put a bloom filter of the train grams in
-    * front of the semi-join (the [[Dedup.bloomIncremental]] pattern) so
+    * front of the semi-join (the [[Dedup.incrementalDedup]] pattern) so
     * only probable hits shuffle. */
   def splitContamination(
       docs: DataFrame,

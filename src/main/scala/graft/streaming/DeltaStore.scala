@@ -56,7 +56,7 @@ object DeltaStore {
     * key within one batch retires the key, an earlier one loses to the
     * newer upsert. Without it (key columns only) the tombstone's null
     * orderCol sorts last and the batch's upsert wins, the
-    * [[graft.streaming.Sinks.upsertByKey]] batch semantics. Ties on
+    * [[Sinks.upsertByKeyPartitioned]] batch semantics. Ties on
     * orderCol resolve upsert-wins either way. */
   def append(batch: DataFrame, keyCols: Seq[String], orderCol: String,
       path: String, epochId: Long, deleteKeys: Option[DataFrame] = None): Unit = {

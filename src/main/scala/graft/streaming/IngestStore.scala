@@ -14,10 +14,15 @@ private[streaming] object IngestStore {
 
   /** The [[Sinks.upsertByKeyPartitioned]] store at `dir` without its
     * `_bucket` partition and `_ver` epoch columns; None before its first
-    * write. */
-  def readStore(spark: SparkSession, dir: String): Option[DataFrame] =
+    * write. Every caller is the store's own writer, so it replays an
+    * interrupted swap first ([[Sinks.recoverStore]]): a bucket left set
+    * aside would otherwise be missing from the state the batch is
+    * computed against. */
+  def readStore(spark: SparkSession, dir: String): Option[DataFrame] = {
+    Sinks.recoverStore(spark, dir)
     if (existsDir(spark, dir)) Some(spark.read.parquet(dir).drop("_bucket", "_ver"))
     else None
+  }
 
   /** Merge edges for star components over the (a, b) `pairs`: an
     * endpoint that `groups` (`idCol`, `canon`) knows maps to its group

@@ -59,6 +59,10 @@ object SemIngest {
     val spark = batch.sparkSession
     val centsDir = s"$root/cents"
     val textsDir = s"$root/texts"
+    // a crash inside recenter's centroid swap may have left the only
+    // centroids set aside: replay it before they are required below
+    Sinks.recover(new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration),
+      new Path(centsDir), new Path(centsDir + "_old"))
     val state = readStore(spark, textsDir)
     require(epochId == 0L || state.isDefined,
       s"SemIngest: texts store missing at $textsDir for epoch $epochId — " +
@@ -185,7 +189,8 @@ object SemIngest {
     * leaves cells from the new geometry with the old centroids: pair
     * DISCOVERY degrades (never corrupts — keepers stay min-id per group)
     * until recenter is re-run, which converges; the centroid swap itself
-    * is rename-aside with recovery at the next call. */
+    * goes through [[Sinks.publish]], and [[processBatch]] replays an
+    * interrupted one before it requires the centroids. */
   def recenter(
       spark: SparkSession,
       root: String,
@@ -197,12 +202,6 @@ object SemIngest {
       targetBucketBytes: Long = 256L << 20): Unit = {
     val centsDir = s"$root/cents"
     val textsDir = s"$root/texts"
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val centsOld = new Path(centsDir + "_old")
-    // recovery: an interrupted swap left the only centroids set aside
-    if (!existsDir(spark, centsDir) && fs.exists(centsOld) &&
-        !fs.rename(centsOld, new Path(centsDir)))
-      throw new java.io.IOException(s"SemIngest: cannot restore $centsOld")
     val store = readStore(spark, textsDir).getOrElse(
       throw new IllegalStateException(
         s"SemIngest: no texts store at $textsDir to recenter"))
@@ -243,16 +242,9 @@ object SemIngest {
       .localCheckpoint(true)
     Sinks.upsertByKeyPartitioned(textsRows, Seq("vec_id"), "_ver",
       textsDir, nBuckets, targetBucketBytes = targetBucketBytes)
-    val centsNew = new Path(centsDir + "_new")
-    cents.write.mode("overwrite").parquet(centsNew.toString)
-    fs.delete(centsOld, true)
-    if (!fs.rename(new Path(centsDir), centsOld))
-      throw new java.io.IOException(s"SemIngest: cannot set aside $centsDir")
-    if (!fs.rename(centsNew, new Path(centsDir))) {
-      fs.rename(centsOld, new Path(centsDir)) // restore
-      throw new java.io.IOException(s"SemIngest: cannot publish $centsNew")
-    }
-    fs.delete(centsOld, true)
+    cents.write.mode("overwrite").parquet(centsDir + "_new")
+    Sinks.publish(new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration),
+      new Path(centsDir + "_new"), new Path(centsDir), new Path(centsDir + "_old"))
   }
 
   /** The store's survivors — each group's min-id member plus every

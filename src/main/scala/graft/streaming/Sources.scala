@@ -12,11 +12,12 @@ import graft.core.Envelopes
   *  - S4: the Debezium table_process config stream.
   *
   * The transforms downstream of these are the SAME functions the
-  * correctness gates drive through MemoryStream
+  * correctness gates drive through file-fed streaming queries
   * ([[StreamHarness]]/`SparkEntry` q28-q52) — this file is the thin
   * `readStream` binding in front of them, so the tested logic and the
   * production logic are one code path. (No broker exists in the build/test
-  * environment; see [[graft.apps.GmallApp]] for the full wiring.)
+  * environment; [[fileValues]] binds the same parsers to file drops, and
+  * [[graft.apps.GmallApp]] holds the full wiring.)
   */
 object Sources {
 

@@ -64,6 +64,28 @@ class CapIngestSpec extends SparkTestBase {
     org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(root))
   }
 
+  test("a bucket a crashed swap left set aside is restored before the replayed batch reads state") {
+    val (first, second) = (docs.where($"doc_id" <= 20), docs.where($"doc_id" > 20))
+    val clean = java.nio.file.Files.createTempDirectory("cap_ingest_clean_").toString
+    val crashed = java.nio.file.Files.createTempDirectory("cap_ingest_crash_").toString
+    run(clean, Seq(first, second), 1)
+    run(crashed, Seq(first), 1)
+    // epoch 1's first attempt died between setting aside the bucket that
+    // holds group "even"'s keeper and publishing it: the bucket's only
+    // copy sits under `keep_old`. Reading state without it would keep a
+    // second "even" row beside the keeper the write's recovery restores.
+    val keep = s"$crashed/keep"
+    val bucket = spark.read.parquet(keep).where($"grp" === "even")
+      .select($"_bucket").as[Int].head()
+    assert(new java.io.File(s"${keep}_old").mkdirs())
+    assert(new java.io.File(s"$keep/_bucket=$bucket")
+      .renameTo(new java.io.File(s"${keep}_old/_bucket=$bucket")))
+    CapIngest.processBatch(second, crashed, 1L, 1, "grp", "doc_id")
+    assert(survivors(crashed) === survivors(clean))
+    assert(!new java.io.File(s"${keep}_old").exists())
+    Seq(clean, crashed).foreach(r => org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(r)))
+  }
+
   test("epoch > 0 without a store fails loudly instead of restarting cap state") {
     val root = java.nio.file.Files.createTempDirectory("cap_ingest_chain_").toString
     intercept[IllegalArgumentException] {

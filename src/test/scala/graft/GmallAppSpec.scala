@@ -180,6 +180,15 @@ class GmallAppSpec extends SparkTestBase {
       assert(graft.streaming.DimSink.readDelta(spark, s"$wh/dim", commentCfg)
         .select("id").as[String].collect().toSet === Set("cm3", "cm4"),
         "routing continued after the config row was deleted")
+      // re-adding the route to the store the delete emptied routes again
+      cfgIn.addData(Seq(
+        """{"op":"c","ts_ms":30,"after":{"source_table":"comment_info","sink_table":"dim_comment_info","sink_columns":"id,appraise"}}"""))
+      cfgQ.processAllAvailable()
+      dbIn.addData(Seq(commentEnv(6)))
+      dimQ.processAllAvailable()
+      assert(graft.streaming.DimSink.readDelta(spark, s"$wh/dim", commentCfg)
+        .select("id").as[String].collect().toSet === Set("cm3", "cm4", "cm6"),
+        "a route re-added after a delete did not take effect")
     } finally { dimQ.stop(); cfgQ.stop() }
   }
 
@@ -267,6 +276,41 @@ class GmallAppSpec extends SparkTestBase {
         "the DIM batch projected the stale routing table's columns")
       assert(routed.select("id", "comment_txt").as[(String, String)].collect().toSeq
         === Seq(("cm3", "x")))
+    } finally { dimQ.stop(); cfgQ.stop() }
+  }
+
+  test("dimQuery restores a config-store bucket a crashed swap left set aside") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val wh = Files.createTempDirectory("graft_cfgcrash_").toString
+    val dbIn = MemoryStream[String]
+    val cfgIn = MemoryStream[String]
+    val db = Envelopes.cleanDirty(Envelopes.parseMaxwell(dbIn.toDS().toDF()))._1
+    val cfg = graft.streaming.Sources.projectConfig(
+      Envelopes.cleanDirty(Envelopes.parseDebeziumConfig(cfgIn.toDS().toDF()))._1)
+    val dimQ = GmallApp.dimQuery(spark, db, wh, Seq.empty, s"$wh/ckpt/dim")
+    val cfgQ = GmallApp.configQuery(spark, cfg, wh, s"$wh/ckpt/cfg")
+    try {
+      cfgIn.addData(Seq(
+        """{"op":"c","ts_ms":10,"after":{"source_table":"comment_info","sink_table":"dim_comment_info","sink_columns":"id,appraise"}}"""))
+      cfgQ.processAllAvailable()
+      // a config write died between setting the route's bucket aside and
+      // publishing its rewrite: the route's only copy is under `_old`
+      val store = GmallApp.configStore(wh)
+      val buckets = new java.io.File(store).listFiles().map(_.getName)
+        .filter(_.startsWith("_bucket="))
+      assert(buckets.length === 1)
+      assert(new java.io.File(s"${store}_old").mkdirs())
+      assert(new java.io.File(s"$store/${buckets.head}")
+        .renameTo(new java.io.File(s"${store}_old/${buckets.head}")))
+      dbIn.addData(Seq(
+        s"""{"database":"gmall","table":"comment_info","type":"insert","ts":3,""" +
+          s""""data":{"id":"cm3","appraise":"1201","comment_txt":"x"},"old":null}"""))
+      dimQ.processAllAvailable()
+      val routed = graft.streaming.DimSink.readDelta(spark, s"$wh/dim",
+        graft.streaming.DimSink.TableConfig("dim_comment_info", Seq("id", "appraise"), "id"))
+      assert(routed.select("id").as[String].collect().toSeq === Seq("cm3"),
+        "the DIM batch routed without the set-aside route")
+      assert(!new java.io.File(s"${store}_old").exists())
     } finally { dimQ.stop(); cfgQ.stop() }
   }
 

@@ -69,6 +69,45 @@ class SemIngestSpec extends SparkTestBase {
     }
   }
 
+  test("a crash inside recenter's centroid swap is replayed before the next batch needs centroids") {
+    val clean = Files.createTempDirectory("graft_sem_swap_clean_").toString
+    val crashed = Files.createTempDirectory("graft_sem_swap_crash_").toString
+    // the mid-stream cadence feed: epoch 1 recenters with a Lloyd round
+    // that moves the centroids
+    val batches = Seq(
+      df((100L, Array(0f, 0.9f), 1), (101L, Array(0f, 1.1f), 1)),
+      df((1L, Array(0f, 0.999f), 2), (2L, Array(0f, 1.001f), 2), (5L, Array(9f, 0f), 3)),
+      df((7L, Array(0f, -5f), 4)))
+    def ingest(root: String, epoch: Int): Unit =
+      SemIngest.processBatchWithCadence(batches(epoch), root, epoch.toLong,
+        nCells = 2, threshold = 0.99, lloydRounds = 1)
+    def mv(a: String, b: String): Unit =
+      assert(new java.io.File(a).renameTo(new java.io.File(b)), s"rename $a -> $b")
+    def state(root: String) = (
+      spark.read.parquet(s"$root/texts").select("vec_id", "cell", "canon")
+        .as[(Long, Long, Long)].collect().toSet,
+      spark.read.parquet(s"$root/cents").collect().map(_.toSeq).toSet)
+    try {
+      (0 to 2).foreach(ingest(clean, _))
+      ingest(crashed, 0)
+      val preCents = s"$crashed/cents_pre"
+      spark.read.parquet(s"$crashed/cents").write.parquet(preCents)
+      ingest(crashed, 1)
+      // epoch 1 died after recenter's texts upsert, with the refit staged
+      // at `cents_new` and the old centroids set aside at `cents_old`
+      mv(s"$crashed/cents", s"$crashed/cents_new")
+      mv(preCents, s"$crashed/cents_old")
+      ingest(crashed, 1) // the replay
+      ingest(crashed, 2)
+      assert(surv(crashed) === surv(clean))
+      assert(state(crashed) === state(clean))
+      assert(!new java.io.File(s"$crashed/cents_old").exists())
+    } finally {
+      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(clean))
+      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(crashed)); ()
+    }
+  }
+
   test("cadence-on equals cadence-off at feed end under an id-ascending feed (seed equality)") {
     val rootOn = Files.createTempDirectory("graft_sem_eq_on_").toString
     val rootOff = Files.createTempDirectory("graft_sem_eq_off_").toString

@@ -33,12 +33,12 @@ class SinksSpec extends SparkTestBase {
     val dir = Files.createTempDirectory("graft_upsert_").toString + "/store"
     val b1 = Seq(("k1", 1L, "v1a"), ("k1", 2L, "v1b"), ("k2", 1L, "v2a"))
       .toDF("id", "ts", "payload")
-    Sinks.upsertByKey(b1, Seq("id"), "ts", dir)
+    Sinks.upsertByKeyPartitioned(b1, Seq("id"), "ts", dir)
     val s1 = spark.read.parquet(dir).select("id", "payload").as[(String, String)].collect().toMap
     assert(s1 === Map("k1" -> "v1b", "k2" -> "v2a")) // last-by-ts wins in batch
 
     val b2 = Seq(("k2", 5L, "v2new"), ("k3", 1L, "v3")).toDF("id", "ts", "payload")
-    Sinks.upsertByKey(b2, Seq("id"), "ts", dir)
+    Sinks.upsertByKeyPartitioned(b2, Seq("id"), "ts", dir)
     val s2 = spark.read.parquet(dir).select("id", "payload").as[(String, String)].collect().toMap
     assert(s2 === Map("k1" -> "v1b", "k2" -> "v2new", "k3" -> "v3")) // upsert semantics
   }
