@@ -414,9 +414,8 @@ object Bench {
     // small jobs finish promptly regardless of queue depth; serial batch
     // gates run one job at a time and are unaffected. (A pool entry is
     // required: FAIR mode alone still schedules FIFO *within* the default
-    // pool.) The raised broadcast timeout is belt-and-braces for the same
-    // shape — local[32] contends the driver in ways a real cluster's
-    // dedicated driver does not.
+    // pool.) The raised broadcast timeout (graft.core.Engine.Defaults) is
+    // belt-and-braces for the same shape.
     val fairPools = Files.createTempFile("graft_fair_", ".xml")
     Files.writeString(fairPools,
       """<?xml version="1.0"?>
@@ -430,13 +429,12 @@ object Bench {
         |""".stripMargin)
     fairPools.toFile.deleteOnExit() // Spark reads the file at scheduler
     // init; exit-time deletion is safe and stops one-file-per-run temp leaks
-    val spark = SparkSession.builder()
+    val spark = graft.core.Engine.configure(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .config("spark.scheduler.mode", "FAIR")
-      .config("spark.scheduler.allocation.file", fairPools.toString)
-      .config("spark.sql.broadcastTimeout", "3600")
+      .config("spark.scheduler.allocation.file", fairPools.toString))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def fatal(msg: String): Nothing = {

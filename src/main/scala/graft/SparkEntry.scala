@@ -1,13 +1,8 @@
 package graft
 
-import java.sql.Timestamp
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.core.{Envelopes, Tables, TopicDb}
-import graft.apps.{GmallApp, GmallPipelines}
-import graft.operators.{Dedup, EventOps, Multimodal, Relational, Similarity, Sketches, TextProfile}
-import graft.functions.TextFunctions
-import graft.streaming.{DimSink, SketchStream, StatefulOps, StreamHarness}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.Tables
+import graft.operators.Relational
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *

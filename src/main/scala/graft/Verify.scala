@@ -15,11 +15,10 @@ object Verify {
     require(unknown.isEmpty, s"no such queries: ${unknown.toSeq.sorted.mkString(", ")}")
     def keep(name: String): Boolean = only.forall(_.contains(name))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    val spark = graft.core.Engine.configure(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

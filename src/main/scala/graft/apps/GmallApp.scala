@@ -3,7 +3,7 @@ package graft.apps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.core.{Envelopes, TopicDb}
+import graft.core.TopicDb
 import graft.streaming.{DimCache, DimSink, Sinks, Sources, Windows}
 
 /** The reference warehouse's full production DAG, assembled from the SAME
@@ -14,8 +14,9 @@ import graft.streaming.{DimCache, DimSink, Sinks, Sources, Windows}
   * (`GateSupport.DagRun`, q110 and q113–q124) and perfbench's
   * `dag_trickle` workload all execute it.
   *
-  *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions \
-  *     --class graft.apps.GmallApp graft.jar kafka:9092 /warehouse
+  *   spark-submit --class graft.apps.GmallApp graft.jar kafka:9092 /warehouse
+  *
+  * (no `--conf` needed: [[setup]] applies the engine policy).
   *
   * Mirrors the reference app-per-pipeline layout (ods→dwd→dws,
   * app/dim/DimApp.java + the app/dwd and app/dws packages): one shared topic_db
@@ -35,17 +36,16 @@ object GmallApp {
     * micro-batches that take seconds. */
   val DagTrigger: Trigger = Trigger.ProcessingTime(500L)
 
+  /** The production session's builder: [[graft.core.Engine.configure]]
+    * under the app's name; master and CPU count stay with `spark-submit`. */
+  def setup(builder: SparkSession.Builder): SparkSession.Builder =
+    graft.core.Engine.configure(builder.appName("gmall-graft"))
+
   def main(args: Array[String]): Unit = {
     val bootstrap = args.headOption.getOrElse("localhost:9092")
     val warehouse = if (args.length > 1) args(1) else "/tmp/gmall"
-    val spark = SparkSession.builder()
-      .appName("gmall-graft")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
-    val queries = start(spark, bootstrap, warehouse)
-    queries.foreach(_ => ())
+    val spark = setup(SparkSession.builder()).getOrCreate()
+    start(spark, bootstrap, warehouse)
     spark.streams.awaitAnyTermination()
   }
 
@@ -53,14 +53,15 @@ object GmallApp {
     * OWN consumer (fresh readStream per factory call) — the reference's
     * one-consumer-group-per-app layout; sharing one source instance across
     * queries also breaks multi-scan watermark accounting. */
-  def start(spark: SparkSession, bootstrap: String, warehouse: String): Seq[StreamingQuery] =
+  def start(spark: SparkSession, bootstrap: String, warehouse: String): Seq[StreamingQuery] = {
+    def kafka(topic: String) = Sources.kafkaValues(spark, bootstrap, topic, "gmall_graft")
     wire(spark,
-      () => Sources.topicDb(spark, bootstrap, "gmall_graft"),
-      () => Sources.topicLog(spark, bootstrap, "gmall_graft"),
+      () => Sources.topicDb(kafka("topic_db")),
+      () => Sources.topicLog(kafka("topic_log")),
       warehouse) :+
-      configQuery(spark,
-        Sources.configStream(spark, bootstrap, "gmall_graft"),
+      configQuery(Sources.configStream(kafka("table_process_config")),
         warehouse, s"$warehouse/ckpt/config")
+  }
 
   /** [[start]] over FILE-DROP directories instead of Kafka — the
     * data-lake replay deployment this sandbox CAN execute (GmallAppSpec
@@ -73,18 +74,16 @@ object GmallApp {
     * REPLAY's event-time range is the whole history, not the reference's
     * live ±15 min). */
   def startFromFiles(spark: SparkSession, inRoot: String, warehouse: String,
-      joinTtlSec: Long = 900L, semCells: Int = 16): Seq[StreamingQuery] =
+      joinTtlSec: Long = 900L, semCells: Int = 16): Seq[StreamingQuery] = {
+    def files(topic: String) = Sources.fileValues(spark, s"$inRoot/$topic")
     (wire(spark,
-      () => Envelopes.cleanDirty(Envelopes.parseMaxwell(
-        Sources.fileValues(spark, s"$inRoot/topic_db")))._1,
-      () => Envelopes.cleanDirty(Envelopes.parseLog(
-        Sources.fileValues(spark, s"$inRoot/topic_log")))._1,
+      () => Sources.topicDb(files("topic_db")),
+      () => Sources.topicLog(files("topic_log")),
       warehouse, joinTtlSec) :+
-      configQuery(spark, Sources.projectConfig(Envelopes.cleanDirty(
-          Envelopes.parseDebeziumConfig(
-            Sources.fileValues(spark, s"$inRoot/table_process_config")))._1),
+      configQuery(Sources.configStream(files("table_process_config")),
         warehouse, s"$warehouse/ckpt/config")) ++
       curationWire(spark, inRoot, warehouse, semCells)
+  }
 
   /** The CURATION leg of the DAG — the LLM-data-pipeline extension
     * running beside the reference warehouse graph: paragraph-grain fuzzy
@@ -162,7 +161,7 @@ object GmallApp {
 
     // ---- DIM: route + prune + dynamic keyed stores; the routing table
     // ---- is re-read whenever the config store has been rewritten -------
-    val dim = dimQuery(spark, dbSource(), warehouse, dimConfigs, ckpt("dim"))
+    val dim = dimQuery(dbSource(), warehouse, dimConfigs, ckpt("dim"))
 
     // ---- DWD log family: 5-way split, persist-once fan-out ------------
     def to(name: String, f: DataFrame => DataFrame) = (name, f, out(name))
@@ -236,8 +235,7 @@ object GmallApp {
     * never poison the DIM query. The table is a keyed store
     * ([[Sinks.upsertByKeyPartitioned]], key `source_table`). Input shape:
     * [[graft.streaming.Sources.configStream]]. */
-  def configQuery(spark: SparkSession, cfg: DataFrame, warehouse: String,
-      checkpoint: String): StreamingQuery =
+  def configQuery(cfg: DataFrame, warehouse: String, checkpoint: String): StreamingQuery =
     cfg.writeStream.option("checkpointLocation", checkpoint).trigger(DagTrigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val valid = batch.where(col("source_table").isNotNull &&
@@ -279,8 +277,8 @@ object GmallApp {
     * or emptied by `d` ops — holds no dynamic route. A replayed epoch
     * re-merges the same rows, which is idempotent; read the resolved view
     * with [[DimSink.readDelta]]. */
-  def dimQuery(spark: SparkSession, db: DataFrame, warehouse: String,
-      static: Seq[DimSink.TableConfig], checkpoint: String): StreamingQuery = {
+  def dimQuery(db: DataFrame, warehouse: String, static: Seq[DimSink.TableConfig],
+      checkpoint: String): StreamingQuery = {
     // (config store part-file names, routes parsed from them)
     var routes: Option[(Seq[String], Seq[(String, DimSink.TableConfig)])] = None
     db.writeStream.option("checkpointLocation", checkpoint).trigger(DagTrigger)

@@ -58,7 +58,7 @@ object TopicDb {
     * a topic). */
   def apply(spark: SparkSession, sfDir: String): DataFrame =
     SessionCache(spark, "topic_db|" + sfDir) {
-      Envelopes.cleanDirty(Envelopes.parseMaxwell(raw(spark, sfDir)))._1
+      graft.streaming.Sources.topicDb(raw(spark, sfDir))
     }
 
   /** Every table [[raw]] synthesizes, in leg order. */

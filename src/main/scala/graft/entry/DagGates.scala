@@ -1,13 +1,10 @@
 package graft.entry
 
-import java.sql.Timestamp
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Envelopes, Tables, TopicDb}
-import graft.apps.{GmallApp, GmallPipelines}
-import graft.operators.{Dedup, EventOps, Multimodal, Relational, Similarity, Sketches, TextProfile}
-import graft.functions.TextFunctions
-import graft.streaming.{DimSink, SketchStream, StatefulOps, StreamHarness}
+import graft.core.{Envelopes, TopicDb}
+import graft.apps.GmallPipelines
+import graft.streaming.{DimSink, StreamHarness}
 
 import GateSupport._
 import OracleSupport._

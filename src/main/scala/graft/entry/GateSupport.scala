@@ -3,11 +3,11 @@ package graft.entry
 import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Envelopes, Tables, TempDirs, TopicDb}
-import graft.apps.{GmallApp, GmallPipelines}
-import graft.operators.{Dedup, EventOps, Multimodal, Relational, Similarity, Sketches, TextProfile}
+import graft.core.{Engine, Tables, TempDirs, TopicDb}
+import graft.apps.GmallApp
+import graft.operators.Dedup
 import graft.functions.TextFunctions
-import graft.streaming.{DimSink, SketchStream, StatefulOps, StreamHarness}
+import graft.streaming.{StatefulOps, StreamHarness}
 
 /** Shared runtime plumbing for the gate families split out of the old
   * monolithic SparkEntry (round-9 verdict ask #5): micro-batch feed
@@ -336,17 +336,13 @@ private[graft] object GateSupport {
       (n, (2 * n + 2) / 3) // n = 2 gives cEarly = 2: one flush round
     }
 
+    /** The settle's session: a harness clone of `s` at
+      * [[Engine.DagPartitions]]. */
+    private[graft] def session(s: SparkSession): SparkSession =
+      Engine.harness(StreamHarness.prepared(s), Engine.DagPartitions)
+
     private def run(s: SparkSession, d: String): String = {
-      // same clone discipline as StreamHarness: capped shuffle partitions
-      // + RocksDB, caller's session untouched
-      val session = StreamHarness.prepared(s)
-      // the DAG runs ~17 queries CONCURRENTLY (parallel settle below), so
-      // cross-query parallelism already fills the host and per-query
-      // partitions only multiply state-store commits: interleaved A/B on
-      // a clean host measured 4 parts at 75.7/76.2 s vs 8 parts at
-      // 103.3/88.5 s for the whole charge at sf0.1. Harness gates that
-      // run ONE query at a time keep the separately-measured default of 8.
-      session.conf.set("spark.sql.shuffle.partitions", "4")
+      val session = this.session(s)
       import session.implicits._
       // TempDirs, not a bare createTempDirectory: `wh` is read by every
       // later DAG gate in this JVM, so the root can only die at exit —

@@ -1,13 +1,7 @@
 package graft.entry
 
-import java.sql.Timestamp
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.core.{Envelopes, Tables, TopicDb}
-import graft.apps.{GmallApp, GmallPipelines}
-import graft.operators.{Dedup, EventOps, Multimodal, Relational, Similarity, Sketches, TextProfile}
+import graft.operators.Dedup
 import graft.functions.TextFunctions
-import graft.streaming.{DimSink, SketchStream, StatefulOps, StreamHarness}
 
 /** Shared DuckDB oracle-SQL fragments (CTEs, expression mirrors of
   * graft.functions/operators) for the per-family oracle maps. Every

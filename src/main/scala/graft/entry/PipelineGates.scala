@@ -4,9 +4,8 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Envelopes, Tables, TempDirs, TopicDb}
-import graft.apps.{GmallApp, GmallPipelines}
-import graft.operators.{Dedup, EventOps, Multimodal, Relational, Similarity, Sketches, TextProfile}
-import graft.functions.TextFunctions
+import graft.apps.GmallPipelines
+import graft.operators.{Relational, Sketches}
 import graft.streaming.{DimSink, SketchStream, StatefulOps, StreamHarness}
 
 import GateSupport._

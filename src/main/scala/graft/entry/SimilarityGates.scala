@@ -1,13 +1,10 @@
 package graft.entry
 
-import java.sql.Timestamp
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Envelopes, Tables, TempDirs, TopicDb}
-import graft.apps.{GmallApp, GmallPipelines}
-import graft.operators.{Cap, Dedup, EventOps, Multimodal, Relational, Similarity, Sketches, TextProfile}
-import graft.functions.TextFunctions
-import graft.streaming.{DimSink, SketchStream, StatefulOps, StreamHarness}
+import graft.core.{Tables, TempDirs}
+import graft.operators.{Cap, Dedup, Similarity}
+import graft.streaming.StreamHarness
 
 import GateSupport._
 import OracleSupport._

@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Shared MinHash arithmetic: 60-bit md5 prefix hashes permuted by affine
   * maps mod the Mersenne prime 2^61−1 (Broder 1997 construction). The same

@@ -47,33 +47,31 @@ object Sources {
       .load()
       .select(col("value").cast("string").as("value"))
 
-  /** S3 — the parsed, clean `topic_db` CDC stream (dirty rows routed out,
-    * exactly like the gate's [[graft.core.TopicDb]] synthesis). */
-  def topicDb(spark: SparkSession, bootstrap: String, groupId: String): DataFrame =
-    Envelopes.cleanDirty(Envelopes.parseMaxwell(
-      kafkaValues(spark, bootstrap, "topic_db", groupId)))._1
+  /** S3 — the parsed, clean `topic_db` CDC stream over a `value` frame
+    * ([[kafkaValues]] in production, [[fileValues]] for file drops):
+    * dirty rows routed out, exactly like the gate's
+    * [[graft.core.TopicDb]] synthesis. */
+  def topicDb(values: DataFrame): DataFrame =
+    Envelopes.cleanDirty(Envelopes.parseMaxwell(values))._1
 
-  /** Behavior-log stream (`topic_log`), parsed and cleaned. */
-  def topicLog(spark: SparkSession, bootstrap: String, groupId: String): DataFrame =
-    Envelopes.cleanDirty(Envelopes.parseLog(
-      kafkaValues(spark, bootstrap, "topic_log", groupId)))._1
+  /** Behavior-log stream (`topic_log`) over a `value` frame, parsed and
+    * cleaned. */
+  def topicLog(values: DataFrame): DataFrame =
+    Envelopes.cleanDirty(Envelopes.parseLog(values))._1
 
-  /** Debezium config rows projected to a flat (op, ts_ms, fields…) shape.
+  /** S4 — the Debezium config stream over a `value` frame, projected to a
+    * flat (op, ts_ms, fields…) shape; the DIM app folds it into its
+    * routing table per micro-batch ([[graft.apps.GmallApp.configQuery]]).
     * A delete op carries its row in `before` (after is null), so the key
     * coalesces across both sides. */
-  def projectConfig(clean: DataFrame): DataFrame =
-    clean.select(col("op"), col("ts_ms"),
-      coalesce(col("after.source_table"), col("before.source_table")).as("source_table"),
-      col("after.sink_table").as("sink_table"),
-      col("after.sink_columns").as("sink_columns"),
-      col("after.sink_pk").as("sink_pk"),
-      col("after.sink_extend").as("sink_extend"))
-
-  /** S4 — the Debezium config stream; the DIM app folds it into its
-    * routing table per micro-batch ([[graft.apps.GmallApp.configQuery]]). */
-  def configStream(spark: SparkSession, bootstrap: String, groupId: String): DataFrame =
-    projectConfig(Envelopes.cleanDirty(Envelopes.parseDebeziumConfig(
-      kafkaValues(spark, bootstrap, "table_process_config", groupId)))._1)
+  def configStream(values: DataFrame): DataFrame =
+    Envelopes.cleanDirty(Envelopes.parseDebeziumConfig(values))._1
+      .select(col("op"), col("ts_ms"),
+        coalesce(col("after.source_table"), col("before.source_table")).as("source_table"),
+        col("after.sink_table").as("sink_table"),
+        col("after.sink_columns").as("sink_columns"),
+        col("after.sink_pk").as("sink_pk"),
+        col("after.sink_extend").as("sink_extend"))
 
   /** File-drop source — the data-lake replay binding next to
     * [[kafkaValues]]: stream a directory of parquet chunks with a single

@@ -32,25 +32,14 @@ object StreamHarness {
 
   private val counter = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Clone the session for one harness run: caller's runtime conf carried
-    * over, shuffle partitions capped, RocksDB state store. The clone
-    * (`newSession`: same SparkContext + cache, isolated SQLConf) is the
-    * only session these settings touch, so concurrent harness runs never
-    * race on shared session state and the caller's conf is never mutated.
-    *
-    * Shuffle partitions are capped at 8 for the query's lifetime: each
-    * stateful operator commits one state-store instance PER shuffle
-    * partition PER micro-batch, so a 32-partition session pays 4× the
-    * store-commit overhead for gate-sized feeds (≤300k rows) with zero
-    * parallelism gain — measured 2-3× wall-clock on the DWS window gates,
-    * with 4 and 16 both slower than 8 at sf0.1/local[32]. Results are
-    * partition-count independent; production sizing is the deployment's
-    * own concern.
-    *
-    * The state store is ALWAYS RocksDB, whatever the caller set: it is the
-    * only provider `transformWithState` runs on, and the store that holds
-    * state > heap at production scale ([[graft.apps.GmallApp]] pins it
-    * too). Gate results are provider-independent. */
+  /** Clone the session for one harness run: the caller's runtime conf
+    * carried over, then [[graft.core.Engine.harness]]'s values set over it
+    * (partitions capped at [[graft.core.Engine.HarnessPartitions]]). The
+    * clone (`newSession`: same SparkContext + cache, isolated SQLConf) is
+    * the only session these settings touch, so concurrent harness runs
+    * never race on shared session state and the caller's conf is never
+    * mutated. Every other setting is the caller's, which every entry
+    * point builds through [[graft.core.Engine.configure]]. */
   private[graft] def prepared(spark: SparkSession): SparkSession = {
     val session = spark.newSession()
     // newSession starts from the BUILDER's options; carry over any conf the
@@ -62,43 +51,9 @@ object StreamHarness {
         catch { case _: org.apache.spark.sql.AnalysisException => () }
       }
     }
-    val cap = 8
+    val cap = graft.core.Engine.HarnessPartitions
     val parts = session.conf.get("spark.sql.shuffle.partitions").toIntOption
-    session.conf.set("spark.sql.shuffle.partitions",
-      math.min(parts.getOrElse(cap), cap).toString)
-    session.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // Caller-set values win over the defaults below (getAll holds only
-    // explicitly-set entries; getOption would see the SQLConf default and
-    // always look "set").
-    val callerSet = spark.conf.getAll
-    def default(k: String, v: String): Unit =
-      if (!callerSet.contains(k)) session.conf.set(k, v)
-    // Maintenance OFF the gate's critical path (r18, guide §5): the default
-    // 60 s interval fires mid-gate, and a 4-join query at 8 partitions holds
-    // 128 RocksDB instances whose concurrent snapshot uploads storm the
-    // disk/CPU exactly while later batches commit (measured: commitTimeMs
-    // 2.3 s/op on early batches → 10-20 s/op once maintenance kicks in).
-    // Harness gates run minutes and their checkpoints are deleted on
-    // return, so snapshot cadence buys nothing here; production tunes this
-    // to its recovery RPO.
-    default("spark.sql.streaming.stateStore.maintenanceInterval", "3600s")
-    // concurrent streaming queries on a saturated local[N] host can queue
-    // a broadcast-exchange job past the 300 s default (observed: the
-    // 17-query DAG gate at the ×10 bench leg); the timeout exists to
-    // catch hung exchanges, not healthy queueing — give it an hour.
-    default("spark.sql.broadcastTimeout", "3600")
-    // RocksDB commit cost: in snapshot mode every commit checkpoints each
-    // store's SST files, and row tracking reads every key before its
-    // write. Changelog checkpointing writes only the batch's changes, and
-    // the tracked row count feeds nothing but the numRowsTotal progress
-    // metric (which then reads 0). The warehouse-DAG settle at
-    // sf0.1/local[4], cold JVM, measured 384 s with neither (median of 3),
-    // 293 s with changelog alone (1 run) and 175 s with both (median of 3);
-    // the HDFS-backed store took 307 s (median of 3).
-    default("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-    default("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "false")
-    session
+    graft.core.Engine.harness(session, math.min(parts.getOrElse(cap), cap))
   }
 
   /** [[runFiles]] over driver-held batches (specs, tiny literal feeds):
@@ -108,7 +63,7 @@ object StreamHarness {
     runFiles(spark, batches.map(spark.createDataset(_)))(build)
 
   /** Unload every state-store provider the stopped query leaves loaded
-    * (r18): with the long maintenance interval below, nothing else unloads
+    * (r18): with the harness's long maintenance interval nothing else unloads
     * them until the next tick, so 40+ sequential streaming gates would
     * accumulate hundreds of live RocksDB instances (native memory +
     * background threads) across a bench run. Providers of a CONCURRENTLY

@@ -14,11 +14,10 @@ object DumpPlans {
     val outDir = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     new File(outDir).mkdirs()
-    val spark = SparkSession.builder()
+    val spark = graft.core.Engine.configure(SparkSession.builder()
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -211,11 +211,10 @@ object GenScale {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "/root/repo/updata/sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
+    val spark = graft.core.Engine.configure(SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val t0 = System.nanoTime()

@@ -11,11 +11,10 @@ object Profile {
     val qs = graft.SparkEntry.queriesFor(oracleRun = false)
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val builder = SparkSession.builder()
+    val builder = graft.core.Engine.configure(SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("PROFILE_CPUS", "32")}]")
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", sys.env.getOrElse("PROFILE_UI", "false"))
+      .config("spark.ui.enabled", sys.env.getOrElse("PROFILE_UI", "false")))
     // PROFILE_EVENTLOG=<dir> → Spark event log for offline per-stage/task
     // attribution (guide §7.1's UI data, greppable without a live UI)
     sys.env.get("PROFILE_EVENTLOG").foreach { dir =>

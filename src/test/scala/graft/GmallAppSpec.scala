@@ -3,7 +3,8 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import graft.apps.{GmallApp, GmallPipelines}
-import graft.core.{Envelopes, TopicDb}
+import graft.core.TopicDb
+import graft.streaming.Sources
 
 /** Executes the PRODUCTION DAG (GmallApp.wire — the exact graph `start`
   * deploys against Kafka) end-to-end through MemoryStream: DIM routing
@@ -35,11 +36,11 @@ class GmallAppSpec extends SparkTestBase {
     val logIns = scala.collection.mutable.ArrayBuffer.empty[MemoryStream[String]]
     def dbSource() = {
       val s = MemoryStream[String]; dbIns += s
-      Envelopes.cleanDirty(Envelopes.parseMaxwell(s.toDS().toDF()))._1
+      Sources.topicDb(s.toDS().toDF())
     }
     def logSource() = {
       val s = MemoryStream[String]; logIns += s
-      Envelopes.cleanDirty(Envelopes.parseLog(s.toDS().toDF()))._1
+      Sources.topicLog(s.toDS().toDF())
     }
 
     // join TTL covers the whole synthetic key range (Maxwell ts = order
@@ -142,11 +143,10 @@ class GmallAppSpec extends SparkTestBase {
     val wh = Files.createTempDirectory("graft_dyncfg_").toString
     val dbIn = MemoryStream[String]
     val cfgIn = MemoryStream[String]
-    val db = Envelopes.cleanDirty(Envelopes.parseMaxwell(dbIn.toDS().toDF()))._1
-    val cfg = graft.streaming.Sources.projectConfig(
-      Envelopes.cleanDirty(Envelopes.parseDebeziumConfig(cfgIn.toDS().toDF()))._1)
-    val dimQ = GmallApp.dimQuery(spark, db, wh, Seq.empty, s"$wh/ckpt/dim")
-    val cfgQ = GmallApp.configQuery(spark, cfg, wh, s"$wh/ckpt/cfg")
+    val db = Sources.topicDb(dbIn.toDS().toDF())
+    val cfg = Sources.configStream(cfgIn.toDS().toDF())
+    val dimQ = GmallApp.dimQuery(db, wh, Seq.empty, s"$wh/ckpt/dim")
+    val cfgQ = GmallApp.configQuery(cfg, wh, s"$wh/ckpt/cfg")
     try {
       def commentEnv(i: Int) =
         s"""{"database":"gmall","table":"comment_info","type":"insert","ts":$i,""" +
@@ -246,11 +246,10 @@ class GmallAppSpec extends SparkTestBase {
     val wh = Files.createTempDirectory("graft_cfgcache_").toString
     val dbIn = MemoryStream[String]
     val cfgIn = MemoryStream[String]
-    val db = Envelopes.cleanDirty(Envelopes.parseMaxwell(dbIn.toDS().toDF()))._1
-    val cfg = graft.streaming.Sources.projectConfig(
-      Envelopes.cleanDirty(Envelopes.parseDebeziumConfig(cfgIn.toDS().toDF()))._1)
-    val dimQ = GmallApp.dimQuery(spark, db, wh, Seq.empty, s"$wh/ckpt/dim")
-    val cfgQ = GmallApp.configQuery(spark, cfg, wh, s"$wh/ckpt/cfg")
+    val db = Sources.topicDb(dbIn.toDS().toDF())
+    val cfg = Sources.configStream(cfgIn.toDS().toDF())
+    val dimQ = GmallApp.dimQuery(db, wh, Seq.empty, s"$wh/ckpt/dim")
+    val cfgQ = GmallApp.configQuery(cfg, wh, s"$wh/ckpt/cfg")
     def cfgRow(ts: Long, op: String, columns: String) =
       s"""{"op":"$op","ts_ms":$ts,"after":{"source_table":"comment_info","sink_table":"dim_comment_info","sink_columns":"$columns"}}"""
     def commentEnv(i: Int) =
@@ -284,11 +283,10 @@ class GmallAppSpec extends SparkTestBase {
     val wh = Files.createTempDirectory("graft_cfgcrash_").toString
     val dbIn = MemoryStream[String]
     val cfgIn = MemoryStream[String]
-    val db = Envelopes.cleanDirty(Envelopes.parseMaxwell(dbIn.toDS().toDF()))._1
-    val cfg = graft.streaming.Sources.projectConfig(
-      Envelopes.cleanDirty(Envelopes.parseDebeziumConfig(cfgIn.toDS().toDF()))._1)
-    val dimQ = GmallApp.dimQuery(spark, db, wh, Seq.empty, s"$wh/ckpt/dim")
-    val cfgQ = GmallApp.configQuery(spark, cfg, wh, s"$wh/ckpt/cfg")
+    val db = Sources.topicDb(dbIn.toDS().toDF())
+    val cfg = Sources.configStream(cfgIn.toDS().toDF())
+    val dimQ = GmallApp.dimQuery(db, wh, Seq.empty, s"$wh/ckpt/dim")
+    val cfgQ = GmallApp.configQuery(cfg, wh, s"$wh/ckpt/cfg")
     try {
       cfgIn.addData(Seq(
         """{"op":"c","ts_ms":10,"after":{"source_table":"comment_info","sink_table":"dim_comment_info","sink_columns":"id,appraise"}}"""))
@@ -321,9 +319,9 @@ class GmallAppSpec extends SparkTestBase {
     import scala.jdk.CollectionConverters._
     val wh = Files.createTempDirectory("graft_dimjobs_").toString
     val dbIn = MemoryStream[String]
-    val db = Envelopes.cleanDirty(Envelopes.parseMaxwell(dbIn.toDS().toDF()))._1
+    val db = Sources.topicDb(dbIn.toDS().toDF())
     val static = Seq(graft.streaming.DimSink.TableConfig("dim_user_info", Seq("id", "name"), "id"))
-    val dimQ = GmallApp.dimQuery(spark, db, wh, static, s"$wh/ckpt/dim")
+    val dimQ = GmallApp.dimQuery(db, wh, static, s"$wh/ckpt/dim")
     val marker = s"graft-dimjobs-${System.nanoTime()}"
     // (query id, batch id) of every job start, plus the marker job's arrival
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()

@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all specs (one JVM, sbt forks once). */
+/** Shared local SparkSession for all specs (one JVM, sbt forks once), on
+  * the same engine defaults as every entry point ([[graft.core.Engine]]). */
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
 
@@ -13,12 +14,11 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkTestBase {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
+    val s = graft.core.Engine.configure(SparkSession.builder()
       .master("local[4]")
       .appName("graft-tests")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      .config("spark.ui.enabled", "false"))
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
