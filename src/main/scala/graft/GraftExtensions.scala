@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.graftshim.FunctionBridge
 import graft.functions.{TokenizeGenerator, VectorExpressions}
 
 /** SQL surface of the library's native expressions, as a standard
@@ -20,8 +19,10 @@ import graft.functions.{TokenizeGenerator, VectorExpressions}
   * app/dws/DwsTrafficSourceKeywordPageViewWindow.java:134) — in Spark
   * the extension injects the functions into every session built with the
   * conf, making them usable from pure SQL without any Scala import.
-  * [[GraftExtensions.registerAll]] applies the same registrations to an
-  * already-running session (tests, spark-shell).
+  * Every graft entry point builds its session through
+  * [[graft.core.Engine.configure]], which sets this conf, and a harness
+  * clone (`newSession`) inherits it — so this injection is the one
+  * registration path, in production, the gates and the specs alike.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -132,16 +133,5 @@ object GraftExtensions {
     case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
     case other => throw new IllegalArgumentException(
       s"$fn expects an int literal, got $other")
-  }
-
-  /** Apply the same registrations to a live session (the extensions conf
-    * only takes effect at session build). */
-  def registerAll(spark: SparkSession): Unit = {
-    functions.foreach { case (name, inf, builder) =>
-      FunctionBridge.register(spark, name, inf, builder)
-    }
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.GlobalWindowTopK))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.GlobalWindowTopK
   }
 }

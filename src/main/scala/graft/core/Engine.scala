@@ -21,7 +21,7 @@ object Engine {
   val Defaults: Map[String, String] = Map(
     "spark.sql.session.timeZone" -> "UTC",
     // the graft SQL functions and the GlobalWindowTopK optimizer rule in
-    // every session, not only where a caller runs registerAll
+    // every session; harness clones (`newSession`) inherit them
     "spark.sql.extensions" -> "graft.GraftExtensions",
     // the only provider transformWithState runs on, and the store that
     // holds state larger than the heap at production scale
@@ -30,10 +30,12 @@ object Engine {
     // store's SST files, and row tracking reads every key before its
     // write. Changelog checkpointing writes only the batch's changes, and
     // the tracked row count feeds nothing but the numRowsTotal progress
-    // metric (which then reads 0). The warehouse-DAG settle at
-    // sf0.1/local[4], cold JVM, measured 384 s with neither (median of 3),
-    // 293 s with changelog alone (1 run) and 175 s with both (median of 3);
-    // the HDFS-backed store took 307 s (median of 3).
+    // metric (which then reads 0). When these were chosen, the
+    // warehouse-DAG settle at sf0.1/local[4], cold JVM, took 384 s with
+    // neither (median of 3), 293 s with changelog alone (1 run), 175 s
+    // with both (median of 3) and 307 s on the HDFS store (median of 3).
+    // Later pipeline changes slowed it: with both, a re-measure (q110
+    // cold, 4 runs) took 260-330 s.
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
     "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "false",
     // concurrent streaming queries on a saturated local[N] host can queue

@@ -216,7 +216,6 @@ private[graft] object RelationalGates {
     // exact ranking ((value DESC, event_id) totally orders, so ties
     // can't hide in the rewrite's tie license).
     "q150_topk_sql" -> ((s, d) => {
-      graft.GraftExtensions.registerAll(s)
       Tables.events(s, d).createOrReplaceTempView("events_q150")
       val out = s.sql(
         """SELECT event_id, value, rn FROM (

@@ -3,7 +3,8 @@ package graft.entry
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Tables, TempDirs}
-import graft.operators.TextProfile
+import graft.operators.{NgramLm, TextProfile}
+import graft.operators.NgramLm.{Bigram, Trigram}
 import graft.functions.TextFunctions
 import graft.streaming.StreamHarness
 
@@ -18,24 +19,19 @@ import OracleSupport._
   * sides — the compare sorts columns by name before hashing). */
 private[graft] object TextGates {
 
-  /** The KN bigram stream / trained model over `d`'s documents, cached
-    * per (session, dir) — ONE training run serves q184 and q185 (the
-    * BPE-vocab caching discipline). */
-  private def knStreamCached(s: SparkSession, d: String): DataFrame =
-    graft.core.SessionCache(s, s"knstream|$d")(
-      graft.operators.NgramLm.bigramStream(Tables.documents(s, d)))
-  private def knModelCached(s: SparkSession, d: String): DataFrame =
-    graft.core.SessionCache(s, s"knmodel|$d")(
-      graft.operators.NgramLm.knModel(knStreamCached(s, d)))
-
-  /** The trigram twins (round-17, VERDICT r16 #5) — same caching
-    * discipline, q194 pays the training in name-sorted gate order. */
-  private def kn3StreamCached(s: SparkSession, d: String): DataFrame =
-    graft.core.SessionCache(s, s"kn3stream|$d")(
-      graft.operators.NgramLm.trigramStream(Tables.documents(s, d)))
-  private def kn3ModelCached(s: SparkSession, d: String): DataFrame =
-    graft.core.SessionCache(s, s"kn3model|$d")(
-      graft.operators.NgramLm.kn3Model(kn3StreamCached(s, d)))
+  /** The KN stream / trained model of one order over `d`'s documents,
+    * cached per (session, dir) — ONE training run serves the model-head
+    * and the scoring gate of that order (the BPE-vocab caching
+    * discipline; q184 and q194 pay the training in name-sorted gate
+    * order). */
+  private def knStreamCached(s: SparkSession, d: String,
+      order: NgramLm.Order): DataFrame =
+    graft.core.SessionCache(s, s"knstream|${order.events}|$d")(
+      NgramLm.stream(Tables.documents(s, d), order))
+  private def knModelCached(s: SparkSession, d: String,
+      order: NgramLm.Order): DataFrame =
+    graft.core.SessionCache(s, s"knmodel|${order.events}|$d")(
+      NgramLm.model(knStreamCached(s, d, order), order))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -139,11 +135,11 @@ private[graft] object TextGates {
     // replays vocab → unk mapping → all four count tables → the
     // probability chain bit-for-bit.
     "q184_kn_bigram_model" -> ((s, d) =>
-      graft.operators.NgramLm.knModelTopFrom(knModelCached(s, d), 200)),
+      NgramLm.modelTopFrom(knModelCached(s, d, Bigram), 200, Bigram)),
 
     "q185_kn_xent" -> ((s, d) =>
-      graft.operators.NgramLm.knScoreFrom(
-          knStreamCached(s, d), knModelCached(s, d))
+      NgramLm.scoreFrom(knStreamCached(s, d, Bigram),
+          knModelCached(s, d, Bigram), Bigram)
         .orderBy(col("doc_id"))),
 
     // Interpolated Kneser–Ney TRIGRAM LM (round-17, VERDICT r16 #5 —
@@ -157,11 +153,11 @@ private[graft] object TextGates {
     // trigram type table → all five count tables → both probability
     // levels bit-for-bit.
     "q194_kn3_model" -> ((s, d) =>
-      graft.operators.NgramLm.kn3ModelTopFrom(kn3ModelCached(s, d), 200)),
+      NgramLm.modelTopFrom(knModelCached(s, d, Trigram), 200, Trigram)),
 
     "q195_kn3_xent" -> ((s, d) =>
-      graft.operators.NgramLm.kn3ScoreFrom(
-          kn3StreamCached(s, d), kn3ModelCached(s, d))
+      NgramLm.scoreFrom(knStreamCached(s, d, Trigram),
+          knModelCached(s, d, Trigram), Trigram)
         .orderBy(col("doc_id"))),
 
     // KN scoring ON INGEST (KnIngest): the model frozen offline (vocab +
@@ -489,7 +485,7 @@ private[graft] object TextGates {
     * PLANET candidate-binning filter (rank % ⌈distinct/bins⌉ = 0 —
     * mirrors Classifier.trainTree's maxBins arm; left stats stay exact,
     * computed before the filter). */
-  private def cartLevel(k: Int, bins: Int = 0): String = {
+  private def cartLevel(k: Int, bins: Int): String = {
     val lo = 1 << (k - 1)
     val hi = 1 << k
     val binf = if (bins > 0) s" AND rn % ((nv + $bins - 1) // $bins) = 0" else ""

@@ -65,30 +65,31 @@ object Expectations {
     // resolves ambiguously — fail loudly at declaration instead
     require(exps.map(_.name).distinct.size == exps.size,
       s"duplicate expectation names: ${exps.map(_.name).diff(exps.map(_.name).distinct).distinct.mkString(", ")}")
-    def violations(e: Expectation): Column = e match {
-      case NotNull(c) => count(when(col(c).isNull, 1))
-      case UniqueKey(cs) => count(lit(1)) - countDistinct(cs.head, cs.tail: _*)
-      case InRange(c, lo, hi) =>
+    // one violation count per simple expectation, all in one aggregate
+    val simple: Seq[(String, Column)] = exps.collect {
+      case e @ NotNull(c) => e.name -> count(when(col(c).isNull, 1))
+      case e @ UniqueKey(cs) =>
+        e.name -> (count(lit(1)) - countDistinct(cs.head, cs.tail: _*))
+      case e @ InRange(c, lo, hi) => e.name ->
         count(when(col(c).isNull || col(c) < lo || col(c) > hi, 1))
-      case InSet(c, vs) =>
+      case e @ InSet(c, vs) => e.name ->
         count(when(col(c).isNull || !col(c).isin(vs.map(lit(_)): _*), 1))
-      case _: RefIntegrity => throw new IllegalStateException("unreachable")
     }
-    val (refs, simple) = exps.partition(_.isInstanceOf[RefIntegrity])
+    val refs = exps.collect { case e: RefIntegrity => e }
     val simpleRows: Seq[DataFrame] =
       if (simple.isEmpty) Nil
       else {
         val one = df.agg(count(lit(1)).cast("long").as("_n"),
-            simple.map(e => violations(e).cast("long").as(e.name)): _*)
+            simple.map { case (n, v) => v.cast("long").as(n) }: _*)
           .localCheckpoint(true) // one row; every audit row reads it free
-        simple.map(e => one.select(lit(e.name).as("expectation"),
-          col("_n").as("n_checked"), col(e.name).as("n_violations"),
-          (col(e.name) === 0L).as("pass")))
+        simple.map { case (n, _) => one.select(lit(n).as("expectation"),
+          col("_n").as("n_checked"), col(n).as("n_violations"),
+          (col(n) === 0L).as("pass")) }
       }
-    val refRows = refs.map { case e @ RefIntegrity(c, dim, k) =>
-      val hits = dim.select(col(k).as("_refkey")).distinct()
+    val refRows = refs.map { e =>
+      val hits = e.dim.select(col(e.dimKey).as("_refkey")).distinct()
         .withColumn("_hit", lit(1))
-      df.select(col(c).as("_fk"))
+      df.select(col(e.c).as("_fk"))
         .join(hits, col("_fk") === col("_refkey"), "left")
         .agg(count(lit(1)).cast("long").as("n_checked"),
           count(when(col("_hit").isNull, 1)).cast("long").as("n_violations"))

@@ -3,24 +3,28 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Corpus-trained interpolated Kneser–Ney BIGRAM language model — the
-  * real perplexity quality filter of the CCNet family, one model order up
-  * from [[TextProfile.unigramSurprisal]] (q128). CCNet scores documents
-  * with an n-gram LM and drops the tails; the unigram surprisal proxy
-  * cannot see word ORDER ("the the the the" scores as well as fluent
-  * text built from the same words). This is the public formulation
-  * (Kneser & Kneser–Ney 1995; Chen & Goodman 1998, interpolated form
-  * with one fixed discount):
+/** Corpus-trained interpolated Kneser–Ney n-gram language models, at
+  * order 2 ([[NgramLm.Bigram]]) and order 3 ([[NgramLm.Trigram]]) — the
+  * real perplexity quality filter of the CCNet family, one and two model
+  * orders up from [[TextProfile.unigramSurprisal]] (q128). CCNet scores
+  * documents with an n-gram LM and drops the tails; the unigram surprisal
+  * proxy cannot see word ORDER ("the the the the" scores as well as
+  * fluent text built from the same words). This is the public formulation
+  * (Kneser & Kneser–Ney 1995; Chen & Goodman 1998, interpolated form with
+  * one fixed discount at every order), one recursion of a single step:
   *
-  *   p(w|u) = max(c(u,w) − D, 0) / c(u)  +  λ(u) · p_cont(w)
-  *   λ(u)   = D · N1+(u,·) / c(u)
-  *   p_cont(w) = N1+(·,w) / B
+  *   p(w|ctx) = max(c(ctx,w) − D, 0) / t(ctx)  +  λ(ctx) · p(w|ctx′)
+  *   λ(ctx)   = D · N1+(ctx,·) / t(ctx)
+  *   p(w)     = N1+(·,w) / B
   *
-  * with c(u,w) the bigram count, N1+(u,·) the number of distinct
-  * continuations of u, N1+(·,w) the number of distinct contexts w
-  * follows, B the number of distinct bigram types and D = 0.75 (the
-  * textbook discount). Self-trained on the scored corpus itself — the
-  * same no-external-model stance as q128/q132.
+  * with ctx′ the context minus its first symbol, c the raw count at the
+  * top order and the CONTINUATION count below it (c(ctx′,w) = the number
+  * of distinct symbols seen before (ctx′,w) — the defining KN property),
+  * t(ctx) = Σ_w c(ctx,w), N1+(ctx,·) the number of distinct
+  * continuations of ctx, N1+(·,w) the number of distinct contexts w
+  * follows at order 2, B the number of distinct bigram types and
+  * D = 0.75 (the textbook discount). Self-trained on the scored corpus
+  * itself — the same no-external-model stance as q128/q132.
   *
   * VOCABULARY PRUNING (min-count): tokens with corpus count < `minCount`
   * pool into one `<unk>` symbol BEFORE counting, the standard LM recipe
@@ -28,9 +32,10 @@ import org.apache.spark.sql.functions._
   * bounded by the observed-twice vocabulary, never the raw token space,
   * and hapax noise (OCR junk, random ids) shares one distribution.
   * Hapaxes exist at every corpus scale, so the pruning is structurally
-  * ACTIVE at the gated SFs. Each document is one <s> … </s> sequence, so
-  * every document produces n_tokens+1 scored bigrams (an empty document
-  * still scores the single (<s>,</s>) event).
+  * ACTIVE at the gated SFs. Each document is one <s> … </s> sequence with
+  * one <s> per context symbol, so every document produces n_tokens+1
+  * scored events (an empty document still scores the single
+  * (<s>, …, </s>) event).
   *
   * Sentinels are control characters (U+0001 unk / U+0002 bos /
   * U+0003 eos — the [[Bpe]] sentinel argument: they cannot appear in a
@@ -41,23 +46,21 @@ import org.apache.spark.sql.functions._
   * CROSS-ENGINE EXACTNESS (the DuckDB oracle compares hashes): every
   * count is an exact BIGINT below 2^53, so the probability — assembled
   * with ONE fixed parenthesization of IEEE double ops — is bit-identical
-  * in Spark and DuckDB; each bigram's −ln p rounds to 6 dp before an
+  * in Spark and DuckDB; each event's −ln p rounds to 6 dp before an
   * exact DECIMAL per-document summation (q128's discipline — double
   * summation order never matters), and every RATIO of those exact
   * integers is emitted as an integer floor, never a rounded double
   * (integer ratios land on exact decimal .5s, where the engines' round()
   * disagree — see [[knScore]]).
   *
-  * Scale: the model is three aggregates OF the bigram-type table (bg is
-  * (u,w)-grain, map-side combined from the corpus stream; ctx/cont/B are
-  * aggregates of bg — term-grain, tiny). Scoring is ONE equi-join of the
-  * corpus bigram stream against the assembled bigram-grain model
-  * (Catalyst broadcasts it when it fits, hash-joins on (u,w) past that;
-  * a hot bigram costs one fat reduce task at worst — model rows are one
-  * per type), then a doc-grain aggregate out. Never doc×doc, no global
-  * sort, linear in corpus tokens. The model table is localCheckpoint'ed:
-  * scoring and the model head both read it, and un-materialized each
-  * consumer would re-run the corpus explode + three aggregates. */
+  * Scale: the model is aggregates OF the n-gram TYPE table (each lower
+  * table an aggregate of the one above), so it grows with n-gram TYPES,
+  * heavily sublinear in corpus tokens — the point the ×10/×100 legs
+  * measure. Scoring is ONE equi-join of the corpus stream against the
+  * model (one row per type; broadcast when it fits), then a doc-grain
+  * aggregate: never doc×doc, no global sort, linear in corpus tokens.
+  * The model is localCheckpoint'ed: scoring and the model head both read
+  * it, and un-materialized each would re-run the explode and aggregates. */
 object NgramLm {
 
   private[graft] val Unk = "\u0001"
@@ -68,22 +71,26 @@ object NgramLm {
     * chain stays engine-exact. */
   val Discount = 0.75
 
+  /** One model order's column contract: the context symbols before `w`,
+    * the top-order type-count column, and the per-document event count. */
+  final case class Order(ctx: Seq[String], count: String, events: String) {
+    private[NgramLm] def keys: Seq[String] = ctx :+ "w"
+  }
+  val Bigram: Order = Order(Seq("u"), "c", "n_bigrams")
+  val Trigram: Order = Order(Seq("u1", "u2"), "c3", "n_trigrams")
+
   private def tokens(text: Column): Column =
     graft.functions.TextFunctions.tokens(text)
 
-  /** The corpus bigram stream (doc_id, u, w) with min-count unk pooling:
-    * raw <s>-…-</s> bigrams, each real-token side left-joined against the
-    * count ≥ minCount vocabulary and pooled to `<unk>` on a miss.
-    * localCheckpointed — ONE artifact feeding both the model counts and
-    * the scoring join (and cacheable per (session, dir) by gate runners,
-    * the BPE-vocab discipline: train once, serve every consumer). */
-  def bigramStream(docs: DataFrame, minCount: Long = 2,
+  /** The self-trained corpus stream (doc_id, ctx…, w): [[streamWith]]
+    * under the count ≥ minCount vocabulary of `docs`. localCheckpointed —
+    * ONE artifact feeding both the model counts and the scoring join (and
+    * cacheable per (session, dir) by gate runners, the BPE-vocab
+    * discipline: train once, serve every consumer). */
+  def stream(docs: DataFrame, order: Order, minCount: Long = 2,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    mappedBigrams(docs, minCount, idCol, textCol).localCheckpoint(true)
-
-  private def mappedBigrams(docs: DataFrame, minCount: Long,
-      idCol: String, textCol: String): DataFrame =
-    bigramStreamWith(docs, trainVocab(docs, minCount, textCol), idCol, textCol)
+    streamWith(docs, trainVocab(docs, minCount, textCol), order, idCol, textCol)
+      .localCheckpoint(true)
 
   /** The count ≥ minCount vocabulary (tok) — the model's term space; a
     * frozen model persists this next to its bigram counts so arriving
@@ -96,72 +103,106 @@ object NgramLm {
       .select(col("tok"))
       .localCheckpoint(true)
 
-  /** The bigram stream of `docs` unk-pooled under a GIVEN vocabulary —
-    * the scoring-side mapper of a frozen model ([[graft.streaming
-    * .KnIngest]] maps each arriving micro-batch with the trained
-    * vocab); [[bigramStream]] is the self-trained composition. */
-  def bigramStreamWith(docs: DataFrame, vocab: DataFrame,
+  /** The stream of `docs` unk-pooled under a GIVEN vocabulary — the
+    * scoring-side mapper of a frozen model ([[graft.streaming.KnIngest]]
+    * maps each arriving micro-batch with the trained vocab). Framing is
+    * one <s> per context symbol before the tokens and one </s> after:
+    * at order 3, (<s>, <s>, w1), (<s>, w1, w2), …, (w_{n−1}, w_n, </s>).
+    *
+    * The frame symbols are exempt from unk pooling BY POSITION, never by
+    * VALUE: a data token equal to U+0002/U+0003 (not
+    * whitespace, so the tokenizer passes it through) pools by vocab
+    * membership like any other — the oracle pools data tokens before
+    * concatenating the frame. Context slot i (0-based) is a frame at
+    * positions j ≤ ctx.size − i, `w` at the last position only. */
+  def streamWith(docs: DataFrame, vocab: DataFrame, order: Order,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    // the frame symbols are exempt from unk pooling BY POSITION, never by
-    // VALUE (ADVICE r16): a data token that happens to contain U+0002/
-    // U+0003 (not whitespace, so the tokenizer passes it through) must
-    // pool by vocab membership exactly like any other token — the oracle
-    // pools data tokens before concatenating the frame, and a value-based
-    // escape let input data claim sentinel identity and diverge. Position
-    // 1's u is the frame <s> and the last position's w is the frame </s>;
-    // every other side is a data token.
-    val sq = concat(array(lit(Bos)), tokens(col(textCol)), array(lit(Eos)))
+    val n = order.ctx.size
+    val sq = concat(array(Seq.fill(n)(lit(Bos)): _*), tokens(col(textCol)),
+      array(lit(Eos)))
+    val last = size(sq) - n
+    val syms = order.keys
     val raw = docs.select(col(idCol),
-        explode(transform(sequence(lit(1), size(sq) - 1),
-          j => struct(element_at(sq, j).as("u"), element_at(sq, j + 1).as("w"),
-            (j === 1).as("f"), (j === size(sq) - 1).as("l"))))
-          .as("p"))
-      .select(col(idCol), col("p.u").as("u_raw"), col("p.w").as("w_raw"),
-        col("p.f").as("_u_frame"), col("p.l").as("_w_frame"))
-    raw
-      .join(vocab.select(col("tok").as("u_raw"), lit(1).as("_u_in")),
-        Seq("u_raw"), "left")
-      .join(vocab.select(col("tok").as("w_raw"), lit(1).as("_w_in")),
-        Seq("w_raw"), "left")
-      .select(col(idCol),
-        when(col("_u_frame") || col("_u_in").isNotNull, col("u_raw"))
-          .otherwise(lit(Unk)).as("u"),
-        when(col("_w_frame") || col("_w_in").isNotNull, col("w_raw"))
-          .otherwise(lit(Unk)).as("w"))
+        explode(transform(sequence(lit(1), last), j => struct(
+          syms.zipWithIndex.flatMap { case (s, i) =>
+            Seq(element_at(sq, j + i).as(s),
+              (if (i < n) j <= n - i else j === last).as(s"_${s}_frame"))
+          }: _*))).as("p"))
+      .select(col(idCol) +: syms.flatMap(s => Seq(
+        col(s"p.$s").as(s"${s}_raw"), col(s"p._${s}_frame"))): _*)
+    syms.foldLeft(raw)((df, s) => df.join(
+        vocab.select(col("tok").as(s"${s}_raw"), lit(1).as(s"_${s}_in")),
+        Seq(s"${s}_raw"), "left"))
+      .select(col(idCol) +: syms.map(s =>
+        when(col(s"_${s}_frame") || col(s"_${s}_in").isNotNull,
+          col(s"${s}_raw")).otherwise(lit(Unk)).as(s)): _*)
   }
 
-  /** The assembled bigram-grain model (u, w, c, cu, n1f, n1p, b, p)
-    * over a [[bigramStream]] — materialized once; [[knScoreFrom]] and
-    * [[knModelTopFrom]] both read it. */
-  def knModel(stream: DataFrame, discount: Double = Discount): DataFrame = {
-    val bg = stream.groupBy(col("u"), col("w"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
-    val ctx = bg.groupBy(col("u"))
-      .agg(sum(col("c")).as("cu"), count(lit(1)).as("n1f"))
-    val cont = bg.groupBy(col("w")).agg(count(lit(1)).as("n1p"))
-    val btot = bg.agg(count(lit(1)).as("b"))
-    // ctx/cont are UNIGRAM-grain (≍ the vocab this stream already
-    // broadcasts) — explicit broadcast keeps the bigram-TYPE-grain bg from
-    // being shuffled twice when the planner's estimate of a derived
-    // aggregate is too big to auto-broadcast (r18, guide §3.1)
-    bg.join(broadcast(ctx), Seq("u")).join(broadcast(cont), Seq("w"))
-      .crossJoin(broadcast(btot))
-      .withColumn("p", knProb(col("c"), discount))
-      .localCheckpoint(true)
-  }
-
-  /** The interpolated-KN probability with ONE pinned parenthesization —
-    * shared by the self-trained model and the frozen-model scorer so the
-    * double chain can never fork. Reads cu/n1f/n1p/b from the enclosing
-    * plan's columns. */
-  private def knProb(c: Column, discount: Double): Column = {
+  /** The interpolated-KN step with ONE pinned parenthesization — every
+    * order of the model and the frozen-model scorer apply it, so the
+    * double chain can never fork. `c`, `total` and `n1f` are exact
+    * integer counts; `lower` is the next-lower order's probability. */
+  private def interp(c: Column, total: Column, n1f: Column, lower: Column,
+      discount: Double): Column = {
     val d = lit(discount)
-    (greatest(c.cast("double") - d, lit(0.0))
-        / col("cu").cast("double")) +
-      (((d * col("n1f").cast("double")) / col("cu").cast("double"))
-        * (col("n1p").cast("double") / col("b").cast("double")))
+    (greatest(c.cast("double") - d, lit(0.0)) / total.cast("double")) +
+      (((d * n1f.cast("double")) / total.cast("double")) * lower)
   }
+
+  /** The bottom of the recursion: p(w) = N1+(·,w) / B. */
+  private def unigram(n1p: Column, b: Column): Column =
+    n1p.cast("double") / b.cast("double")
+
+  /** Tables keyed on one symbol are vocab-grain: broadcast them, so the
+    * type-grain side is never shuffled for them even when the planner's
+    * estimate of a derived aggregate is too big to auto-broadcast.
+    * Multi-symbol tables are type-grain, left to the planner. */
+  private def keyed(df: DataFrame, keys: Seq[String]): DataFrame =
+    if (keys.size == 1) broadcast(df) else df
+
+  /** The assembled type-grain model (ctx…, w, count, …, p) over a
+    * [[stream]]. Level k (k context symbols) joins its context totals
+    * (t_k, n1f_k) and the level below's continuation counts c_(k−1)
+    * (c_0 = N1+(·,w)) onto the top type table, then B; p folds bottom-up
+    * through [[interp]]. */
+  def model(stream: DataFrame, order: Order,
+      discount: Double = Discount): DataFrame = {
+    val n = order.ctx.size
+    def cnt(k: Int): String = if (k == n) order.count else s"c$k"
+    def down(wide: DataFrame, t: DataFrame, k: Int): DataFrame = {
+      val ctx = order.ctx.takeRight(k)
+      val below = ctx.tail :+ "w"
+      val totals = t.groupBy(ctx.map(col): _*)
+        .agg(sum(col(cnt(k))).as(s"t$k"), count(lit(1)).as(s"n1f$k"))
+      val lower = t.groupBy(below.map(col): _*)
+        .agg(count(lit(1)).as(cnt(k - 1)))
+      val joined = wide.join(keyed(totals, ctx), ctx)
+      if (k == 1) joined.join(keyed(lower, below), below)
+        .crossJoin(broadcast(t.agg(count(lit(1)).as("b"))))
+      else {
+        val l = lower.localCheckpoint(true)
+        down(joined.join(keyed(l, below), below), l, k - 1)
+      }
+    }
+    val top = stream.groupBy(order.keys.map(col): _*)
+      .agg(count(lit(1)).as(order.count))
+      .localCheckpoint(true)
+    val p = (1 to n).foldLeft(unigram(col(cnt(0)), col("b"))) { (lower, k) =>
+      interp(col(cnt(k)), col(s"t$k"), col(s"n1f$k"), lower, discount)
+    }
+    down(top, top, n).withColumn("p", p).localCheckpoint(true)
+  }
+
+  /** Per-document cross-entropy (doc_id, events, xent_unats) of a stream
+    * carrying each event's p: the integer-µ-nat discipline of
+    * [[knScore]]. */
+  private def xent(scored: DataFrame, order: Order, idCol: String): DataFrame =
+    scored.withColumn("s", round(-log(col("p")), 6).cast("decimal(28,6)"))
+      .groupBy(col(idCol))
+      .agg(count(lit(1)).as(order.events), sum(col("s")).as("sum_s"))
+      .select(col(idCol), col(order.events),
+        expr(s"CAST(sum_s * 1000000 AS BIGINT) div ${order.events}")
+          .as("xent_unats"))
 
   /** Score a bigram stream against FROZEN bigram counts (u, w, c) — the
     * ingest-side scorer: the context/continuation/total tables are
@@ -187,26 +228,22 @@ object NgramLm {
     // SMJ'd them — shuffling the full exploded bigram stream twice per
     // micro-batch (the q188 regression's real cost; plans/r18/
     // kn_score_against_{before,after}.txt: 2 SortMergeJoin → 0)
-    stream.join(bg, Seq("u", "w"), "left")
+    xent(stream.join(bg, Seq("u", "w"), "left")
       .join(broadcast(ctx), Seq("u"), "left")
       .join(broadcast(cont), Seq("w"), "left")
       .crossJoin(broadcast(btot))
       .withColumn("cu", guard("context", col("cu")))
       .withColumn("n1p", guard("continuation", col("n1p")))
-      .withColumn("p", knProb(coalesce(col("c"), lit(0L)), discount))
-      .withColumn("s", round(-log(col("p")), 6).cast("decimal(28,6)"))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_bigrams"), sum(col("s")).as("sum_s"))
-      .select(col(idCol), col("n_bigrams"),
-        expr("CAST(sum_s * 1000000 AS BIGINT) div n_bigrams")
-          .as("xent_unats"))
+      .withColumn("p", interp(coalesce(col("c"), lit(0L)), col("cu"),
+        col("n1f"), unigram(col("n1p"), col("b")), discount)),
+      Bigram, idCol)
   }
 
-  /** Per-document KN cross-entropy (doc_id, n_bigrams, xent_unats): the
-    * mean over the document's <s>…</s> bigrams of −ln p(w|u), in
-    * MICRO-NATS, floored — LOW = fluent/templated, HIGH = disordered or
-    * rare-token soup; production screens band on this column exactly as
-    * q143 bands q128.
+  /** Per-document KN bigram cross-entropy (doc_id, n_bigrams,
+    * xent_unats): the mean over the document's <s>…</s> bigrams of
+    * −ln p(w|u), in MICRO-NATS, floored — LOW = fluent/templated, HIGH =
+    * disordered or rare-token soup; production screens band on this
+    * column exactly as q143 bands q128.
     *
     * Why an integer, not a rounded double: the per-bigram 6 dp surprisal
     * sum is an exact micro-nat integer, so the mean is a RATIONAL whose
@@ -216,177 +253,40 @@ object NgramLm {
     * 3.390716). Integer floor division has no tie to disagree on. */
   def knScore(docs: DataFrame, minCount: Long = 2, discount: Double = Discount,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val stream = bigramStream(docs, minCount, idCol, textCol)
-    knScoreFrom(stream, knModel(stream, discount), idCol)
+    val s = stream(docs, Bigram, minCount, idCol, textCol)
+    scoreFrom(s, model(s, Bigram, discount), Bigram, idCol)
   }
 
-  /** [[knScore]] over a prebuilt stream + model (so gate runners can
-    * train once per corpus and serve both the head and the scoring
-    * gate). */
-  def knScoreFrom(stream: DataFrame, model: DataFrame,
+  /** [[knScore]] at any order over a prebuilt stream + model (so gate
+    * runners can train once per corpus and serve both the head and the
+    * scoring gate); inner join: self-trained, every stream event is a
+    * model type. */
+  def scoreFrom(stream: DataFrame, model: DataFrame, order: Order,
       idCol: String = "doc_id"): DataFrame =
-    stream.join(model.select(col("u"), col("w"), col("p")), Seq("u", "w"))
-      // inner: self-trained, every stream bigram is a model type
-      .withColumn("s", round(-log(col("p")), 6).cast("decimal(28,6)"))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_bigrams"), sum(col("s")).as("sum_s"))
-      .select(col(idCol), col("n_bigrams"),
-        expr("CAST(sum_s * 1000000 AS BIGINT) div n_bigrams")
-          .as("xent_unats"))
-
-  // ------------------------------------------------ trigram KN (order 3) --
-
-  /** The corpus TRIGRAM stream (doc_id, u1, u2, w) — the order-3 twin of
-    * [[bigramStreamWith]] (round-17, VERDICT r16 #5: the CCNet-family
-    * screens run KenLM at order 5; this is one order up the same
-    * type-table design). Framing is the standard DOUBLE-BOS sentence:
-    * (<s>, <s>, w1), (<s>, w1, w2), …, (w_{n−1}, w_n, </s>) — n+1 events
-    * per document, an empty document scoring the single
-    * (<s>, <s>, </s>) event. Frame symbols are exempt from unk pooling
-    * BY POSITION (u1 at j ≤ 2, u2 at j = 1, w at the last slot), data
-    * tokens pool purely by vocab membership — the bigram fix's contract,
-    * applied from birth here. */
-  def trigramStreamWith(docs: DataFrame, vocab: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val sq = concat(array(lit(Bos), lit(Bos)), tokens(col(textCol)),
-      array(lit(Eos)))
-    val raw = docs.select(col(idCol),
-        explode(transform(sequence(lit(1), size(sq) - 2),
-          j => struct(
-            element_at(sq, j).as("u1"), element_at(sq, j + 1).as("u2"),
-            element_at(sq, j + 2).as("w"),
-            (j <= 2).as("f1"), (j === 1).as("f2"),
-            (j === size(sq) - 2).as("fw"))))
-          .as("p"))
-      .select(col(idCol),
-        col("p.u1").as("u1_raw"), col("p.u2").as("u2_raw"),
-        col("p.w").as("w_raw"),
-        col("p.f1").as("_u1_frame"), col("p.f2").as("_u2_frame"),
-        col("p.fw").as("_w_frame"))
-    raw
-      .join(vocab.select(col("tok").as("u1_raw"), lit(1).as("_u1_in")),
-        Seq("u1_raw"), "left")
-      .join(vocab.select(col("tok").as("u2_raw"), lit(1).as("_u2_in")),
-        Seq("u2_raw"), "left")
-      .join(vocab.select(col("tok").as("w_raw"), lit(1).as("_w_in")),
-        Seq("w_raw"), "left")
-      .select(col(idCol),
-        when(col("_u1_frame") || col("_u1_in").isNotNull, col("u1_raw"))
-          .otherwise(lit(Unk)).as("u1"),
-        when(col("_u2_frame") || col("_u2_in").isNotNull, col("u2_raw"))
-          .otherwise(lit(Unk)).as("u2"),
-        when(col("_w_frame") || col("_w_in").isNotNull, col("w_raw"))
-          .otherwise(lit(Unk)).as("w"))
-  }
-
-  /** Self-trained composition (train vocab + map), localCheckpointed —
-    * ONE artifact feeding the model counts and the scoring join. */
-  def trigramStream(docs: DataFrame, minCount: Long = 2,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    trigramStreamWith(docs, trainVocab(docs, minCount, textCol),
-      idCol, textCol).localCheckpoint(true)
-
-  /** The assembled trigram-grain interpolated-KN model over a
-    * [[trigramStream]] — Chen & Goodman 1998's interpolated form with
-    * one fixed discount at both backoff orders, LOWER ORDERS FROM
-    * CONTINUATION COUNTS (the defining KN property):
-    *
-    *   p₃(w|u1,u2) = max(c₃−D,0)/c₁₂ + (D·N1+(u1,u2,·)/c₁₂) · p₂(w|u2)
-    *   p₂(w|u2)    = max(c₂'−D,0)/t₂ + (D·N1+(u2,·)'/t₂) · p₁(w)
-    *   p₁(w)       = N1+(·,·,w)' / B₁
-    *
-    * with c₃ the trigram count, c₁₂ = Σ_w c₃(u1,u2,w), c₂'(u2,w) =
-    * |{u1 : c₃(u1,u2,w)>0}| (continuation count = rows of the trigram
-    * TYPE table per (u2,w)), t₂(u2) = Σ_w c₂', and B₁ = |{(u2,w)}| the
-    * bigram-type total. Every count is an exact BIGINT; the probability
-    * is ONE pinned parenthesization of IEEE doubles (the q184/q185
-    * cross-engine discipline).
-    *
-    * Scale — the point the ×10/×100 legs measure: the model is
-    * aggregates OF the (u1,u2,w) TYPE table (tg is map-side combined
-    * from the corpus stream; ctx3/c2p/ctx2/uni/B₁ are type-grain, each
-    * strictly smaller), so model size grows with trigram TYPES (heavily
-    * sublinear in corpus tokens), not with the corpus. Scoring is one
-    * (u1,u2,w) equi-join + a doc-grain aggregate, linear in tokens. */
-  def kn3Model(stream: DataFrame, discount: Double = Discount): DataFrame = {
-    val d = lit(discount)
-    val tg = stream.groupBy(col("u1"), col("u2"), col("w"))
-      .agg(count(lit(1)).as("c3"))
-      .localCheckpoint(true)
-    val ctx3 = tg.groupBy(col("u1"), col("u2"))
-      .agg(sum(col("c3")).as("c12"), count(lit(1)).as("n1f3"))
-    val c2p = tg.groupBy(col("u2"), col("w"))
-      .agg(count(lit(1)).as("c2p"))
-      .localCheckpoint(true)
-    val ctx2 = c2p.groupBy(col("u2"))
-      .agg(sum(col("c2p")).as("t2"), count(lit(1)).as("n1f2"))
-    val uni = c2p.groupBy(col("w")).agg(count(lit(1)).as("c1p"))
-    val b1 = c2p.agg(count(lit(1)).as("b1"))
-    val p2 = (greatest(col("c2p").cast("double") - d, lit(0.0))
-        / col("t2").cast("double")) +
-      (((d * col("n1f2").cast("double")) / col("t2").cast("double"))
-        * (col("c1p").cast("double") / col("b1").cast("double")))
-    // ctx3/c2p are type-grain (≍ tg itself — SMJ is the right strategy at
-    // scale, left to the planner); ctx2/uni are unigram-grain → broadcast,
-    // so the assembled model is shuffled for the two type-grain joins only
-    tg.join(ctx3, Seq("u1", "u2")).join(c2p, Seq("u2", "w"))
-      .join(broadcast(ctx2), Seq("u2")).join(broadcast(uni), Seq("w"))
-      .crossJoin(broadcast(b1))
-      .withColumn("p2", p2)
-      .withColumn("p",
-        (greatest(col("c3").cast("double") - d, lit(0.0))
-            / col("c12").cast("double")) +
-          (((d * col("n1f3").cast("double")) / col("c12").cast("double"))
-            * col("p2")))
-      .localCheckpoint(true)
-  }
-
-  /** Per-document trigram-KN cross-entropy (doc_id, n_trigrams,
-    * xent_unats) over a prebuilt stream + model — q185's integer-µ-nat
-    * discipline at order 3 (inner join: self-trained, every stream
-    * trigram is a model type). */
-  def kn3ScoreFrom(stream: DataFrame, model: DataFrame,
-      idCol: String = "doc_id"): DataFrame =
-    stream.join(model.select(col("u1"), col("u2"), col("w"), col("p")),
-        Seq("u1", "u2", "w"))
-      .withColumn("s", round(-log(col("p")), 6).cast("decimal(28,6)"))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_trigrams"), sum(col("s")).as("sum_s"))
-      .select(col(idCol), col("n_trigrams"),
-        expr("CAST(sum_s * 1000000 AS BIGINT) div n_trigrams")
-          .as("xent_unats"))
-
-  /** The `k` highest-probability trigram types (u1, u2, w, c3, p_nano)
-    * under the (p_nano desc, u1, u2, w) total order — floored
-    * nano-probability, TakeOrderedAndProject plan (never a full global
-    * sort). */
-  def kn3ModelTopFrom(model: DataFrame, k: Int): DataFrame =
-    model.select(rendered(col("u1")).as("u1"), rendered(col("u2")).as("u2"),
-        rendered(col("w")).as("w"), col("c3"),
-        floor(col("p") * lit(1000000000.0)).as("p_nano"))
-      .orderBy(col("p_nano").desc, col("u1"), col("u2"), col("w"))
-      .limit(k)
+    xent(stream.join(model.select((order.keys :+ "p").map(col): _*),
+      order.keys), order, idCol)
 
   private def rendered(c: Column): Column =
     when(c === Unk, "<unk>").when(c === Bos, "<s>").when(c === Eos, "</s>")
       .otherwise(c)
 
-  /** The `k` highest-probability bigram types (u, w, c, p_nano) under
-    * the (p_nano desc, u, w) total order — the model-inspection head;
+  /** [[modelTopFrom]] of the self-trained bigram model over `docs`. */
+  def knModelTop(docs: DataFrame, k: Int, minCount: Long = 2,
+      discount: Double = Discount,
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    modelTopFrom(model(stream(docs, Bigram, minCount, idCol, textCol),
+      Bigram, discount), k, Bigram)
+
+  /** The `k` highest-probability types (ctx…, w, count, p_nano) of a
+    * prebuilt model under the (p_nano desc, ctx…, w) total order;
     * `orderBy + limit` plans as TakeOrderedAndProject (per-partition
     * top-k + one k-row merge), never a full global sort. p is emitted in
     * floored NANO-probability (floor(double) is tie-free across engines,
     * unlike round — see [[knScore]]). */
-  def knModelTop(docs: DataFrame, k: Int, minCount: Long = 2,
-      discount: Double = Discount,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    knModelTopFrom(
-      knModel(bigramStream(docs, minCount, idCol, textCol), discount), k)
-
-  /** [[knModelTop]] over a prebuilt model. */
-  def knModelTopFrom(model: DataFrame, k: Int): DataFrame =
-    model.select(rendered(col("u")).as("u"), rendered(col("w")).as("w"),
-        col("c"), floor(col("p") * lit(1000000000.0)).as("p_nano"))
-      .orderBy(col("p_nano").desc, col("u"), col("w"))
+  def modelTopFrom(model: DataFrame, k: Int, order: Order): DataFrame =
+    model.select(order.keys.map(s => rendered(col(s)).as(s)) :+
+        col(order.count) :+
+        floor(col("p") * lit(1000000000.0)).as("p_nano"): _*)
+      .orderBy(col("p_nano").desc +: order.keys.map(col): _*)
       .limit(k)
 }

@@ -43,7 +43,7 @@ object KnIngest {
   def freezeModel(docs: DataFrame, root: String, minCount: Long = 2): Unit = {
     val vocab = NgramLm.trainVocab(docs, minCount)
     vocab.write.mode("overwrite").parquet(s"$root/model/vocab")
-    NgramLm.bigramStreamWith(docs, vocab)
+    NgramLm.streamWith(docs, vocab, NgramLm.Bigram)
       .groupBy(col("u"), col("w")).agg(count(lit(1)).as("c"))
       .write.mode("overwrite").parquet(s"$root/model/bg")
   }
@@ -60,7 +60,8 @@ object KnIngest {
     // scans as ONE task, serializing the whole explode+score pipeline up
     // to the doc aggregate; no-op once batches arrive multi-partition
     NgramLm.knScoreAgainst(
-        NgramLm.bigramStreamWith(graft.core.Tables.widen(batch), vocab), bg)
+        NgramLm.streamWith(graft.core.Tables.widen(batch), vocab,
+          NgramLm.Bigram), bg)
       .write.mode("overwrite").parquet(s"$root/scores/epoch=$epochId")
   }
 

@@ -33,12 +33,11 @@ object DumpPlans {
     import graft.operators.NgramLm
     val docs = graft.core.Tables.documents(spark, sfDir)
     val vocab = NgramLm.trainVocab(docs)
-    dump("kn_bigram_stream", NgramLm.bigramStreamWith(docs, vocab))
-    dump("kn3_trigram_stream", NgramLm.trigramStreamWith(docs, vocab))
-    val bg = NgramLm.bigramStreamWith(docs, vocab)
-      .groupBy(col("u"), col("w")).agg(count(lit(1)).as("c"))
-    dump("kn_score_against", NgramLm.knScoreAgainst(
-      NgramLm.bigramStreamWith(docs, vocab), bg))
+    val bigrams = NgramLm.streamWith(docs, vocab, NgramLm.Bigram)
+    dump("kn_bigram_stream", bigrams)
+    dump("kn3_trigram_stream", NgramLm.streamWith(docs, vocab, NgramLm.Trigram))
+    val bg = bigrams.groupBy(col("u"), col("w")).agg(count(lit(1)).as("c"))
+    dump("kn_score_against", NgramLm.knScoreAgainst(bigrams, bg))
     dump("bpe_train_vocab", graft.operators.Bpe.wordCountsPlan(docs)
       .orderBy(col("cnt").desc, col("word")).limit(1 << 20))
     spark.stop()

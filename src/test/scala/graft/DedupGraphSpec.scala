@@ -23,7 +23,7 @@ class DedupGraphSpec extends SparkTestBase {
     assert(out.toSeq === Seq(1L)) // all one group, labeled by the min id
   }
 
-  test("connectedComponentsStar matches min-label propagation on an arbitrary graph") {
+  test("connectedComponentsStar labels each node with its component's min id on an arbitrary graph") {
     // mixed shapes: a chain, a triangle joined to it, a separate pair
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 9L), (9L, 5L), (5L, 4L),
       (20L, 21L)).toDF("a", "b")
@@ -73,7 +73,7 @@ class DedupGraphSpec extends SparkTestBase {
     assert(slocal.filter(_._1 == "z") === Seq(("z", "aa")))
   }
 
-  test("lshCandidatesCapped with an inactive cap equals lshCandidates") {
+  test("lshCandidates with an inactive Cap.Fixed equals the uncapped form") {
     // 3 near-identical docs + 2 distinct: no bucket can exceed 5 docs, so
     // a cap of 5 must be a no-op — the capped path's screen is pure
     // plumbing until a bucket actually overflows
@@ -90,7 +90,7 @@ class DedupGraphSpec extends SparkTestBase {
     assert(plain.nonEmpty && capped === plain)
   }
 
-  test("lshCandidatesCapped bounds a planted degenerate band (all-empty docs)") {
+  test("lshCandidates with Cap.Fixed bounds a planted degenerate band (all-empty docs)") {
     // 30 empty docs share EVERY band key (identical signatures): uncapped
     // that is 30·29/2 = 435 pure-noise pairs through one bucket per band;
     // capped at 5 the degenerate buckets drop, while a genuine near-dup
@@ -110,7 +110,7 @@ class DedupGraphSpec extends SparkTestBase {
       s"empty-doc noise pairs must be capped away: $capped")
   }
 
-  test("lshCandidatesAutoCap derives a cap that kills the degenerate band and keeps real pairs") {
+  test("lshCandidates with Cap.Derived kills the degenerate band and keeps real pairs") {
     // same planted scenario as the constant-cap test: 30 empty docs share
     // every band key (pop-30 buckets), the fox pair meets in pop-2
     // buckets, everything else is pop 1 — lower-median pop = 1, so the
@@ -131,7 +131,7 @@ class DedupGraphSpec extends SparkTestBase {
     assert(auto === Set((1L, 2L)))
   }
 
-  test("ngramJaccardPairsAutoCap equals the constant-cap twin at the derived cap") {
+  test("ngramJaccardPairs with Cap.Derived equals the hand-computed exact Jaccard at the derived cap") {
     val docs = Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta"),
       (2L, "alpha beta gamma delta epsilon zeta eta iota"),

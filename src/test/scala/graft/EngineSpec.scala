@@ -43,6 +43,12 @@ class EngineSpec extends SparkTestBase {
       math.min(callerParts, Engine.HarnessPartitions))
   }
 
+  test("a harness clone resolves the graft SQL functions through the inherited extension") {
+    val clone = StreamHarness.prepared(spark)
+    assert(clone.sql("SELECT graft_dot(CAST(array(3, 4) AS ARRAY<FLOAT>), " +
+      "CAST(array(1, 0) AS ARRAY<FLOAT>)) AS d").head().getDouble(0) === 3.0)
+  }
+
   test("the warehouse-DAG settle's session differs from its caller only in the named harness keys") {
     val dag = graft.entry.GateSupport.DagRun.session(spark)
     assert(diff(spark, dag) subsetOf Engine.HarnessKeys)

@@ -2,16 +2,17 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 
-/** SQL registration of the native expressions (SparkSessionExtensions
-  * entry point + live-session registration). */
+/** SQL registration of the native expressions through the
+  * SparkSessionExtensions entry point — the spec session, like every
+  * entry point's, is built with `spark.sql.extensions` set by
+  * [[graft.core.Engine.configure]]. */
 class ExtensionsSpec extends SparkTestBase {
   import spark.implicits._
 
-  test("GraftExtensions injects without error and registerAll exposes SQL functions") {
+  test("GraftExtensions injects without error and the session extension exposes SQL functions") {
     // injection path (what spark.sql.extensions invokes at session build)
     new GraftExtensions().apply(new SparkSessionExtensions)
 
-    GraftExtensions.registerAll(spark)
     Seq((1L, Array(3.0f, 4.0f), Array(1.0f, 0.0f)))
       .toDF("id", "a", "b").createOrReplaceTempView("vecs")
 
@@ -54,7 +55,6 @@ class ExtensionsSpec extends SparkTestBase {
   }
 
   test("HLL sketch from pure SQL equals Sketches.hllSketch register for register") {
-    GraftExtensions.registerAll(spark)
     val df = (0 until 2000).map(i => ("g", s"v${i % 331}")).toDF("g", "v")
     df.createOrReplaceTempView("hll_in")
     // obs → per-bucket max(rho) → fill absent buckets with 0, via SQL only
@@ -85,7 +85,6 @@ class ExtensionsSpec extends SparkTestBase {
   }
 
   test("GlobalWindowTopK rewrites global row_number top-k to a distributed TakeOrdered") {
-    GraftExtensions.registerAll(spark) // installs the optimizer rule too
     val df = (1 to 1000).map(i => (i.toLong, ((i * 7919) % 1000).toDouble))
       .toDF("id", "v")
     df.createOrReplaceTempView("topk_t")

@@ -2,9 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.NgramLm
+import graft.operators.NgramLm.Trigram
 
-/** Interpolated Kneser–Ney bigram LM: distribution validity, unk
-  * pooling, word-order sensitivity, and the model-head ordering. */
+/** Interpolated Kneser–Ney LM at orders 2 and 3: distribution validity,
+  * unk pooling, word-order sensitivity, and the model-head ordering. */
 class NgramLmSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -102,9 +103,26 @@ class NgramLmSpec extends SparkTestBase {
     assert(types.contains(("a", "<unk>")) && types.contains(("<unk>", "b")),
       s"hapax U+0002 must pool to <unk>: $types")
     assert(!types.contains(("a", "<s>")), s"frame identity leaked: $types")
+    // the same positional rule at order 3, with both sentinel values as
+    // hapax data tokens: every <s>/</s> in the model is a frame position
+    // of the double-BOS sequence, and each data token rides <unk>
+    val sneaky3 = Seq((1L, "a b"), (2L, "a b"), (3L, "a \u0002 b"),
+      (4L, "\u0003 a b")).toDF("doc_id", "text")
+    val s3 = NgramLm.stream(sneaky3, Trigram)
+    val scored3 = NgramLm.scoreFrom(s3, NgramLm.model(s3, Trigram), Trigram)
+      .orderBy($"doc_id").as[(Long, Long, Long)].collect()
+    // n_trigrams = n_tokens + 1
+    assert(scored3.map(_._2).toSeq === Seq(3L, 3L, 4L, 4L))
+    val types3 = NgramLm.modelTopFrom(NgramLm.model(s3, Trigram), 100, Trigram)
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+    assert(types3 === Set(
+      ("<s>", "<s>", "a"), ("<s>", "a", "b"), ("a", "b", "</s>"),
+      ("<s>", "a", "<unk>"), ("a", "<unk>", "b"), ("<unk>", "b", "</s>"),
+      ("<s>", "<s>", "<unk>"), ("<s>", "<unk>", "a"), ("<unk>", "a", "b")),
+      s"frame identity leaked at order 3: $types3")
   }
 
-  // ---- trigram (order-3) twins ----
+  // ---- trigram (order 3) ----
 
   test("trigram KN probabilities sum to 1 over each context's continuations") {
     // the order-3 analogue of the bigram distribution check, on the
@@ -141,8 +159,9 @@ class NgramLmSpec extends SparkTestBase {
       assert(math.abs(total - 1.0) < 1e-12, s"p3 context ($u1,$u2) sums to $total")
     }
     // the operator's model head agrees with the hand calc everywhere
-    val rows = NgramLm.kn3ModelTopFrom(
-      NgramLm.kn3Model(NgramLm.trigramStream(corpus)), 100).collect()
+    val rows = NgramLm.modelTopFrom(
+      NgramLm.model(NgramLm.stream(corpus, Trigram), Trigram), 100, Trigram)
+      .collect()
       .map(r => ((r.getString(0), r.getString(1), r.getString(2)), r.getLong(4)))
     assert(rows.nonEmpty)
     rows.foreach { case ((u1, u2, w), nano) =>
@@ -152,9 +171,9 @@ class NgramLmSpec extends SparkTestBase {
   }
 
   test("trigram scoring frames with double BOS and scores every doc") {
-    val scored = NgramLm.kn3ScoreFrom(
-        NgramLm.trigramStream(corpus),
-        NgramLm.kn3Model(NgramLm.trigramStream(corpus)))
+    val scored = NgramLm.scoreFrom(
+        NgramLm.stream(corpus, Trigram),
+        NgramLm.model(NgramLm.stream(corpus, Trigram), Trigram), Trigram)
       .orderBy($"doc_id").as[(Long, Long, Long)].collect()
     assert(scored.map(_._1).toSeq === (1L to 5L))
     // n_trigrams = n_tokens + 1 (double-BOS + EOS framing)
@@ -163,11 +182,11 @@ class NgramLmSpec extends SparkTestBase {
     assert(scored.take(3).map(_._3).distinct.length === 1)
     assert(scored(3)._3 !== scored(0)._3)
     // an empty doc scores the single (<s>,<s>,</s>) event
-    val e = NgramLm.kn3ScoreFrom(
-        NgramLm.trigramStream(Seq((1L, "x y"), (2L, "x y"), (3L, ""))
-          .toDF("doc_id", "text")),
-        NgramLm.kn3Model(NgramLm.trigramStream(Seq((1L, "x y"), (2L, "x y"),
-          (3L, "")).toDF("doc_id", "text"))))
+    val e = NgramLm.scoreFrom(
+        NgramLm.stream(Seq((1L, "x y"), (2L, "x y"), (3L, ""))
+          .toDF("doc_id", "text"), Trigram),
+        NgramLm.model(NgramLm.stream(Seq((1L, "x y"), (2L, "x y"),
+          (3L, "")).toDF("doc_id", "text"), Trigram), Trigram), Trigram)
       .orderBy($"doc_id").as[(Long, Long, Long)].collect()
     assert(e(2)._2 === 1L && e(2)._3 > 0L)
   }

@@ -248,7 +248,7 @@ class SimilaritySpec extends SparkTestBase {
   private def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
     df.as[(Long, Long, Double)].collect().toSet
 
-  test("nearDupPairsCapped: inert cap equals q53; active cap is an exact-score subset") {
+  test("nearDupPairs with Cap.Fixed: inert cap equals q53; active cap is an exact-score subset") {
     val emb = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val uncapped = Similarity.nearDupPairs(emb, 0.35, 64, nPlanes = 4)
       .as[(Long, Long, Double)].collect()
@@ -272,7 +272,7 @@ class SimilaritySpec extends SparkTestBase {
     }
   }
 
-  test("nearDupPairsCapped bounds a tight cluster to pivot-star edges, still one component") {
+  test("nearDupPairs with Cap.Fixed bounds a tight cluster to pivot-star edges, still one component") {
     // 100 near-identical vectors: the clique is C(100,2)=4950 pairs; the
     // capped form must emit exactly the 99 (pivot=min id, member) star
     // edges — linear in cluster size — and those edges alone keep the
@@ -297,7 +297,7 @@ class SimilaritySpec extends SparkTestBase {
     assert(prof.toSeq === Seq((100L, 4950L, 1, 99L)))
   }
 
-  test("nearDupPairsCappedBlock: block=1 equals the pivot star; recall grows with the block") {
+  test("nearDupPairs pivot block: block=1 equals the pivot star; recall grows with the block") {
     val emb = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val uncapped = pairSet(Similarity.nearDupPairs(emb, 0.35, 64, nPlanes = 4))
     val buckets = bucketsOf(emb)
@@ -329,7 +329,7 @@ class SimilaritySpec extends SparkTestBase {
     assert(blocked.forall { case (a, b) => a < 20L || b < 20L })
   }
 
-  test("cellNearDupPairsCappedBlock: block=1 equals the cell star; wide block covers whole cells") {
+  test("cellNearDupPairs pivot block: block=1 equals the cell star; wide block covers whole cells") {
     val emb = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val cents = Similarity.kmeansCentroids(emb, 8, 0)
     val uncapped = pairSet(Similarity.cellNearDupPairs(emb, cents, 0.35))
@@ -350,7 +350,7 @@ class SimilaritySpec extends SparkTestBase {
     assert(star.subsetOf(b256) && b256.subsetOf(uncapped))
   }
 
-  test("nearDupPairsAutoCapBlock: block=1 equals the autocap star; wide block is lossless") {
+  test("nearDupPairs Cap.Derived pivot block: block=1 equals the derived-cap star; wide block is lossless") {
     val emb = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val uncapped = pairSet(Similarity.nearDupPairs(emb, 0.35, 64, nPlanes = 4))
     val buckets = bucketsOf(emb)
@@ -382,7 +382,7 @@ class SimilaritySpec extends SparkTestBase {
     assert(cap(Seq(1000L, 4L, 3L, 2L, 1L), 1L, 1L) === 3L)
   }
 
-  test("nearDupPairsAutoCap matches the constant-cap form at its derived cap") {
+  test("nearDupPairs with Cap.Derived matches Cap.Fixed at its derived cap") {
     val emb = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
     // at sf0.001 the floor dominates (median bucket pop ≪ 16): the
     // hand-derived cap is the floor, and the derived-cap run keeps exactly
@@ -404,7 +404,7 @@ class SimilaritySpec extends SparkTestBase {
     assert(capLive === 4 * 42L, s"live arm must use 4·median (got $capLive)")
   }
 
-  test("cellNearDupPairsCapped: inert cap equals uncapped; tight cell → pivot star") {
+  test("cellNearDupPairs with Cap.Fixed: inert cap equals uncapped; tight cell → pivot star") {
     val emb = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val nCells = graft.entry.GateSupport.semDedupCells(emb.count())
     val cents = Similarity.kmeansCentroids(emb, nCells, 0)
@@ -443,7 +443,7 @@ class SimilaritySpec extends SparkTestBase {
     assert(prof.toSeq === Seq((50L, 1225L, 1, 49L)))
   }
 
-  test("semDedupCapped: inert cap equals semDedup; planted dups still collapse") {
+  test("semDedup with Cap.Fixed: inert cap equals uncapped; planted dups still collapse") {
     // vector i+1000 ≈ vector i: the pair shares a cell AND the capped
     // form must still suppress the copy — within a tight group the star
     // reaches every member through the pivot

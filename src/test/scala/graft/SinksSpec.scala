@@ -29,7 +29,7 @@ class SinksSpec extends SparkTestBase {
     assert(rows.toSeq === Seq(2, 3))
   }
 
-  test("upsertByKey keeps last row per key within a batch and merges across batches (K4)") {
+  test("upsertByKeyPartitioned keeps last row per key within a batch and merges across batches (K4)") {
     val dir = Files.createTempDirectory("graft_upsert_").toString + "/store"
     val b1 = Seq(("k1", 1L, "v1a"), ("k1", 2L, "v1b"), ("k2", 1L, "v2a"))
       .toDF("id", "ts", "payload")
@@ -77,7 +77,7 @@ class SinksSpec extends SparkTestBase {
     assert(after(s"_bucket=$touchedBucket") !== before(s"_bucket=$touchedBucket"))
   }
 
-  test("appendSink is exactly-once across restarts (K2: checkpoint + idempotent epoch files)") {
+  test("fanOut is exactly-once across restarts (K2: checkpoint + idempotent epoch files)") {
     // on fanOut, the production append path
     val base = Files.createTempDirectory("graft_k2_").toString
     val (src, out, ckpt) = (s"$base/src", s"$base/out", s"$base/ckpt")

@@ -64,7 +64,7 @@ class StatefulOpsSpec extends SparkTestBase {
     assert(streamed === batch)
   }
 
-  test("transformWithState dedup (RocksDB + 1-day state TTL) equals flatMapGroupsWithState twin") {
+  test("transformWithState dedup (RocksDB + 1-day state TTL) keeps each user's first event per day") {
     val batches = Seq(events.take(4), events.drop(4))
     val tws = StreamHarness.run(spark, batches)(ds => StatefulOps.dedupDaily(ds).toDF())
       .select("user_id", "event_id").as[(Long, Long)].collect().toSet
