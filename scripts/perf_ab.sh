@@ -2,17 +2,22 @@
 # Paired A/B runs of perfbench: parent commit vs the current checkout.
 #
 #   scripts/perf_ab.sh [-w WORKLOAD] [-s SECONDS] [-t 0|1] [-p REV | -d DIR]
-#                      [-o OUT] SEED...
+#                      [-e NAME=VALUE]... [-o OUT] SEED...
 #
 # For each seed it runs `perfbench/run.py` once on the parent and once on
 # this checkout, alternating which side goes first (even pairs parent
 # first, odd pairs change first) so host drift does not favour one side.
 # The parent is a detached `git worktree` of REV (default HEAD~1: the
 # change is the last commit), created in a temporary directory and removed
-# at exit; `-d DIR` uses an existing checkout instead. Nothing under
-# perfbench/ is changed. Each run's output is kept in OUT (default
-# .bench_build/ab/<workload>-<time>) as <side>-<seed>.log (the JSON
-# result) and .err, plus the program's own log as <side>-<seed>.jvm.log
+# at exit; `-d DIR` uses an existing checkout instead. `-e NAME=VALUE`
+# (repeatable) exports NAME=VALUE to the change side's runs only: with
+# `-d` pointing at a copy of the same tree it A/Bs a setting perfbench
+# does not apply itself, e.g. an engine default passed as a JVM property,
+#   scripts/perf_ab.sh -d ../copy \
+#     -e JAVA_TOOL_OPTIONS=-Dspark.sql.codegen.cache.maxEntries=1000 1 2 3
+# Nothing under perfbench/ is changed. Each run's output is kept in OUT
+# (default .bench_build/ab/<workload>-<time>) as <side>-<seed>.log (the
+# JSON result) and .err, plus the program's own log as <side>-<seed>.jvm.log
 # (run.py keeps it in the checkout's .bench_build/logs/, which for the
 # parent is removed with its worktree). The summary prints, per metric of
 # the runs' JSON results: each side's median and quartiles, the change of
@@ -33,19 +38,21 @@ trace=0
 rev=HEAD~1
 parent_dir=
 out=
-while getopts "w:s:t:p:d:o:" opt; do
+change_env=()
+while getopts "w:s:t:p:d:e:o:" opt; do
   case $opt in
     w) workload=$OPTARG ;;
     s) seconds=$OPTARG ;;
     t) trace=$OPTARG ;;
     p) rev=$OPTARG ;;
     d) parent_dir=$OPTARG ;;
+    e) change_env+=("$OPTARG") ;;
     o) out=$OPTARG ;;
-    *) sed -n '2,27p' "$0"; exit 2 ;;
+    *) sed -n '2,33p' "$0"; exit 2 ;;
   esac
 done
 shift $((OPTIND - 1))
-if [ $# -eq 0 ]; then sed -n '2,27p' "$0"; exit 2; fi
+if [ $# -eq 0 ]; then sed -n '2,33p' "$0"; exit 2; fi
 
 change_dir=$(pwd)
 [ -f "$change_dir/perfbench/run.py" ] || { echo "perf_ab: run from the repository root" >&2; exit 2; }
@@ -62,11 +69,11 @@ if [ -z "$parent_dir" ]; then
 fi
 
 run_side() { # side seed
-  local dir=$change_dir
-  [ "$1" = parent ] && dir=$parent_dir
+  local dir=$change_dir extra=("${change_env[@]}")
+  [ "$1" = parent ] && dir=$parent_dir extra=()
   local log="$out/$1-$2.log"
   echo "$(date +%T) $1 seed $2" >&2
-  (cd "$dir" && python3 perfbench/run.py --workload "$workload" --seed "$2" \
+  (cd "$dir" && env ${extra[@]+"${extra[@]}"} python3 perfbench/run.py --workload "$workload" --seed "$2" \
     --seconds "$seconds" --trace "$trace") >"$log" 2>"$out/$1-$2.err" ||
     echo "perf_ab: $1 seed $2 exited $?" >&2
   cp "$dir/.bench_build/logs/$workload-$2-$trace.log" "$out/$1-$2.jvm.log" 2>/dev/null ||

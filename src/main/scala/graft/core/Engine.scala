@@ -43,7 +43,14 @@ object Engine {
     // 17-query DAG gate at the ×10 bench leg, even under FAIR
     // scheduling); the timeout exists to catch hung exchanges, not
     // healthy queueing — give it an hour.
-    "spark.sql.broadcastTimeout" -> "3600")
+    "spark.sql.broadcastTimeout" -> "3600",
+    // Spark's generated-class cache keeps 100 classes, fewer than the
+    // warehouse DAG's concurrent queries use, so every round evicts and
+    // recompiles them (Janino, then C2 on the new bytecode): a perfbench
+    // dag_trickle round compiled 674-690 classes at 100 and 68-74 (mostly
+    // per-batch watermark predicates) at 1000, and q110's sf0.1 settle
+    // 2087-2450 against 939-951.
+    "spark.sql.codegen.cache.maxEntries" -> "1000")
 
   /** Apply [[Defaults]] to a session builder. A key given as a JVM system
     * property (`-Dspark.…`, or spark-submit's `--conf`, which it passes on

@@ -109,17 +109,15 @@ private[graft] object CorpusGates {
         .orderBy(col("doc_id"))
     }),
 
-    // q77's 100 TB shape (round-9 ask #4): broadcast-Bloom pre-screen on
-    // the benchmark shingle vocabulary, exact join only for the probable
-    // hits. No false negatives + exact FP rescue ⇒ output bloom-
-    // independent — shares q77's oracle verbatim. expectedItems is set
-    // BELOW the real vocab size so the filter runs saturated and the
-    // rescue path is exercised under the gate, not just in spec.
+    // q77's 100 TB shape (round-9 ask #4) behind a Dedup.Bloom screen whose
+    // expectedItems is BELOW the real vocab size, so the saturated filter
+    // keeps the exact rescue join active under the gate. The output is
+    // screen-independent and shares q77's oracle verbatim.
     "q158_contamination_bloom" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      Dedup.contaminationProfileBloom(
+      Dedup.contaminationProfile(
           docs.where(col("doc_id") >= 50), docs.where(col("doc_id") < 50),
-          expectedItems = 100L)
+          bloom = Some(Dedup.Bloom(100L)))
         .orderBy(col("doc_id"))
     }),
 
@@ -309,7 +307,8 @@ private[graft] object CorpusGates {
         .unionByName(Tables.part(s, d).select(
           (col("p_partkey") + 1000000L).as("doc_id"),
           col("p_name").as("text")))
-      graft.operators.Bpe.tokenCountsFromVocabFallback(held, bpeVocabCached(s, d))
+      graft.operators.Bpe.tokenCountsFromVocab(held, bpeVocabCached(s, d),
+        oov = graft.operators.Bpe.Oov.CharFallback)
         .orderBy(col("doc_id"))
     }),
 
@@ -330,16 +329,13 @@ private[graft] object CorpusGates {
         .orderBy(col("doc_id"))
     }),
 
-    // q141's 100 TB shape (round-9 ask #4): the train gram set screened
-    // by a broadcast Bloom filter, only probable hits paying the exact
-    // semi-join. Output provably filter-independent — shares q141's
-    // oracle verbatim; expectedItems below the real gram count keeps the
-    // filter saturated so the rescue join is active under the gate.
+    // q141's 100 TB shape (round-9 ask #4), saturated like q158's: the
+    // train gram set behind a Dedup.Bloom screen, sharing q141's oracle.
     "q159_split_contamination_bloom" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      graft.operators.Corpus.splitContaminationBloom(
+      graft.operators.Corpus.splitContamination(
           docs, graft.operators.Corpus.holdoutSplit(docs),
-          expectedItems = 1000L)
+          bloom = Some(Dedup.Bloom(1000L)))
         .orderBy(col("doc_id"))
     }),
 

@@ -274,28 +274,49 @@ object Bpe {
       textCol: String = "text"): DataFrame =
     tokenCountsFromVocab(docs, bpeVocab(docs, nMerges, textCol), idCol, textCol)
 
+  /** What a frozen-vocab consumer does with a word missing from the vocab:
+    * [[Oov.Strict]] fails LOUDLY per row (the KnIngest missing-symbol
+    * contract — for self-scoring pipelines, where an OOV is a bug and a
+    * silently dropped word would under-count token budgets);
+    * [[Oov.CharFallback]] is the standard OOV policy (round-17, VERDICT
+    * r16 #3) for corpora DISJOINT from training: the word encodes as its
+    * characters, n_sub = length(word) in code points — the GPT-2 /
+    * SentencePiece byte-fallback shape at char grain (a character
+    * sequence is a valid segmentation under any merge table; we count
+    * it, never guess merges the model didn't learn). */
+  sealed trait Oov
+  object Oov {
+    case object Strict extends Oov
+    case object CharFallback extends Oov
+  }
+
+  /** The [[Oov.Strict]] refusal, naming the missing `word`. */
+  private def missingWord: Column =
+    raise_error(concat(lit("Bpe: word missing from the trained vocab "
+      + "(OOV under a frozen vocab needs an explicit policy): "), col("word")))
+
   /** [[bpeTokenCounts]] against an ALREADY-TRAINED vocab — the form a
     * pipeline uses when several consumers share one training run (the
-    * gates cache the trained vocab per (session, corpus)). A word
-    * MISSING from the vocab fails LOUDLY per row (the KnIngest
-    * missing-symbol contract): silently dropping OOV occurrences would
-    * under-count token budgets with no error. Scoring a DIFFERENT corpus
-    * than the vocab was trained on therefore needs an explicit OOV
-    * policy first (char-fallback or merge replay) — this form refuses to
-    * guess. */
+    * gates cache the trained vocab per (session, corpus)). A word missing
+    * from the vocab follows `oov`: [[Oov.Strict]] (the default) refuses
+    * to guess, [[Oov.CharFallback]] counts its characters. Same join
+    * shape either way — the policy is the null side of the left join. */
   def tokenCountsFromVocab(
       docs: DataFrame,
       vocab: DataFrame,
       idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
+      textCol: String = "text",
+      oov: Oov = Oov.Strict): DataFrame = {
+    val onMissing = oov match {
+      case Oov.Strict => missingWord
+      case Oov.CharFallback => length(col("word")).cast("long")
+    }
     docs.select(col(idCol), explode(tokens(col(textCol))).as("word"))
       .join(vocab.select(col("word"), col("n_sub")), Seq("word"), "left")
-      .withColumn("n_sub", when(col("n_sub").isNull,
-        raise_error(concat(lit("Bpe: word missing from the trained vocab "
-          + "(OOV under a frozen vocab needs an explicit policy): "),
-          col("word")))).otherwise(col("n_sub")))
+      .withColumn("n_sub", when(col("n_sub").isNull, onMissing).otherwise(col("n_sub")))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_words"), sum(col("n_sub")).as("n_bpe_tokens"))
+  }
 
   /** chunkByTokens on the SUBWORD stream: each doc's words are replaced
     * by their trained subword sequences (in word order), then the same
@@ -330,12 +351,10 @@ object Bpe {
     val docSubs = docs
       .select(col(idCol), posexplode(tokens(col(textCol))).as(Seq("ord", "word")))
       .join(vocab, Seq("word"), "left")
-      // loud on OOV, exactly as tokenCountsFromVocab: a silently dropped
-      // word would splice the chunk stream with no error
-      .withColumn("subwords", when(col("subwords").isNull,
-        raise_error(concat(lit("Bpe: word missing from the trained vocab "
-          + "(OOV under a frozen vocab needs an explicit policy): "),
-          col("word")))).otherwise(col("subwords")))
+      // loud on OOV ([[Oov.Strict]]): a silently dropped word would
+      // splice the chunk stream with no error
+      .withColumn("subwords", when(col("subwords").isNull, missingWord)
+        .otherwise(col("subwords")))
       .groupBy(col(idCol))
       .agg(sort_array(collect_list(struct(col("ord"), col("subwords")))).as("ps"))
       .select(col(idCol),
@@ -364,31 +383,6 @@ object Bpe {
         md5(concat_ws(" ",
           slice(col("_w"), (col("start_tok") + 1).cast("int"), lit(chunkSize))))
           .as("chunk_fp"))
-
-  // ------------------------------------------------- OOV char-fallback --
-
-  /** [[tokenCountsFromVocab]] with the standard OOV POLICY instead of
-    * the loud refusal (round-17, VERDICT r16 #3): a word missing from
-    * the frozen vocab encodes as its CHARACTERS — n_sub = length(word)
-    * in code points — the GPT-2/SentencePiece byte-fallback shape at
-    * char grain (every BPE symbol chain starts from single characters,
-    * so a character sequence is always a valid segmentation under any
-    * merge table; we count it, never guess merges the model didn't
-    * learn). This is the form that scores corpora DISJOINT from the
-    * training set; [[tokenCountsFromVocab]] remains the strict form for
-    * self-scoring pipelines where an OOV is a bug. Same join shape —
-    * the fallback is one coalesce on the null side of the left join. */
-  def tokenCountsFromVocabFallback(
-      docs: DataFrame,
-      vocab: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    docs.select(col(idCol), explode(tokens(col(textCol))).as("word"))
-      .join(vocab.select(col("word"), col("n_sub")), Seq("word"), "left")
-      .withColumn("n_sub",
-        coalesce(col("n_sub"), length(col("word")).cast("long")))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_words"), sum(col("n_sub")).as("n_bpe_tokens"))
 
   // --------------------------------------- sequence-grain (phrase) BPE --
 

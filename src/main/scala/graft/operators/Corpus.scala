@@ -547,69 +547,25 @@ object Corpus {
     *
     * Scale: all joins ride the GRAM key — per-doc distinct grams explode
     * doc-locally, the train set is gram-distinct (one map-side-combined
-    * aggregate), and the hit test is a semi-join at gram grain; nothing
-    * is ever doc×doc. At 100 TB put a bloom filter of the train grams in
-    * front of the semi-join (the [[Dedup.incrementalDedup]] pattern) so
-    * only probable hits shuffle. */
+    * aggregate), and the hit test is [[Dedup.gramHits]] at gram grain;
+    * nothing is ever doc×doc. At 100 TB pass a `bloom` so only probable
+    * hits probe the train set; the output does not depend on it. */
   def splitContamination(
       docs: DataFrame,
       splits: DataFrame,
       n: Int = 8,
       idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    import graft.functions.TextFunctions.shingles
-    val g = docs.join(splits.select(col(idCol), col("split")), Seq(idCol))
-      .select(col(idCol), col("split"),
-        explode(array_distinct(shingles(col(textCol), n))).as("gram"))
-    val train = g.where(col("split") === "train").select(col("gram")).distinct()
-    val held = g.where(col("split") === "heldout")
-    val hits = held.join(train, Seq("gram"), "left_semi")
-      .groupBy(col(idCol)).agg(count(lit(1)).as("_hit"))
-    held.groupBy(col(idCol)).agg(count(lit(1)).as("n_grams"))
-      .join(hits, Seq(idCol), "left")
-      .select(col(idCol), col("n_grams"),
-        coalesce(col("_hit"), lit(0L)).as("n_hit"),
-        (coalesce(col("_hit"), lit(0L)) > 0).as("contaminated"))
-  }
-
-  /** [[splitContamination]] with a Bloom pre-screen — the documented
-    * 100 TB shape built (round-9 verdict ask #4): the train gram
-    * vocabulary is summarized as a broadcast Bloom filter, each heldout
-    * gram is screened executor-locally, and only bloom-POSITIVES pay the
-    * semi-join against the real train set. No false negatives + exact
-    * rescue of false positives ⇒ output bit-identical to
-    * [[splitContamination]] (one shared oracle); at scale the semi-join's
-    * probe side shrinks from every heldout gram to the probable-hit
-    * slice. The probe closure over the broadcast filter is the same
-    * justified non-codegen hop as [[graft.operators.Dedup.incrementalDedup]]'s. */
-  def splitContaminationBloom(
-      docs: DataFrame,
-      splits: DataFrame,
-      n: Int = 8,
-      idCol: String = "doc_id",
       textCol: String = "text",
-      expectedItems: Long = 1000000L,
-      fpp: Double = 0.01): DataFrame = {
+      bloom: Option[Dedup.Bloom] = None): DataFrame = {
     import graft.functions.TextFunctions.shingles
-    val spark = docs.sparkSession
     val g = docs.join(splits.select(col(idCol), col("split")), Seq(idCol))
       .select(col(idCol), col("split"),
         explode(array_distinct(shingles(col(textCol), n))).as("gram"))
     val train = g.where(col("split") === "train").select(col("gram")).distinct()
-    val bf = train.stat.bloomFilter("gram", math.max(expectedItems, 1L), fpp)
-    val bfBc = spark.sparkContext.broadcast(bf)
-    val mightContain = udf((s: String) => s != null && bfBc.value.mightContain(s))
-    val held = g.where(col("split") === "heldout")
-    // bloom-negatives are DEFINITELY not in train — only probable hits
-    // reach the exact semi-join (which rescues the false positives)
-    val hits = held.where(mightContain(col("gram")))
-      .join(train, Seq("gram"), "left_semi")
-      .groupBy(col(idCol)).agg(count(lit(1)).as("_hit"))
-    held.groupBy(col(idCol)).agg(count(lit(1)).as("n_grams"))
-      .join(hits, Seq(idCol), "left")
-      .select(col(idCol), col("n_grams"),
-        coalesce(col("_hit"), lit(0L)).as("n_hit"),
-        (coalesce(col("_hit"), lit(0L)) > 0).as("contaminated"))
+    Dedup.gramHits(g.where(col("split") === "heldout").select(col(idCol), col("gram")),
+        train, idCol, bloom)
+      .select(col(idCol), col("n").as("n_grams"), col("n_hit"),
+        (col("n_hit") > 0).as("contaminated"))
   }
 
   /** One group's waterfilling solution row. */

@@ -43,45 +43,44 @@ object Dedup {
       .groupBy(col("fp"))
       .agg(min(col(idCol)).as("keeper_id"), count(lit(1)).as("n_copies"))
 
-  /** Cross-batch incremental exact dedup with a Bloom pre-filter — the
-    * streaming/100 TB companion to [[exact]]. The store of already-seen
-    * content fingerprints is summarized as a Bloom filter once per batch
-    * (one scan of the fp column), every incoming row is screened by the
-    * broadcast filter, and only bloom-POSITIVES pay the exact anti-join
-    * against the store. Bloom false positives are caught by that join, so
-    * the output is EXACT (bloom is invisible in the result — the oracle
-    * checks plain not-in-store semantics); false negatives don't exist,
-    * so rows passing the screen are definitely new and skip the join
-    * entirely. At scale this turns a batch×store shuffle join into a
-    * broadcast membership test plus a join over the (typically tiny)
-    * positive slice.
-    *
-    * The membership test is a Scala closure over the broadcast filter —
-    * the one justified non-codegen hop here, there being no built-in
-    * expression over a driver-built `BloomFilter`; it sits between two
-    * codegen stages and touches only the 32-char fp column.
-    *
-    * Emits the first row per new fingerprint (min id wins within the
-    * batch, like [[exact]]).
-    */
+  /** A broadcast Bloom pre-screen for an exact membership join — the
+    * 100 TB shape. The reference column is summarized once as a Bloom
+    * filter and broadcast; a probe the filter rejects is DEFINITELY absent
+    * and skips the join, a probe it admits still pays the exact join,
+    * which rescues the false positives. So the screen never shows in a
+    * result; it only shrinks the join's probe side to the probable hits.
+    * An `expectedItems` below the reference's real size saturates the
+    * filter, which is how the gates keep the rescue path exercised. The
+    * probe is a Scala closure over the broadcast filter — the one
+    * justified non-codegen hop (no built-in expression reads a
+    * driver-built `BloomFilter`), touching only the probed column. */
+  final case class Bloom(expectedItems: Long = 1000000L, fpp: Double = 0.01) {
+    /** Whether `probe` may occur in `ref`'s string column `refCol`. A null
+      * probe screens negative: it matches nothing in an equi-join. */
+    def screen(ref: DataFrame, refCol: String, probe: Column): Column = {
+      val bc = ref.sparkSession.sparkContext.broadcast(
+        ref.stat.bloomFilter(refCol, math.max(expectedItems, 1L), fpp))
+      udf((s: String) => s != null && bc.value.mightContain(s)).apply(probe)
+    }
+  }
+
+  /** Cross-batch incremental exact dedup — the streaming/100 TB companion
+    * to [[exact]]: incoming rows are screened by a [[Bloom]] filter of the
+    * store's already-seen content fingerprints, and only bloom-POSITIVES
+    * pay the exact anti-join against the store. Emits the first row per
+    * new fingerprint (min id wins within the batch, like [[exact]]),
+    * whatever the filter's false-positive rate. */
   def incrementalDedup(
       batch: DataFrame,
       storeFps: DataFrame,
       idCol: String = "doc_id",
       textCol: String = "text",
-      expectedItems: Long = 1000000L,
-      fpp: Double = 0.01): DataFrame = {
-    val spark = batch.sparkSession
-    val bf = storeFps.stat.bloomFilter("fp", math.max(expectedItems, 1L), fpp)
-    val bfBc = spark.sparkContext.broadcast(bf)
-    val mightContain = udf((s: String) => bfBc.value.mightContain(s))
-    // null text → null fp: route it through the positives branch (the
-    // bloom impl NPEs on null) where the anti-join keeps it (null matches
-    // nothing), so nulls form their own dedup class exactly like [[exact]]
+      bloom: Bloom = Bloom()): DataFrame = {
+    // null text → null fp screens negative and is kept (null matches no
+    // store row), so nulls form their own dedup class exactly like [[exact]]
     val flagged = batch
       .withColumn("fp", fingerprint(col(textCol)))
-      .withColumn("_hit",
-        when(col("fp").isNull, lit(true)).otherwise(mightContain(col("fp"))))
+      .withColumn("_hit", bloom.screen(storeFps, "fp", col("fp")))
     val negatives = flagged.where(!col("_hit")) // definitely new: skip the join
     val positives = flagged.where(col("_hit"))
       .join(storeFps.select(col("fp")), Seq("fp"), "left_anti") // FP rescue
@@ -499,78 +498,51 @@ object Dedup {
         col("n_comps_full"), col("n_comps_capped"))
   }
 
+  /** Per document, how many of its grams occur in `reference` — the one
+    * membership join under every contamination and OOV audit
+    * ([[contaminationProfile]], [[Corpus.splitContamination]],
+    * [[TextProfile.oovProfile]]). `grams` holds (idCol, gram) rows, one
+    * per gram the caller counts; `reference` holds distinct `gram`s.
+    * Emits (idCol, n, n_hit); a document with no grams has no row. The
+    * join rides the gram key — broadcast when the reference fits, shuffled
+    * otherwise — never doc×doc. With a `bloom`, grams the filter rejects
+    * count as misses without probing the reference. */
+  private[operators] def gramHits(grams: DataFrame, reference: DataFrame,
+      idCol: String, bloom: Option[Bloom]): DataFrame = {
+    def probe(g: DataFrame): DataFrame =
+      g.join(reference.withColumn("_h", lit(1L)), Seq("gram"), "left")
+        .select(col(idCol), coalesce(col("_h"), lit(0L)).as("_hit"))
+    val hits = bloom match {
+      case None => probe(grams)
+      case Some(b) =>
+        val flagged = grams.withColumn("_maybe", b.screen(reference, "gram", col("gram")))
+        flagged.where(!col("_maybe")).select(col(idCol), lit(0L).as("_hit"))
+          .unionByName(probe(flagged.where(col("_maybe"))))
+    }
+    hits.groupBy(col(idCol))
+      .agg(count(lit(1)).as("n"), sum(col("_hit")).as("n_hit"))
+  }
+
   /** Benchmark-contamination profile — decontamination, the corpus-hygiene
     * twin of dedup: for each candidate doc, the fraction of its distinct
-    * 3-gram shingles that also occur anywhere in the `benchmark` set.
-    * frac ≥ ~0.5 flags train/test leakage. One inverted-index semi-join
-    * against the (much smaller) benchmark shingle vocabulary — broadcast
-    * when it fits, shuffle-join otherwise; never doc×doc pairs.
+    * `shingleN`-gram shingles that also occur anywhere in the `benchmark`
+    * set. frac ≥ ~0.5 flags train/test leakage. One [[gramHits]] join
+    * against the (much smaller) benchmark shingle vocabulary, optionally
+    * behind a [[Bloom]] screen; the output does not depend on `bloom`.
     */
   def contaminationProfile(
       docs: DataFrame,
       benchmark: DataFrame,
       idCol: String = "doc_id",
       textCol: String = "text",
-      shingleN: Int = 3): DataFrame = {
-    val sh = docs.select(col(idCol),
-      explode(array_distinct(shingles(col(textCol), shingleN))).as("sh"))
-    val benchSh = benchmark
-      .select(explode(array_distinct(shingles(col(textCol), shingleN))).as("sh"))
-      .distinct()
-    sh.join(benchSh.withColumn("_hit", lit(1L)), Seq("sh"), "left")
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_shingles"),
-        sum(coalesce(col("_hit"), lit(0L))).as("n_contaminated"))
-      .withColumn("contam_frac",
-        round(col("n_contaminated").cast("double") / col("n_shingles").cast("double"), 6))
-  }
-
-  /** [[contaminationProfile]] with a Bloom pre-screen — the 100 TB shape
-    * (round-9 verdict ask #4, the [[incrementalDedup]] pattern applied to
-    * decontamination): the benchmark shingle vocabulary is summarized as a
-    * broadcast Bloom filter, every candidate shingle is screened
-    * executor-locally, and only bloom-POSITIVES pay the shuffle join
-    * against the real vocabulary. False positives are rescued by that
-    * exact join and false negatives don't exist, so the output is
-    * bit-identical to [[contaminationProfile]] (one shared oracle) — at
-    * scale the join's probe side shrinks from every candidate shingle to
-    * the (typically tiny) probable-hit slice, turning a full
-    * corpus-gram-grain shuffle into a broadcast membership test.
-    *
-    * The membership probe is a Scala closure over the broadcast filter —
-    * the same one justified non-codegen hop as [[incrementalDedup]]'s
-    * (no built-in expression over a driver-built `BloomFilter`); it sits
-    * between two codegen stages and touches only the shingle column. */
-  def contaminationProfileBloom(
-      docs: DataFrame,
-      benchmark: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text",
       shingleN: Int = 3,
-      expectedItems: Long = 1000000L,
-      fpp: Double = 0.01): DataFrame = {
-    val spark = docs.sparkSession
-    val sh = docs.select(col(idCol),
-      explode(array_distinct(shingles(col(textCol), shingleN))).as("sh"))
-    val benchSh = benchmark
-      .select(explode(array_distinct(shingles(col(textCol), shingleN))).as("sh"))
-      .distinct()
-    val bf = benchSh.stat.bloomFilter("sh", math.max(expectedItems, 1L), fpp)
-    val bfBc = spark.sparkContext.broadcast(bf)
-    val mightContain = udf((s: String) => s != null && bfBc.value.mightContain(s))
-    val flagged = sh.withColumn("_maybe", mightContain(col("sh")))
-    // bloom-negatives are DEFINITELY absent from the benchmark: they skip
-    // the join and contribute a zero hit directly
-    val negatives = flagged.where(!col("_maybe"))
-      .select(col(idCol), lit(0L).as("_hit"))
-    val positives = flagged.where(col("_maybe"))
-      .join(benchSh.withColumn("_h", lit(1L)), Seq("sh"), "left") // FP rescue
-      .select(col(idCol), coalesce(col("_h"), lit(0L)).as("_hit"))
-    negatives.unionByName(positives)
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_shingles"), sum(col("_hit")).as("n_contaminated"))
-      .withColumn("contam_frac",
-        round(col("n_contaminated").cast("double") / col("n_shingles").cast("double"), 6))
+      bloom: Option[Bloom] = None): DataFrame = {
+    val gram = explode(array_distinct(shingles(col(textCol), shingleN))).as("gram")
+    gramHits(docs.select(col(idCol), gram), benchmark.select(gram).distinct(),
+        idCol, bloom)
+      .select(col(idCol), col("n").as("n_shingles"), col("n_hit").as("n_contaminated"),
+        round(col("n_hit").cast("double") / col("n").cast("double"), 6)
+          .as("contam_frac"))
   }
 
   // -------------------------------------------------------------- simhash --

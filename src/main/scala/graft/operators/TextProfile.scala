@@ -181,26 +181,23 @@ object TextProfile {
     * oracle-exact.)
     *
     * Scale: token/shingle explodes are doc-local; each vocabulary is a
-    * distinct-aggregate at term grain joined back at term grain
-    * (broadcast when it fits, hash join past the threshold — Catalyst's
-    * pick); the per-doc counts are map-side-combined shuffles on doc_id.
+    * distinct-aggregate at term grain, and [[Dedup.gramHits]] counts each
+    * doc's terms against it (n_oov = n − n_hit) with a term-grain join and
+    * a map-side-combined shuffle on doc_id.
     * Never doc×doc, never a global sort.
     */
   def oovProfile(docs: DataFrame, vocabDocs: DataFrame,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     def grams(df: DataFrame, n: Int): DataFrame =
-      if (n == 1) df.select(col(idCol), explode(tokens(col(textCol))).as("g"))
-      else df.select(col(idCol), explode(shingles(col(textCol), n)).as("g"))
-    def coverage(n: Int, label: String): DataFrame = {
-      val vocab = grams(vocabDocs, n).select(col("g")).distinct()
-        .withColumn("_in", lit(1))
-      grams(docs, n).join(vocab, Seq("g"), "left")
-        .groupBy(col(idCol))
-        .agg(count(lit(1)).as(s"n_$label"),
-          count(when(col("_in").isNull, 1)).as(s"n_${label}_oov"))
+      if (n == 1) df.select(col(idCol), explode(tokens(col(textCol))).as("gram"))
+      else df.select(col(idCol), explode(shingles(col(textCol), n)).as("gram"))
+    def coverage(n: Int, label: String): DataFrame =
+      Dedup.gramHits(grams(docs, n), grams(vocabDocs, n).select(col("gram")).distinct(),
+          idCol, None)
+        .select(col(idCol), col("n").as(s"n_$label"),
+          (col("n") - col("n_hit")).as(s"n_${label}_oov"))
         .withColumn(s"${label}_oov_frac",
           round(col(s"n_${label}_oov").cast("double") / col(s"n_$label"), 6))
-    }
     coverage(1, "tok").join(coverage(2, "bigram"), Seq(idCol))
   }
 

@@ -74,8 +74,7 @@ object FuzzyIngest {
       shingleN: Int = 3,
       numPerms: Int = 32,
       bands: Int = 8,
-      nBuckets: Int = 64,
-      targetBucketBytes: Long = 256L << 20): Unit = {
+      nBuckets: Int = 64): Unit = {
     val spark = batch.sparkSession
     val textsDir = s"$root/texts"
     val bandsDir = s"$root/bands"
@@ -149,10 +148,10 @@ object FuzzyIngest {
     // bands FIRST (see crash/replay contract in the object doc)
     if (!bandsRows.isEmpty)
       Sinks.upsertByKeyPartitioned(bandsRows, Seq("pid", "band"), "_ver",
-        bandsDir, nBuckets, targetBucketBytes = targetBucketBytes)
+        bandsDir, nBuckets)
     if (!textsRows.isEmpty)
       Sinks.upsertByKeyPartitioned(textsRows, Seq("pid"), "_ver",
-        textsDir, nBuckets, targetBucketBytes = targetBucketBytes)
+        textsDir, nBuckets)
   }
 
   /** The surviving keeper keys, decoded to (doc_id, pos) — one per fuzzy

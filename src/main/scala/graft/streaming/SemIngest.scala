@@ -54,8 +54,7 @@ object SemIngest {
       epochId: Long,
       nCells: Int = 16,
       threshold: Double = 0.35,
-      nBuckets: Int = 64,
-      targetBucketBytes: Long = 256L << 20): Unit = {
+      nBuckets: Int = 64): Unit = {
     val spark = batch.sparkSession
     val centsDir = s"$root/cents"
     val textsDir = s"$root/texts"
@@ -128,7 +127,7 @@ object SemIngest {
       .localCheckpoint(true)
     if (!textsRows.isEmpty)
       Sinks.upsertByKeyPartitioned(textsRows, Seq("vec_id"), "_ver",
-        textsDir, nBuckets, targetBucketBytes = targetBucketBytes)
+        textsDir, nBuckets)
   }
 
   /** [[processBatch]] with the production recenter CADENCE wired in
@@ -156,13 +155,11 @@ object SemIngest {
       nCells: Int = 16,
       threshold: Double = 0.35,
       lloydRounds: Int = 0,
-      nBuckets: Int = 64,
-      targetBucketBytes: Long = 256L << 20): Unit = {
-    processBatch(batch, root, epochId, nCells, threshold, nBuckets,
-      targetBucketBytes)
+      nBuckets: Int = 64): Unit = {
+    processBatch(batch, root, epochId, nCells, threshold, nBuckets)
     if (epochId >= 1L && (epochId & (epochId - 1L)) == 0L)
       recenter(batch.sparkSession, root, nCells, epochId, threshold,
-        lloydRounds, nBuckets, targetBucketBytes)
+        lloydRounds, nBuckets)
   }
 
   /** Periodic centroid maintenance for TRUE unbounded ingest — the answer
@@ -198,8 +195,7 @@ object SemIngest {
       epochId: Long,
       threshold: Double = 0.35,
       lloydRounds: Int = 1,
-      nBuckets: Int = 64,
-      targetBucketBytes: Long = 256L << 20): Unit = {
+      nBuckets: Int = 64): Unit = {
     val centsDir = s"$root/cents"
     val textsDir = s"$root/texts"
     val store = readStore(spark, textsDir).getOrElse(
@@ -241,7 +237,7 @@ object SemIngest {
     val textsRows = relabeled.withColumn("_ver", lit(epochId))
       .localCheckpoint(true)
     Sinks.upsertByKeyPartitioned(textsRows, Seq("vec_id"), "_ver",
-      textsDir, nBuckets, targetBucketBytes = targetBucketBytes)
+      textsDir, nBuckets)
     cents.write.mode("overwrite").parquet(centsDir + "_new")
     Sinks.publish(new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration),
       new Path(centsDir + "_new"), new Path(centsDir), new Path(centsDir + "_old"))

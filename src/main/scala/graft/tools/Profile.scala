@@ -1,5 +1,6 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 /** Dev tool: run one SparkEntry query by name with plan + timing.
@@ -29,9 +30,10 @@ object Profile {
     // construction INSIDE the timer: harness-driven queries (StreamHarness)
     // do their streaming work at construction, exactly as Bench times them
     (1 to sys.env.getOrElse("PROFILE_ITERS", "2").toInt).foreach { i =>
-      val t0 = System.nanoTime()
+      val (t0, c0) = (System.nanoTime(), CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
       val n = qs(name)(spark, sfDir).count()
-      println(f"[profile] $name run$i: $n rows in ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      println(f"[profile] $name run$i: $n rows in ${(System.nanoTime() - t0) / 1e9}%.2f s, " +
+        s"${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0} classes compiled")
     }
     spark.stop()
   }

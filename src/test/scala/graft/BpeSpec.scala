@@ -117,7 +117,7 @@ class BpeSpec extends SparkTestBase {
     // in-vocab words keep their trained subword counts
     val vocab = Bpe.bpeVocab(docs, 4)
     val alien = Seq((9L, "newest zzzzz lower")).toDF("doc_id", "text")
-    val out = Bpe.tokenCountsFromVocabFallback(alien, vocab)
+    val out = Bpe.tokenCountsFromVocab(alien, vocab, oov = Bpe.Oov.CharFallback)
       .as[(Long, Long, Long)].collect().toSeq
     // newest → [n,e,w,est] = 4; zzzzz OOV → 5 chars; lower → [low,e,r] = 3
     assert(out === Seq((9L, 3L, 12L)), s"got $out")

@@ -226,11 +226,11 @@ class DedupGraphSpec extends SparkTestBase {
       .as[(Long, Long, Long, Double)].collect().toSeq
     // expectedItems=1 saturates the filter: every shingle screens positive
     // and must be rescued by the exact join — output still identical
-    val bloomSat = Dedup.contaminationProfileBloom(cand, bench, expectedItems = 1L)
+    val bloomSat = Dedup.contaminationProfile(cand, bench, bloom = Some(Dedup.Bloom(1L)))
       .orderBy("doc_id").as[(Long, Long, Long, Double)].collect().toSeq
     assert(bloomSat === exact)
     // roomy filter (few positives, most shingles skip the join): identical too
-    val bloomBig = Dedup.contaminationProfileBloom(cand, bench, expectedItems = 10000L)
+    val bloomBig = Dedup.contaminationProfile(cand, bench, bloom = Some(Dedup.Bloom(10000L)))
       .orderBy("doc_id").as[(Long, Long, Long, Double)].collect().toSeq
     assert(bloomBig === exact)
   }
@@ -249,8 +249,8 @@ class DedupGraphSpec extends SparkTestBase {
     assert(exact(0)._3 > 0 && exact(0)._4, "doc 2 shares 8-grams with train")
     assert(exact(1)._3 === 0L && !exact(1)._4)
     Seq(1L, 10000L).foreach { items =>
-      val bloom = graft.operators.Corpus.splitContaminationBloom(
-          docs, splits, expectedItems = items)
+      val bloom = graft.operators.Corpus.splitContamination(
+          docs, splits, bloom = Some(Dedup.Bloom(items)))
         .orderBy("doc_id").as[(Long, Long, Long, Boolean)].collect().toSeq
       assert(bloom === exact, s"expectedItems=$items")
     }

@@ -33,6 +33,11 @@ class EngineSpec extends SparkTestBase {
     }
   }
 
+  test("the specs' session sizes the generated-class cache for the DAG, not Spark's 100") {
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") === "1000")
+    assert(org.apache.spark.sql.internal.SQLConf.get.codegenCacheMaxEntries === 1000)
+  }
+
   test("a harness clone differs from its caller only in the named harness keys") {
     val clone = StreamHarness.prepared(spark)
     assert(diff(spark, clone) subsetOf Engine.HarnessKeys)

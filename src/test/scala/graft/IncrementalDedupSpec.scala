@@ -43,7 +43,7 @@ class IncrementalDedupSpec extends SparkTestBase {
     val store = (1 to 200).map(i => s"stored text $i").toDF("text")
       .select(TextFunctions.fingerprint($"text").as("fp"))
     val batch = Seq((1L, "stored text 7"), (2L, "brand new")).toDF("doc_id", "text")
-    val out = Dedup.incrementalDedup(batch, store, expectedItems = 1L)
+    val out = Dedup.incrementalDedup(batch, store, bloom = Dedup.Bloom(1L))
       .select($"doc_id").as[Long].collect()
     assert(out.toSeq === Seq(2L))
   }

@@ -214,8 +214,9 @@ class PlanSpec extends SparkTestBase {
 
   test("bloom-screened contamination keeps gram-grain equi-joins with the probe filter ahead of the rescue join") {
     val docs = Tables.documents(spark, sf)
-    val p = plan(graft.operators.Corpus.splitContaminationBloom(
-      docs, graft.operators.Corpus.holdoutSplit(docs), expectedItems = 1000L))
+    val p = plan(graft.operators.Corpus.splitContamination(
+      docs, graft.operators.Corpus.holdoutSplit(docs),
+      bloom = Some(graft.operators.Dedup.Bloom(1000L))))
     assert(!p.contains("CartesianProduct") && !p.contains("NestedLoop"),
       "bloom variant must stay an equi-join:\n" + p)
     // the broadcast-bloom probe must sit in the plan as a filter feeding

@@ -43,7 +43,7 @@ class SinksSpec extends SparkTestBase {
     assert(s2 === Map("k1" -> "v1b", "k2" -> "v2new", "k3" -> "v3")) // upsert semantics
   }
 
-  test("upsertByKeyPartitioned merges like upsertByKey but rewrites only touched buckets") {
+  test("upsertByKeyPartitioned merges a batch and rewrites only touched buckets") {
     val dir = Files.createTempDirectory("graft_upsertp_").toString + "/store"
     val b1 = (0 until 40).map(i => (s"k$i", 1L, s"v$i")).toDF("id", "ts", "payload")
     Sinks.upsertByKeyPartitioned(b1, Seq("id"), "ts", dir, nBuckets = 4)
