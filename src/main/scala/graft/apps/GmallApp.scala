@@ -202,9 +202,9 @@ object GmallApp {
     val keyword = appendQ("dws_keyword", s"$warehouse/dws/keyword",
       Windows.keywordCount(GmallPipelines.keywordHits(logSource())))
     val traffic = appendQ("dws_traffic", s"$warehouse/dws/traffic",
-      Windows.tumblingAgg(
+      Windows.agg(
         GmallPipelines.trafficCounters(GmallPipelines.baseLogSplit(logSource())("page")),
-        "rt", "1 hour", "14 seconds",
+        "rt", Windows.Tumble("1 hour"), "14 seconds",
         Seq(col("vc"), col("ch"), col("ar"), col("is_new")),
         Seq(sum(col("pv")).as("pv_ct"), sum(col("sv")).as("sv_ct"),
           sum(col("dur")).as("dur_sum"))))

@@ -45,7 +45,7 @@ private[graft] object DedupGates {
     // for q20's single-table blind spot, oracle-exact because the
     // rotations are pure bit arithmetic both engines replicate.
     "q55_simhash_multi" -> ((s, d) =>
-      Dedup.simhashNearDupsMulti(Dedup.simhash(Tables.documents(s, d)))
+      Dedup.simhashNearDups(Dedup.simhash(Tables.documents(s, d)), tables = 4)
         .withColumn("hamming", col("hamming").cast("long"))
         .orderBy(col("a"), col("b"))),
 
@@ -187,7 +187,8 @@ private[graft] object DedupGates {
     // verify (≥ 0.4) → star components; reassembly contract identical to
     // q101. With zero fuzzy groups this degrades to q101 exactly.
     "q109_paragraph_dedup_fuzzy" -> ((s, d) =>
-      Dedup.paragraphDedupFuzzy(Tables.documents(s, d), 10, 0.4)
+      Dedup.paragraphDedup(Tables.documents(s, d), 10,
+        fuzzy = Some(Dedup.Fuzzy(threshold = 0.4)))
         .orderBy(col("doc_id"))),
 
     // q109's FUZZY grouping ON INGEST — the streaming twin (the same

@@ -263,7 +263,7 @@ private[graft] object OracleSupport {
        |  AND p.doc_id*100000+p.pos = k.keep)""".stripMargin
 
   /** [[paraCtes]] + the FUZZY keeper selection — mirrors
-    * Dedup.paragraphDedupFuzzy stage for stage: distinct texts keyed by
+    * Dedup.paragraphDedup(fuzzy) stage for stage: distinct texts keyed by
     * their min encoded instance (pid), MinHash over the distinct texts
     * (same 32 perms/8 bands as [[sigCte]], coefficients shared via
     * [[minhashCoeffSql]]), exact-Jaccard verification at ≥ 0.4, components

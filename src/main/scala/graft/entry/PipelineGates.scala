@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.{Envelopes, Tables, TempDirs, TopicDb}
 import graft.apps.GmallPipelines
 import graft.operators.{Relational, Sketches}
-import graft.streaming.{DimSink, SketchStream, StatefulOps, StreamHarness}
+import graft.streaming.{DimSink, SketchStream, StatefulOps, StreamHarness, Windows}
 
 import GateSupport._
 import OracleSupport._
@@ -102,7 +102,7 @@ private[graft] object PipelineGates {
       keywordWindowSelect(StreamHarness.runFiles(s, batches) { ds =>
         val (clean, _) = Envelopes.cleanDirty(Envelopes.parseLog(ds.toDF()
           .withColumnRenamed("_2", "value")))
-        graft.streaming.Windows.keywordCount(GmallPipelines.keywordHits(clean))
+        Windows.keywordCount(GmallPipelines.keywordHits(clean))
       })
     }),
 
@@ -119,8 +119,8 @@ private[graft] object PipelineGates {
         val (clean, _) = Envelopes.cleanDirty(Envelopes.parseLog(
           ds.toDF().withColumnRenamed("_2", "value")))
         val page = GmallPipelines.baseLogSplit(clean)("page")
-        graft.streaming.Windows.tumblingAgg(
-          GmallPipelines.trafficCounters(page), "rt", "1 hour", "14 seconds",
+        Windows.agg(
+          GmallPipelines.trafficCounters(page), "rt", Windows.Tumble("1 hour"), "14 seconds",
           Seq(col("vc"), col("ch"), col("ar"), col("is_new")),
           Seq(sum(col("pv")).as("pv_ct"), sum(col("sv")).as("sv_ct"),
             sum(col("dur")).as("dur_sum")))
@@ -262,7 +262,7 @@ private[graft] object PipelineGates {
         maxTsMillis(regs, "ts") + 100000L * 1000L)
       val batches = timeSplitDs(regs, "ts") :+ sentinel
       StreamHarness.runFiles(s, batches) { ds =>
-        graft.streaming.Windows.tumblingAgg(ds.toDF(), "ts", "10 seconds", "2 seconds",
+        Windows.agg(ds.toDF(), "ts", Windows.Tumble("10 seconds"), "2 seconds",
           Seq(col("event_type")), Seq(count(lit(1)).as("register_ct")))
       }.where(col("event_type") =!= "flush")
         .select(col("stt"), col("edt"), col("register_ct"))
@@ -296,8 +296,8 @@ private[graft] object PipelineGates {
       val sentinel = sentinelBatch(s, (maxSec + delaySec + 20L) * 1000L)
       val batches = Seq(ev.where(userHash === 0), ev.where(userHash === 1), sentinel)
       StreamHarness.runFiles(s, batches) { ds =>
-        graft.streaming.Windows.tumblingAgg(
-          StatefulOps.dedupDaily(ds).toDF(), "ts", "10 seconds", s"$delaySec seconds",
+        Windows.agg(
+          StatefulOps.dedupDaily(ds).toDF(), "ts", Windows.Tumble("10 seconds"), s"$delaySec seconds",
           Seq(col("event_type")), Seq(count(lit(1)).as("uu_ct")))
       }.where(col("event_type") =!= "flush")
         .select(col("stt"), col("edt"), col("uu_ct"))
@@ -325,8 +325,8 @@ private[graft] object PipelineGates {
       val sentinel = sentinelBatch(s, (maxSec + delaySec + 20L) * 1000L)
       StreamHarness.runFiles(s,
           Seq(ev.where(userHash === 0), ev.where(userHash === 1), sentinel)) { ds =>
-        graft.streaming.Windows.tumblingAgg(
-          StatefulOps.dedupDaily(ds).toDF(), "ts", "10 seconds", s"$delaySec seconds",
+        Windows.agg(
+          StatefulOps.dedupDaily(ds).toDF(), "ts", Windows.Tumble("10 seconds"), s"$delaySec seconds",
           Seq(col("event_type")), Seq(count(lit(1)).as("uu_ct")))
       }.where(col("event_type") =!= "flush")
         .select(col("stt"), col("edt"), col("uu_ct"))
@@ -354,8 +354,8 @@ private[graft] object PipelineGates {
         new Timestamp(maxTsMillis(rows, "ts") + 7200L * 1000L), "zz", 0L, "0.00"))
         .toDS()
       StreamHarness.runFiles(s, timeSplitDs(rows, "ts") :+ sentinel) { ds =>
-        graft.streaming.Windows.tumblingAgg(
-          ds.toDF("ts", "sku_id", "num", "amt"), "ts", "10 seconds", "10 seconds",
+        Windows.agg(
+          ds.toDF("ts", "sku_id", "num", "amt"), "ts", Windows.Tumble("10 seconds"), "10 seconds",
           Seq(col("sku_id")),
           Seq(count(lit(1)).as("order_ct"), sum(col("num")).as("sku_num_sum"),
             sum(col("amt").cast("decimal(18,2)")).cast("double").as("amount_sum")))
@@ -382,7 +382,7 @@ private[graft] object PipelineGates {
         val flagged = StatefulOps.dedupDailyFlags(ds)
           .map { case (e, isNew) => (e.ts, e.event_type, isNew.toLong) }
           .toDF("ts", "event_type", "is_new")
-        graft.streaming.Windows.tumblingAgg(flagged, "ts", "1 hour", "10 seconds",
+        Windows.agg(flagged, "ts", Windows.Tumble("1 hour"), "10 seconds",
           Seq(col("event_type")),
           Seq(count(lit(1)).as("uu_ct"), sum(col("is_new")).as("new_ct")))
       }.where(col("event_type") =!= "flush")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Tables, TempDirs}
 import graft.operators.{EventOps, Relational}
+import graft.streaming.Windows
 
 import OracleSupport._
 
@@ -42,8 +43,8 @@ private[graft] object RelationalGates {
       Relational.jsonPropsAgg(Tables.events(s, d))),
 
     "q09_hourly_window" -> ((s, d) =>
-      graft.streaming.Windows.tumblingAgg( // batch frame: no watermark applied
-        Tables.events(s, d), "ts", "1 hour", "0 seconds", Seq(col("event_type")),
+      Windows.agg( // batch frame: no watermark applied
+        Tables.events(s, d), "ts", Windows.Tumble("1 hour"), "0 seconds", Seq(col("event_type")),
         Seq(count(lit(1)).as("n_events"),
           sum(Relational.money(col("value"))).cast("double").as("sum_value")))
         .select(col("stt"), col("edt"), col("event_type"), col("n_events"),
@@ -78,8 +79,8 @@ private[graft] object RelationalGates {
     // SESSION windows (beyond the reference's window surface): per-user
     // 4 h-gap sessions over the real multi-day events table, batch form.
     "q70_session_window" -> ((s, d) =>
-      graft.streaming.Windows.sessionAgg(Tables.events(s, d), "ts",
-          "4 hours", "2 seconds",
+      Windows.agg(Tables.events(s, d), "ts",
+          Windows.Session("4 hours"), "2 seconds",
           Seq(col("user_id")), Seq(count(lit(1)).as("n_events")))
         .select(col("user_id"), col("stt"), col("edt"), col("n_events"))
         .orderBy(col("user_id"), col("stt"))),
@@ -88,8 +89,8 @@ private[graft] object RelationalGates {
     // overlapping windows — the window-family completion next to tumbling
     // (q34/q37) and session (q70/q71).
     "q72_sliding_window" -> ((s, d) =>
-      graft.streaming.Windows.slidingAgg(Tables.events(s, d), "ts",
-          "1 hour", "30 minutes", "2 seconds",
+      Windows.agg(Tables.events(s, d), "ts",
+          Windows.Slide("1 hour", "30 minutes"), "2 seconds",
           Seq(col("event_type")),
           Seq(count(lit(1)).as("n_events"),
             count_distinct(col("user_id")).as("n_users")))

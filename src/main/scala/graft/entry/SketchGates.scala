@@ -191,11 +191,11 @@ private[graft] object SketchGates {
             b.write.mode("overwrite").parquet(s"$root/ref")
           else {
             val ref = b.sparkSession.read.parquet(s"$root/ref")
-            graft.operators.Sketches.driftPsiBounded(
+            graft.operators.Sketches.driftPsi(
                 ref.withColumn("_ra", lit(true))
                   .unionByName(b.withColumn("_ra", lit(false))),
                 col("event_type"), "event_type", col("value"), col("_ra"),
-                vlo, vhi, 32)
+                bounds = Some((vlo, vhi)))
               .withColumn("epoch", lit(epochId))
               .write.mode("overwrite").parquet(s"$root/audit/epoch_id=$epochId")
           }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.operators.{EventOps, Relational}
 import graft.functions.TextFunctions
-import graft.streaming.{StatefulOps, StreamHarness}
+import graft.streaming.{StatefulOps, StreamHarness, Windows}
 
 import GateSupport._
 import OracleSupport._
@@ -120,7 +120,7 @@ private[graft] object StreamCoreGates {
       val ev = Tables.events(s, d).as[StatefulOps.Event]
       val sentinel = sentinelBatch(s, maxTsMillis(ev, "ts") + 7200L * 1000L)
       StreamHarness.runFiles(s, timeSplitDs(ev, "ts") :+ sentinel) { ds =>
-        graft.streaming.Windows.tumblingAgg(ds.toDF(), "ts", "1 hour", "10 seconds",
+        Windows.agg(ds.toDF(), "ts", Windows.Tumble("1 hour"), "10 seconds",
           Seq(col("event_type")),
           Seq(count(lit(1)).as("n_events"),
             sum(Relational.money(col("value"))).cast("double").as("sum_value")))
@@ -172,7 +172,7 @@ private[graft] object StreamCoreGates {
       val ev = Tables.events(s, d).as[StatefulOps.Event]
       val sentinel = sentinelBatch(s, maxTsMillis(ev, "ts") + 5L * 3600L * 1000L)
       StreamHarness.runFiles(s, timeSplitDs(ev, "ts") :+ sentinel) { ds =>
-        graft.streaming.Windows.sessionAgg(ds.toDF(), "ts", "4 hours",
+        Windows.agg(ds.toDF(), "ts", Windows.Session("4 hours"),
           "2 seconds", Seq(col("user_id")), Seq(count(lit(1)).as("n_events")))
       }.where(col("user_id") =!= -1L)
         .select(col("user_id"), col("stt"), col("edt"), col("n_events"))
@@ -191,8 +191,8 @@ private[graft] object StreamCoreGates {
         new Timestamp(maxTsMillis(ev, "ts") + 7200L * 1000L), -1L)).toDS()
       val counted = StreamHarness.runFiles(s,
           timeSplitDs(ev, "ts") :+ sentinel) { ds =>
-        graft.streaming.Windows.tumblingAgg(
-          ds.toDF("ts", "item"), "ts", "1 hour", "14 seconds",
+        Windows.agg(
+          ds.toDF("ts", "item"), "ts", Windows.Tumble("1 hour"), "14 seconds",
           Seq(col("item")), Seq(count(lit(1)).as("ct")))
       }.where(col("item") =!= -1L)
       EventOps.topNOfCounts(counted.select(col("stt"), col("item"), col("ct")), 3)

@@ -565,41 +565,23 @@ object Dedup {
         bits)).as("simhash"))
   }
 
-  /** Near-dup pairs by SimHash: bucket on the top `prefixBits` bits (one
-    * prefix table — see [[simhashNearDupsMulti]] for the full-recall
-    * rotation form), then verify hamming distance ≤ maxDist with
-    * bit_count(xor). */
+  /** Near-dup pairs by SimHash: bucket on the top `prefixBits` bits,
+    * then verify hamming distance ≤ maxDist with bit_count(xor) on the
+    * original signature. One table is the plain prefix bucket; it never
+    * pairs two signatures that differ inside the prefix. `tables` > 1
+    * buckets `tables` ROTATIONS of the signature, so every pair within
+    * maxDist collides in at least one table unless its differing bits
+    * straddle every rotated prefix (negligible for maxDist ≪ 60/tables —
+    * the published SimHash dedup layout, Manku et al. WWW'07); candidates
+    * are then deduped across tables. Cost: `tables` × the single-table
+    * join, still O(n·tables), never O(n²). */
   def simhashNearDups(
       sigs: DataFrame,
       idCol: String = "doc_id",
       prefixBits: Int = 16,
-      maxDist: Int = 8): DataFrame = {
-    val b = sigs.withColumn("bucket", shiftright(col("simhash"), 60 - prefixBits))
-    val l = b.select(col(idCol).as("a"), col("bucket"), col("simhash").as("sa"))
-    val r = b.select(col(idCol).as("b"), col("bucket"), col("simhash").as("sb"))
-    l.join(r, Seq("bucket"))
-      .where(col("a") < col("b"))
-      .withColumn("hamming", bit_count(col("sa").bitwiseXOR(col("sb"))))
-      .where(col("hamming") <= maxDist)
-      .select(col("a"), col("b"), col("hamming"))
-  }
-
-  /** Multi-TABLE SimHash near-dups — the standard fix for the single
-    * prefix table's blind spot (a pair differing only inside the prefix
-    * never collides): bucket on the top `prefixBits` bits of `tables`
-    * ROTATIONS of the signature, so every pair within maxDist collides in
-    * at least one table unless its differing bits straddle every rotated
-    * prefix (for maxDist ≪ 60/tables the miss probability is negligible —
-    * the published SimHash dedup layout, Manku et al. WWW'07). Candidates
-    * are unioned across tables, deduped, then hamming-verified on the
-    * ORIGINAL signature. Cost: `tables` × the single-table join, still
-    * O(n·tables), never O(n²). */
-  def simhashNearDupsMulti(
-      sigs: DataFrame,
-      idCol: String = "doc_id",
-      prefixBits: Int = 16,
       maxDist: Int = 8,
-      tables: Int = 4): DataFrame = {
+      tables: Int = 1): DataFrame = {
+    require(tables > 0, "tables must be positive")
     val step = 60 / tables
     val rots = (0 until tables).map { t =>
       val k = t * step
@@ -610,16 +592,18 @@ object Dedup {
         .bitwiseOR(shiftleft(
           col("simhash").bitwiseAND(lit((1L << (60 - k)) - 1)), k))
     }
-    val rotated = sigs.select(col(idCol), col("simhash"),
+    val rotated =
+      if (tables == 1) sigs.select(col(idCol), col("simhash"), lit(0).as("tbl"),
+        col("simhash").as("rot"))
+      else sigs.select(col(idCol), col("simhash"),
         posexplode(array(rots: _*)).as(Seq("tbl", "rot")))
-      .withColumn("bucket", shiftright(col("rot"), 60 - prefixBits))
-    val l = rotated.select(col(idCol).as("a"), col("tbl"), col("bucket"),
-      col("simhash").as("sa"))
-    val r = rotated.select(col(idCol).as("b"), col("tbl"), col("bucket"),
-      col("simhash").as("sb"))
-    l.join(r, Seq("tbl", "bucket"))
+    val b = rotated.withColumn("bucket", shiftright(col("rot"), 60 - prefixBits))
+    val l = b.select(col(idCol).as("a"), col("tbl"), col("bucket"), col("simhash").as("sa"))
+    val r = b.select(col(idCol).as("b"), col("tbl"), col("bucket"), col("simhash").as("sb"))
+    val cands = l.join(r, Seq("tbl", "bucket"))
       .where(col("a") < col("b"))
-      .select(col("a"), col("b"), col("sa"), col("sb")).distinct()
+      .select(col("a"), col("b"), col("sa"), col("sb"))
+    (if (tables > 1) cands.distinct() else cands)
       .withColumn("hamming", bit_count(col("sa").bitwiseXOR(col("sb"))))
       .where(col("hamming") <= maxDist)
       .select(col("a"), col("b"), col("hamming"))
@@ -721,99 +705,72 @@ object Dedup {
       .select(col(idCol), col("pos").cast("long").as("pos"), col("col").as("para"))
   }
 
-  /** SUB-document exact dedup — the paragraph-grain pass production
-    * corpora run before any whole-doc dedup (C4's repeated-lines rule,
+  /** The fuzzy keeper of [[paragraphDedup]]: distinct paragraph texts
+    * whose shingle Jaccard reaches `threshold` share one keeper. MinHash
+    * over `shingleN`-word shingles, `numPerms` permutations in `bands`
+    * LSH bands ([[minhashSignatures]], [[lshCandidates]],
+    * [[jaccardVerify]]). */
+  case class Fuzzy(
+      threshold: Double = 0.4,
+      shingleN: Int = 3,
+      numPerms: Int = 32,
+      bands: Int = 8)
+
+  /** SUB-document dedup — the paragraph-grain pass production corpora
+    * run before any whole-doc dedup (C4's repeated-lines rule,
     * RefinedWeb's line-wise filtering): explode each doc into fixed-width
-    * word windows ([[explodeParagraphs]]), keep only the corpus-wide
-    * FIRST occurrence of each distinct paragraph (min (doc, pos) —
-    * encoded via [[ParaPosEncode]] so the aggregate is a plain `min` with
-    * map-side combine), and reassemble each doc from its surviving
+    * word windows ([[explodeParagraphs]]), keep one instance per
+    * paragraph group, and reassemble each doc from its surviving
     * paragraphs in position order. Emits one row per input doc:
     * (idCol, n_paras, n_kept, kept_text) — kept_text is '' when every
     * paragraph was seen earlier.
     *
-    * Scale: everything is paragraph-grain — one min-aggregate shuffle on
-    * the paragraph text (partial min on the map side, so a hot paragraph
-    * costs one row per map partition, not a single-reducer pile-up), one
-    * equi-join back, one per-doc reassembly agg. Never doc×doc, no
+    *  1. exact copies collapse first: each distinct text is represented
+    *     by its earliest instance's encoded (doc, pos) key `pid`
+    *     ([[encodePos]] via [[ParaPosEncode]], so the aggregate is a plain
+    *     `min` with map-side combine);
+    *  2. exact (`fuzzy = None`): a text's keeper is its own `pid`.
+    *     With `fuzzy` — the pass that catches near-identical boilerplate
+    *     variants exact hashing misses (dates, usernames, counters
+    *     swapped) — MinHash signatures over the DISTINCT texts, LSH band
+    *     candidates, exact Jaccard verification of candidates only, and
+    *     verified pairs collapse into groups ([[connectedComponentsStar]],
+    *     O(log n) rounds at any diameter); a text's keeper is its group's
+    *     min `pid` (untouched texts keep their own). With zero fuzzy pairs
+    *     this is exactly the exact form;
+    *  3. an INSTANCE survives iff its encoded key IS its text's keeper —
+    *     one survivor per group, the corpus-wide earliest instance of the
+    *     group's earliest text.
+    *
+    * Scale: everything is paragraph-grain or candidate-grain — one
+    * min-aggregate shuffle on the paragraph text (partial min on the map
+    * side, so a hot paragraph costs one row per map partition), one
+    * equi-join back, one per-doc reassembly agg; the fuzzy keeper adds
+    * narrow signature math over distinct texts, O(n·bands) banding and
+    * O(log n) component rounds. Never doc×doc or paragraph×paragraph, no
     * ranking window, no global sort. */
   def paragraphDedup(
       docs: DataFrame,
       wordsPerPara: Int = 10,
       idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    val ws = split(col(textCol), " ")
-    val nParas = ceil(size(ws).cast("double") / wordsPerPara).cast("long")
-    val paras = explodeParagraphs(docs, wordsPerPara, idCol, textCol)
-    val firsts = paras
-      .groupBy(col("para"))
-      .agg(min(encodePos(col(idCol), col("pos"))).as("keep"))
-    val kept = paras.join(firsts, "para")
-      .where(encodePos(col(idCol), col("pos")) === col("keep"))
-    val reassembled = kept.groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_kept"),
-        array_join(transform(
-          array_sort(collect_list(struct(col("pos"), col("para")))),
-          x => x.getField("para")), " ").as("kept_text"))
-    docs.select(col(idCol), nParas.as("n_paras"))
-      .join(reassembled, Seq(idCol), "left")
-      .select(col(idCol), col("n_paras"),
-        coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-        coalesce(col("kept_text"), lit("")).as("kept_text"))
-  }
-
-  /** Paragraph-grain FUZZY dedup — [[paragraphDedup]] with MinHash
-    * grouping, the pass that catches the near-identical boilerplate
-    * variants exact hashing misses (dates, usernames, counters swapped —
-    * the C4/RefinedWeb templated-lines case). The full near-dup stack runs
-    * at paragraph grain over DISTINCT paragraph texts only:
-    *
-    *  1. explode into word windows ([[explodeParagraphs]]) and collapse
-    *     exact copies first — each distinct text is represented by its
-    *     earliest instance's encoded (doc, pos) key `pid`
-    *     ([[encodePos]] — the exact-dedup min-agg, map-side combinable);
-    *  2. MinHash signatures over the distinct texts
-    *     ([[minhashSignatures]]), LSH band candidates
-    *     ([[lshCandidates]]), exact Jaccard verification of candidates
-    *     only ([[jaccardVerify]]);
-    *  3. verified pairs collapse into groups
-    *     ([[connectedComponentsStar]], O(log n) rounds at any diameter);
-    *     each distinct text's keeper key = its group's min pid (untouched
-    *     texts keep their own pid);
-    *  4. an INSTANCE survives iff its encoded key IS its text's keeper —
-    *     one survivor per fuzzy group, the corpus-wide earliest instance
-    *     of the group's earliest text — and docs reassemble from
-    *     survivors in position order, exactly [[paragraphDedup]]'s
-    *     contract: (idCol, n_paras, n_kept, kept_text).
-    *
-    * Scale: everything is paragraph-grain or candidate-grain — signature
-    * pass is narrow per-row math over distinct texts, banding is
-    * O(n·bands), verification touches candidates only, components are
-    * O(log n) shuffle rounds, and the instance join is one equi-join on
-    * the text. Never paragraph×paragraph. With zero fuzzy pairs this
-    * degrades to exactly [[paragraphDedup]].
-    */
-  def paragraphDedupFuzzy(
-      docs: DataFrame,
-      wordsPerPara: Int = 10,
-      threshold: Double = 0.4,
-      idCol: String = "doc_id",
       textCol: String = "text",
-      shingleN: Int = 3,
-      numPerms: Int = 32,
-      bands: Int = 8): DataFrame = {
+      fuzzy: Option[Fuzzy] = None): DataFrame = {
     val ws = split(col(textCol), " ")
     val nParas = ceil(size(ws).cast("double") / wordsPerPara).cast("long")
     val paras = explodeParagraphs(docs, wordsPerPara, idCol, textCol)
     val firsts = paras.groupBy(col("para"))
       .agg(min(encodePos(col(idCol), col("pos"))).as("pid"))
-    val sigs = minhashSignatures(firsts, "pid", "para", shingleN, numPerms)
-    val pairs = jaccardVerify(firsts, lshCandidates(sigs, "pid", bands),
-      "pid", "para", shingleN, threshold)
-    val comps = connectedComponentsStar(pairs)
-    val label = firsts
-      .join(comps.withColumnRenamed("id", "pid"), Seq("pid"), "left")
-      .select(col("para"), coalesce(col("comp"), col("pid")).as("keep"))
+    val label = fuzzy match {
+      case None => firsts.select(col("para"), col("pid").as("keep"))
+      case Some(f) =>
+        val sigs = minhashSignatures(firsts, "pid", "para", f.shingleN, f.numPerms)
+        val pairs = jaccardVerify(firsts, lshCandidates(sigs, "pid", f.bands),
+          "pid", "para", f.shingleN, f.threshold)
+        firsts
+          .join(connectedComponentsStar(pairs).withColumnRenamed("id", "pid"),
+            Seq("pid"), "left")
+          .select(col("para"), coalesce(col("comp"), col("pid")).as("keep"))
+    }
     val kept = paras.join(label, "para")
       .where(encodePos(col(idCol), col("pos")) === col("keep"))
     val reassembled = kept.groupBy(col(idCol))

@@ -76,6 +76,29 @@ object Similarity {
         (col("pos") + 1).as("rank"))
   }
 
+  /** The query side of every top-k path: (query_id, qv, qn, extra…). The
+    * norm is precomputed per vector (not per pair) — identical float op
+    * order as cosine(), so bit-equal scores, at a third of the flops. */
+  private def querySide(queries: DataFrame, idCol: String, vecCol: String,
+      extra: Column*): DataFrame =
+    queries.select(Seq(col(idCol).as("query_id"), col(vecCol).as("qv"),
+      norm(col(vecCol)).as("qn")) ++ extra: _*)
+
+  /** The corpus side of every top-k path: (neighbor_id, cv, cn, extra…). */
+  private[graft] def corpusSide(corpus: DataFrame, idCol: String, vecCol: String,
+      extra: Column*): DataFrame =
+    corpus.select(Seq(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
+      norm(col(vecCol)).as("cn")) ++ extra: _*)
+
+  /** The one cosine-and-rank step of every top-k path: candidate rows
+    * joining [[querySide]] to [[corpusSide]] drop the query itself, score
+    * dot(qv, cv) / (qn · cn) — the op order the oracles pin — and rank
+    * per query ([[topKPerQuery]]). */
+  private def rankCosine(joined: DataFrame, k: Int): DataFrame =
+    topKPerQuery(joined.where(col("query_id") =!= col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"),
+        (dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("score")), k)
+
   /** Exact top-k neighbors for each query vector. `queries` must be small
     * enough to broadcast (it is hinted); corpus is streamed. */
   def bruteForceTopK(
@@ -84,21 +107,13 @@ object Similarity {
       k: Int,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    // norms are precomputed per vector (not per pair) — identical float op
-    // order as cosine(), so bit-equal scores, at a third of the flops.
     // The corpus side is repartitioned so the broadcast nested-loop scoring
     // parallelizes across all cores (a single parquet file would otherwise
     // score every (query, doc) pair in ONE task).
     val shufflePartitions =
       corpus.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      norm(col(vecCol)).as("qn"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-      norm(col(vecCol)).as("cn")).repartition(shufflePartitions)
-    val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("score"))
-    topKPerQuery(scored, k)
+    val c = corpusSide(corpus, idCol, vecCol).repartition(shufflePartitions)
+    rankCosine(c.join(broadcast(querySide(queries, idCol, vecCol))), k)
   }
 
   /** IVF/LSH-bucketed ANN: hyperplane-bucket both sides, score only bucket
@@ -114,24 +129,16 @@ object Similarity {
       vecCol: String = "embedding"): DataFrame = {
     val shufflePartitions =
       corpus.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val cb = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-      norm(col(vecCol)).as("cn"),
-      hyperplaneBucket(col(vecCol), dim, nPlanes).as("bucket"))
+    val bucket = hyperplaneBucket(col(vecCol), dim, nPlanes)
+    val cb = corpusSide(corpus, idCol, vecCol, bucket.as("bucket"))
       .repartition(shufflePartitions)
-    // multi-probe: query also checks buckets at hamming distance 1
-    val qb0 = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      norm(col(vecCol)).as("qn"),
-      hyperplaneBucket(col(vecCol), dim, nPlanes).as("bucket0"))
+    // multi-probe: query also checks buckets at hamming distance 1. The
+    // 1 + nPlanes probe buckets are pairwise distinct and a corpus row has
+    // one bucket, so a (query, neighbor) pair collides at most once.
     val probes = array((lit(0L) +: (0 until nPlanes).map(b => lit(1L << b))): _*)
-    val qb = qb0.select(col("query_id"), col("qv"), col("qn"),
-      explode(transform(probes, m => col("bucket0").bitwiseXOR(m))).as("bucket"))
-    val scored = cb.join(broadcast(qb), Seq("bucket"))
-      .where(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("score"))
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(max(col("score")).as("score")) // dedup multi-probe collisions
-    topKPerQuery(scored, k)
+    val qb = querySide(queries, idCol, vecCol,
+      explode(transform(probes, m => bucket.bitwiseXOR(m))).as("bucket"))
+    rankCosine(cb.join(broadcast(qb), Seq("bucket")), k)
   }
 
   /** Product-quantization ANN with asymmetric-distance (ADC) scoring —
@@ -215,15 +222,8 @@ object Similarity {
       vecCol: String = "embedding"): DataFrame = {
     val cand = pqTopK(corpus, queries, shortlist, dim, m, nCodes, idCol, vecCol)
       .select(col("query_id"), col("neighbor_id"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-      norm(col(vecCol)).as("cn"))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      norm(col(vecCol)).as("qn"))
-    val scored = c.join(broadcast(cand), Seq("neighbor_id"))
-      .join(broadcast(q), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("score"))
-    topKPerQuery(scored, k)
+    rankCosine(corpusSide(corpus, idCol, vecCol).join(broadcast(cand), Seq("neighbor_id"))
+      .join(broadcast(querySide(queries, idCol, vecCol)), Seq("query_id")), k)
   }
 
   /** Symmetric int8 quantization of embedding vectors — the standard 4×
@@ -326,15 +326,15 @@ object Similarity {
     val shufflePartitions =
       corpus.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val cents = kmeansCentroids(corpus, nCells, iterations, idCol, vecCol)
-    val corpusCells = corpus.join(assignCells(corpus, cents, idCol, vecCol), idCol)
-      .select(col(idCol).as("neighbor_id"), col("cell"),
-        col(vecCol).as("cv"), norm(col(vecCol)).as("cn"))
+    val corpusCells = corpusSide(
+        corpus.join(assignCells(corpus, cents, idCol, vecCol), idCol),
+        idCol, vecCol, col("cell"))
       .repartition(shufflePartitions, col("cell"))
     ivfSearch(corpusCells, cents, queries, k, nProbe, idCol, vecCol)
   }
 
   /** The probe-and-score phase of IVF search, over an ALREADY-ASSIGNED
-    * corpus `(neighbor_id, cell, cv, cn)` — shared by [[ivfTopK]] (batch
+    * corpus `(neighbor_id, cv, cn, cell)` ([[corpusSide]]) — shared by [[ivfTopK]] (batch
     * assignment inline) and the streaming ingest-maintained index
     * (`graft.streaming.AnnIngest`, which persists the assigned store and
     * reads only the probed cells back). Identical math either way, so the
@@ -355,14 +355,9 @@ object Similarity {
           .select(col(idCol).as("query_id"), (-col("dist")).as("score"),
             col("cell").as("neighbor_id")), nProbe)
       .select(col("query_id"), col("neighbor_id").as("cell"))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      norm(col(vecCol)).as("qn"))
-    val scored = corpusCells
-      .join(broadcast(probes.join(q, Seq("query_id"))), Seq("cell"))
-      .where(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("score"))
-    topKPerQuery(scored, k)
+    rankCosine(corpusCells.join(
+      broadcast(probes.join(querySide(queries, idCol, vecCol), Seq("query_id"))),
+      Seq("cell")), k)
   }
 
   /** Recall@k of an approximate top-k result against the exact ranking —

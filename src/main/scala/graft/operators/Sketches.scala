@@ -225,52 +225,46 @@ object Sketches {
     * rounding + DECIMAL summation trick, so the result is
     * partition-order-independent and oracle-exact.
     *
+    * `bounds` = Some((lo, hi)) fixes the bin grid instead — required
+    * whenever PSIs must be comparable across invocations (the online
+    * monitor computes one PSI per incoming batch vs a frozen reference;
+    * data-derived bounds would move the grid under the comparison).
+    *
     * Scale: one scan to bin (the slice predicate rides the same scan),
     * counts at (group, slice, bin) grain with map-side combine, and the
     * grid/total joins touch only O(groups·bins) rows — the corpus is
-    * read once. */
+    * read once (plus the min/max aggregate when `bounds` is None). */
   def driftPsi(
       df: DataFrame,
       groupCol: Column,
       groupName: String,
       valueCol: Column,
       sliceA: Column,
-      bins: Int = 32): DataFrame = {
-    val mm = df.agg(min(valueCol).cast("double"), max(valueCol).cast("double")).head()
-    if (mm.isNullAt(0)) {
-      // empty input / all-null value column: a monitoring operator must
-      // degrade to "nothing to report", not NPE — return the empty audit
-      // frame with the output schema intact
-      val spark = df.sparkSession
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(
-          df.select(groupCol.as(groupName)).schema.fields ++ Seq(
-            org.apache.spark.sql.types.StructField("n_a", org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("n_b", org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("psi", org.apache.spark.sql.types.DoubleType))))
-    }
-    // constant-valued column: widen hi by an epsilon so lo < hi holds and
-    // every value lands in bin 0 (PSI 0 between identical constants)
-    val (lo, hi0) = (mm.getDouble(0), mm.getDouble(1))
-    val hi = if (hi0 > lo) hi0 else lo + math.max(math.abs(lo) * 1e-9, 1e-9)
-    driftPsiBounded(df, groupCol, groupName, valueCol, sliceA, lo, hi, bins)
-  }
-
-  /** [[driftPsi]] with CALLER-FIXED bin bounds — required whenever PSIs
-    * must be comparable across invocations (the online monitor computes
-    * one PSI per incoming batch vs a frozen reference; data-derived
-    * bounds would move the grid under the comparison). */
-  def driftPsiBounded(
-      df: DataFrame,
-      groupCol: Column,
-      groupName: String,
-      valueCol: Column,
-      sliceA: Column,
-      lo: Double,
-      hi: Double,
-      bins: Int = 32): DataFrame = {
+      bins: Int = 32,
+      bounds: Option[(Double, Double)] = None): DataFrame = {
     require(bins >= 2, "need at least two bins")
+    val (lo, hi) = bounds match {
+      case Some(b) => b
+      case None =>
+        val mm = df.agg(min(valueCol).cast("double"), max(valueCol).cast("double")).head()
+        if (mm.isNullAt(0)) {
+          // empty input / all-null value column: a monitoring operator must
+          // degrade to "nothing to report", not NPE — return the empty audit
+          // frame with the output schema intact
+          val spark = df.sparkSession
+          return spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+            org.apache.spark.sql.types.StructType(
+              df.select(groupCol.as(groupName)).schema.fields ++ Seq(
+                org.apache.spark.sql.types.StructField("n_a", org.apache.spark.sql.types.LongType),
+                org.apache.spark.sql.types.StructField("n_b", org.apache.spark.sql.types.LongType),
+                org.apache.spark.sql.types.StructField("psi", org.apache.spark.sql.types.DoubleType))))
+        }
+        // constant-valued column: widen hi by an epsilon so lo < hi holds and
+        // every value lands in bin 0 (PSI 0 between identical constants)
+        val (l, h) = (mm.getDouble(0), mm.getDouble(1))
+        (l, if (h > l) h else l + math.max(math.abs(l) * 1e-9, 1e-9))
+    }
     require(lo < hi, "need lo < hi")
     val binned = df.select(groupCol.as(groupName), sliceA.as("_a"),
       binOf(valueCol, lo, hi, bins).as("bin"))

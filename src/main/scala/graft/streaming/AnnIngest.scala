@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.VectorFunctions.norm
 import graft.operators.Similarity
 import IngestStore.existsDir
 
@@ -67,10 +66,9 @@ object AnnIngest {
       k: Int,
       nProbe: Int): DataFrame = {
     val cents = spark.read.parquet(s"$root/cents")
-    val corpusCells = spark.read
-      .option("basePath", s"$root/data").parquet(s"$root/data")
-      .select(col("vec_id").as("neighbor_id"), col("cell"),
-        col("embedding").as("cv"), norm(col("embedding")).as("cn"))
+    val corpusCells = Similarity.corpusSide(spark.read
+      .option("basePath", s"$root/data").parquet(s"$root/data"),
+      "vec_id", "embedding", col("cell"))
     Similarity.ivfSearch(corpusCells, cents, queries, k, nProbe)
   }
 }

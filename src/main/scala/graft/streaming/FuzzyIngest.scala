@@ -6,7 +6,7 @@ import graft.operators.Dedup
 import IngestStore.{canonEdges, readStore}
 
 /** Paragraph-grain FUZZY dedup ON INGEST — the streaming twin of
-  * [[graft.operators.Dedup.paragraphDedupFuzzy]], the same step up from
+  * `fuzzy` [[graft.operators.Dedup.paragraphDedup]], the same step up from
   * exact ingest dedup (q103/q108's `firstPerKey`) that q109 is from
   * q101: near-identical paragraph variants arriving in LATER
   * micro-batches must collapse into groups whose earliest instance may

@@ -256,11 +256,6 @@ object Sinks {
     }
   }
 
-  /** [[orderedBatchSink]] to parquet (the original signature). */
-  def orderedBatchSink[T](ds: Dataset[T], transientCols: Seq[String],
-      path: String): Unit =
-    orderedBatchSink(ds, transientCols, ParquetTarget(path))
-
   /** P7 multi-sink fan-out: run one streaming query whose every micro-batch
     * is persisted once and written to N sinks — the Spark replacement for
     * Flink side outputs (SURVEY §7.3 #4: N independent queries would

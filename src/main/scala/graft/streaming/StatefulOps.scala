@@ -261,10 +261,7 @@ object StatefulOps {
             state.remove() // GC only — re-admission is decided by the gap test
             Iterator.empty
           } else {
-            // µs from the Timestamp (getTime is ms-truncated): ms*1000 + sub-ms µs
-            def us(t: Timestamp): Long =
-              Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-            val sorted = it.map { case (_, id, t) => (us(t), id) }.toArray.sortInPlace()
+            val sorted = it.map { case (_, id, t) => (micros(t), id) }.toArray.sortInPlace()
             var last = if (state.exists) state.get else Long.MinValue
             val out = Seq.newBuilder[(String, Long)]
             sorted.foreach { case (tsUs, id) =>

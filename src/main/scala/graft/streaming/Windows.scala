@@ -14,60 +14,31 @@ import org.apache.spark.sql.functions._
   */
 object Windows {
 
-  /** Tumbling event-time aggregation (W1/W2) with watermark (W3/W4) and
-    * formatted window bounds (W6). Works on both streaming and batch input
-    * (watermark is a no-op in batch). No keys ⇒ the reference's windowAll
-    * (A3). */
-  def tumblingAgg(
-      df: DataFrame,
-      tsCol: String,
-      windowDur: String,
-      watermarkDelay: String,
-      keys: Seq[Column],
-      aggs: Seq[Column]): DataFrame = {
-    val wm = if (df.isStreaming) df.withWatermark(tsCol, watermarkDelay) else df
-    wm.groupBy((window(col(tsCol), windowDur) +: keys): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .withColumn("stt", date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss"))
-      .withColumn("edt", date_format(col("window.end"), "yyyy-MM-dd HH:mm:ss"))
-      .drop("window")
+  /** The window a [[agg]] groups by; `name` is Spark's own name for
+    * the grouping column (`window` or `session_window`). */
+  sealed abstract class Span(private[Windows] val name: String) {
+    private[Windows] def group(ts: Column): Column
   }
 
-  /** A1 — the keyword count window (10 s tumble, 2 s watermark), the shape
-    * of DwsTrafficSourceKeywordPageViewWindow.java:145-154. */
-  def keywordCount(hits: DataFrame): DataFrame =
-    tumblingAgg(hits, "rt", "10 seconds", "2 seconds",
-      Seq(col("word")), Seq(count(lit(1)).as("keyword_count")))
-
-  /** HOPPING (sliding) event-time aggregation — completes the window
-    * family (the reference uses only tumbling windows; sliding = tumbles
-    * overlapping every `slideDur`). Each event lands in
-    * windowDur/slideDur windows; the state-store aggregation stays
-    * incremental, state size scales by the same factor. Works on batch
-    * and streaming input like [[tumblingAgg]]. */
-  def slidingAgg(
-      df: DataFrame,
-      tsCol: String,
-      windowDur: String,
-      slideDur: String,
-      watermarkDelay: String,
-      keys: Seq[Column],
-      aggs: Seq[Column]): DataFrame = {
-    val wm = if (df.isStreaming) df.withWatermark(tsCol, watermarkDelay) else df
-    wm.groupBy(window(col(tsCol), windowDur, slideDur) +: keys: _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .withColumn("stt", date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss"))
-      .withColumn("edt", date_format(col("window.end"), "yyyy-MM-dd HH:mm:ss"))
-      .drop("window")
+  /** Tumbling windows (W1/W2) of `dur`. */
+  final case class Tumble(dur: String) extends Span("window") {
+    private[Windows] def group(ts: Column): Column = window(ts, dur)
   }
 
-  /** SESSION-window aggregation — a window type the reference never uses
-    * (SURVEY §2.6: "no sliding or session windows") but every
-    * sessionization workload needs: events of one key closer than
-    * `gapDur` merge into one session [first_ts, last_ts + gap). Native
-    * `session_window` — incremental state-store merging in streaming,
-    * plain aggregation in batch; bounds emitted as stt/edt strings like
-    * every DWS bean.
+  /** HOPPING (sliding) windows — the reference uses only tumbling
+    * windows; sliding = `dur` tumbles overlapping every `every`. Each
+    * event lands in dur/every windows; the state-store aggregation stays
+    * incremental, state size scales by the same factor. */
+  final case class Slide(dur: String, every: String) extends Span("window") {
+    private[Windows] def group(ts: Column): Column = window(ts, dur, every)
+  }
+
+  /** SESSION windows — a window type the reference never uses (SURVEY
+    * §2.6: "no sliding or session windows") but every sessionization
+    * workload needs: events of one key closer than `gap` merge into one
+    * session [first_ts, last_ts + gap). Native `session_window` —
+    * incremental state-store merging in streaming, plain aggregation in
+    * batch.
     *
     * Session-assignment semantics (mirrored by the DuckDB oracle's
     * gaps-and-islands form): a new session starts only when
@@ -79,18 +50,32 @@ object Windows {
     * locally in the state store (streaming) or in the sort-based session
     * assignment (batch) — no global sort, skew bounded by the hottest
     * key's event count. */
-  def sessionAgg(
+  final case class Session(gap: String) extends Span("session_window") {
+    private[Windows] def group(ts: Column): Column = session_window(ts, gap)
+  }
+
+  /** Event-time window aggregation with watermark (W3/W4) and formatted
+    * window bounds (W6). Works on both streaming and batch input
+    * (watermark is a no-op in batch). No keys ⇒ the reference's windowAll
+    * (A3). */
+  def agg(
       df: DataFrame,
       tsCol: String,
-      gapDur: String,
+      span: Span,
       watermarkDelay: String,
       keys: Seq[Column],
       aggs: Seq[Column]): DataFrame = {
     val wm = if (df.isStreaming) df.withWatermark(tsCol, watermarkDelay) else df
-    wm.groupBy(session_window(col(tsCol), gapDur) +: keys: _*)
+    wm.groupBy(span.group(col(tsCol)) +: keys: _*)
       .agg(aggs.head, aggs.tail: _*)
-      .withColumn("stt", date_format(col("session_window.start"), "yyyy-MM-dd HH:mm:ss"))
-      .withColumn("edt", date_format(col("session_window.end"), "yyyy-MM-dd HH:mm:ss"))
-      .drop("session_window")
+      .withColumn("stt", date_format(col(s"${span.name}.start"), "yyyy-MM-dd HH:mm:ss"))
+      .withColumn("edt", date_format(col(s"${span.name}.end"), "yyyy-MM-dd HH:mm:ss"))
+      .drop(span.name)
   }
+
+  /** A1 — the keyword count window (10 s tumble, 2 s watermark), the shape
+    * of DwsTrafficSourceKeywordPageViewWindow.java:145-154. */
+  def keywordCount(hits: DataFrame): DataFrame =
+    agg(hits, "rt", Tumble("10 seconds"), "2 seconds",
+      Seq(col("word")), Seq(count(lit(1)).as("keyword_count")))
 }

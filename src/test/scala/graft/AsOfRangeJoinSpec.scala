@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.operators.Relational
 
 /** AS-OF and binned range joins — the two composed operators Spark lacks

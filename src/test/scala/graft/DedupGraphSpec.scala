@@ -185,7 +185,7 @@ class DedupGraphSpec extends SparkTestBase {
     assert(row === ((2L, 2L, 0L, 0L, 4L, 4L, 2L, 2L)), s"$row")
   }
 
-  test("paragraphDedupFuzzy removes a date-swapped variant that exact dedup keeps") {
+  test("paragraphDedup(fuzzy) removes a date-swapped variant that exact dedup keeps") {
     // p2 = p1 with the final word (a year) swapped: 7 of 9 word-3-grams
     // survive → jaccard 0.777778 ≥ 0.4, so fuzzy groups them and keeps
     // only doc 1's instance; exact hashing sees two distinct paragraphs
@@ -195,7 +195,8 @@ class DedupGraphSpec extends SparkTestBase {
       (1L, p1), (2L, p2),
       (3L, "completely different content nothing shared here at all ok fine"))
       .toDF("doc_id", "text")
-    val fuzzy = Dedup.paragraphDedupFuzzy(docs, 10, 0.4).orderBy("doc_id")
+    val fuzzy = Dedup.paragraphDedup(docs, 10, fuzzy = Some(Dedup.Fuzzy(threshold = 0.4)))
+      .orderBy("doc_id")
       .as[(Long, Long, Long, String)].collect()
     assert(fuzzy(0) === ((1L, 1L, 1L, p1)))
     assert(fuzzy(1) === ((2L, 1L, 0L, ""))) // variant collapsed into doc 1's
@@ -203,6 +204,41 @@ class DedupGraphSpec extends SparkTestBase {
     val exact = Dedup.paragraphDedup(docs, 10)
       .where(col("doc_id") === 2L).select("n_kept").as[Long].head()
     assert(exact === 1L, "exact dedup must NOT catch the variant — that gap is the point")
+  }
+
+  test("paragraphDedup(fuzzy) at an unreachable threshold equals the exact form row for row") {
+    // exact repeats (doc 2 copies doc 1's first paragraph, docs 3 and 4
+    // copy its second) plus the date-swapped variant, whose Jaccard with
+    // p1 (0.777778) is the highest of any distinct pair: at 0.9 no pair
+    // verifies, so every text must keep its own first instance
+    val p1 = "alpha beta gamma delta epsilon zeta eta theta iota 2023"
+    val p2 = "alpha beta gamma delta epsilon zeta eta theta iota 2024"
+    val p3 = "completely different content nothing shared here at all ok fine"
+    val docs = Seq((1L, s"$p1 $p3"), (2L, s"$p1 $p2"), (3L, p3), (4L, p3), (5L, ""))
+      .toDF("doc_id", "text")
+    val exact = Dedup.paragraphDedup(docs, 10).orderBy("doc_id")
+      .as[(Long, Long, Long, String)].collect().toSeq
+    val fuzzy = Dedup.paragraphDedup(docs, 10, fuzzy = Some(Dedup.Fuzzy(threshold = 0.9)))
+      .orderBy("doc_id").as[(Long, Long, Long, String)].collect().toSeq
+    assert(fuzzy === exact)
+    assert(exact.map(_._3) === Seq(2L, 1L, 0L, 0L, 1L), s"$exact") // the copies were dropped
+  }
+
+  test("simhashNearDups: a pair differing only inside the prefix needs the rotation tables") {
+    // doc 2 flips 3 bits inside the top 16-bit prefix of doc 1's
+    // signature: hamming 3 ≤ 8, but one prefix table buckets them apart.
+    // Docs 3 and 4 share the prefix and differ in 2 low bits.
+    val s1 = 0x0ABCDEF012345678L
+    val sigs = Seq((1L, s1), (2L, s1 ^ (0x7L << 50)), (3L, 0x0123456789ABCDEL),
+      (4L, 0x0123456789ABCDEL ^ 0x3L)).toDF("doc_id", "simhash")
+    def pairs(tables: Int) = Dedup.simhashNearDups(sigs, tables = tables)
+      .select($"a", $"b", $"hamming".cast("long")).as[(Long, Long, Long)].collect().toSet
+    val one = pairs(1)
+    val four = pairs(4)
+    assert(one === Set((3L, 4L, 2L)))
+    assert(four.contains((1L, 2L, 3L)), s"$four")
+    assert(one.subsetOf(four))
+    assert(four.size === four.toSeq.map(p => (p._1, p._2)).distinct.size) // no table repeats a pair
   }
 
   test("contaminationProfile counts shared distinct shingles against the benchmark") {

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.functions._
 import graft.streaming.DeltaStore
 
 /** The log-structured MERGE store: O(batch) epoch appends, merged reads,

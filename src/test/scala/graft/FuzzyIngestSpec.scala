@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.functions._
 import graft.streaming.FuzzyIngest
 
 /** The incremental-union property q116's sf data cannot isolate: a

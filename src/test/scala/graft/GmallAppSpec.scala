@@ -139,7 +139,6 @@ class GmallAppSpec extends SparkTestBase {
 
   test("dim routing config is DYNAMIC: a Debezium config row takes effect next batch (S4/U3)") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import org.apache.spark.sql.functions.col
     val wh = Files.createTempDirectory("graft_dyncfg_").toString
     val dbIn = MemoryStream[String]
     val cfgIn = MemoryStream[String]

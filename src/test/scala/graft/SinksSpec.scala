@@ -120,7 +120,7 @@ class SinksSpec extends SparkTestBase {
   test("orderedBatchSink writes declared field order minus transient columns (K5)") {
     val dir = Files.createTempDirectory("graft_ordered_").toString + "/out"
     val ds = Seq(SinksSpec.Bean("s", "e", "w", 1L, "x")).toDS()
-    Sinks.orderedBatchSink(ds, Seq("debugOnly"), dir)
+    Sinks.orderedBatchSink(ds, Seq("debugOnly"), Sinks.ParquetTarget(dir))
     val written = spark.read.parquet(dir)
     assert(written.schema.fieldNames.toSeq === Seq("stt", "edt", "word", "ct"))
   }

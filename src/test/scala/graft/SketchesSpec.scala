@@ -131,7 +131,7 @@ class SketchesSpec extends SparkTestBase {
     assert(out("flat")._2 === 100L && out("flat")._3 === 100L)
   }
 
-  test("driftPsiBounded: mass drifting BELOW the frozen lo is detected, not dropped") {
+  test("driftPsi(bounds): mass drifting BELOW the frozen lo is detected, not dropped") {
     // frozen reference grid over [0, 10); the monitored slice drifts LOW
     // (all values negative). Unclamped binning would map those rows to
     // negative bin ids that never join the grid — psi would read ~0 while
@@ -139,8 +139,8 @@ class SketchesSpec extends SparkTestBase {
     val rows =
       (1 to 100).map(i => ("g", true, (i % 10).toDouble)) ++
       (1 to 100).map(i => ("g", false, -5.0 - (i % 10)))
-    val out = Sketches.driftPsiBounded(rows.toDF("g", "a", "v"),
-        $"g", "g", $"v", $"a", 0.0, 10.0, bins = 10)
+    val out = Sketches.driftPsi(rows.toDF("g", "a", "v"),
+        $"g", "g", $"v", $"a", bins = 10, bounds = Some((0.0, 10.0)))
       .as[(String, Long, Long, Double)].head()
     assert(out._4 > 0.25, s"downward drift must flag: $out")
     assert(out._2 === 100L && out._3 === 100L)

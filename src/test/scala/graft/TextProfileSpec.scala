@@ -96,7 +96,7 @@ class TextProfileSpec extends SparkTestBase {
       ev(3, 110, 7),                      // gap EXACTLY 60 -> still merges
       ev(4, 171, 7),                      // gap 61 > 60 -> new session
       ev(5, 500, 9)).toDF()
-    val out = Windows.sessionAgg(events, "ts", "60 seconds", "0 seconds",
+    val out = Windows.agg(events, "ts", Windows.Session("60 seconds"), "0 seconds",
         Seq(col("user_id")), Seq(count(lit(1)).as("n")))
       .select($"user_id", $"stt", $"edt", $"n").orderBy($"user_id", $"stt")
       .as[(Long, String, String, Long)].collect()
@@ -111,7 +111,7 @@ class TextProfileSpec extends SparkTestBase {
     val b2 = Seq(ev(3, 45, 5), ev(4, 2000, 5)) // 45 continues the session
     val flush = Seq(ev(99, 9000, -1))
     val out = StreamHarness.run(spark, Seq(b1, b2, flush)) { ds =>
-      Windows.sessionAgg(ds.toDF(), "ts", "60 seconds", "0 seconds",
+      Windows.agg(ds.toDF(), "ts", Windows.Session("60 seconds"), "0 seconds",
         Seq(col("user_id")), Seq(count(lit(1)).as("n")))
     }.where($"user_id" === 5L)
       .select($"stt", $"n").orderBy($"stt")
